@@ -463,7 +463,7 @@ object Prof {
     val phraseTerms = Seq("w:get", "w:geter",
       graft.analyze.Tokenizer.shingleTerm("get", "geter"))
     bench("phrase_sub_conj")(engine.conjunctiveDocs(phraseTerms).count())
-    bench("phrase_sub_scores")(engine.phraseScores(corpus,
+    bench("phrase_sub_scores")(engine.phraseScores(
       Array("get", "geter"), 1.0).count())
     bench("fuzzy_only")(engine.searchFuzzy("w:hach", rows = 60).count())
     bench("wildcard_trailing")(engine.searchWildcard("w:merge*", rows = 60).count())
@@ -566,7 +566,7 @@ object Prof {
     t("dfOf")(engine.index.dfOf(Seq("w:get", "w:geter")))
     t("conjunctive")(engine.conjunctiveDocs(Seq("w:get", "w:geter",
       graft.analyze.Tokenizer.shingleTerm("get", "geter"))).count())
-    t("phraseScores")(engine.phraseScores(corpus,
+    t("phraseScores")(engine.phraseScores(
       Array("get", "geter"), 1.0).count())
     locally {
       val cand = engine.conjunctiveDocs(Seq("w:get", "w:geter",

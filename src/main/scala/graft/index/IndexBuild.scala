@@ -91,11 +91,20 @@ final case class CompactReport(
   * its thread pool becomes task parallelism, its bounded queue the shuffle,
   * its Solr `<commit/>` the per-range manifest write (SURVEY.md §3.4).
   *
-  * Layout under `indexDir`:
-  *   segments/range=<r>/  (seg_id, term_id, term, df, max_tf, min_dl, postings)
-  *   docmeta/range=<r>/   (doc_id, repo, path, commit, lang, sha, dl)
-  *   manifest/range=<r>/  (range_id, n_docs, sum_dl, n_rows, checksum,
-  *                         seg_shift, range_segs_shift, build_ms)
+  * Layout under `indexDir` (one `range=<unit>` dir per store and unit —
+  * [[IndexBuild.unitStoreDirs]]):
+  *   segments/    (seg_id, term_id, term, df, max_tf, min_dl, postings,
+  *                 positions)
+  *   docmeta/     (doc_id, repo, path, commit, lang, sha, dl)
+  *   dictionary/  (term, term_id, df)
+  *   rdictionary/ (rterm, term, df)
+  *   ngrams/      (gram, term)
+  *   filters/     (seg_id, fcol, value, bitmap) — only when filterColumns
+  *                is non-empty
+  *   tombstones/  (seg_id, bitmap) — only on units that carry kills
+  *   manifest/    (range_id, n_docs, sum_dl, n_rows, checksum, seg_shift,
+  *                 range_segs_shift, build_ms, doc_ranges, retires,
+  *                 codec_ver) — written last
   *
   * Scale notes (the design constraints, not local behavior):
   *  - phase-1 group key is (term, seg): a hot term ("license") splits into
@@ -114,10 +123,10 @@ final case class CompactReport(
   */
 object IndexBuild {
 
-  /** Segment codec version recorded per unit manifest: 2 = word terms
-    * carry the positional side-blob (native PhraseQuery); 1 (or absent —
-    * pre-v7 units) = positionless. An index is positional only when EVERY
-    * live unit is ≥2 ([[graft.query.Index.hasPositions]]).
+  /** Index layout version recorded in every unit manifest: word terms
+    * carry the positional side-blob and every unit carries the dictionary,
+    * rdictionary and ngrams stores. The only layout the read side accepts
+    * ([[graft.query.Index.stats]] rejects any other).
     */
   val CodecVer = 2
 
@@ -129,6 +138,25 @@ object IndexBuild {
   def dictionaryDir(indexDir: String) = s"$indexDir/dictionary"
   def rdictionaryDir(indexDir: String) = s"$indexDir/rdictionary"
   def ngramsDir(indexDir: String) = s"$indexDir/ngrams"
+
+  /** Every per-unit store, manifest LAST: deleting a unit in this order
+    * keeps it committed (and so re-sweepable) until its data dirs are gone.
+    */
+  def unitStoreDirs(indexDir: String): Seq[String] = Seq(
+    segmentsDir(indexDir), docmetaDir(indexDir), dictionaryDir(indexDir),
+    rdictionaryDir(indexDir), ngramsDir(indexDir), filtersDir(indexDir),
+    tombstonesDir(indexDir), manifestDir(indexDir))
+
+  /** Unit ids with a `range=<id>` dir under `storeDir` — ONE globStatus
+    * listing, never a per-unit exists probe.
+    */
+  def unitsIn(spark: SparkSession, storeDir: String): Set[Long] = {
+    val fs = new Path(storeDir).getFileSystem(spark.sessionState.newHadoopConf())
+    Option(fs.globStatus(new Path(s"$storeDir/range=*")))
+      .getOrElse(Array.empty)
+      .flatMap(_.getPath.getName.stripPrefix("range=").toLongOption)
+      .toSet
+  }
 
   /** Write the per-unit term dictionary (term, term_id, df) for `unit`
     * from its just-written segments: ONE metadata-column aggregation per
@@ -537,30 +565,28 @@ object IndexBuild {
       .toSeq
   }
 
-  /** Manifest rows of the given units, with back-compat for pre-compaction
-    * manifests (doc_ranges/retires synthesized from the scalar columns).
-    * The synthesis is PER ROW (coalesce), not per schema: with mergeSchema
-    * a single new-format unit makes the columns exist for every row, and
-    * an old-format unit's NULLs would otherwise silently drop its
-    * attestations from doneRanges/docRangeStats — re-ingesting committed
-    * ranges and bypassing the replay-tamper gate.
-    */
+  /** Manifest rows of the given units ([[writeManifest]]'s schema). */
   def manifests(spark: SparkSession, indexDir: String, units: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.{array, coalesce, struct}
     require(units.nonEmpty, s"no committed units under $indexDir")
-    val m = spark.read
+    spark.read
       .option("basePath", manifestDir(indexDir))
-      .option("mergeSchema", "true") // units written across format versions
       .parquet(units.map(u => s"${manifestDir(indexDir)}/range=$u"): _*)
-    val selfDr = array(struct(col("range_id"), col("n_rows"), col("checksum")))
-    val noRetires = array().cast("array<long>")
-    val withDr =
-      if (m.columns.contains("doc_ranges"))
-        m.withColumn("doc_ranges", coalesce(col("doc_ranges"), selfDr))
-      else m.withColumn("doc_ranges", selfDr)
-    if (withDr.columns.contains("retires"))
-      withDr.withColumn("retires", coalesce(col("retires"), noRetires))
-    else withDr.withColumn("retires", noRetires)
+  }
+
+  /** Commit `unit`: its one manifest row, stamped with [[CodecVer]] —
+    * written LAST, after every other store of the unit (the `_SUCCESS`
+    * marker is the commit gate).
+    */
+  private def writeManifest(spark: SparkSession, indexDir: String, unit: Long,
+      nDocs: Long, sumDl: Long, nRows: Long, checksum: Long, cfg: IndexConfig,
+      buildMs: Long, docRanges: Seq[DocRangeStat], retires: Seq[Long]): Unit = {
+    import spark.implicits._
+    Seq((unit, nDocs, sumDl, nRows, checksum, cfg.segShift, cfg.rangeSegsShift,
+      buildMs, docRanges, retires, CodecVer))
+      .toDF("range_id", "n_docs", "sum_dl", "n_rows", "checksum",
+        "seg_shift", "range_segs_shift", "build_ms", "doc_ranges", "retires",
+        "codec_ver")
+      .coalesce(1).write.mode("overwrite").parquet(s"${manifestDir(indexDir)}/range=$unit")
   }
 
   /** (live unit ids, their manifest rows) resolved with ONE listing (the
@@ -670,14 +696,13 @@ object IndexBuild {
     // self-healing GC sweep: a compaction that crashed between its manifest
     // commit and its delete loop leaves retired-but-undeleted unit dirs
     // (shadowed, so harmless — but an unbounded leak if never reclaimed)
-    val gcFs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
-    val stores = Seq(segmentsDir(indexDir), docmetaDir(indexDir),
-      filtersDir(indexDir), tombstonesDir(indexDir), manifestDir(indexDir),
-      dictionaryDir(indexDir), rdictionaryDir(indexDir))
-    (if (gc) committed.toSet -- live else Set.empty[Long]).foreach { u =>
-      stores.foreach(d => gcFs.delete(new Path(s"$d/range=$u"), true))
-    }
+    val fs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
+    val stores = unitStoreDirs(indexDir)
+    def deleteUnit(u: Long): Unit =
+      stores.foreach(d => fs.delete(new Path(s"$d/range=$u"), true))
     if (gc) {
+      val committedSet = committed.toSet
+      (committedSet -- live).foreach(deleteUnit)
       // dead-partial sweep: NEGATIVE unit ids are written only by
       // compaction, so a negative dir without a committed manifest is a
       // crashed run's partial output (invisible, but disk it holds never
@@ -694,18 +719,12 @@ object IndexBuild {
       // one-maintenance-op-at-a-time assumption, no upsert is mid-flight
       // here, so every legitimate shard's unit id IS committed; a swept
       // shard is regenerated deterministically if its upsert replays.
-      val committedSet = committed.toSet
       stores.foreach { d =>
         val orphan: Long => Boolean =
           if (d == tombstonesDir(indexDir)) id => !committedSet.contains(id)
           else id => id < 0 && !committedSet.contains(id)
-        Option(gcFs.globStatus(new Path(s"$d/range=*"))).getOrElse(Array.empty)
-          .map(_.getPath)
-          .filter { p =>
-            val id = scala.util.Try(p.getName.stripPrefix("range=").toLong)
-            id.isSuccess && orphan(id.get)
-          }
-          .foreach(p => gcFs.delete(p, true))
+        unitsIn(spark, d).filter(orphan)
+          .foreach(id => fs.delete(new Path(s"$d/range=$id"), true))
       }
     }
     if (live.isEmpty) return CompactReport(live, live, Seq.empty)
@@ -744,11 +763,7 @@ object IndexBuild {
       cur :+= r; curDocs += r.nDocs
     }
     if (cur.nonEmpty) batches += cur
-    val fs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
-    val filterUnits: Set[Long] =
-      Option(fs.globStatus(new Path(s"${filtersDir(indexDir)}/range=*")))
-        .getOrElse(Array.empty)
-        .map(_.getPath.getName.stripPrefix("range=").toLong).toSet
+    val filterUnits = unitsIn(spark, filtersDir(indexDir))
     // ids assigned by batch order before the (parallel) merges; a crashed
     // run's uncommitted partials are reclaimed by the dead-partial sweep
     // above, so rerun correctness does not depend on id reuse
@@ -798,9 +813,7 @@ object IndexBuild {
       // bitmaps that live in THIS batch's retired units (tombstones target
       // docs across batch boundaries) — deleting mid-run would race it
       if (gc) settled.foreach {
-        case scala.util.Success(batch) => batch.foreach { u =>
-          stores.foreach(d => fs.delete(new Path(s"$d/range=${u.id}"), true))
-        }
+        case scala.util.Success(batch) => batch.foreach(u => deleteUnit(u.id))
         case _ => ()
       }
       settled.collectFirst { case scala.util.Failure(e) => throw e }
@@ -861,13 +874,7 @@ object IndexBuild {
         if (kb.limit(1).isEmpty) { kb.unpersist(blocking = false); None } else Some(kb)
       }
 
-    val segSrc0 = spark.read.parquet(paths(segmentsDir(indexDir)): _*)
-    // pre-positional units lack the positions column entirely; normalize so
-    // the rewrite below has one shape (such units keep codec_ver=1 and the
-    // null word positions are never consulted — Index.hasPositions gates)
-    val segSrc =
-      if (segSrc0.columns.contains("positions")) segSrc0
-      else segSrc0.withColumn("positions", lit(null).cast("binary"))
+    val segSrc = spark.read.parquet(paths(segmentsDir(indexDir)): _*)
     val segOut = kills match {
       case None => segSrc
       case Some(kb) =>
@@ -1042,24 +1049,9 @@ object IndexBuild {
       } finally carriedIds.unpersist(blocking = false)
     }
     kills.foreach(_.unpersist(blocking = false))
-    // the merged unit is positional only if EVERY constituent was: rows
-    // copied from a pre-positional unit have null word positions, which the
-    // phrase path must never trust (min, with absent/null read as 1)
-    val mergedCodecVer: Int = {
-      val mf = manifests(spark, indexDir, ids)
-      if (!mf.columns.contains("codec_ver")) 1
-      else mf.agg(min(coalesce(col("codec_ver"), lit(1))).cast("int"))
-        .as[Int].head()
-    }
-    Seq((newId, batch.map(_.nDocs).sum - killedDocs,
-      batch.map(_.sumDl).sum - killedSumDl, expN, expCk,
-      batch.head.segShift, batch.head.rangeSegsShift,
-      (System.nanoTime() - t0) / 1000000L,
-      batch.flatMap(_.docRanges), ids, mergedCodecVer))
-      .toDF("range_id", "n_docs", "sum_dl", "n_rows", "checksum",
-        "seg_shift", "range_segs_shift", "build_ms", "doc_ranges", "retires",
-        "codec_ver")
-      .coalesce(1).write.mode("overwrite").parquet(s"${manifestDir(indexDir)}/range=$newId")
+    writeManifest(spark, indexDir, newId, batch.map(_.nDocs).sum - killedDocs,
+      batch.map(_.sumDl).sum - killedSumDl, expN, expCk, cfg0,
+      (System.nanoTime() - t0) / 1000000L, batch.flatMap(_.docRanges), ids)
   }
 
   /** Build (or resume) the index for `corpus`; returns a report. */
@@ -1113,12 +1105,8 @@ object IndexBuild {
   // (deleted docs count toward docFreq/norms until merge).
 
   /** Units that carry a tombstone side-file — ONE globStatus listing. */
-  def tombstoneUnits(spark: SparkSession, indexDir: String): Set[Long] = {
-    val fs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
-    Option(fs.globStatus(new Path(s"${tombstonesDir(indexDir)}/range=*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.getName.stripPrefix("range=").toLong).toSet
-  }
+  def tombstoneUnits(spark: SparkSession, indexDir: String): Set[Long] =
+    unitsIn(spark, tombstonesDir(indexDir))
 
   /** (seg_id, bitmap) kill bitmaps of the given units (None if tombstone-free). */
   def killBitmaps(spark: SparkSession, indexDir: String,
@@ -1319,8 +1307,8 @@ object IndexBuild {
       liveDocmeta(spark, indexDir, live, cfg).where(pred).select(col("doc_id")))
   }
 
-  /** Commit a kill set as a tombstone-only unit — kill bitmaps + empty
-    * segments/docmeta (+ empty filters/dictionary stores so every
+  /** Commit a kill set as a tombstone-only unit — kill bitmaps + an empty
+    * copy of every other store the template unit holds (so every
     * side-index stays complete) under a fresh negative id, manifest
     * written last (same atomic gate; a crashed run's partials are
     * invisible and swept by the next compaction). Returns the number of
@@ -1340,35 +1328,16 @@ object IndexBuild {
       val unit = math.min(-1L, committed.min - 1)
       writeTombstones(spark, indexDir, unit, kills, cfg)
       // schema-correct empty stores so every reader's per-unit path exists
+      // (filters only where the template has them: filterColumns = Nil)
       val tmpl = live.head
-      spark.read.parquet(s"${segmentsDir(indexDir)}/range=$tmpl").limit(0)
-        .write.mode("overwrite").parquet(s"${segmentsDir(indexDir)}/range=$unit")
-      spark.read.parquet(s"${docmetaDir(indexDir)}/range=$tmpl").limit(0)
-        .write.mode("overwrite").parquet(s"${docmetaDir(indexDir)}/range=$unit")
       val fs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(new Path(s"${filtersDir(indexDir)}/range=$tmpl")))
-        spark.read.parquet(s"${filtersDir(indexDir)}/range=$tmpl").limit(0)
-          .write.mode("overwrite").parquet(s"${filtersDir(indexDir)}/range=$unit")
-      if (fs.exists(new Path(s"${dictionaryDir(indexDir)}/range=$tmpl")))
-        spark.read.parquet(s"${dictionaryDir(indexDir)}/range=$tmpl").limit(0)
-          .write.mode("overwrite").parquet(s"${dictionaryDir(indexDir)}/range=$unit")
-      if (fs.exists(new Path(s"${rdictionaryDir(indexDir)}/range=$tmpl")))
-        spark.read.parquet(s"${rdictionaryDir(indexDir)}/range=$tmpl").limit(0)
-          .write.mode("overwrite").parquet(s"${rdictionaryDir(indexDir)}/range=$unit")
-      if (fs.exists(new Path(s"${ngramsDir(indexDir)}/range=$tmpl")))
-        spark.read.parquet(s"${ngramsDir(indexDir)}/range=$tmpl").limit(0)
-          .write.mode("overwrite").parquet(s"${ngramsDir(indexDir)}/range=$unit")
-      // codec_ver = current: a tombstone-only unit holds NO postings rows,
-      // so it cannot degrade the index's positional-ness — omitting the
-      // column would read as 1 and silently flip hasPositions (and, after
-      // a compaction absorbed the unit, poison the merged manifest) for
-      // EVERY phrase query after the first delete
-      Seq((unit, 0L, 0L, 0L, 0L, cfg.segShift, cfg.rangeSegsShift, 0L,
-        Seq.empty[DocRangeStat], Seq.empty[Long], CodecVer))
-        .toDF("range_id", "n_docs", "sum_dl", "n_rows", "checksum",
-          "seg_shift", "range_segs_shift", "build_ms", "doc_ranges", "retires",
-          "codec_ver")
-        .coalesce(1).write.mode("overwrite").parquet(s"${manifestDir(indexDir)}/range=$unit")
+      unitStoreDirs(indexDir)
+        .filterNot(Set(tombstonesDir(indexDir), manifestDir(indexDir)))
+        .filter(d => fs.exists(new Path(s"$d/range=$tmpl")))
+        .foreach(d => spark.read.parquet(s"$d/range=$tmpl").limit(0)
+          .write.mode("overwrite").parquet(s"$d/range=$unit"))
+      writeManifest(spark, indexDir, unit, 0L, 0L, 0L, 0L, cfg, 0L,
+        Seq.empty, Seq.empty)
       n
     } finally kills.unpersist(blocking = false)
   }
@@ -1537,13 +1506,9 @@ object IndexBuild {
       val (nd, sdl, nRows, checksum) =
         (om("n_docs").asInstanceOf[Long], om("sum_dl").asInstanceOf[Long],
           om("n_rows").asInstanceOf[Long], om("checksum").asInstanceOf[Long])
-      val m = Seq((r, nd, sdl, nRows, checksum, cfg.segShift, cfg.rangeSegsShift,
-        (System.nanoTime() - rt0) / 1000000L,
-        Seq(DocRangeStat(r, nRows, checksum)), Seq.empty[Long], CodecVer))
-        .toDF("range_id", "n_docs", "sum_dl", "n_rows", "checksum",
-          "seg_shift", "range_segs_shift", "build_ms", "doc_ranges", "retires",
-          "codec_ver")
-      m.coalesce(1).write.mode("overwrite").parquet(s"${manifestDir(indexDir)}/range=$r")
+      writeManifest(spark, indexDir, r, nd, sdl, nRows, checksum, cfg,
+        (System.nanoTime() - rt0) / 1000000L, Seq(DocRangeStat(r, nRows, checksum)),
+        Seq.empty)
       plog(r, "manifest", rt0)
       (nd, sdl)
       } finally slice.unpersist(blocking = false)

@@ -50,9 +50,18 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * results over live docs only).
     */
   lazy val stats: (Long, Double) = {
-    val (n, sdl) = manifest
-      .agg(sum("n_docs").cast("long"), sum("sum_dl").cast("long"))
-      .as[(Long, Long)].head()
+    // the layout check rides the same aggregation: a unit written before
+    // the current layout (missing/null/older codec_ver) fails the index
+    val ver =
+      if (manifest.columns.contains("codec_ver")) coalesce(col("codec_ver"), lit(0))
+      else lit(0)
+    val (n, sdl, minVer) = manifest
+      .agg(sum("n_docs").cast("long"), sum("sum_dl").cast("long"), min(ver).cast("int"))
+      .as[(Long, Long, Int)].head()
+    if (minVer < IndexBuild.CodecVer)
+      throw new IllegalStateException(s"index $indexDir holds a unit with " +
+        (if (minVer == 0) "no codec_ver" else s"codec_ver $minVer") +
+        s", but only codec_ver ${IndexBuild.CodecVer} is readable: rebuild the index")
     (n, if (n == 0) 1.0 else sdl.toDouble / n.toDouble)
   }
 
@@ -60,17 +69,12 @@ final class Index(val spark: SparkSession, val indexDir: String,
     .option("basePath", IndexBuild.segmentsDir(indexDir))
     .parquet(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
 
-  /** Persisted per-segment fq bitmaps (seg_id, fcol, value, bitmap) —
-    * absent on indexes built before the side-index existed. Detected with
-    * ONE globStatus listing, not a per-range exists probe.
+  /** Persisted per-segment fq bitmaps (seg_id, fcol, value, bitmap) in
+    * every live unit? Absent when the index was built with
+    * `filterColumns = Nil`. ONE globStatus listing, not a per-range probe.
     */
   lazy val hasFilters: Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val present = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"${IndexBuild.filtersDir(indexDir)}/range=*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.getName.stripPrefix("range=").toLong).toSet
+    val present = IndexBuild.unitsIn(spark, IndexBuild.filtersDir(indexDir))
     ranges.nonEmpty && ranges.forall(present.contains)
   }
 
@@ -153,64 +157,25 @@ final class Index(val spark: SparkSession, val indexDir: String,
     if (hasTombstones) raw.join(killedDocIds, Seq("doc_id"), "left_anti") else raw
   }
 
-  /** Persisted per-unit dictionary store (term, term_id, df) written by
-    * build/compaction — detected with ONE globStatus listing (same
-    * contract as [[hasFilters]]). Absent on pre-v4 indexes.
-    */
-  lazy val hasDictStore: Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val present = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"${IndexBuild.dictionaryDir(indexDir)}/range=*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.getName.stripPrefix("range=").toLong).toSet
-    ranges.nonEmpty && ranges.forall(present.contains)
-  }
-
   /** Cached term dictionary (term, term_id, df) — the query-time analog of
     * the reference's HashTermStatistics singleton
     * (HashTermStatistics.java:16-27 / SURVEY.md O4), which walks Lucene's
     * PERSISTED terms dictionary once per field instead of re-deriving it.
     *
-    * Primary path: sum the per-unit dictionary store rows (vocab × live
-    * units — a build/compaction artifact, exactly like the manifest stats;
-    * VERDICT r03 "What's wrong" #3). Engine init therefore performs NO
-    * aggregation over the segment table (pinned by IndexSpec's counting
-    * FS: no segments/ file is ever opened for df resolution). Global df =
+    * It sums the per-unit dictionary store rows (vocab × live units — a
+    * build/compaction artifact, exactly like the manifest stats; VERDICT
+    * r03 "What's wrong" #3). Engine init therefore performs NO aggregation
+    * over the segment table (pinned by IndexSpec's counting FS: no
+    * segments/ file is ever opened for df resolution). Global df =
     * Σ per-unit df (associative, tombstone-stale by design — Lucene's
     * deleted-docs df semantics; refreshed at compaction like every stat).
-    *
-    * Fallback (pre-v4 indexes without the store): aggregate the segment
-    * metadata columns once — the old init-time cost, kept only for
-    * back-compat.
     */
-  lazy val dictionary: DataFrame = {
-    val base =
-      if (hasDictStore)
-        spark.read
-          .option("basePath", IndexBuild.dictionaryDir(indexDir))
-          .parquet(ranges.map(r => s"${IndexBuild.dictionaryDir(indexDir)}/range=$r"): _*)
-          .groupBy(col("term"), col("term_id"))
-          .agg(sum("df").cast("long").as("df"))
-      else segments
-        .groupBy(col("term"), col("term_id"))
-        .agg(sum("df").cast("long").as("df"))
-    base.cache()
-  }
-
-  /** Reversed-term dictionary present for every live unit? (Same one-glob
-    * contract as [[hasDictStore]]; absent on pre-v6 indexes, where leading
-    * wildcards keep the forward-scan fallback.)
-    */
-  lazy val hasRDict: Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val present = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"${IndexBuild.rdictionaryDir(indexDir)}/range=*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.getName.stripPrefix("range=").toLong).toSet
-    ranges.nonEmpty && ranges.forall(present.contains)
-  }
+  lazy val dictionary: DataFrame = spark.read
+    .option("basePath", IndexBuild.dictionaryDir(indexDir))
+    .parquet(ranges.map(r => s"${IndexBuild.dictionaryDir(indexDir)}/range=$r"): _*)
+    .groupBy(col("term"), col("term_id"))
+    .agg(sum("df").cast("long").as("df"))
+    .cache()
 
   /** Per-unit reversed-term rows (rterm, term, df) — deliberately NOT
     * pre-aggregated or cached: a reversed-routed wildcard filters by rterm
@@ -248,20 +213,6 @@ final class Index(val spark: SparkSession, val indexDir: String,
     */
   private[query] def driverTerms: Option[Map[String, Long]] = dictMap
 
-  /** Trigram side store present for every live unit? (Same one-glob
-    * contract as [[hasDictStore]]; absent on pre-v7 indexes, where fuzzy/
-    * spellcheck keep the vocabulary-scan fallback.)
-    */
-  lazy val hasNgrams: Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val present = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"${IndexBuild.ngramsDir(indexDir)}/range=*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.getName.stripPrefix("range=").toLong).toSet
-    ranges.nonEmpty && ranges.forall(present.contains)
-  }
-
   /** Per-unit (gram, term) trigram rows — deliberately NOT cached: a fuzzy
     * expansion filters by the query's grams FIRST (parquet In pushdown
     * against the gram-sorted row groups — [[IndexBuild]].writeDictionary),
@@ -271,18 +222,6 @@ final class Index(val spark: SparkSession, val indexDir: String,
   def ngramStore: DataFrame = spark.read
     .option("basePath", IndexBuild.ngramsDir(indexDir))
     .parquet(ranges.map(r => s"${IndexBuild.ngramsDir(indexDir)}/range=$r"): _*)
-
-  /** Every live unit carries the positional side-blob (manifest
-    * codec_ver ≥ 2)? Gates the postings-only PhraseQuery route; a single
-    * pre-positional unit (or a compaction that absorbed one) falls the
-    * whole index back to the stored-field verify — per-row nulls in a
-    * mixed read must never be trusted as "no occurrences". Absent/null
-    * codec_ver reads as 1 (conservative).
-    */
-  lazy val hasPositions: Boolean =
-    manifest.columns.contains("codec_ver") &&
-      manifest.agg(min(coalesce(col("codec_ver"), lit(1))).cast("int"))
-        .as[Int].head() >= IndexBuild.CodecVer
 
   /** Global df per query term (term string checked: hash-collision guard). */
   def dfOf(terms: Seq[String]): Map[String, Long] = dictMap match {
@@ -541,27 +480,14 @@ final class Engine(val index: Index) {
   }
 
   /** Lucene PhraseQuery over the word-term field (the Solr host's
-    * `"exact phrase"` query form), two-phase at index speed WITHOUT
-    * positional postings:
-    *
-    *  - phase 1, candidates: conjunction of the phrase's word terms AND
-    *    its adjacent-bigram shingle terms. The 12-bit shingle index
-    *    ([[graft.analyze.Tokenizer.shingleTerms]] — the reference's
-    *    hashing-as-terms trick, ParallelSolrIndexer.java:242-249) doubles
-    *    as a positional surrogate: a doc where the pair is adjacent
-    *    necessarily holds the pair's shingle term, so the candidate set is
-    *    the true match set plus only 12-bit-collision false positives.
-    *  - phase 2, verify: candidates' stored content re-tokenized, the
-    *    exact phrase frequency counted; collision docs drop out (pf = 0).
+    * `"exact phrase"` query form), answered from positional postings alone
+    * ([[phraseScoresPositional]]); `corpus` is not read.
     *
     * Scoring is Lucene's PhraseQuery under BM25: tf = phrase frequency,
     * weight = Σ idf(term_i) over phrase POSITIONS (duplicates counted, as
     * BM25Similarity.idfExplain sums over the query's terms array), the
-    * same tfNorm and quantized tie order as every other route. dl
-    * recomputed from content equals the indexed docmeta dl (2n−1,
-    * MaxDl-clamped) — no side-store join. At 100×: candidates are bounded
-    * by the rarest word/shingle posting list and the stored-field verify
-    * touches candidate rows only (semi-join pruned into the corpus scan).
+    * same tfNorm and quantized tie order as every other route, dl from
+    * the postings' inlined dl.
     */
   def searchPhrase(corpus: DataFrame, phrase: String, rows: Int = 60,
                    slop: Int = 0): DataFrame = {
@@ -569,11 +495,11 @@ final class Engine(val index: Index) {
     require(toks.nonEmpty, "empty phrase")
     if (toks.length == 1) // Lucene parses a one-word phrase as a TermQuery
       return searchByTerms(Seq(("w:" + toks(0)) -> 1.0), rows)
-    Wand.topK(spark, phraseScores(corpus, toks, 1.0, slop), rows)
+    Wand.topK(spark, phraseScores(toks, 1.0, slop), rows)
   }
 
-  /** All (docId, score) phrase contributions, pre-top-k — the phase-1 +
-    * verify pipeline of [[searchPhrase]], reused by the parsed-query score
+  /** All (docId, score) phrase contributions, pre-top-k — the scoring
+    * pipeline of [[searchPhrase]], reused by the parsed-query score
     * composition. Empty when a phrase word is unindexed.
     *
     * `slop > 0` = sloppy PhraseQuery: an anchor position `p` of the first
@@ -588,7 +514,7 @@ final class Engine(val index: Index) {
     * integer-quantized cross-engine scoring), and ≥3-word phrases bound
     * each word's displacement independently where Lucene bounds the SUM.
     */
-  private[graft] def phraseScores(corpus: DataFrame, toks: Array[String],
+  private[graft] def phraseScores(toks: Array[String],
       boost: Double, slop: Int = 0): org.apache.spark.sql.Dataset[Scored] = {
     require(slop >= 0, s"negative slop: $slop")
     val words = toks.toSeq.map("w:" + _)
@@ -597,14 +523,11 @@ final class Engine(val index: Index) {
       return spark.emptyDataset[Scored]
     val (n, avgdl) = index.stats
     val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
-    if (index.hasPositions)
-      return phraseScoresPositional(toks, boost * idfSum, avgdl, slop)
-    phraseScoresStored(corpus, toks, boost, idfSum, avgdl, slop)
+    phraseScoresPositional(toks, boost * idfSum, avgdl, slop)
   }
 
-  /** Positional PhraseQuery (primary route, codec_ver ≥ 2 indexes): per
-    * segment, ONE leapfrog conjunction over the phrase words' posting
-    * iterators WITH their position blobs ([[Codec.IterPos]]); at each
+  /** Positional PhraseQuery: per segment, ONE leapfrog conjunction over
+    * the phrase words' posting iterators WITH their position blobs ([[Codec.IterPos]]); at each
     * conjunction match the exact phrase frequency comes from position
     * intersection ([[Engine.phraseMatches]]). No stored-field access at
     * all — the stored-field verify's scale-killer (a corpus-hot phrase
@@ -613,8 +536,8 @@ final class Engine(val index: Index) {
     * read (positions of blocks the leapfrog skips are skipped bytes), and
     * only (doc_id, score) rows leave the segment task. Scoring identical
     * to the stored route: tf = pf, weight = boost·Σ idf over phrase
-    * positions, dl from the postings' inlined dl (pinned equal in
-    * BoolPhraseSpec on a fallback-forced twin).
+    * positions, dl from the postings' inlined dl (pinned equal to
+    * [[phraseScoresStored]] in BoolPhraseSpec).
     */
   private def phraseScoresPositional(toks: Array[String], weight: Double,
       avgdl: Double, slop: Int = 0): org.apache.spark.sql.Dataset[Scored] = {
@@ -641,9 +564,9 @@ final class Engine(val index: Index) {
     }
   }
 
-  /** Stored-field verify fallback (pre-positional indexes only): shingle-
-    * assisted candidate conjunction + content re-tokenization. Kept as the
-    * back-compat route AND as the positional route's correctness twin.
+  /** Stored-field phrase verify: shingle-assisted candidate conjunction +
+    * content re-tokenization. Never selected at run time — it is the
+    * positional route's correctness reference (BoolPhraseSpec, PlanSpec).
     */
   private[graft] def phraseScoresStored(corpus: DataFrame, toks: Array[String],
       boost: Double, idfSum: Double,
@@ -834,7 +757,7 @@ final class Engine(val index: Index) {
         .take(maxExpansions).map(_._1)
     case None =>
       val matched =
-        if (!forceForward && index.hasRDict && Engine.shouldReverse(pattern))
+        if (!forceForward && Engine.shouldReverse(pattern))
           index.rdictStore
             .where(col("rterm").like(Engine.wildcardToLike(pattern.reverse)))
             .groupBy(col("term")).agg(sum("df").cast("long").as("df"))
@@ -855,9 +778,8 @@ final class Engine(val index: Index) {
     * query's ~|term| grams ONLY (row groups without them prune away — the
     * sub-linear property), then exact Levenshtein on the tiny candidate
     * set driver-side. Short terms (threshold ≤ 0: every edit budget can
-    * erase all grams) and pre-v7 indexes take the vocabulary-scan
-    * fallback, which stays the route's correctness twin (pinned equal in
-    * IndexSpec).
+    * erase all grams) take the vocabulary scan, which stays the route's
+    * correctness twin (pinned equal in IndexSpec).
     */
   private[graft] def fuzzyExpansions(term: String, maxEdits: Int,
       maxExpansions: Int): Seq[(String, Int)] = driverVocab match {
@@ -877,8 +799,8 @@ final class Engine(val index: Index) {
     case None => fuzzyExpansionsDistributed(term, maxEdits, maxExpansions)
   }
 
-  /** Over-cap fuzzy expansion: trigram-pruned when the store + pigeonhole
-    * threshold allow, vocabulary scan otherwise — see [[fuzzyExpansions]].
+  /** Over-cap fuzzy expansion: trigram-pruned when the pigeonhole
+    * threshold allows, vocabulary scan otherwise — see [[fuzzyExpansions]].
     */
   private[graft] def fuzzyExpansionsDistributed(term: String, maxEdits: Int,
       maxExpansions: Int): Seq[(String, Int)] =
@@ -896,7 +818,7 @@ final class Engine(val index: Index) {
         fuzzyExpansionsScan(term, maxEdits, maxExpansions)
     }
 
-  /** Vocabulary-scan twin of [[fuzzyExpansions]] (fallback + spec pin). */
+  /** Vocabulary-scan twin of [[fuzzyExpansions]] (short terms + spec pin). */
   private[graft] def fuzzyExpansionsScan(term: String, maxEdits: Int,
       maxExpansions: Int): Seq[(String, Int)] =
     index.dictionary
@@ -907,7 +829,7 @@ final class Engine(val index: Index) {
       .select(col("term"), col("dist")).as[(String, Int)].collect().toSeq
 
   /** Gram-filtered fuzzy candidates as (term, dist ≤ maxEdits), or None
-    * when the pruned route is unavailable (no store / threshold ≤ 0).
+    * when the pruned route is unavailable (threshold ≤ 0).
     * The exact-verify step makes the pre-filter completeness-critical
     * only: a too-loose bound costs candidates, never correctness.
     *
@@ -923,7 +845,7 @@ final class Engine(val index: Index) {
       cap: Int = Engine.FuzzyCandidatesMax): Option[Seq[(String, Int)]] = {
     val qGrams = Engine.fuzzyGrams(term)
     val threshold = qGrams.size - 3 * maxEdits
-    if (!index.hasNgrams || threshold <= 0) return None
+    if (threshold <= 0) return None
     val cands = index.ngramStore
       .where(col("gram").isin(qGrams: _*))
       // length band: d edits change length by ≤ d (cheap post-prune)
@@ -1092,7 +1014,7 @@ final class Engine(val index: Index) {
         val words = toks.map("w:" + _).distinct.toSeq
         val d = index.dfOf(words)
         val bound = if (d.size < words.size) 0L else d.values.min
-        (p, phraseScores(corpus, toks, boost, slop).toDF("doc_id", "score"), bound)
+        (p, phraseScores(toks, boost, slop).toDF("doc_id", "score"), bound)
       }
     val scoringDfs = phraseDfs.collect {
       case ((_, _, occ, _), df0, bound) if occ != Occur.MustNot => (df0, bound)

@@ -152,14 +152,13 @@ class BoolPhraseSpec extends SparkSpec {
   }
 
   test("positional route is on and is score-identical to the stored-field twin") {
-    assert(engine.index.hasPositions, "fresh v7 index must be positional")
     for (phrase <- Seq(SparkEntry.PhraseBigram, SparkEntry.PhraseTrigram, "batch batch")) {
       val toks = Tokenizer.tokenizeScala(phrase)
       val words = toks.toSeq.map("w:" + _)
       val dfs = engine.index.dfOf(words.distinct)
       val (n, avgdl) = engine.index.stats
       val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
-      val pos = engine.phraseScores(corpus, toks, 1.0)
+      val pos = engine.phraseScores(toks, 1.0)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
       val stored = engine.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
@@ -230,7 +229,7 @@ class BoolPhraseSpec extends SparkSpec {
     val (n, avgdl) = engine.index.stats
     val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
     for (slop <- Seq(1, 2)) {
-      val pos = engine.phraseScores(corpus, toks, 1.0, slop)
+      val pos = engine.phraseScores(toks, 1.0, slop)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
       val stored = engine.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl, slop)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq

@@ -136,7 +136,6 @@ class IndexSpec extends SparkSpec {
   }
 
   test("fuzzy gram-pruned route == vocabulary-scan twin; candidates << vocab; short terms fall back") {
-    assert(engine.index.hasNgrams, "fresh index must carry the trigram store")
     // driver Levenshtein must equal Spark's function exactly
     val rnd = new scala.util.Random(7)
     val alpha = "abcdz:"
@@ -330,8 +329,8 @@ class IndexSpec extends SparkSpec {
     assert(a.toSeq == b.toSeq)
     // stats derive from the union of both workers' docmeta
     assert(eng2.index.stats == engine.index.stats)
-    // phrase route (positions) survives the split build
-    assert(eng2.index.hasPositions, "split-built index must carry positions")
+    // every unit of the split build carries the current layout
+    assertCurrentLayout(d)
     val p1 = eng2.searchPhrase(corpus.toDF(), "big order", rows = 20).collect().map(_.toSeq)
     val p2 = engine.searchPhrase(corpus.toDF(), "big order", rows = 20).collect().map(_.toSeq)
     assert(p1.toSeq == p2.toSeq)
@@ -772,7 +771,7 @@ class IndexSpec extends SparkSpec {
 
   test("dictionary store: per-unit artifact equals segment-derived dfs, survives compaction") {
     val idx = new Index(spark, indexDir)
-    assert(idx.hasDictStore, "v4 build must write the dictionary store")
+    assertCurrentLayout(indexDir)
     def segDfs(i: Index): Map[String, Long] = i.segments
       .groupBy($"term").agg(sum($"df").cast("long")).as[(String, Long)].collect().toMap
     assert(idx.dictionary.select($"term", $"df").as[(String, Long)].collect().toMap
@@ -783,7 +782,7 @@ class IndexSpec extends SparkSpec {
     IndexBuild.compact(spark, d)
     val cIdx = new Index(spark, d)
     assert(cIdx.ranges.forall(_ < 0), "expected fully compacted units")
-    assert(cIdx.hasDictStore, "compaction must rewrite the dictionary store")
+    assertCurrentLayout(d)
     assert(cIdx.dictionary.select($"term", $"df").as[(String, Long)].collect().toMap
       == segDfs(cIdx))
   }
@@ -794,7 +793,6 @@ class IndexSpec extends SparkSpec {
     val d = tmpDir("countdict")
     IndexBuild.build(spark, corpus, s"countfs:$d", IndexConfig(segShift = 5, rangeSegsShift = 1))
     val idx = new Index(spark, s"countfs:$d")
-    assert(idx.hasDictStore)
     CountingFs.opens.clear()
     assert(idx.dfOf(Seq("w:spark", "w:dup")).nonEmpty)
     val segOpens = CountingFs.opens.toArray.map(_.toString).filter(_.contains("/segments/"))

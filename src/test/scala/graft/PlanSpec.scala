@@ -353,14 +353,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("positional phrase plan never touches the corpus: one segments scan, no content, no join") {
-    val corpus = Corpus.fromDocuments(spark, sfTiny)
-    assert(engine.index.hasPositions, "precondition: v7 positional index")
-    val df = engine.phraseScores(corpus,
+    val df = engine.phraseScores(
       SparkEntry.PhraseBigram.split(" "), 1.0) // gate phrase: present at sfTiny
     val p = plan(df.toDF())
     // the sloppy route shares the pin: slop only changes the in-task
     // position arithmetic, never the plan shape
-    val pSloppy = plan(engine.phraseScores(corpus,
+    val pSloppy = plan(engine.phraseScores(
       SparkEntry.PhraseBigram.split(" "), 1.0, slop = 2).toDF())
     def canon(s: String) = s.replaceAll("#\\d+L?", "#")
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+", "Lambda")

@@ -32,4 +32,24 @@ abstract class SparkSpec extends AnyFunSuite {
     * valid for the whole run.
     */
   def tempDir(tag: String): String = graft.util.Tmp.dir(tag)
+
+  /** Every live unit of `indexDir` holds each always-written store and a
+    * manifest stamped with the current codec_ver. `filters` (only with
+    * filterColumns) and `tombstones` (only with kills) are optional.
+    */
+  def assertCurrentLayout(indexDir: String): Unit = {
+    import graft.index.IndexBuild
+    val live = IndexBuild.liveUnits(spark, indexDir)
+    assert(live.nonEmpty, s"no live units under $indexDir")
+    val optional = Set(IndexBuild.filtersDir(indexDir), IndexBuild.tombstonesDir(indexDir))
+    IndexBuild.unitStoreDirs(indexDir).filterNot(optional).foreach { d =>
+      val missing = live.filterNot(IndexBuild.unitsIn(spark, d))
+      assert(missing.isEmpty, s"$d lacks units $missing")
+    }
+    val vers = IndexBuild.manifests(spark, indexDir, live)
+      .selectExpr("range_id", "codec_ver").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(vers == live.map(_ -> IndexBuild.CodecVer).toMap,
+      s"codec_ver per unit: $vers")
+  }
 }

@@ -356,9 +356,10 @@ class StreamingSpec extends SparkSpec {
     assert(!IndexBuild.liveUnits(spark, idxDir).contains(retiredId),
       "a resurrected retired unit must stay shadowed")
     IndexBuild.compact(spark, idxDir, maxUnitDocs = 200) // sweep
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"${IndexBuild.manifestDir(idxDir)}/range=$retiredId")),
-      "orphaned retired dirs must be GC-swept by the next compaction")
+    val leftover = IndexBuild.unitStoreDirs(idxDir).filter(d =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$d/range=$retiredId")))
+    assert(leftover.isEmpty,
+      s"orphaned retired dirs must be GC-swept by the next compaction: $leftover")
   }
 
   test("inline maintenance: streaming with maxLiveUnits keeps the unit count bounded") {
@@ -389,34 +390,24 @@ class StreamingSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("mixed manifest schemas: old-format units keep their attestations (per-row synthesis)") {
-    val root = tempDir("graft-mixed")
+  test("format check: a unit with codec_ver 1 or no codec_ver fails the Index") {
+    val root = tempDir("graft-format")
     val idxDir = s"$root/idx"
     val corpus = Corpus.fromDocuments(spark, sfTiny)
       .select("doc_id", "repo", "path", "commit", "lang", "content", "sha")
     IndexBuild.build(spark, corpus, idxDir, cfg) // 2 units at 256-doc ranges
-    val done1 = IndexBuild.doneRanges(spark, idxDir)
-    assert(done1 == Set(0L, 1L))
-    // rewrite unit 0's manifest in the PRE-v3 schema (no doc_ranges/retires)
+    assert(new Index(spark, idxDir).stats._1 > 0)
     val mdir = s"${IndexBuild.manifestDir(idxDir)}/range=0"
-    val old = spark.read.parquet(mdir)
-      .select("range_id", "n_docs", "sum_dl", "n_rows", "checksum",
-        "seg_shift", "range_segs_shift", "build_ms")
-      .collect()
-    spark.createDataFrame(spark.sparkContext.parallelize(old.toSeq, 1),
-      spark.read.parquet(mdir).select("range_id", "n_docs", "sum_dl", "n_rows",
-        "checksum", "seg_shift", "range_segs_shift", "build_ms").schema)
-      .coalesce(1).write.mode("overwrite").parquet(mdir)
-    // mixed schemas: unit 1 has the new columns, unit 0 does not -> unit 0's
-    // attestation must be SYNTHESIZED per row, not dropped as NULL
-    assert(IndexBuild.doneRanges(spark, idxDir) == Set(0L, 1L),
-      "old-format unit's ranges must stay done under mixed schemas")
-    val stats = IndexBuild.docRangeStats(spark, idxDir)
-      .collect().map(r => r.getLong(0)).toSet
-    assert(stats == Set(0L, 1L))
-    // build resume remains a no-op (the exactly-once gate is intact)
-    val r = IndexBuild.build(spark, corpus, idxDir, cfg)
-    assert(r.rangesBuilt.isEmpty, s"mixed schema caused re-ingest: ${r.rangesBuilt}")
+    val cur = spark.read.parquet(mdir)
+    val orig = spark.createDataFrame(
+      spark.sparkContext.parallelize(cur.collect().toSeq, 1), cur.schema)
+    for ((layout, m) <- Seq(
+        "codec_ver = 1" -> orig.withColumn("codec_ver", lit(1)),
+        "no codec_ver column" -> orig.drop("codec_ver"))) {
+      m.coalesce(1).write.mode("overwrite").parquet(mdir)
+      val e = intercept[IllegalStateException](new Index(spark, idxDir).stats)
+      assert(e.getMessage.contains("codec_ver"), s"$layout: ${e.getMessage}")
+    }
   }
 
   test("stateful sessionization: streamed (flatMapGroupsWithState) == batch gaps-and-islands") {

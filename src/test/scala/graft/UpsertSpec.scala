@@ -75,22 +75,18 @@ class UpsertSpec extends SparkSpec {
   lazy val eng = new Engine(new Index(spark, upsertDir))
   lazy val engAllV = new Engine(new Index(spark, allVDir))
 
-  test("deletes keep the positional/trigram routes alive (side-store templates + codec_ver)") {
-    // the first delete commits a tombstone-only unit; if that unit lacked
-    // the ngrams store or a codec_ver manifest column, hasNgrams/
-    // hasPositions would silently flip false and phrase/fuzzy would
-    // revert to the pre-positional fallbacks FOREVER (and a compaction
-    // would bake codec_ver=1 into the merged manifest — unrecoverable)
-    assert(eng.index.hasPositions, "delete must not disable the positional route")
-    assert(eng.index.hasNgrams, "delete must not disable the trigram route")
-    // and compaction of the mix keeps both (merged codec_ver stays 2)
+  test("deletes and compaction keep every unit on the current layout") {
+    // the delete committed a tombstone-only unit: it must carry an empty
+    // copy of every store and a current codec_ver, or the index stops opening
+    assert(IndexBuild.liveUnits(spark, upsertDir).exists(_ < 0), "expected a delete unit")
+    assertCurrentLayout(upsertDir)
+    // and compaction of a build + delete mix keeps it
     val dir = tempDir("graft-delpos")
     IndexBuild.build(spark, base, dir, cfg)
     IndexBuild.deleteByKeys(spark, deleteKeys, dir, keyCols = Seq("path"))
     IndexBuild.compact(spark, dir)
-    val post = new Index(spark, dir)
-    assert(post.hasPositions, "compaction after delete must keep codec_ver >= 2")
-    assert(post.hasNgrams, "compaction after delete must keep the trigram store")
+    assert(IndexBuild.liveUnits(spark, dir).forall(_ < 0), "expected compacted units")
+    assertCurrentLayout(dir)
   }
 
   test("stats stay stale until merge (Lucene deleted-docs semantics)") {
