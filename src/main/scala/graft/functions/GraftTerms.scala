@@ -752,10 +752,6 @@ private[graft] final class WindowHasher {
     }
   }
 
-  /** Token i as a fresh UTF8String (copies out of the shared buffer). */
-  def tokenUtf8(i: Int): UTF8String =
-    UTF8String.fromBytes(lowered, tokStart(i), tokEnd(i) - tokStart(i))
-
   // byte-range accessors for allocation-free per-token consumers (the
   // fused vocab counter): valid until the next tokenize() call
   def tokenLen(i: Int): Int = tokEnd(i) - tokStart(i)
@@ -832,7 +828,9 @@ private[graft] object WindowHasher {
   * (filter(split(lower(c), "[^a-z0-9]+"), length > 0)) and
   * [[Tokenizer.tokenizeScala]] — but via the [[WindowHasher]] ASCII fast
   * path (byte scan, no regex, no intermediate split array with empties).
-  * Null -> null, like lower/split. Pinned equal to both twins in
+  * Null -> null, like lower/split. Each result owns its bytes (one copy
+  * per row out of the thread-local scratch buffer), so any number of
+  * results may be held at once. Pinned equal to both twins in
   * FunctionsSpec; feeds the unigram-LM token passes where the regex
   * split was the per-row cost.
   */
@@ -845,9 +843,23 @@ case class GraftTokens(child: Expression)
   override def nullSafeEval(input: Any): Any = {
     val h = WindowHasher.local.get()
     h.tokenize(input.asInstanceOf[UTF8String])
-    val out = new Array[Any](h.nToks)
+    // the hasher's buffer is thread-local scratch the next tokenize()
+    // overwrites, and a projection may hold several results at once: copy
+    // the row's token bytes ONCE and build every token over that copy
+    var total = 0
     var i = 0
-    while (i < h.nToks) { out(i) = h.tokenUtf8(i); i += 1 }
+    while (i < h.nToks) { total += h.tokenLen(i); i += 1 }
+    val bytes = new Array[Byte](total)
+    val out = new Array[Any](h.nToks)
+    var off = 0
+    i = 0
+    while (i < h.nToks) {
+      val len = h.tokenLen(i)
+      h.copyToken(i, bytes, off)
+      out(i) = UTF8String.fromBytes(bytes, off, len)
+      off += len
+      i += 1
+    }
     new GenericArrayData(out)
   }
 

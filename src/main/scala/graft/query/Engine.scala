@@ -1,9 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.roaringbitmap.RoaringBitmap
-import graft.index.{Codec, IndexBuild, IndexConfig, TermHash}
+import graft.index.{Bitmaps, Codec, IndexBuild, IndexConfig, TermHash}
 import graft.corpus.Corpus
 
 /** Read-side view of a built index (segments + docmeta + manifest). Only
@@ -223,15 +223,20 @@ final class Index(val spark: SparkSession, val indexDir: String,
     .option("basePath", IndexBuild.ngramsDir(indexDir))
     .parquet(ranges.map(r => s"${IndexBuild.ngramsDir(indexDir)}/range=$r"): _*)
 
+  /** Rows of `terms` in `from` (the segments, or the dictionary): the
+    * term_id pushdown plus the term-string hash-collision guard, projected
+    * to the caller's own `cols` (only those columns are read).
+    */
+  private[graft] def termRows(terms: Seq[String], from: DataFrame = segments)(
+      cols: Column*): DataFrame =
+    from.where(col("term_id").isin(terms.map(TermHash.hash): _*) && col("term").isin(terms: _*))
+      .select(cols: _*)
+
   /** Global df per query term (term string checked: hash-collision guard). */
   def dfOf(terms: Seq[String]): Map[String, Long] = dictMap match {
     case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
     case None =>
-      val ids = terms.map(TermHash.hash)
-      dictionary
-        .where(col("term_id").isin(ids: _*) && col("term").isin(terms: _*))
-        .select(col("term"), col("df"))
-        .as[(String, Long)].collect().toMap
+      termRows(terms, dictionary)(col("term"), col("df")).as[(String, Long)].collect().toMap
   }
 }
 
@@ -359,6 +364,94 @@ final class Engine(val index: Index) {
     */
   val DenseArraySegShiftMax = 22
 
+  /** Segment hit rows of `terms` in the [[SegHit]] projection. */
+  private def segHits(terms: Seq[String]): Dataset[SegHit] =
+    index.termRows(terms)(
+      Seq("seg_id", "term", "df", "max_tf", "min_dl", "postings").map(col): _*).as[SegHit]
+
+  /** THE per-segment filter path — liresolr's collector-side filtering
+    * (each fq an accepted-docs set intersecting every scorer, deleted docs
+    * liveDocs tombstones applied the same way; SURVEY P2). Every segment
+    * that has hits reaches `kernel` as `(seg, hits, allow, values)`:
+    *   - `allow`: the ONE resolved local-id bitmap, null = every doc.
+    *     allow = OR(fq) ANDNOT OR(kill); with kills only, allow =
+    *     ¬OR(kill) over the segment's local-id capacity; with neither,
+    *     null. A docmeta predicate (`docPred`) resolves to the segment's
+    *     matching docs instead — kill-free by construction, as
+    *     [[Index.docmeta]] excludes tombstoned docs.
+    *   - `values`: per `valueFields` entry, the segment's (value, bitmap)
+    *     rows from the filter side-index.
+    * A segment drops when a covered fq has no bitmap row there (no doc
+    * carries the value), when its allow set is empty, and when it has no
+    * hits. fq, kill and value rows travel in ONE tagged exchange; a
+    * tombstone-free pass with no fq and no values stays a plain
+    * groupByKey — no cogroup, no tombstone scan. `fq` and `docPred` are
+    * alternatives ([[fqSplit]] never sets both).
+    */
+  private def perSegment[H, R: Encoder](hits: KeyValueGroupedDataset[Long, H],
+      fq: Option[(String, String)] = None, docPred: Option[Column] = None,
+      valueFields: Seq[String] = Nil)(
+      kernel: (Long, Iterator[H], RoaringBitmap, Array[Array[(String, RoaringBitmap)]]) => Iterator[R]
+  ): Dataset[R] = {
+    val cfg = index.cfg
+    val noValues = Array.empty[Array[(String, RoaringBitmap)]]
+    docPred match {
+      case Some(pred) =>
+        require(fq.isEmpty && valueFields.isEmpty, "a docmeta predicate is a pass's only side input")
+        val allowedBySeg = index.docmeta.where(pred)
+          .select(col("doc_id")).as[Long]
+          .groupByKey(d => cfg.segOf(d))
+        hits.cogroup(allowedBySeg) { (seg, hitIt, docIt) =>
+          if (!hitIt.hasNext) Iterator.empty
+          else {
+            val allow = new RoaringBitmap()
+            docIt.foreach(d => allow.add(cfg.localOf(d)))
+            if (allow.isEmpty) Iterator.empty else kernel(seg, hitIt, allow, noValues)
+          }
+        }
+      case None =>
+        // tagged bitmap rows: 0 = fq, 1 = kill, 2 + i = valueFields(i)
+        def tagged(rows: DataFrame, tag: Int, value: Column): DataFrame =
+          rows.select(col("seg_id"), lit(tag).as("tag"), value.as("value"), col("bitmap"))
+        val noValue = lit(null).cast("string")
+        val bitmapRows =
+          fq.toSeq.map { case (c, v) =>
+            tagged(index.filters.where(col("fcol") === lit(c) && col("value") === lit(v)), 0, noValue)
+          } ++
+          index.killBitmapsOpt.toSeq.map(k => tagged(k.toDF("seg_id", "bitmap"), 1, noValue)) ++
+          valueFields.zipWithIndex.map { case (f, i) =>
+            tagged(index.filters.where(col("fcol") === lit(f)), 2 + i, col("value"))
+          }
+        if (bitmapRows.isEmpty)
+          hits.flatMapGroups((seg, it) => kernel(seg, it, null, noValues))
+        else {
+          val hasFq = fq.isDefined
+          val nFields = valueFields.length
+          val segShift = cfg.segShift
+          val bms = bitmapRows.reduce(_ unionAll _).as[(Long, Int, String, Array[Byte])]
+          hits.cogroup(bms.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
+            val byTag = bmIt.toArray.groupBy(_._2)
+            def rowsOf(tag: Int) = byTag.getOrElse(tag, Array.empty[(Long, Int, String, Array[Byte])])
+            val fqBs = rowsOf(0).map(_._4)
+            if (!hitIt.hasNext || (hasFq && fqBs.isEmpty)) Iterator.empty
+            else {
+              val killBs = rowsOf(1).map(_._4)
+              val allow =
+                if (fqBs.isEmpty) Engine.flipAllow(killBs.toSeq, segShift)
+                else {
+                  val a = Engine.orAll(fqBs) // defensive OR: one bitmap per value expected
+                  if (killBs.nonEmpty) a.andNot(Engine.orAll(killBs))
+                  a
+                }
+              if (allow != null && allow.isEmpty) Iterator.empty
+              else kernel(seg, hitIt, allow, Array.tabulate(nFields)(i =>
+                rowsOf(2 + i).map(r => (r._3, Bitmaps.deserialize(r._4)))))
+            }
+          }
+        }
+    }
+  }
+
   /** Split the caller's doc filters into (bitmap-served fq, predicate).
     * An equality fq on a filter-indexed column takes the persisted
     * per-segment bitmap path (no docmeta scan) — but ONLY when it is the
@@ -457,25 +550,12 @@ final class Engine(val index: Index) {
     * per skipped block), tombstones excluded at emission. Only candidate
     * doc ids ever leave the segment task.
     */
-  private[graft] def conjunctiveDocs(terms: Seq[String]): org.apache.spark.sql.Dataset[Long] = {
+  private[graft] def conjunctiveDocs(terms: Seq[String]): Dataset[Long] = {
     val names = terms.distinct
-    val ids = names.map(TermHash.hash)
-    val hits = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-      .select("seg_id", "term", "df", "max_tf", "min_dl", "postings")
-      .as[SegHit]
     val cfg = index.cfg
     val nTerms = names.size
-    index.killBitmapsOpt match {
-      case None =>
-        hits.groupByKey(_.seg_id).flatMapGroups((seg, it) =>
-          Engine.conjunction(seg, it.toArray, nTerms, cfg, null))
-      case Some(k) =>
-        val segShift = cfg.segShift
-        hits.groupByKey(_.seg_id).cogroup(k.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-          Engine.conjunction(seg, hitIt.toArray, nTerms, cfg,
-            Engine.flipAllow(bmIt.map(_._2).toSeq, segShift))
-        }
+    perSegment(segHits(names).groupByKey(_.seg_id)) { (seg, it, allow, _) =>
+      Engine.conjunction(seg, it.toArray, nTerms, cfg, allow)
     }
   }
 
@@ -540,27 +620,15 @@ final class Engine(val index: Index) {
     * [[phraseScoresStored]] in BoolPhraseSpec).
     */
   private def phraseScoresPositional(toks: Array[String], weight: Double,
-      avgdl: Double, slop: Int = 0): org.apache.spark.sql.Dataset[Scored] = {
+      avgdl: Double, slop: Int = 0): Dataset[Scored] = {
     val words = toks.map("w:" + _)
     val names = words.distinct.toSeq
-    val ids = names.map(TermHash.hash)
-    val hits = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-      .select(col("seg_id"), col("term"), col("postings"), col("positions"))
+    val hits = index.termRows(names)(col("seg_id"), col("term"), col("postings"), col("positions"))
       .as[(Long, String, Array[Byte], Array[Byte])]
     val cfg = index.cfg
     val nDistinct = names.size
-    index.killBitmapsOpt match {
-      case None =>
-        hits.groupByKey(_._1).flatMapGroups((seg, it) =>
-          Engine.phraseMatches(seg, it.toArray, words, nDistinct, cfg, null,
-            weight, avgdl, slop))
-      case Some(k) =>
-        val segShift = cfg.segShift
-        hits.groupByKey(_._1).cogroup(k.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-          Engine.phraseMatches(seg, hitIt.toArray, words, nDistinct, cfg,
-            Engine.flipAllow(bmIt.map(_._2).toSeq, segShift), weight, avgdl, slop)
-        }
+    perSegment(hits.groupByKey(_._1)) { (seg, it, allow, _) =>
+      Engine.phraseMatches(seg, it.toArray, words, nDistinct, cfg, allow, weight, avgdl, slop)
     }
   }
 
@@ -1192,12 +1260,7 @@ final class Engine(val index: Index) {
     // extra isin value each) but never reach the scorer — their lists only
     // feed the per-segment exclusion bitmap in scoreSegQ below
     val allNames = (weights.keys ++ mustNot).toSeq.distinct
-    val ids = allNames.map(TermHash.hash)
     val (aScore, aDoc) = after.getOrElse((Long.MaxValue, Long.MinValue))
-    val hits = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(allNames: _*))
-      .select("seg_id", "term", "df", "max_tf", "min_dl", "postings")
-      .as[SegHit]
     val cfg = index.cfg
     val wB = spark.sparkContext.broadcast(weights)
     // per-segment scorer: WAND/exhaustive DAAT, or the dense-array
@@ -1228,72 +1291,18 @@ final class Engine(val index: Index) {
             allow)
         }
       }
-    // Solr-update tombstones: kill bitmaps ride the SAME per-segment
-    // cogroup as the fq bitmaps (tagged rows), so exclusion happens inside
-    // the segment task BEFORE any top-k heap — a dead doc can never occupy
-    // a result slot. Tombstone-free indexes keep the exact pre-upsert plans.
-    val kills = index.killBitmapsOpt
-    val scored: org.apache.spark.sql.Dataset[Scored] = (bitmapFq, docPred) match {
-      case (Some((c, v)), _) =>
-        // persisted filter side-index: the per-segment bitmaps were built
-        // once at index time, so a repeated fq (lang='en') cogroups a
-        // KB-sized bitmap table with the hits — no docmeta scan, no
-        // per-query doc_id shuffle (VERDICT r01 "What's wrong" #6)
-        val fq = index.filters
-          .where(col("fcol") === lit(c) && col("value") === lit(v))
-          .select(col("seg_id"), col("bitmap"), lit(0).as("tag"))
-        val bms = (kills match {
-          case Some(k) => fq.unionAll(k.toDF("seg_id", "bitmap")
-            .select(col("seg_id"), col("bitmap"), lit(1).as("tag")))
-          case None => fq
-        }).as[(Long, Array[Byte], Int)]
-        hits.groupByKey(_.seg_id).cogroup(bms.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-          val (fqBs, killBs) = bmIt.toArray.partition(_._3 == 0)
-          if (fqBs.isEmpty) Iterator.empty
-          else {
-            val bm = Engine.orAll(fqBs.map(_._2)) // defensive OR: one bitmap/value expected
-            if (killBs.nonEmpty) bm.andNot(Engine.orAll(killBs.map(_._2)))
-            if (bm.isEmpty) Iterator.empty
-            else scoreSeg(seg, hitIt, bm)
-          }
-        }
-      case (None, Some(pred)) =>
-        // arbitrary-predicate fq: per-segment allowed-bitmap built from a
-        // docmeta scan, cogrouped with the hits — the bitmap never leaves
-        // its segment task (SURVEY.md P2). index.docmeta already excludes
-        // tombstoned docs, so the allow set is kill-free by construction.
-        val allowedBySeg = index.docmeta.where(pred)
-          .select(col("doc_id")).as[Long]
-          .groupByKey(d => cfg.segOf(d))
-        hits.groupByKey(_.seg_id).cogroup(allowedBySeg) { (seg, hitIt, docIt) =>
-          val bm = new RoaringBitmap()
-          docIt.foreach(d => bm.add(cfg.localOf(d)))
-          if (bm.isEmpty) Iterator.empty
-          else scoreSeg(seg, hitIt, bm)
-        }
-      case (None, None) =>
-        kills match {
-          case None =>
-            hits.groupByKey(_.seg_id).flatMapGroups { (seg, it) =>
-              scoreSeg(seg, it, null)
-            }
-          case Some(k) =>
-            val segShift = cfg.segShift
-            hits.groupByKey(_.seg_id).cogroup(k.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-              val allow = Engine.flipAllow(bmIt.map(_._2).toSeq, segShift)
-              scoreSeg(seg, hitIt, allow)
-            }
-        }
+    // fq, predicate and tombstones all resolve to the ONE allow bitmap
+    // ([[perSegment]]) inside the segment task, BEFORE any top-k heap — a
+    // dead or filtered-out doc can never occupy a result slot. A covered
+    // fq (lang='en') cogroups the persisted KB-sized per-segment bitmaps
+    // built once at index time: no docmeta scan, no per-query doc_id
+    // shuffle (VERDICT r01 "What's wrong" #6).
+    val scored = perSegment(segHits(allNames).groupByKey(_.seg_id), bitmapFq, docPred) {
+      (seg, it, allow, _) => scoreSeg(seg, it, allow)
     }
     Wand.topK(spark, scored, rows)
   }
 
-  /** Dense-query columnar plan: segments filtered to the query terms ->
-    * explode(graft_postings) -> weight ⋈ (broadcast) -> codegen'd hash
-    * aggregation per doc -> TakeOrderedAndProject. No scalar loop, no
-    * typed shuffle: partial aggregation runs map-side per segment file and
-    * only (doc_id, partial-sum) rows move. Exact (same quantized tie rule).
-    */
   /** All matching docs with exact raw scores — no top-k, no quantization:
     * (doc_id, score). The exploded-postings hash-agg plan of [[scanScore]]
     * (map-side partial sums per segment file), tombstones excluded before
@@ -1334,15 +1343,12 @@ final class Engine(val index: Index) {
           mustNot.map(t => (t, 0.0, notBit))
     }
     val names = wRows.map(_._1)
-    val ids = names.map(TermHash.hash)
     val wDf = membership match {
       case None => wRows.map { case (t, w, _) => (t, w) }.toDF("term", "w")
       case Some(_) => wRows.toDF("term", "w", "mask")
     }
     val maskCols = if (membership.isDefined) Seq(col("mask")) else Nil
-    val exploded = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-      .select(col("seg_id"), col("term"), col("postings"))
+    val exploded = index.termRows(names)(col("seg_id"), col("term"), col("postings"))
       .join(broadcast(wDf), Seq("term"))
       .select(Seq(col("seg_id"), col("w")) ++ maskCols :+
         explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"): _*)
@@ -1405,6 +1411,12 @@ final class Engine(val index: Index) {
     scanScoreBase(weights, avgdl, docPred = None,
       membership = Some((must, groups, mustNot)))
 
+  /** Dense-query columnar plan: segments filtered to the query terms ->
+    * explode(graft_postings) -> weight ⋈ (broadcast) -> codegen'd hash
+    * aggregation per doc -> TakeOrderedAndProject. No scalar loop, no
+    * typed shuffle: partial aggregation runs map-side per segment file and
+    * only (doc_id, partial-sum) rows move. Exact (same quantized tie rule).
+    */
   private[graft] def scanScore(
       weights: Map[String, Double], rows: Int, avgdl: Double,
       docPred: Option[Column], after: Option[(Long, Long)] = None): DataFrame = {
@@ -1573,34 +1585,15 @@ final class Engine(val index: Index) {
   private def wandMany(weightsByQuery: Map[Long, Map[String, Double]],
                        rows: Int, candidates: Int, avgdl: Double): DataFrame = {
     val liveTerms = weightsByQuery.values.flatMap(_.keys).toSeq.distinct
-    val ids = liveTerms.map(TermHash.hash)
-    val hits = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(liveTerms: _*))
-      .select("seg_id", "term", "df", "max_tf", "min_dl", "postings")
-      .as[SegHit]
     val cfg = index.cfg
     val wB = spark.sparkContext.broadcast(weightsByQuery)
     val heapSize = math.min(candidates, rows)
-    val scored = index.killBitmapsOpt match {
-      case None =>
-        hits.groupByKey(_.seg_id).flatMapGroups { (seg, it) =>
-          val segRows = it.toArray // shared once, re-traversed per query (≤|q| rows)
-          wB.value.iterator.flatMap { case (qid, weights) =>
-            Wand.scoreSegment(seg, segRows.iterator, weights, avgdl,
-              heapSize, cfg, null, useWand = true).map(s => (qid, s))
-          }
-        }
-      case Some(k) =>
-        // tombstoned index: allow = ¬kill per segment (see daatScore)
-        val segShift = cfg.segShift
-        hits.groupByKey(_.seg_id).cogroup(k.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-          val allow = Engine.flipAllow(bmIt.map(_._2).toSeq, segShift)
-          val segRows = hitIt.toArray
-          wB.value.iterator.flatMap { case (qid, weights) =>
-            Wand.scoreSegment(seg, segRows.iterator, weights, avgdl,
-              heapSize, cfg, allow, useWand = true).map(s => (qid, s))
-          }
-        }
+    val scored = perSegment(segHits(liveTerms).groupByKey(_.seg_id)) { (seg, it, allow, _) =>
+      val segRows = it.toArray // shared once, re-traversed per query (≤|q| rows)
+      wB.value.iterator.flatMap { case (qid, weights) =>
+        Wand.scoreSegment(seg, segRows.iterator, weights, avgdl,
+          heapSize, cfg, allow, useWand = true).map(s => (qid, s))
+      }
     }
     Wand.topKPerQuery(spark, scored, rows)
   }
@@ -1620,11 +1613,8 @@ final class Engine(val index: Index) {
     val wRows = weightsByQuery.toSeq.flatMap { case (qid, ws) =>
       ws.map { case (t, w) => (qid, t, w) } }
     val terms = wRows.map(_._2).distinct
-    val ids = terms.map(TermHash.hash)
     val wDf = wRows.toDF("query_id", "term", "w")
-    val scored = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(terms: _*))
-      .select(col("seg_id"), col("term"),
+    val scored = index.termRows(terms)(col("seg_id"), col("term"),
         explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"))
       .join(broadcast(wDf), Seq("term"))
       .select(col("query_id"),
@@ -1736,65 +1726,14 @@ final class Engine(val index: Index) {
   private[graft] def facetBitmap(terms: Seq[(String, Double)], field: String,
                                  docFilter: Option[(String, String)] = None): DataFrame = {
     import spark.implicits._
-    val names = terms.map(_._1).distinct
-    val ids = names.map(TermHash.hash)
-    val hits = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-      .select(col("seg_id"), col("postings")).as[(Long, Array[Byte])]
-    // value rows tag 0; kill rows tag 1; fq rows tag 2 — one cogroup
-    val hasFq = docFilter.isDefined
-    val valueRows = index.filters
-      .where(col("fcol") === lit(field))
-      .select(col("seg_id"), col("value"), col("bitmap"), lit(0).as("tag"))
-    val withFq = docFilter match {
-      case Some((c, v)) => valueRows.unionAll(index.filters
-        .where(col("fcol") === lit(c) && col("value") === lit(v))
-        .select(col("seg_id"), lit(null).cast("string").as("value"),
-          col("bitmap"), lit(2).as("tag")))
-      case None => valueRows
-    }
-    val bms = (index.killBitmapsOpt match {
-      case Some(k) => withFq.unionAll(k.toDF("seg_id", "bitmap")
-        .select(col("seg_id"), lit(null).cast("string").as("value"),
-          col("bitmap"), lit(1).as("tag")))
-      case None => withFq
-    }).as[(Long, String, Array[Byte], Int)]
-    hits.groupByKey(_._1).cogroup(bms.groupByKey(_._1)) { (_, hitIt, bmIt) =>
-      if (hitIt.isEmpty) Iterator.empty
-      else {
-        val rows = bmIt.toArray
-        val fqRows = rows.filter(_._4 == 2)
-        // fq on a covered column and no bitmap row in this segment =>
-        // no doc here carries the value — the whole segment drops
-        if (hasFq && fqRows.isEmpty) Iterator.empty
-        else {
-          val m = new RoaringBitmap()
-          hitIt.foreach { case (_, post) =>
-            val it = new graft.index.Codec.Iter(post) // allocation-free walk
-            if (!it.exhausted) {
-              var more = true
-              while (more) { m.add(it.curLocal); more = it.next() }
-            }
-          }
-          if (hasFq) m.and(Engine.orAll(fqRows.map(_._3)))
-          val values = rows.filter(_._4 == 0)
-          val killRows = rows.filter(_._4 == 1)
-          if (killRows.nonEmpty) m.andNot(Engine.orAll(killRows.map(_._3)))
-          // matching docs covered by NO value bitmap (a range whose docmeta
-          // lacked the column entirely — mixed filter schemas across format
-          // versions) belong to the NULL group, exactly as the docmeta-scan
-          // path counts them (parquet fills the missing column with null)
-          val rest = m.clone()
-          val counted = values.flatMap { case (_, value, bytes, _) =>
-            val vb = graft.index.Bitmaps.deserialize(bytes)
-            val n = RoaringBitmap.andCardinality(m, vb)
-            rest.andNot(vb)
-            if (n > 0) Some((value, n.toLong)) else None
-          }
-          val restN = rest.getLongCardinality
-          (if (restN > 0) counted :+ ((null: String, restN)) else counted).iterator
-        }
-      }
+    val hits = index.termRows(terms.map(_._1).distinct)(col("seg_id"), col("postings"))
+      .as[(Long, Array[Byte])]
+    perSegment(hits.groupByKey(_._1), fq = docFilter, valueFields = Seq(field)) {
+      (_, it, allow, values) =>
+        // matching docs under NO value bitmap (a null `field`) count into
+        // the null group, as facetScan's docmeta grouping counts them
+        Wand.valueSlices(Engine.matchBitmap(it.map(_._2), allow), values(0))
+          .iterator.map { case (value, slice) => (value, slice.getLongCardinality) }
     }
       .toDF("value", "n0")
       .groupBy(col("value"))
@@ -1807,11 +1746,7 @@ final class Engine(val index: Index) {
     * exclusion.
     */
   private def matchSet(terms: Seq[(String, Double)]): DataFrame = {
-    val names = terms.map(_._1).distinct
-    val ids = names.map(TermHash.hash)
-    index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-      .select(col("seg_id"),
+    index.termRows(terms.map(_._1).distinct)(col("seg_id"),
         explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"))
       .select(packedDocId(col("seg_id"), col("p.local")).as("doc_id"))
       .distinct()
@@ -2006,62 +1941,17 @@ final class Engine(val index: Index) {
                                       field: String,
                                       pivotField: String): DataFrame = {
     import spark.implicits._
-    val names = terms.map(_._1).distinct
-    val ids = names.map(TermHash.hash)
-    val hits = index.segments
-      .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-      .select(col("seg_id"), col("postings")).as[(Long, Array[Byte])]
-    // tag 0 = f1 value rows, 2 = f2 value rows, 1 = kill rows
-    val f1 = index.filters.where(col("fcol") === lit(field))
-      .select(col("seg_id"), col("value"), col("bitmap"), lit(0).as("tag"))
-    val f2 = index.filters.where(col("fcol") === lit(pivotField))
-      .select(col("seg_id"), col("value"), col("bitmap"), lit(2).as("tag"))
-    val bms = (index.killBitmapsOpt match {
-      case Some(k) => f1.unionAll(f2).unionAll(k.toDF("seg_id", "bitmap")
-        .select(col("seg_id"), lit(null).cast("string").as("value"),
-          col("bitmap"), lit(1).as("tag")))
-      case None => f1.unionAll(f2)
-    }).as[(Long, String, Array[Byte], Int)]
-    hits.groupByKey(_._1).cogroup(bms.groupByKey(_._1)) { (_, hitIt, bmIt) =>
-      if (hitIt.isEmpty) Iterator.empty
-      else {
-        val m = new RoaringBitmap()
-        hitIt.foreach { case (_, post) =>
-          val it = new graft.index.Codec.Iter(post)
-          if (!it.exhausted) {
-            var more = true
-            while (more) { m.add(it.curLocal); more = it.next() }
-          }
-        }
-        val rows = bmIt.toArray
-        val killRows = rows.filter(_._4 == 1)
-        if (killRows.nonEmpty) m.andNot(Engine.orAll(killRows.map(_._3)))
-        val v2 = rows.filter(_._4 == 2)
-          .map(r => (r._2, graft.index.Bitmaps.deserialize(r._3)))
+    val hits = index.termRows(terms.map(_._1).distinct)(col("seg_id"), col("postings"))
+      .as[(Long, Array[Byte])]
+    perSegment(hits.groupByKey(_._1), valueFields = Seq(field, pivotField)) {
+      (_, it, allow, values) =>
         // one f1 slice = the docs of one (value) cell; each slice then
-        // popcounts against the f2 bitmaps, tracking both NULL rests
-        def cells(v1: String, slice: RoaringBitmap): Iterator[(String, String, Long)] = {
-          val rest2 = slice.clone()
-          val out = v2.flatMap { case (pv, pb) =>
-            val n = RoaringBitmap.andCardinality(slice, pb)
-            rest2.andNot(pb)
-            if (n > 0) Some((v1, pv, n.toLong)) else None
+        // splits by the f2 bitmaps — both levels keep their null group
+        Wand.valueSlices(Engine.matchBitmap(it.map(_._2), allow), values(0))
+          .iterator.flatMap { case (v1, slice) =>
+            Wand.valueSlices(slice, values(1)).iterator
+              .map { case (v2, cell) => (v1, v2, cell.getLongCardinality) }
           }
-          val r2 = rest2.getLongCardinality
-          (if (r2 > 0) out :+ ((v1, null: String, r2)) else out).iterator
-        }
-        val rest1 = m.clone()
-        val level1 = rows.filter(_._4 == 0).iterator.flatMap { case (_, v1, bytes, _) =>
-          val b1 = graft.index.Bitmaps.deserialize(bytes)
-          val slice = RoaringBitmap.and(m, b1)
-          rest1.andNot(b1)
-          if (slice.isEmpty) Iterator.empty else cells(v1, slice)
-        }.toArray // strict: rest1 must be final before the null slice
-        val nullSlice =
-          if (rest1.isEmpty) Iterator.empty
-          else cells(null: String, rest1)
-        level1.iterator ++ nullSlice
-      }
     }
       .toDF("value", "pivot", "n0")
       .groupBy(col("value"), col("pivot"))
@@ -2139,32 +2029,13 @@ final class Engine(val index: Index) {
     // equal in PlanSpec).
     val viaBitmap = index.hasFilters && index.filterColsComplete.contains("repo") &&
       index.cfg.segShift <= DenseArraySegShiftMax
-    val agg0: DataFrame =
+    val agg: DataFrame =
       if (viaBitmap) {
-        val names = weights.keys.toSeq
-        val ids = names.map(TermHash.hash)
-        val hits = index.segments
-          .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-          .select("seg_id", "term", "df", "max_tf", "min_dl", "postings")
-          .as[SegHit]
-        val valueRows = index.filters
-          .where(col("fcol") === lit("repo"))
-          .select(col("seg_id"), col("value"), col("bitmap"), lit(0).as("tag"))
-        val bms = (index.killBitmapsOpt match {
-          case Some(k) => valueRows.unionAll(k.toDF("seg_id", "bitmap")
-            .select(col("seg_id"), lit(null).cast("string").as("value"),
-              col("bitmap"), lit(1).as("tag")))
-          case None => valueRows
-        }).as[(Long, String, Array[Byte], Int)]
         val wB = spark.sparkContext.broadcast(weights)
         val cfg = index.cfg
-        hits.groupByKey(_.seg_id).cogroup(bms.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-          val rows0 = bmIt.toArray
-          val killRows = rows0.filter(_._4 == 1)
-          val kill = if (killRows.isEmpty) null else Engine.orAll(killRows.map(_._3))
-          Wand.scoreSegmentValueAgg(seg, hitIt,
-            rows0.filter(_._4 == 0).map(r => (r._2, r._3)), kill,
-            wB.value, avgdl, cfg)
+        perSegment(segHits(weights.keys.toSeq).groupByKey(_.seg_id), valueFields = Seq("repo")) {
+          (seg, it, allow, values) =>
+            Wand.scoreSegmentValueAgg(seg, it, values(0), allow, wB.value, avgdl, cfg)
         }
           .toDF("parent", "sum_q", "max_q", "nc")
           .groupBy(col("parent"))
@@ -2183,7 +2054,6 @@ final class Engine(val index: Index) {
             max(col("score_q")).cast("long").as("max_q"),
             count(lit(1)).cast("long").as("n_children"))
       }
-    val agg = agg0
     val score = scoreMode match {
       case "max" => col("max_q")
       case "total" => col("total_q")
@@ -2281,47 +2151,14 @@ final class Engine(val index: Index) {
       cfg.segShift <= DenseArraySegShiftMax
     val perVal: org.apache.spark.sql.Dataset[(String, Scored)] =
       if (viaBitmap) {
-        val ids = weights.keys.map(TermHash.hash).toSeq
-        val names = weights.keys.toSeq
-        val hits = index.segments
-          .where(col("term_id").isin(ids: _*) && col("term").isin(names: _*))
-          .select("seg_id", "term", "df", "max_tf", "min_dl", "postings")
-          .as[SegHit]
-        val valueRows = index.filters
-          .where(col("fcol") === lit(field))
-          .select(col("seg_id"), col("value"), col("bitmap"), lit(0).as("tag"))
-        // tag 3 = fq bitmap rows (sole covered equality fq, as in
-        // searchByTerms) — intersects the touched set inside the segment
-        val withFq = bitmapFq match {
-          case Some((c, v)) => valueRows.unionAll(index.filters
-            .where(col("fcol") === lit(c) && col("value") === lit(v))
-            .select(col("seg_id"), lit(null).cast("string").as("value"),
-              col("bitmap"), lit(3).as("tag")))
-          case None => valueRows
-        }
-        val bms = (index.killBitmapsOpt match {
-          case Some(k) => withFq.unionAll(k.toDF("seg_id", "bitmap")
-            .select(col("seg_id"), lit(null).cast("string").as("value"),
-              col("bitmap"), lit(1).as("tag")))
-          case None => withFq
-        }).as[(Long, String, Array[Byte], Int)]
+        // a sole covered equality fq rides the same cogroup as the value
+        // bitmaps (as in searchByTerms) and intersects the touched set
+        // inside the segment
         val wB = spark.sparkContext.broadcast(weights)
         val gl = groupLimit
-        val hasFq = bitmapFq.isDefined
-        hits.groupByKey(_.seg_id).cogroup(bms.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-          val rows = bmIt.toArray
-          val fqRows = rows.filter(_._4 == 3)
-          // covered fq with no bitmap row here: no doc in this segment
-          // carries the value — the segment drops
-          if (hasFq && fqRows.isEmpty) Iterator.empty
-          else {
-            val killRows = rows.filter(_._4 == 1)
-            val kill = if (killRows.isEmpty) null else Engine.orAll(killRows.map(_._3))
-            val allow = if (fqRows.isEmpty) null else Engine.orAll(fqRows.map(_._3))
-            Wand.scoreSegmentGrouped(seg, hitIt,
-              rows.filter(_._4 == 0).map(r => (r._2, r._3)), kill, allow,
-              wB.value, avgdl, gl, cfg)
-          }
+        perSegment(segHits(weights.keys.toSeq).groupByKey(_.seg_id), fq = bitmapFq,
+          valueFields = Seq(field)) { (seg, it, allow, values) =>
+          Wand.scoreSegmentGrouped(seg, it, values(0), allow, wB.value, avgdl, gl, cfg)
         }
       } else
         scanScoreAll(weights, avgdl,
@@ -2570,6 +2407,17 @@ object Engine {
   private[query] def addPostings(bm: RoaringBitmap, postings: Array[Byte]): Unit = {
     val it = new Codec.Iter(postings)
     while (!it.exhausted) { bm.add(it.curLocal); it.next() }
+  }
+
+  /** Local ids of a segment's Boolean-OR match set (the union of its
+    * posting lists) ∩ `allow` (null = every doc).
+    */
+  private[query] def matchBitmap(postings: Iterator[Array[Byte]],
+      allow: RoaringBitmap): RoaringBitmap = {
+    val m = new RoaringBitmap()
+    postings.foreach(addPostings(m, _))
+    if (allow != null) m.and(allow)
+    m
   }
 
   /** Segment-local leapfrog intersection (Lucene ConjunctionDISI): all

@@ -307,16 +307,65 @@ object Wand {
     heap.sortedBestFirst.iterator
   }
 
-  /** Dense-query segment scorer: every posting of every query list folds
-    * into ONE primitive score array indexed by segment-local id (width =
-    * 2^segShift — the caller guards the shift), touched ids tracked in a
-    * bitmap, then one sweep offers (doc, score) to the bounded heap. For a
-    * corpus-blanketing query this is O(postings + touched) with NO
-    * per-doc list sorting (the scalar DAAT loop's cost) and NO doc-keyed
-    * shuffle (the columnar hash-agg plan's cost) — scores never leave the
-    * segment task. Exact: same tfNorm terms, quantized tie rule at the
-    * heap; `allowed` (fq/kill) intersects the touched set BEFORE the
-    * sweep; cursor semantics as in [[scoreSegment]].
+  /** The dense fill shared by the dense-array kernels: every posting of
+    * every weighted list folds into ONE primitive score array indexed by
+    * segment-local id (width = 2^segShift — the caller guards the shift),
+    * touched ids tracked in a bitmap, then intersected with `allow`
+    * (null = every doc). None when no query list has postings here.
+    */
+  private def denseFill(hits: Iterator[SegHit], weights: Map[String, Double],
+      avgdl: Double, cfg: IndexConfig,
+      allow: RoaringBitmap): Option[(Array[Double], RoaringBitmap)] = {
+    var scores: Array[Double] = null // allocated on the first matching list
+    val touched = new RoaringBitmap()
+    hits.foreach { h =>
+      weights.get(h.term).foreach { w =>
+        val it = new Codec.Iter(h.postings)
+        if (!it.exhausted) {
+          if (scores == null) scores = new Array[Double](1 << cfg.segShift)
+          var more = true
+          while (more) {
+            val local = it.curLocal
+            scores(local) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
+            touched.add(local)
+            more = it.next()
+          }
+        }
+      }
+    }
+    if (scores == null) None
+    else {
+      if (allow != null) touched.and(allow)
+      Some((scores, touched))
+    }
+  }
+
+  /** The value sweep: `set` split by value bitmaps into (value, set ∩
+    * bitmap) for each non-empty intersection, then (null, rest) for the
+    * docs under NO value bitmap — the missing-value group, exactly as a
+    * docmeta scan groups a null column. `set` is not modified.
+    */
+  def valueSlices(set: RoaringBitmap,
+      values: Array[(String, RoaringBitmap)]): Array[(String, RoaringBitmap)] = {
+    val rest = set.clone()
+    val out = Array.newBuilder[(String, RoaringBitmap)]
+    values.foreach { case (value, vb) =>
+      val slice = RoaringBitmap.and(set, vb)
+      rest.andNot(vb)
+      if (!slice.isEmpty) out += ((value, slice))
+    }
+    if (!rest.isEmpty) out += ((null, rest))
+    out.result()
+  }
+
+  /** Dense-query segment scorer: the [[denseFill]], then one sweep offers
+    * (doc, score) to the bounded heap. For a corpus-blanketing query this
+    * is O(postings + touched) with NO per-doc list sorting (the scalar
+    * DAAT loop's cost) and NO doc-keyed shuffle (the columnar hash-agg
+    * plan's cost) — scores never leave the segment task. Exact: same
+    * tfNorm terms, quantized tie rule at the heap; `allowed` (fq/kill)
+    * intersects the touched set BEFORE the sweep; cursor semantics as in
+    * [[scoreSegment]].
     */
   def scoreSegmentDense(
       segId: Long,
@@ -327,171 +376,79 @@ object Wand {
       cfg: IndexConfig,
       allowed: RoaringBitmap,
       afterScoreQ: Long = Long.MaxValue,
-      afterDocId: Long = Long.MinValue): Iterator[Scored] = {
-    @inline def afterCursor(docId: Long, score: Double): Boolean =
-      cursorAccepts(afterScoreQ, afterDocId, docId, score)
-    val width = 1 << cfg.segShift
-    var scores: Array[Double] = null // allocated on the first matching list
-    val touched = new RoaringBitmap()
-    hits.foreach { h =>
-      weights.get(h.term).foreach { w =>
-        val it = new Codec.Iter(h.postings)
-        if (!it.exhausted) {
-          if (scores == null) scores = new Array[Double](width)
-          var more = true
-          while (more) {
-            val local = it.curLocal
-            scores(local) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
-            touched.add(local)
-            more = it.next()
-          }
+      afterDocId: Long = Long.MinValue): Iterator[Scored] =
+    denseFill(hits, weights, avgdl, cfg, allowed) match {
+      case None => Iterator.empty
+      case Some((scores, touched)) =>
+        val heap = new BoundedTopK(candidates)
+        val bi = touched.getIntIterator
+        while (bi.hasNext) {
+          val local = bi.next()
+          val gid = cfg.globalOf(segId, local)
+          val s = scores(local)
+          if (cursorAccepts(afterScoreQ, afterDocId, gid, s)) heap.offer(gid, s)
         }
-      }
+        heap.sortedBestFirst.iterator
     }
-    if (scores == null) return Iterator.empty
-    if (allowed != null) touched.and(allowed)
-    val heap = new BoundedTopK(candidates)
-    val bi = touched.getIntIterator
-    while (bi.hasNext) {
-      val local = bi.next()
-      val gid = cfg.globalOf(segId, local)
-      val s = scores(local)
-      if (afterCursor(gid, s)) heap.offer(gid, s)
-    }
-    heap.sortedBestFirst.iterator
-  }
 
-  /** Segment-local grouped top-k (Solr result grouping): score every
-    * matching doc into the dense array ONCE (the [[scoreSegmentDense]]
-    * fill), then each group-value bitmap sweeps its intersection with the
-    * touched set into a bounded heap of `groupLimit` — only (value,
-    * top-doc) rows, bounded by values-in-segment × groupLimit, ever leave
-    * the segment task. Docs under NO value bitmap form the null group
-    * (Solr's missing-value group). `kill`: pre-merged tombstone bitmap or
-    * null — excluded before any heap, as everywhere. `allowed`: fq bitmap
-    * or null — intersected with the touched set before any sweep (the
-    * caller drops the whole segment when the fq column is covered but has
-    * no bitmap row here).
+  /** Segment-local grouped top-k (Solr result grouping): the
+    * [[denseFill]] under `allow` (fq/kill, null = every doc), then each
+    * [[valueSlices]] slice sweeps into a bounded heap of `groupLimit` —
+    * only (value, top-doc) rows, bounded by values-in-segment ×
+    * groupLimit, ever leave the segment task. The null slice is Solr's
+    * missing-value group.
     */
   def scoreSegmentGrouped(
       segId: Long,
       hits: Iterator[SegHit],
-      valueBms: Array[(String, Array[Byte])],
-      kill: RoaringBitmap,
-      allowed: RoaringBitmap,
+      valueBms: Array[(String, RoaringBitmap)],
+      allow: RoaringBitmap,
       weights: Map[String, Double],
       avgdl: Double,
       groupLimit: Int,
-      cfg: IndexConfig): Iterator[(String, Scored)] = {
-    val width = 1 << cfg.segShift
-    var scores: Array[Double] = null // allocated on the first matching list
-    val touched = new RoaringBitmap()
-    hits.foreach { h =>
-      weights.get(h.term).foreach { w =>
-        val it = new Codec.Iter(h.postings)
-        if (!it.exhausted) {
-          if (scores == null) scores = new Array[Double](width)
-          var more = true
-          while (more) {
-            val local = it.curLocal
-            scores(local) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
-            touched.add(local)
-            more = it.next()
-          }
+      cfg: IndexConfig): Iterator[(String, Scored)] =
+    denseFill(hits, weights, avgdl, cfg, allow) match {
+      case None => Iterator.empty
+      case Some((scores, touched)) =>
+        valueSlices(touched, valueBms).iterator.flatMap { case (value, slice) =>
+          val h = new BoundedTopK(groupLimit)
+          val bi = slice.getIntIterator
+          while (bi.hasNext) { val l = bi.next(); h.offer(cfg.globalOf(segId, l), scores(l)) }
+          h.sortedBestFirst.iterator.map(s => (value, s))
         }
-      }
     }
-    if (scores == null) return Iterator.empty
-    if (allowed != null) touched.and(allowed)
-    if (kill != null) touched.andNot(kill)
-    if (touched.isEmpty) return Iterator.empty
-    val sc = scores
-    def heapOf(inter: RoaringBitmap): BoundedTopK = {
-      val h = new BoundedTopK(groupLimit)
-      val bi = inter.getIntIterator
-      while (bi.hasNext) { val l = bi.next(); h.offer(cfg.globalOf(segId, l), sc(l)) }
-      h
-    }
-    val rest = touched.clone()
-    // strict (array) evaluation: `rest` must be final before the
-    // null-group heap below reads it
-    val grouped = valueBms.flatMap { case (value, bytes) =>
-      val vb = graft.index.Bitmaps.deserialize(bytes)
-      val inter = RoaringBitmap.and(touched, vb)
-      rest.andNot(vb)
-      if (inter.isEmpty) Array.empty[(String, Scored)]
-      else heapOf(inter).sortedBestFirst.map(s => (value, s))
-    }
-    val nullGroup =
-      if (rest.isEmpty) Iterator.empty
-      else heapOf(rest).sortedBestFirst.iterator.map(s => ((null: String), s))
-    grouped.iterator ++ nullGroup
-  }
 
   /** Segment-local per-value score aggregation (the block-join to-parent
-    * fold): score every matching doc into the dense array ONCE (the
-    * [[scoreSegmentDense]] fill), quantize per doc (children quantize
-    * BEFORE aggregation — integer Σ/max are partition-order invariant),
-    * then each value bitmap sweeps its intersection with the touched set
-    * into (value, Σ score_q, max score_q, n docs) — ONE row per value per
-    * segment ever leaves the task, vs the previous shape's full match-set
-    * shuffle through a docmeta join. Docs under NO value bitmap aggregate
-    * into the null value (the docmeta-scan route's null parent group).
-    * `kill` as everywhere: excluded before any aggregation.
+    * fold): the [[denseFill]] under `allow`, quantized per doc (children
+    * quantize BEFORE aggregation — integer Σ/max are partition-order
+    * invariant), then each [[valueSlices]] slice folds into (value,
+    * Σ score_q, max score_q, n docs) — ONE row per value per segment
+    * ever leaves the task, vs a full match-set shuffle through a docmeta
+    * join. The null slice is the docmeta route's null parent group.
     */
   def scoreSegmentValueAgg(
       segId: Long,
       hits: Iterator[SegHit],
-      valueBms: Array[(String, Array[Byte])],
-      kill: RoaringBitmap,
+      valueBms: Array[(String, RoaringBitmap)],
+      allow: RoaringBitmap,
       weights: Map[String, Double],
       avgdl: Double,
-      cfg: IndexConfig): Iterator[(String, Long, Long, Long)] = {
-    val width = 1 << cfg.segShift
-    var scores: Array[Double] = null
-    val touched = new RoaringBitmap()
-    hits.foreach { h =>
-      weights.get(h.term).foreach { w =>
-        val it = new Codec.Iter(h.postings)
-        if (!it.exhausted) {
-          if (scores == null) scores = new Array[Double](width)
-          var more = true
-          while (more) {
-            val local = it.curLocal
-            scores(local) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
-            touched.add(local)
-            more = it.next()
+      cfg: IndexConfig): Iterator[(String, Long, Long, Long)] =
+    denseFill(hits, weights, avgdl, cfg, allow) match {
+      case None => Iterator.empty
+      case Some((scores, touched)) =>
+        valueSlices(touched, valueBms).iterator.map { case (value, slice) =>
+          var sum = 0L
+          var max = Long.MinValue
+          val bi = slice.getIntIterator
+          while (bi.hasNext) {
+            val q = math.round(scores(bi.next()) * Bm25.Quant)
+            sum += q
+            if (q > max) max = q
           }
+          (value, sum, max, slice.getLongCardinality)
         }
-      }
     }
-    if (scores == null) return Iterator.empty
-    if (kill != null) touched.andNot(kill)
-    if (touched.isEmpty) return Iterator.empty
-    val sc = scores
-    def aggOf(value: String, inter: RoaringBitmap): Option[(String, Long, Long, Long)] = {
-      if (inter.isEmpty) return None
-      var sum = 0L
-      var max = Long.MinValue
-      var n = 0L
-      val bi = inter.getIntIterator
-      while (bi.hasNext) {
-        val q = math.round(sc(bi.next()) * Bm25.Quant)
-        sum += q
-        if (q > max) max = q
-        n += 1
-      }
-      Some((value, sum, max, n))
-    }
-    val rest = touched.clone()
-    val out = valueBms.flatMap { case (value, bytes) =>
-      val vb = graft.index.Bitmaps.deserialize(bytes)
-      val inter = RoaringBitmap.and(touched, vb)
-      rest.andNot(vb)
-      aggOf(value, inter)
-    }
-    out.iterator ++ aggOf(null, rest).iterator
-  }
 
   /** Global bounded-heap merge: Dataset[Scored] -> (rank, doc_id, score_q). */
   def topK(spark: SparkSession, scored: Dataset[Scored], k: Int): DataFrame = {

@@ -142,6 +142,40 @@ class FunctionsSpec extends SparkSpec {
     assert(nulls.select(GraftFunctions.graft_tokens($"content")).head().isNullAt(0))
   }
 
+  test("GraftTokens results own their bytes: a later eval on the thread leaves them intact") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    def strs(a: Any): Seq[String] = {
+      val arr = a.asInstanceOf[ArrayData]
+      (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
+    }
+    val first = graft.functions.GraftTokens(Literal("alpha beta")).eval()
+    val second = graft.functions.GraftTokens(Literal("gamma")).eval()
+    assert(strs(first) == Seq("alpha", "beta"))
+    assert(strs(second) == Seq("gamma"))
+    // two WindowHasher-backed columns in ONE projection, over a local
+    // relation (folded by an interpreted projection that evaluates every
+    // column before writing any) and over a cached scan
+    val rows = Seq((1L, "Alpha beta", "gamma DELTA eps"), (2L, "x", "y z"),
+      (3L, "", "ünï mixed"))
+    val local = rows.toDF("id", "a", "b")
+    val want = rows.map { case (id, a, b) =>
+      id -> ((id, Tokenizer.tokenizeScala(a).toSeq, Tokenizer.tokenizeScala(b).toSeq)) }.toMap
+    val key = "spark.sql.codegen.factoryMode"
+    for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
+      spark.conf.set(key, mode)
+      try {
+        for (df <- Seq(local, local.repartition(2).cache())) {
+          val got = df.select($"id", GraftFunctions.graft_tokens($"a"),
+            GraftFunctions.graft_tokens($"b"))
+            .as[(Long, Seq[String], Seq[String])].collect()
+            .map(r => r._1 -> r).toMap
+          assert(got == want, s"factoryMode $mode")
+        }
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("GraftShingleHashPairs == md5-hex twins (positioned + distinct), edge docs") {
     // the (h1, h2) long pair IS the md5 digest big-endian, so
     // %016x%016x re-hexes it for a direct string compare with the twins

@@ -42,10 +42,10 @@ class UpsertSpec extends SparkSpec {
     .select("doc_id")
 
   /** Build base + upsert + delete into a fresh dir; returns it. */
-  def upserted(): String = {
+  def upserted(c: IndexConfig = cfg): String = {
     val dir = tempDir("graft-upsert")
-    IndexBuild.build(spark, base, dir, cfg)
-    IndexBuild.upsert(spark, updates, dir, cfg, keyCols = Seq("path"))
+    IndexBuild.build(spark, base, dir, c)
+    IndexBuild.upsert(spark, updates, dir, c, keyCols = Seq("path"))
     IndexBuild.deleteByKeys(spark, deleteKeys, dir, keyCols = Seq("path"))
     dir
   }
@@ -426,6 +426,46 @@ class UpsertSpec extends SparkSpec {
       .as[(String, String, Long)].collect().map(_._3).sum
     assert(allVPivot > before._2.values.sum,
       "tombstone exclusion had no effect on the pivot facet")
+  }
+
+  test("positional phrase route excludes dead docs (== all-versions phrase set minus dead)") {
+    // rows cover the whole match set, so ranks drop out: the tombstoned
+    // result must be exactly the all-versions result with the dead removed
+    def matches(e: Engine): Set[(Long, Long)] =
+      e.searchPhrase(base, SparkEntry.PhraseBigram, rows = 100000)
+        .select("doc_id", "score_q").as[(Long, Long)].collect().toSet
+    val all = matches(engAllV)
+    val got = matches(eng)
+    assert(all.exists(r => dead.contains(r._1)), "pin needs a dead phrase match")
+    assert(got.nonEmpty && got == all.filterNot(r => dead.contains(r._1)))
+  }
+
+  test("blockJoinParents bitmap route == join route under tombstones") {
+    // the join twin: the same upsert fixture without a `repo` filter
+    // bitmap, so blockJoinParents reads the parent key from docmeta
+    val joinEng = new Engine(new Index(spark, upserted(cfg.copy(filterColumns = Seq("lang")))))
+    assert(eng.index.filterColsComplete.contains("repo") &&
+      !joinEng.index.filterColsComplete.contains("repo"), "precondition: one engine per route")
+    for (mode <- Seq("max", "total", "avg")) {
+      val a = eng.blockJoinParents(SparkEntry.FlagshipTerms, mode, rows = 1000)
+      val b = joinEng.blockJoinParents(SparkEntry.FlagshipTerms, mode, rows = 1000)
+      assert(a.collect().toSeq == b.collect().toSeq && !a.isEmpty, s"mode $mode")
+    }
+    // the kills mattered: the all-versions index counts more children
+    def children(e: Engine): Long = e.blockJoinParents(SparkEntry.FlagshipTerms, rows = 1000)
+      .agg(sum("n_children")).as[Long].head()
+    assert(children(engAllV) > children(eng), "tombstones had no effect on the block join")
+  }
+
+  test("grouped search with a covered fq composes with kills") {
+    val got = eng.searchGrouped(SparkEntry.FlagshipTerms, "repo",
+      groupLimit = 3, groups = 8, docFilter = Some(("lang", "en")))
+      .as[(Long, String, Long, Long, Long)].collect().toSeq
+    val want = engAllV.searchGroupedVia(SparkEntry.FlagshipTerms, "repo",
+      groupLimit = 3, groups = 8, accuracy = 1.0, forceScan = true,
+      docPred = Some(notDeadPred && col("lang") === "en"))
+      .as[(Long, String, Long, Long, Long)].collect().toSeq
+    assert(got == want && got.nonEmpty, s"grouped fq+kill diverged:\n$got\nvs\n$want")
   }
 
   test("kill shard of a live loser lands on the OWNING unit after compaction (healing)") {
