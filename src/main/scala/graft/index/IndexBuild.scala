@@ -901,16 +901,14 @@ object IndexBuild {
                 // actually lose an entry. Output is byte-identical either
                 // way (the codec re-encode is canonical — CodecSpec pin);
                 // pass-through just skips proving it per list.
-                var touched = sys.env.contains("GRAFT_COMPACT_NO_PASSTHROUGH")
-                if (!touched) locally {
-                  val ki = bm.getIntIterator
-                  val probe = new Codec.Iter(post)
-                  var live = !probe.exhausted
-                  while (!touched && live && ki.hasNext) {
-                    val k = ki.next()
-                    if (!probe.advanceTo(k)) live = false
-                    else if (probe.curLocal == k) touched = true
-                  }
+                val ki = bm.getIntIterator
+                val probe = new Codec.Iter(post)
+                var live = !probe.exhausted
+                var touched = false
+                while (!touched && live && ki.hasNext) {
+                  val k = ki.next()
+                  if (!probe.advanceTo(k)) live = false
+                  else if (probe.curLocal == k) touched = true
                 }
                 if (!touched)
                   Iterator.single(SegTermRow(seg, tid, term, df, mtf, mdl, post, posBlob))
@@ -1378,15 +1376,6 @@ object IndexBuild {
     }
 
   /** Build one checkpoint range; returns (n_docs, sum_dl). */
-  /** Env-gated per-phase wall log (GRAFT_BUILD_PROF=1) — profiling aid for
-    * the scaling-efficiency work; prints one line per (range, phase) with
-    * seconds since range start. No effect when the env var is absent.
-    */
-  private val profBuild = sys.env.contains("GRAFT_BUILD_PROF")
-  @inline private def plog(r: Long, phase: String, t0: Long): Unit =
-    if (profBuild)
-      println(f"BUILD_PROF r=$r $phase%-14s ${(System.nanoTime() - t0) / 1e9}%.2f at=${System.currentTimeMillis()}")
-
   private def buildRange(spark: SparkSession, corpus: DataFrame, indexDir: String,
                           cfg: IndexConfig, r: Long): (Long, Long) = {
     import spark.implicits._
@@ -1400,7 +1389,6 @@ object IndexBuild {
       // MEMORY_AND_DISK spills instead of evicting under pressure.
       val slice = corpus.where(col("doc_id") >= lo && col("doc_id") < hi)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      plog(r, "start", rt0)
       try {
       val posts = partialPostings(spark, slice, cfg)
       // phase 2: partition-local segment files, term-sorted for row-group
@@ -1460,7 +1448,6 @@ object IndexBuild {
         count(lit(1)).as("n_rows"),
         coalesce(expr("bit_xor(xxhash64(concat_ws('|', doc_id, sha)))"), lit(0L)).as("checksum"))
         .write.mode("overwrite").parquet(s"${docmetaDir(indexDir)}/range=$r")
-      plog(r, "docmeta", rt0)
       // fq filter side-index: one bitmap of segment-local doc ids per
       // (seg_id, column, value), from the WRITTEN docmeta (attested data).
       // Written before the manifest so _SUCCESS covers it. Tiny: total
@@ -1488,7 +1475,6 @@ object IndexBuild {
           .toDF("seg_id", "fcol", "value", "bitmap")
           .write.mode("overwrite").parquet(s"${filtersDir(indexDir)}/range=$r")
       }
-      plog(r, "filters", rt0)
       // manifest last: _SUCCESS == range committed (segments write must be
       // done before the manifest row lands — await the async job here).
       // BOUNDED await: a hung segments job would otherwise pin this range's
@@ -1497,11 +1483,9 @@ object IndexBuild {
       // redo — partials are invisible behind the manifest gate).
       boundedAwait(spark, segF, segJobGroup, cfg.segmentsWriteTimeoutSec,
         s"segments write for range=$r", Some(segCancelled))
-      plog(r, "segments-await", rt0)
       // per-unit term dictionary from the attested segments (see
       // writeDictionary): part of the unit, covered by the manifest gate
       writeDictionary(spark, indexDir, r, cfg.segmentsWriteTimeoutSec)
-      plog(r, "dictionary", rt0)
       val om = obs.get
       val (nd, sdl, nRows, checksum) =
         (om("n_docs").asInstanceOf[Long], om("sum_dl").asInstanceOf[Long],
@@ -1509,7 +1493,6 @@ object IndexBuild {
       writeManifest(spark, indexDir, r, nd, sdl, nRows, checksum, cfg,
         (System.nanoTime() - rt0) / 1000000L, Seq(DocRangeStat(r, nRows, checksum)),
         Seq.empty)
-      plog(r, "manifest", rt0)
       (nd, sdl)
       } finally slice.unpersist(blocking = false)
     }

@@ -1,8 +1,14 @@
 package graft.ml
 
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import graft.analyze.Tokenizer
+import graft.functions.WindowHasher
 
 /** Deduplication operators for a training-data pipeline: exact,
   * MinHash+LSH banding, SimHash, n-gram Jaccard, embedding cosine.
@@ -24,12 +30,12 @@ object Dedup {
   val MinhashFns = 12
   val MinhashBands = 4 // 3 rows per band
 
-  /** Contamination benchmark-broadcast gate (docs): ~200 shingles/doc →
-    * ≤ ~1M (bench_id, md5) broadcast rows ≈ tens of MB. The gate costs
-    * one `limit(n+1).count()` over the benchmark table — O(gate), not
-    * O(benchmark).
+  /** Contamination benchmark-broadcast gate (hash rows): ≤ ~1M
+    * (bench_id, h1, h2) rows ≈ 24 MB of table data collected to the driver
+    * and broadcast. The gate costs one `limit(n+1).count()` over the
+    * benchmark's hash rows — O(gate), not O(benchmark).
     */
-  val BroadcastBenchMaxDocs = 5000
+  val BroadcastBenchMaxRows: Int = 1 << 20
   /** Span-dedup keep-set broadcast gate (hashes): 2M (h1, h2) pairs =
     * 32 MB of key data — comfortably inside the broadcast budget, far
     * under the 8 GB relation limit. The keep set holds only hashes of
@@ -117,16 +123,17 @@ object Dedup {
     * auto-broadcast threshold, so the corpus side's ~200 shingle rows
     * PER DOC get shuffle-written before AQE can localize the read
     * (measured 17 s vs 6 s at the 600k-doc bench corpus). The gate is
-    * one count of the (tiny) benchmark table: ≤ [[BroadcastBenchMaxDocs]]
-    * docs ≈ ≤ ~1M shingle rows ≈ tens of MB; a larger suite degrades to
-    * the planner's shuffle strategy instead of an 8 GB-limit broadcast
-    * failure. Under the hint the corpus side never shuffles: probe-side
-    * stream into the broadcast hash set, then the contaminated-survivor
-    * aggregation touches matched rows only.
+    * one bounded count of the benchmark's hash rows, the rows the
+    * broadcast route collects to the driver: ≤ `benchGate` (default
+    * [[BroadcastBenchMaxRows]]) rows ≈ tens of MB; a larger suite, in docs
+    * or in doc length, degrades to the planner's shuffle strategy instead
+    * of an unbounded driver collect. Under the gate the corpus side never
+    * shuffles: probe-side stream into the broadcast hash table, then the
+    * contaminated-survivor aggregation touches matched rows only.
     */
   def contamination(corpus: DataFrame, benchmark: DataFrame,
                     width: Int = 13,
-                    benchGate: Int = BroadcastBenchMaxDocs): DataFrame = {
+                    benchGate: Int = BroadcastBenchMaxRows): DataFrame = {
     // fused tokenize→window-md5 expression: the shingle hash is emitted
     // directly as a (h1, h2) long pair — no shingle string materializes,
     // no hex encode, and the join key is 16 fixed-width bytes instead of
@@ -139,67 +146,40 @@ object Dedup {
         explode(graft.functions.GraftFunctions.graft_shingle_hash_pairs(
           col("content"), width, distinct = true)).as("sh"))
       .select(col(as), col("sh.h1").as("h1"), col("sh.h2").as("h2"))
-    val smallBench = benchmark.select(col("doc_id")).limit(benchGate + 1)
-      .count() <= benchGate
-    if (smallBench) {
+    val benchRows = shingleHashes(benchmark, "doc_id", "bench_id")
+    val matched = if (benchRows.limit(benchGate + 1).count() <= benchGate) {
       // benchmark fits the broadcast gate: collect its (bench_id, hash)
       // rows (the SAME rows the planner-broadcast route shipped) into a
-      // primitive multimap and probe it INSIDE the corpus window pass —
-      // a tight mapPartitions loop emitting only matched
+      // (h1, h2) table with a bench_id chain per key and probe it INSIDE
+      // the corpus window pass, emitting only matched
       // (doc_id, bench_id, h1, h2) rows. The planner shape it replaces
       // (Generate → struct projection → BroadcastHashJoin probe) ran
       // interpreter-bound at ~2 µs/window over the whole corpus (the
       // span_dup measurement, same pipeline); the fused loop pays the
-      // hash + one set probe. Window de-dup per doc is NOT re-applied on
+      // hash + one table probe. Window de-dup per doc is NOT re-applied on
       // the probe side: duplicate matches collapse in both countDistincts,
       // so output is identical to the join route (the over-gate fallback
       // below, which stays the r05 planner shape).
-      val spark = corpus.sparkSession
-      val bsRows = shingleHashes(benchmark, "doc_id", "bench_id").collect()
-      val mm = LongPairMultiMap.build(
-        bsRows.iterator.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), bsRows.length)
-      val bc = spark.sparkContext.broadcast(mm)
-      val sel = corpus.select(col("doc_id"), col("content"))
-      val outRdd = sel.queryExecution.toRdd.mapPartitions { it =>
-        val h = graft.functions.WindowHasher.local.get()
+      val bsRows = benchRows.collect()
+      val bc = corpus.sparkSession.sparkContext.broadcast(LongPairChains.build(
+        bsRows.iterator.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), bsRows.length))
+      val schema = schemaOf("doc_id" -> LongType, "bench_id" -> LongType,
+        "h1" -> LongType, "h2" -> LongType)
+      windowHashRows(corpus, width, schema) { () =>
         val m = bc.value
-        val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.catalyst.InternalRow]()
-        it.flatMap { row =>
-          out.clear()
-          if (!row.isNullAt(1)) {
-            val id = row.getLong(0)
-            h.tokenize(row.getUTF8String(1))
-            val nWin = h.nToks - width + 1
-            var i = 0
-            while (i < nWin) {
-              h.hashWindowTo(i, width)
-              m.foreach(h.lastH1, h.lastH2) { benchId =>
-                out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                  Array[Any](id, benchId, h.lastH1, h.lastH2))
-              }
-              i += 1
-            }
+        (docId, _, h1, h2, out) => {
+          val k = m.keys.find(h1, h2)
+          var v = if (k < 0) 0 else m.head(k)
+          while (v != 0) {
+            out += new GenericInternalRow(Array[Any](docId, m.values(v - 1), h1, h2))
+            v = m.next(v - 1)
           }
-          out.toArray.iterator
         }
       }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      org.apache.spark.sql.classic.GraftBridge.internalDf(spark, outRdd,
-        StructType(Seq(StructField("doc_id", LongType, nullable = false),
-          StructField("bench_id", LongType, nullable = false),
-          StructField("h1", LongType, nullable = false),
-          StructField("h2", LongType, nullable = false))))
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("bench_id")).as("n_bench_docs"),
-          countDistinct(col("h1"), col("h2")).as("n_shingles"))
-    } else {
-      val cs = shingleHashes(corpus, "doc_id", "doc_id")
-      val bs = shingleHashes(benchmark, "doc_id", "bench_id")
-      cs.join(bs, Seq("h1", "h2"))
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("bench_id")).as("n_bench_docs"),
-          countDistinct(col("h1"), col("h2")).as("n_shingles"))
-    }
+    } else shingleHashes(corpus, "doc_id", "doc_id").join(benchRows, Seq("h1", "h2"))
+    matched.groupBy(col("doc_id"))
+      .agg(countDistinct(col("bench_id")).as("n_bench_docs"),
+        countDistinct(col("h1"), col("h2")).as("n_shingles"))
   }
 
   /** Substring-level exact dedup (Lee et al. 2021 "Deduplicating Training
@@ -244,8 +224,8 @@ object Dedup {
     // must never materialize one 10M-element collect_list buffer — the
     // count pass drops the hash before anything collects (the same
     // keep-CTE shape as the oracle). A one-pass bounded typed Aggregator
-    // was measured NO FASTER than these two passes (Prof span
-    // interleaved A/B: mins 29.0 vs 28.3 s) — kryo-buffered
+    // was measured NO FASTER than these two passes (interleaved A/B of
+    // the span pass: stage mins 29.0 vs 28.3 s) — kryo-buffered
     // ObjectHashAggregate leaves whole-stage codegen — so the two-pass
     // shape stays. The count itself skips Spark's partial hash
     // aggregate: window hashes are ~unique (dup windows ARE the
@@ -254,7 +234,10 @@ object Dedup {
     // repartition + ONE open-addressed count map per reduce partition
     // is the same exact global count with half the hash-table work
     // (same-window A/B at the 600k bench corpus: 8.1 -> 6.2 s).
-    val keep = spanKeepCounts(windowHashRows(corpus, width, withPos = false, None), maxOcc)
+    val keep = spanKeepCounts(
+      windowHashRows(corpus, width, schemaOf("h1" -> LongType, "h2" -> LongType)) { () =>
+        (_, _, h1, h2, out) => out += new GenericInternalRow(Array[Any](h1, h2))
+      }, maxOcc)
     // The keep set is DUPLICATED-window hashes only — tiny next to the
     // window count on any real corpus (dup spans are the exception, and
     // corpus-boilerplate hashes are capped out by maxOcc). When it fits
@@ -272,22 +255,31 @@ object Dedup {
     // read the probe rows from the cache
     val keepCached = keep.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nKeep = keepCached.count()
+    val posSchema = schemaOf("doc_id" -> LongType, "pos" -> IntegerType,
+      "h1" -> LongType, "h2" -> LongType)
     val winsKept =
       if (nKeep <= SpanKeepBroadcastMax) {
         // survivors filtered INSIDE the second window pass: each window's
-        // hash probes a broadcast primitive set as it is computed, so only
+        // hash probes the broadcast keep table as it is computed, so only
         // duplicated windows ever materialize a row
         val keepRows = keepCached.collect()
         keepCached.unpersist(blocking = false)
-        val set = LongPairSet.build(keepRows.iterator.map(r => (r.getLong(0), r.getLong(1))),
-          keepRows.length)
+        val set = new LongPairTable(keepRows.length)
+        keepRows.foreach(r => set.add(r.getLong(0), r.getLong(1)))
         val bc = spark.sparkContext.broadcast(set)
-        windowHashRows(corpus, width, withPos = true, Some(bc))
+        windowHashRows(corpus, width, posSchema) { () =>
+          val keepSet = bc.value
+          (docId, pos, h1, h2, out) =>
+            if (keepSet.find(h1, h2) >= 0)
+              out += new GenericInternalRow(Array[Any](docId, pos, h1, h2))
+        }
       } else {
         // over-cap corpora keep the r05 shuffle semi-join shape
         keepCached.unpersist(blocking = false)
-        windowHashRows(corpus, width, withPos = true, None)
-          .join(keep, Seq("h1", "h2"), "left_semi")
+        windowHashRows(corpus, width, posSchema) { () =>
+          (docId, pos, h1, h2, out) =>
+            out += new GenericInternalRow(Array[Any](docId, pos, h1, h2))
+        }.join(keep, Seq("h1", "h2"), "left_semi")
       }
     winsKept
       .groupBy(col("h1"), col("h2"))
@@ -319,23 +311,31 @@ object Dedup {
       .toDF("doc_a", "doc_b", "start_a", "start_b", "n_windows", "span_tokens")
   }
 
-  /** One window-hash pass over the corpus as a tight mapPartitions loop
-    * (shared [[graft.functions.WindowHasher]] core — the same tokenize +
-    * md5 the GraftShingleHashPairs expression evaluates, pinned equal to
-    * the md5-hex twins in FunctionsSpec): rows (h1, h2) per window, or
-    * (doc_id, pos [1-based], h1, h2) with `withPos`; `keep` filters each
-    * window against a broadcast primitive set AS IT IS HASHED, so only
-    * duplicated windows materialize rows. Null / short docs emit nothing
-    * (exactly posexplode of the expression's empty/null array).
+  /** One step of [[windowHashRows]]: sees one window — its doc id,
+    * 1-based position and md5 pair — and appends the rows it emits, if
+    * any, to `out`. Primitive arguments and one instance per partition keep
+    * the per-window call free of boxing and allocation.
     */
-  private def windowHashRows(corpus: DataFrame, width: Int, withPos: Boolean,
-      keep: Option[org.apache.spark.broadcast.Broadcast[LongPairSet]]): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+  private trait WindowStep {
+    def apply(docId: Long, pos: Int, h1: Long, h2: Long, out: ArrayBuffer[InternalRow]): Unit
+  }
+
+  /** The one window-hash pass over the corpus, as a tight mapPartitions
+    * loop (shared [[graft.functions.WindowHasher]] core — the same
+    * tokenize + md5 the GraftShingleHashPairs expression evaluates, pinned
+    * equal to the md5-hex twins in FunctionsSpec). `step` is built once
+    * per partition and called once per window; a probing step filters each
+    * window against a broadcast table AS IT IS HASHED, so only matched
+    * windows materialize rows. Null / short docs emit nothing (exactly
+    * posexplode of the expression's empty/null array).
+    */
+  private def windowHashRows(corpus: DataFrame, width: Int, schema: StructType)(
+      step: () => WindowStep): DataFrame = {
     val sel = corpus.select(col("doc_id"), col("content"))
     val outRdd = sel.queryExecution.toRdd.mapPartitions { it =>
-      val h = graft.functions.WindowHasher.local.get()
-      val keepSet = keep.map(_.value).orNull
-      val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.catalyst.InternalRow]()
+      val h = WindowHasher.local.get()
+      val f = step()
+      val out = new ArrayBuffer[InternalRow]()
       it.flatMap { row =>
         out.clear()
         if (!row.isNullAt(1)) {
@@ -345,168 +345,143 @@ object Dedup {
           var i = 0
           while (i < nWin) {
             h.hashWindowTo(i, width)
-            if (keepSet == null || keepSet.contains(h.lastH1, h.lastH2)) {
-              out += (if (withPos)
-                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                  Array[Any](id, i + 1, h.lastH1, h.lastH2))
-              else
-                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                  Array[Any](h.lastH1, h.lastH2)))
-            }
+            f(id, i + 1, h.lastH1, h.lastH2, out)
             i += 1
           }
         }
         out.toArray.iterator
       }
     }
-    val fields =
-      (if (withPos) Seq(StructField("doc_id", LongType, nullable = false),
-        StructField("pos", IntegerType, nullable = false)) else Nil) ++
-        Seq(StructField("h1", LongType, nullable = false),
-          StructField("h2", LongType, nullable = false))
-    org.apache.spark.sql.classic.GraftBridge.internalDf(corpus.sparkSession,
-      outRdd, StructType(fields))
+    GraftBridge.internalDf(corpus.sparkSession, outRdd, schema)
   }
+
+  private def schemaOf(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })
 
   /** Exact global occurrence filter for [[spanDups]]' count pass:
     * hash-repartition the (h1, h2) window-hash rows and count each
-    * partition's keys in one open-addressed primitive map, emitting only
-    * keys with 2 ≤ n ≤ maxOcc. Semantically identical to
+    * partition's keys in one [[LongPairTable]] plus a counts array indexed
+    * by key id, emitting only keys with 2 ≤ n ≤ maxOcc (counts saturate at
+    * maxOcc + 1, so they never overflow). Semantically identical to
     * `groupBy(h1, h2).count.where(between(2, maxOcc))` — the rewrite
     * only skips the map-side partial aggregate, which at ~unique-key
     * cardinality builds a corpus-sized hash table that reduces almost
     * nothing before the exchange (guide §1.2 per-task work). Memory per
-    * task is the partition's distinct-key count × 20 B at ≤0.5 load —
-    * the same order the partial aggregate's own map held.
+    * task is the partition's distinct-key count × 28–56 B (slots at load
+    * 0.25–0.5, id-dense keys and counts) — the same order the partial
+    * aggregate's own map held.
     */
   private[graft] def spanKeepCounts(winsH: DataFrame, maxOcc: Int): DataFrame = {
     val rep = winsH.repartition(col("h1"), col("h2"))
     val outRdd = rep.queryExecution.toRdd.mapPartitions { it =>
-      var cap = 1 << 16
-      var mask = cap - 1
-      var k1 = new Array[Long](cap)
-      var k2 = new Array[Long](cap)
-      var cnt = new Array[Int](cap)
-      var n = 0
-      def grow(): Unit = {
-        val o1 = k1; val o2 = k2; val oc = cnt; val ocap = cap
-        cap *= 2; mask = cap - 1
-        k1 = new Array[Long](cap); k2 = new Array[Long](cap); cnt = new Array[Int](cap)
-        var i = 0
-        while (i < ocap) {
-          if (oc(i) != 0) {
-            var j = java.lang.Long.hashCode(o1(i) * 31 + o2(i)) & mask
-            while (cnt(j) != 0) j = (j + 1) & mask
-            k1(j) = o1(i); k2(j) = o2(i); cnt(j) = oc(i)
-          }
-          i += 1
-        }
-      }
+      val keys = new LongPairTable()
+      var cnt = new Array[Int](16)
       while (it.hasNext) {
         val row = it.next()
-        val a = row.getLong(0)
-        val b = row.getLong(1)
-        if (n * 2 >= cap) grow()
-        var j = java.lang.Long.hashCode(a * 31 + b) & mask
-        var done = false
-        while (!done) {
-          if (cnt(j) == 0) { k1(j) = a; k2(j) = b; cnt(j) = 1; n += 1; done = true }
-          else if (k1(j) == a && k2(j) == b) { cnt(j) += 1; done = true }
-          else j = (j + 1) & mask
-        }
+        val id = keys.add(row.getLong(0), row.getLong(1))
+        if (id == cnt.length) cnt = java.util.Arrays.copyOf(cnt, 2 * cnt.length)
+        if (cnt(id) <= maxOcc) cnt(id) += 1
       }
-      val out = Seq.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
-      var i = 0
-      while (i < cap) {
-        if (cnt(i) >= 2 && cnt(i) <= maxOcc)
-          out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](k1(i), k2(i)))
-        i += 1
+      val out = Seq.newBuilder[InternalRow]
+      var id = 0
+      while (id < keys.size) {
+        if (cnt(id) >= 2 && cnt(id) <= maxOcc)
+          out += new GenericInternalRow(Array[Any](keys.h1(id), keys.h2(id)))
+        id += 1
       }
       out.result().iterator
     }
-    org.apache.spark.sql.classic.GraftBridge.internalDf(winsH.sparkSession, outRdd,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("h1",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("h2",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    GraftBridge.internalDf(winsH.sparkSession, outRdd, schemaOf("h1" -> LongType, "h2" -> LongType))
   }
 
-  /** Serializable open-addressed (Long, Long) membership set (broadcast
-    * probe side of [[spanDups]]' second window pass). Load ≤ 0.5;
-    * presence tracked separately so the all-zero key needs no sentinel.
+  /** Growable open-addressed (h1, h2) → dense-id table: the one primitive
+    * hash table behind span dedup and the contamination screen. Ids are
+    * handed out 0, 1, 2, … in insertion order, so a caller keeps per-key
+    * state in plain arrays indexed by id: the span keep set is the table
+    * itself, the count pass adds a counts array, and the contamination
+    * multimap adds a value chain ([[LongPairChains]]). Keys are stored
+    * densely by id; a slot holds id + 1 (0 = empty), so the all-zero key
+    * needs no sentinel. Linear probing at load ≤ 0.5; growth doubles the
+    * slots and re-places every id. Serializable: both passes broadcast it
+    * as their probe side.
     */
-  private[graft] final class LongPairSet(k1: Array[Long], k2: Array[Long],
-      used: Array[Boolean], mask: Int) extends Serializable {
-    def contains(a: Long, b: Long): Boolean = {
-      var j = java.lang.Long.hashCode(a * 31 + b) & mask
-      while (used(j)) {
-        if (k1(j) == a && k2(j) == b) return true
-        j = (j + 1) & mask
-      }
-      false
-    }
-  }
-
-  private[graft] object LongPairSet {
-    def build(pairs: Iterator[(Long, Long)], n: Int): LongPairSet = {
+  private[graft] final class LongPairTable(expected: Int = 0) extends Serializable {
+    private var slots = {
       var cap = 16
-      while (cap < (n + 1) * 2) cap <<= 1
-      val mask = cap - 1
-      val k1 = new Array[Long](cap)
-      val k2 = new Array[Long](cap)
-      val used = new Array[Boolean](cap)
-      pairs.foreach { case (a, b) =>
-        var j = java.lang.Long.hashCode(a * 31 + b) & mask
-        while (used(j) && !(k1(j) == a && k2(j) == b)) j = (j + 1) & mask
-        k1(j) = a; k2(j) = b; used(j) = true
+      while (cap < (expected + 1) * 2) cap <<= 1
+      new Array[Int](cap)
+    }
+    private var keys = new Array[Long](2 * math.max(expected, 8))
+    private var n = 0
+
+    def size: Int = n
+    def h1(id: Int): Long = keys(2 * id)
+    def h2(id: Int): Long = keys(2 * id + 1)
+
+    /** Id of (a, b), or -1 when absent. */
+    def find(a: Long, b: Long): Int = slots(slotOf(a, b)) - 1
+
+    /** Id of (a, b), added as id `size` when absent. */
+    def add(a: Long, b: Long): Int = {
+      if ((n + 1) * 2 > slots.length) grow()
+      val j = slotOf(a, b)
+      if (slots(j) == 0) {
+        if (2 * n == keys.length) keys = java.util.Arrays.copyOf(keys, 2 * keys.length)
+        keys(2 * n) = a
+        keys(2 * n + 1) = b
+        n += 1
+        slots(j) = n
       }
-      new LongPairSet(k1, k2, used, mask)
+      slots(j) - 1
+    }
+
+    /** The slot holding (a, b), or the empty slot where it would go. */
+    private def slotOf(a: Long, b: Long): Int = {
+      val mask = slots.length - 1
+      var j = java.lang.Long.hashCode(a * 31 + b) & mask
+      var s = slots(j)
+      while (s != 0 && !(keys(2 * s - 2) == a && keys(2 * s - 1) == b)) {
+        j = (j + 1) & mask
+        s = slots(j)
+      }
+      j
+    }
+
+    private def grow(): Unit = {
+      slots = new Array[Int](2 * slots.length)
+      var id = 0
+      while (id < n) {
+        slots(slotOf(keys(2 * id), keys(2 * id + 1))) = id + 1
+        id += 1
+      }
     }
   }
 
-  /** Serializable open-addressed (Long, Long) → Long* multimap (broadcast
-    * probe side of the contamination screen): values chained through a
-    * parallel next-index array, insertion order preserved per key.
+  /** (h1, h2) → Long* multimap: a [[LongPairTable]] plus, per key id, a
+    * chain of values — `head(id)` is the 1-based index of a value in
+    * `values`, `next(i - 1)` the one after value i, 0 ends the chain. No
+    * order is promised among one key's values. Broadcast probe side of the
+    * contamination screen.
     */
-  private[graft] final class LongPairMultiMap(k1: Array[Long], k2: Array[Long],
-      head: Array[Int], vals: Array[Long], nxt: Array[Int],
-      mask: Int) extends Serializable {
-    /** Apply `f` to every value of key (a, b), if any. */
-    def foreach(a: Long, b: Long)(f: Long => Unit): Unit = {
-      var j = java.lang.Long.hashCode(a * 31 + b) & mask
-      while (head(j) != 0) {
-        if (k1(j) == a && k2(j) == b) {
-          var v = head(j)
-          while (v != 0) { f(vals(v - 1)); v = nxt(v - 1) }
-          return
-        }
-        j = (j + 1) & mask
-      }
-    }
-  }
+  private[graft] final class LongPairChains(val keys: LongPairTable, val head: Array[Int],
+      val values: Array[Long], val next: Array[Int]) extends Serializable
 
-  private[graft] object LongPairMultiMap {
-    /** Build from (value, a, b) triples; `n` an upper bound on the count. */
-    def build(rows: Iterator[(Long, Long, Long)], n: Int): LongPairMultiMap = {
-      var cap = 16
-      while (cap < (n + 1) * 2) cap <<= 1
-      val mask = cap - 1
-      val k1 = new Array[Long](cap)
-      val k2 = new Array[Long](cap)
-      val head = new Array[Int](cap) // 1-based index into vals; 0 = empty
-      val vals = new Array[Long](math.max(1, n))
-      val nxt = new Array[Int](math.max(1, n))
+  private[graft] object LongPairChains {
+    /** Build from (value, a, b) triples; `n` an upper bound on their count. */
+    def build(rows: Iterator[(Long, Long, Long)], n: Int): LongPairChains = {
+      val keys = new LongPairTable(n)
+      val head = new Array[Int](n)
+      val values = new Array[Long](n)
+      val next = new Array[Int](n)
       var nv = 0
       rows.foreach { case (v, a, b) =>
-        var j = java.lang.Long.hashCode(a * 31 + b) & mask
-        while (head(j) != 0 && !(k1(j) == a && k2(j) == b)) j = (j + 1) & mask
-        k1(j) = a; k2(j) = b
-        vals(nv) = v; nxt(nv) = head(j); head(j) = nv + 1
+        val id = keys.add(a, b)
+        values(nv) = v
+        next(nv) = head(id)
         nv += 1
+        head(id) = nv
       }
-      new LongPairMultiMap(k1, k2, head, vals, nxt, mask)
+      new LongPairChains(keys, head, values, next)
     }
   }
 

@@ -589,7 +589,7 @@ object TextStats {
     * chars. A content-defined identity robust to doc reordering at corpus
     * level. Evaluated by the native [[graft.functions.GraftFingerprint]]
     * expression (one eval per row); the HOF composition it replaced is
-    * kept as [[fingerprintHof]] for the equivalence test + profiling.
+    * kept as [[fingerprintHof]] for the equivalence test.
     */
   def fingerprint(corpus: DataFrame): DataFrame =
     corpus.select(
@@ -598,7 +598,7 @@ object TextStats {
 
   /** Built-in-composed twin of [[fingerprint]] — interpreted HOF lambda
     * with a per-window digest allocation; ~10-100x slower (see
-    * GraftFingerprint scaladoc). Test/profiling reference only.
+    * GraftFingerprint scaladoc). Test reference only.
     */
   def fingerprintHof(corpus: DataFrame): DataFrame =
     corpus.select(

@@ -36,19 +36,4 @@ object ProcStat {
     val wall = (System.nanoTime() - t0) / 1e9
     (a, wall, stealSec() - s0)
   }
-
-  /** Cumulative busy (user+nice+system) CPU seconds since boot, summed over
-    * all cores; 0.0 when unavailable. A delta around a timed section tells
-    * whether a scaling gap is idle cores (busy ≪ cores × wall) or extra
-    * work at the wider point (busy grows with cores) — profiling aid only.
-    */
-  def busySec(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      val line = try src.getLines().find(_.startsWith("cpu ")) finally src.close()
-      line.map { l =>
-        val c = l.trim.split("\\s+")
-        (c(1).toDouble + c(2).toDouble + c(3).toDouble) / UserHz
-      }.getOrElse(0.0)
-    } catch { case _: Exception => 0.0 }
 }

@@ -1,8 +1,8 @@
 package graft.util
 
 /** Temp directories deleted at JVM exit — the ONE copy of the
-  * createTempDirectory + shutdown-hook + recursive-delete logic (Bench,
-  * Prof and the test harness all stage multi-hundred-MB corpora/indexes;
+  * createTempDirectory + shutdown-hook + recursive-delete logic (Bench
+  * and the test harness stage multi-hundred-MB corpora/indexes;
   * bare temp dirs leaked ~48 GB of /tmp across rounds of runs before
   * this existed).
   */

@@ -560,6 +560,26 @@ class MlSpec extends SparkSpec {
     assert(got(1L) == ((1L, 1L)), s"one bench doc, one shared shingle: ${got(1L)}")
   }
 
+  test("contamination gate bounds benchmark hash rows, not docs: few long docs take the join") {
+    // two benchmark docs, each ~150 windows: far under any doc gate but
+    // over a 100-row gate, so the driver must not collect their rows
+    def words(tag: String, n: Int) = (1 to n).map(i => s"$tag$i").mkString(" ")
+    val bench = Seq((100L, words("a", 160)), (101L, words("b", 160))).toDF("doc_id", "content")
+    val screened = Seq(
+      (1L, s"x y ${words("a", 40)} z"),
+      (2L, s"${words("b", 20)} ${words("a", 14)}"),
+      (3L, words("c", 60)),
+      (4L, words("b", 12))).toDF("doc_id", "content")
+    val gated = Dedup.contamination(screened, bench, 13, benchGate = 100)
+    assert(gated.queryExecution.executedPlan.toString.contains("Join"),
+      s"over-gate benchmark must take the join route:\n${gated.queryExecution.executedPlan}")
+    val got = gated.as[(Long, Long, Long)].collect().toSet
+    val broadcast = Dedup.contamination(screened, bench, 13)
+    assert(!broadcast.queryExecution.executedPlan.toString.contains("Join"))
+    assert(got == broadcast.as[(Long, Long, Long)].collect().toSet)
+    assert(got == Set((1L, 1L, 28L), (2L, 2L, 10L)), s"$got")
+  }
+
   test("curation with a benchmark: contaminated docs can never be kept") {
     val bench = corpus.where($"doc_id" % 13 === 3).select($"doc_id", $"content")
     val contaminated = Dedup.contamination(dupped, bench, 13)
