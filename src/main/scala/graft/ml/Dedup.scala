@@ -203,7 +203,14 @@ object Dedup {
     * doc's window count. No cartesian, no driver loop. Mirrored 1:1 by
     * [[graft.sql.OracleMl.spanDupsSql]] (gaps-and-islands form).
     */
-  def spanDups(corpus: DataFrame, width: Int = 12, maxOcc: Int = 64): DataFrame = {
+  def spanDups(corpus: DataFrame, width: Int = 12, maxOcc: Int = 64): DataFrame =
+    spanDupsGated(corpus, width, maxOcc, SpanKeepBroadcastMax)
+
+  /** [[spanDups]] with the keep-set broadcast gate as an argument, so
+    * tests can take the over-cap semi-join route at test scale.
+    */
+  private[graft] def spanDupsGated(corpus: DataFrame, width: Int, maxOcc: Int,
+                                   keepGate: Long): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // window hash = md5 as a (h1, h2) long pair (the shared WindowHasher
@@ -251,19 +258,20 @@ object Dedup {
     // bounded probe WITHOUT limit().collect(): executeTake materializes
     // the count shuffle's reduce side in sequential 1/4/20/... -partition
     // waves (measured ~6.4 s wall for ~1.3 s of full-parallel work), so
-    // cache the (tiny) keep output, count it at full parallelism, and
-    // read the probe rows from the cache
-    val keepCached = keep.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nKeep = keepCached.count()
+    // materialize the (tiny) keep output once at full parallelism (an
+    // eager local checkpoint: its blocks go with the checkpointed plan,
+    // no unpersist to order) and read both routes' keep rows from it —
+    // the count pass never runs twice
+    val keepSet = keep.localCheckpoint(eager = true)
+    val nKeep = keepSet.count()
     val posSchema = schemaOf("doc_id" -> LongType, "pos" -> IntegerType,
       "h1" -> LongType, "h2" -> LongType)
     val winsKept =
-      if (nKeep <= SpanKeepBroadcastMax) {
+      if (nKeep <= keepGate) {
         // survivors filtered INSIDE the second window pass: each window's
         // hash probes the broadcast keep table as it is computed, so only
         // duplicated windows ever materialize a row
-        val keepRows = keepCached.collect()
-        keepCached.unpersist(blocking = false)
+        val keepRows = keepSet.collect()
         val set = new LongPairTable(keepRows.length)
         keepRows.foreach(r => set.add(r.getLong(0), r.getLong(1)))
         val bc = spark.sparkContext.broadcast(set)
@@ -274,12 +282,12 @@ object Dedup {
               out += new GenericInternalRow(Array[Any](docId, pos, h1, h2))
         }
       } else {
-        // over-cap corpora keep the r05 shuffle semi-join shape
-        keepCached.unpersist(blocking = false)
+        // over-cap corpora keep the r05 shuffle semi-join shape, against
+        // the materialized keep set
         windowHashRows(corpus, width, posSchema) { () =>
           (docId, pos, h1, h2, out) =>
             out += new GenericInternalRow(Array[Any](docId, pos, h1, h2))
-        }.join(keep, Seq("h1", "h2"), "left_semi")
+        }.join(keepSet, Seq("h1", "h2"), "left_semi")
       }
     winsKept
       .groupBy(col("h1"), col("h2"))

@@ -274,12 +274,20 @@ final class Engine(val index: Index) {
     base.take(budget)
   }
 
+  /** Instance copy of [[Engine.PhraseBroadcastMaxCand]] — a test knob so
+    * PlanSpec can force the phrase graft's fail-open (non-broadcast) join
+    * at test scale and pin its exchange shape (VERDICT r05 next #9);
+    * production engines never change it.
+    */
+  private[graft] var phraseBroadcastMax: Long = Engine.PhraseBroadcastMaxCand
+
   /** Dense-query threshold: when the DOMINANT-WEIGHT terms' Σdf/N exceeds
     * this, the query blankets the corpus (every code file contains
     * "license"), WAND upper bounds never prune, and the scalar DAAT loop
     * degenerates to an exhaustive per-posting walk with insertion sorts.
-    * The columnar scan-score-agg plan ([[scanScore]]) wins there:
-    * whole-stage-codegen'd hash aggregation over exploded postings.
+    * The dense-array kernel ([[Wand.scoreSegmentDense]]) wins there: one
+    * primitive score array per segment, no per-doc list handling
+    * ([[routeOf]] picks it, or the columnar plan on wide segments).
     *
     * "Dominant" matters (round-2 regression, VERDICT r02 "What's wrong"
     * #1): a hot+rare mix (selective identifier + ubiquitous header terms —
@@ -294,27 +302,21 @@ final class Engine(val index: Index) {
     * reference analog: the accuracy≥0.9 MatchAllDocsQuery switch,
     * LireRequestHandler.java:218-221 — a degenerate switch, not a default.)
     */
-  /** Instance copy of [[Engine.PhraseBroadcastMaxCand]] — a test knob so
-    * PlanSpec can force the phrase graft's fail-open (non-broadcast) join
-    * at test scale and pin its exchange shape (VERDICT r05 next #9);
-    * production engines never change it.
-    */
-  private[graft] var phraseBroadcastMax: Long = Engine.PhraseBroadcastMaxCand
-
   val HotScanFraction = 0.5
   val DominantWeightFraction = 0.5
 
   /** Global doc id from exploded-posting (seg_id, local) columns — the ONE
     * definition of the packing (IndexConfig.globalOf as a Column); every
-    * exploded-postings plan (scanScore, scanScoreMany, facet) must use it.
+    * exploded-postings plan ([[scanScoreBase]], [[scanScoreMany]]) must
+    * use it.
     */
   private def packedDocId(seg: Column, local: Column): Column =
     shiftleft(seg, index.cfg.segShift).bitwiseOR(local.cast("long"))
 
-  /** THE routing rule — one definition shared by [[searchByTerms]] and
-    * [[searchManyByTerms]] so single and batched routing can never diverge
-    * (the round-2 regression came from a routing rule applied to the wrong
-    * term set; a copy-pasted rule would reintroduce it on one path only).
+  /** THE density rule — one definition behind [[routeOf]], so single and
+    * batched routing can never diverge (the round-2 regression came from a
+    * routing rule applied to the wrong term set; a copy-pasted rule would
+    * reintroduce it on one path only).
     */
   private def isDenseQuery(weights: Map[String, Double], dfOf: String => Long,
                            n: Long, rows: Int, candidates: Int): Boolean =
@@ -363,6 +365,23 @@ final class Engine(val index: Index) {
     * geometries fall back to the columnar scan-score plan.
     */
   val DenseArraySegShiftMax = 22
+
+  /** Whether this index's segments are narrow enough for a segment-local
+    * score array ([[DenseArraySegShiftMax]]) — the ONE place the shift
+    * guard is written.
+    */
+  private def denseArrayFits: Boolean = index.cfg.segShift <= DenseArraySegShiftMax
+
+  /** THE route of one query, shared by [[searchByTerms]],
+    * [[searchManyByTerms]] and [[searchBool]]: a dense query scores on the
+    * dense-array kernel while [[denseArrayFits]], on the columnar plan
+    * above it; every other query takes per-segment DAAT.
+    */
+  private def routeOf(weights: Map[String, Double], dfOf: String => Long,
+                      n: Long, rows: Int, candidates: Int): Engine.Route =
+    if (!isDenseQuery(weights, dfOf, n, rows, candidates)) Engine.Route.Daat
+    else if (denseArrayFits) Engine.Route.DenseArray
+    else Engine.Route.Columnar
 
   /** Segment hit rows of `terms` in the [[SegHit]] projection. */
   private def segHits(terms: Seq[String]): Dataset[SegHit] =
@@ -503,15 +522,15 @@ final class Engine(val index: Index) {
     // corpus-wide terms ride along (see HotScanFraction scaladoc)
     val dfByTerm: Map[String, Long] =
       kept.iterator.map { case (t, _, df) => t -> df }.toMap
-    if (isDenseQuery(weights, t => dfByTerm.getOrElse(t, 0L), n, rows, candidates)) {
-      if (index.cfg.segShift <= DenseArraySegShiftMax)
+    routeOf(weights, t => dfByTerm.getOrElse(t, 0L), n, rows, candidates) match {
+      case Engine.Route.DenseArray =>
         // dense-array route: scores accumulate into a segment-local
         // primitive array (Wand.scoreSegmentDense) — no per-doc list
         // sorting, no doc-keyed shuffle; fq/kill bitmaps ride the same
         // cogroups as the WAND route
         daatScore(weights, rows, math.min(candidates, rows), avgdl,
           useWand = false, pred, bitmapFq, after, dense = true)
-      else {
+      case Engine.Route.Columnar =>
         // ultra-wide segments: columnar scan-score fallback (bitmap fq
         // converts to its result-identical docmeta semi-join form)
         val scanPred = bitmapFq match {
@@ -519,10 +538,10 @@ final class Engine(val index: Index) {
           case None => pred
         }
         scanScore(weights, rows, avgdl, scanPred, after)
-      }
-    } else
-      daatScore(weights, rows, math.min(candidates, rows), avgdl,
-        useWand = accuracy < 0.9, pred, bitmapFq, after)
+      case Engine.Route.Daat =>
+        daatScore(weights, rows, math.min(candidates, rows), avgdl,
+          useWand = accuracy < 0.9, pred, bitmapFq, after)
+    }
   }
 
   /** Search-after cursor paging (Solr cursorMark semantics — the deep-page
@@ -1231,15 +1250,11 @@ final class Engine(val index: Index) {
     val (bitmapFq, pred) = fqSplit(docPred, docFilter)
     val dfByTerm: Map[String, Long] =
       kept.iterator.map { case (t, _, df) => t -> df }.toMap
-    val wantsDense = isDenseQuery(weights, t => dfByTerm.getOrElse(t, 0L), n, rows, candidates)
-    if (wantsDense && index.cfg.segShift <= DenseArraySegShiftMax)
-      daatScore(weights, rows, math.min(candidates, rows), avgdl,
-        useWand = false, pred, bitmapFq, None, dense = true,
-        must = mustSet, mustNot = notSet, mustGroups = groupSets)
-    else
-      daatScore(weights, rows, math.min(candidates, rows), avgdl,
-        useWand = !wantsDense && accuracy < 0.9, pred, bitmapFq, None,
-        must = mustSet, mustNot = notSet, mustGroups = groupSets)
+    val route = routeOf(weights, t => dfByTerm.getOrElse(t, 0L), n, rows, candidates)
+    daatScore(weights, rows, math.min(candidates, rows), avgdl,
+      useWand = route == Engine.Route.Daat && accuracy < 0.9, pred, bitmapFq, None,
+      dense = route == Engine.Route.DenseArray,
+      must = mustSet, mustNot = notSet, mustGroups = groupSets)
   }
 
   /** Per-segment DAAT path (block-max WAND or exhaustive). `heapSize`:
@@ -1546,11 +1561,12 @@ final class Engine(val index: Index) {
     * individual searchByTerms run (tested). No pruning/accuracy here:
     * callers pre-prune with [[prune]] if wanted.
     *
-    * Routing mirrors [[searchByTerms]] per query: dense queries (their
-    * DOMINANT-weight terms blanket the corpus) would run the scalar
-    * exhaustive loop per segment inside the batch — they split off into
-    * ONE shared columnar pass ([[scanScoreMany]]); the rest run the
-    * batched WAND pass. Results union; both routes are exact.
+    * Each query takes the route [[searchByTerms]] gives it ([[routeOf]]):
+    * sparse queries run block-max WAND and dense queries the dense-array
+    * kernel, side by side in ONE per-segment pass ([[segmentPassMany]]);
+    * only on segments wider than [[DenseArraySegShiftMax]] do the dense
+    * queries split off into the columnar [[scanScoreMany]] plan, whose
+    * result unions with the pass's. All routes are exact.
     * Output: (query_id, rank, doc_id, score_q).
     */
   def searchManyByTerms(
@@ -1568,42 +1584,56 @@ final class Engine(val index: Index) {
         }
       }
     }.toMap
-    val (dense, sparse) = weightsByQuery.filter(_._2.nonEmpty).partition { case (_, w) =>
-      isDenseQuery(w, t => dfs.getOrElse(t, 0L), n, rows, candidates)
+    val routed = weightsByQuery.toSeq.collect { case (qid, w) if w.nonEmpty =>
+      (qid, w, routeOf(w, t => dfs.getOrElse(t, 0L), n, rows, candidates))
     }
+    val (columnar, segmentLocal) = routed.partition(_._3 == Engine.Route.Columnar)
     val parts = Seq(
-      if (sparse.isEmpty) None else Some(wandMany(sparse, rows, candidates, avgdl)),
-      if (dense.isEmpty) None else Some(scanScoreMany(dense, rows, avgdl))).flatten
+      if (segmentLocal.isEmpty) None
+      else Some(segmentPassMany(segmentLocal.map { case (qid, w, r) =>
+        (qid, w, r == Engine.Route.DenseArray) }, rows, candidates, avgdl)),
+      if (columnar.isEmpty) None
+      else Some(scanScoreMany(columnar.map { case (qid, w, _) => qid -> w }.toMap, rows, avgdl))
+    ).flatten
     if (parts.isEmpty) Wand.topKPerQuery(spark, spark.emptyDataset[(Long, Scored)], rows)
     else parts.reduce(_ unionAll _)
   }
 
-  /** Batched WAND pass: all queries share one traversal of the segment
-    * files (each segment's hit rows are materialized once and re-scored
-    * per query against the bounded heap).
+  /** The batch's one per-segment pass: ONE scan of the union of the
+    * queries' terms, one [[perSegment]] grouping (kill bitmaps resolve to
+    * the same `allow` as a single query's), and one keyed top-k merge.
+    * Each segment's hit rows materialize once and are re-scored per query
+    * — on the dense-array kernel for a query flagged dense, on block-max
+    * WAND otherwise — with the per-segment heap `min(candidates, rows)`
+    * that [[searchByTerms]] uses on both routes.
     */
-  private def wandMany(weightsByQuery: Map[Long, Map[String, Double]],
-                       rows: Int, candidates: Int, avgdl: Double): DataFrame = {
-    val liveTerms = weightsByQuery.values.flatMap(_.keys).toSeq.distinct
+  private def segmentPassMany(queries: Seq[(Long, Map[String, Double], Boolean)],
+                              rows: Int, candidates: Int, avgdl: Double): DataFrame = {
+    val liveTerms = queries.flatMap(_._2.keys).distinct
     val cfg = index.cfg
-    val wB = spark.sparkContext.broadcast(weightsByQuery)
+    val qB = spark.sparkContext.broadcast(queries.toArray)
     val heapSize = math.min(candidates, rows)
     val scored = perSegment(segHits(liveTerms).groupByKey(_.seg_id)) { (seg, it, allow, _) =>
       val segRows = it.toArray // shared once, re-traversed per query (≤|q| rows)
-      wB.value.iterator.flatMap { case (qid, weights) =>
-        Wand.scoreSegment(seg, segRows.iterator, weights, avgdl,
-          heapSize, cfg, allow, useWand = true).map(s => (qid, s))
+      qB.value.iterator.flatMap { case (qid, weights, dense) =>
+        val hits = segRows.iterator
+        val top =
+          if (dense) Wand.scoreSegmentDense(seg, hits, weights, avgdl, heapSize, cfg, allow)
+          else Wand.scoreSegment(seg, hits, weights, avgdl, heapSize, cfg, allow, useWand = true)
+        top.map(s => (qid, s))
       }
     }
     Wand.topKPerQuery(spark, scored, rows)
   }
 
-  /** Batched dense-query columnar pass: postings of the UNION of the dense
-    * queries' terms are decoded ONCE (explode before the weight join), the
-    * broadcast (query_id, term, w) table fans each posting row out to the
-    * queries that contain its term, a codegen'd hash agg sums per
-    * (query_id, doc_id), and the bounded keyed heap takes per-query top-k.
-    * Exact, same quantized tie rule as every other route.
+  /** Batched columnar pass — the batch's dense queries on segments wider
+    * than [[DenseArraySegShiftMax]], as [[scanScore]] is a single query's:
+    * postings of the UNION of their terms are decoded ONCE (explode
+    * before the weight join), the broadcast (query_id, term, w) table
+    * fans each posting row out to the queries that contain its term, a
+    * codegen'd hash agg sums per (query_id, doc_id), and the bounded keyed
+    * heap takes per-query top-k. Exact, same quantized tie rule as every
+    * other route.
     */
   private[graft] def scanScoreMany(
       weightsByQuery: Map[Long, Map[String, Double]],
@@ -2028,7 +2058,7 @@ final class Engine(val index: Index) {
     // fallback below, kept for uncovered keys / wide segments and pinned
     // equal in PlanSpec).
     val viaBitmap = index.hasFilters && index.filterColsComplete.contains("repo") &&
-      index.cfg.segShift <= DenseArraySegShiftMax
+      denseArrayFits
     val agg: DataFrame =
       if (viaBitmap) {
         val wB = spark.sparkContext.broadcast(weights)
@@ -2147,8 +2177,7 @@ final class Engine(val index: Index) {
     // P2 bug class all over again)
     val (bitmapFq, pred0) = fqSplit(docPred, docFilter)
     val viaBitmap = !forceScan && pred0.isEmpty && index.hasFilters &&
-      index.filterColsComplete.contains(field) &&
-      cfg.segShift <= DenseArraySegShiftMax
+      index.filterColsComplete.contains(field) && denseArrayFits
     val perVal: org.apache.spark.sql.Dataset[(String, Scored)] =
       if (viaBitmap) {
         // a sole covered equality fq rides the same cogroup as the value
@@ -2265,6 +2294,17 @@ final class Engine(val index: Index) {
 
 object Engine {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Engine]()
+
+  /** Where a query's scoring runs, as the engine's `routeOf` picks it:
+    * per-segment DAAT, the segment-local dense-array kernel, or the
+    * columnar exploded-postings plan.
+    */
+  private[query] sealed trait Route
+  private[query] object Route {
+    case object Daat extends Route
+    case object DenseArray extends Route
+    case object Columnar extends Route
+  }
 
   /** Re-rank sentinel for a candidate with no stored feature vector: ranks
     * below every real quantized cosine (∈ [-10^4, 10^4]) but stays in the

@@ -356,22 +356,57 @@ class IndexSpec extends SparkSpec {
     }
   }
 
-  test("batched search routes dense queries to the shared columnar pass, rank-identical") {
+  test("batched dense queries: dense-array kernel, rank-identical") {
     val hotTerms = engine.index.dictionary
       .orderBy($"df".desc, $"term".asc).limit(3)
       .select($"term").as[String].collect().toSeq.map(_ -> 1.0)
     val mixed: Seq[(Long, Seq[(String, Double)])] = Seq(
-      1L -> hotTerms, // dense: must take scanScoreMany
+      1L -> hotTerms, // dense: the dense-array kernel inside the pass
       2L -> SparkEntry.FlagshipTerms, // sparse: batched WAND
       3L -> (hotTerms.take(2) ++ Seq("w:dup" -> 1.0))) // hot+rare: stays WAND
+    assert(engine.routesDense(hotTerms, rows = 20), "precondition: query 1 routes dense")
     val df = engine.searchManyByTerms(mixed, rows = 20)
-    assert(df.queryExecution.executedPlan.toString.contains("graft_postings"),
-      "a dense query in the batch must engage the columnar pass")
+    val exec = df.queryExecution.executedPlan.toString
+    assert(!exec.contains("graft_postings"),
+      s"a dense query in the batch must not engage the columnar pass:\n$exec")
+    assert(segmentScans(df, indexDir) == 1, s"the batch must scan the segments once:\n$exec")
     val batch = df.as[(Long, Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toSeq).toMap
     mixed.foreach { case (qid, terms) =>
       val single = engine.searchByTerms(terms, rows = 20)
         .as[(Long, Long, Long)].collect().map(r => (r._2, r._3)).toSeq
+      assert(batch.getOrElse(qid, Seq.empty) == single, s"query $qid")
+    }
+  }
+
+  test("batched dense queries on wide segments: columnar pass, rank-identical") {
+    val d = tmpDir("wideseg")
+    IndexBuild.build(spark, corpus, d, IndexConfig(segShift = 23, rangeSegsShift = 1))
+    val wide = new Engine(new Index(spark, d))
+    assert(wide.index.cfg.segShift > wide.DenseArraySegShiftMax)
+    val hotTerms = wide.index.dictionary
+      .orderBy($"df".desc, $"term".asc).limit(3)
+      .select($"term").as[String].collect().toSeq.map(_ -> 1.0)
+    assert(wide.routesDense(hotTerms, rows = 20), "precondition: query 1 routes dense")
+    val mixed: Seq[(Long, Seq[(String, Double)])] = Seq(
+      1L -> hotTerms, // dense on wide segments: scanScoreMany
+      4L -> hotTerms.take(2), // a second dense query in the same columnar pass
+      2L -> SparkEntry.FlagshipTerms, // sparse: batched WAND
+      3L -> (hotTerms.take(2) ++ Seq("w:dup" -> 1.0))) // hot+rare: stays WAND
+    val df = wide.searchManyByTerms(mixed, rows = 20)
+    val p = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(p.contains("graft_postings"), s"dense batch not on the columnar pass:\n$p")
+    assert(p.contains("BroadcastHashJoin"), s"weight table not broadcast:\n$p")
+    assert(!p.contains("SortMergeJoin"), s"posting rows shuffled for the join:\n$p")
+    val exec = df.queryExecution.executedPlan.toString
+    assert(exec.contains("ObjectHashAggregate"), s"no bounded-heap top-k:\n$exec")
+    val batch = df.as[(Long, Long, Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toSeq).toMap
+    mixed.foreach { case (qid, terms) =>
+      val single = wide.searchByTerms(terms, rows = 20)
+        .as[(Long, Long, Long)].collect().map(r => (r._2, r._3)).toSeq
+      assert(single.nonEmpty, s"query $qid matches nothing")
       assert(batch.getOrElse(qid, Seq.empty) == single, s"query $qid")
     }
   }

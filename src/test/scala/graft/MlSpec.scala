@@ -50,6 +50,28 @@ class MlSpec extends SparkSpec {
     assert(Dedup.spanDups(boiler, width = 4, maxOcc = 10).count() == 45) // all pairs kept
   }
 
+  test("span dedup over the keep-set gate: semi-join on the materialized keep set == broadcast route") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.LogicalRDD
+    val gated = Dedup.spanDupsGated(dupped, width = 8, maxOcc = 64, keepGate = 0L)
+    val semis = gated.queryExecution.optimizedPlan.collect {
+      case j: Join if j.joinType == LeftSemi => j
+    }
+    assert(semis.size == 1, s"over-gate keep set must take the semi-join:\n${gated.queryExecution.optimizedPlan}")
+    // the build side is the keep set materialized by the count pass, not
+    // a plan that would run the first window pass again
+    val build = semis.head.right.collectLeaves()
+    assert(build.nonEmpty && build.forall {
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }, s"semi-join build side is not the materialized keep set:\n${semis.head.right}")
+    val got = gated.as[(Long, Long, Long, Long, Long, Long)].collect().toSet
+    assert(got.nonEmpty, "test needs duplicated spans")
+    assert(got == Dedup.spanDups(dupped, width = 8, maxOcc = 64)
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet)
+  }
+
   test("minhash candidate pairs cover all exact dups with all bands shared") {
     val pairs = Dedup.minhashPairs(Dedup.minhashBands(Dedup.minhashSignatures(dupped)))
       .as[(Long, Long, Long)].collect().toSeq

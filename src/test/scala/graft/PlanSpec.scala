@@ -184,16 +184,19 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("batched dense pass: postings decoded once, weights broadcast, heap agg") {
+  test("batched dense pass: one segments scan, no join, heap agg") {
     val hotTerms = engine.index.dictionary
       .orderBy(col("df").desc, col("term").asc).limit(3)
       .select(col("term")).as[String](org.apache.spark.sql.Encoders.STRING)
       .collect().toSeq.map(_ -> 1.0)
-    val df = engine.searchManyByTerms(Seq(1L -> hotTerms, 2L -> hotTerms.take(2)), rows = 20)
+    assert(engine.routesDense(hotTerms, rows = 20), "precondition: the batch routes dense")
+    val df = engine.searchManyByTerms(Seq(1L -> hotTerms, 2L -> hotTerms.take(2),
+      3L -> SparkEntry.FlagshipTerms), rows = 20)
     val p = plan(df)
-    assert(p.contains("graft_postings"), s"dense batch not on the columnar pass:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"weight table not broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"posting rows shuffled for the join:\n$p")
+    assert(!p.contains("graft_postings"), s"dense batch decodes postings columnar-side:\n$p")
+    assert(!p.contains("BroadcastHashJoin"), s"dense batch joins a weight table:\n$p")
+    assert(!p.contains("SortMergeJoin"), s"dense batch shuffles for a join:\n$p")
+    assert(segmentScans(df, engine.index.indexDir) == 1, s"segments not scanned exactly once:\n$p")
     val exec = df.queryExecution.executedPlan.toString
     assert(exec.contains("ObjectHashAggregate"), s"no bounded-heap top-k:\n$exec")
   }

@@ -33,6 +33,22 @@ abstract class SparkSpec extends AnyFunSuite {
     */
   def tempDir(tag: String): String = graft.util.Tmp.dir(tag)
 
+  /** Parquet scans of `indexDir`'s segments store in `df`'s physical plan
+    * (descending into adaptive plans): how many times a query reads the
+    * postings.
+    */
+  def segmentScans(df: org.apache.spark.sql.DataFrame, indexDir: String): Int = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val segDir = new org.apache.hadoop.fs.Path(graft.index.IndexBuild.segmentsDir(indexDir))
+      .toUri.getPath
+    val helper = new AdaptiveSparkPlanHelper {}
+    helper.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(segDir)) => s
+    }.size
+  }
+
   /** Every live unit of `indexDir` holds each always-written store and a
     * manifest stamped with the current codec_ver. `filters` (only with
     * filterColumns) and `tombstones` (only with kills) are optional.

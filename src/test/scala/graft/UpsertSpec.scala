@@ -187,6 +187,29 @@ class UpsertSpec extends SparkSpec {
     assert(found == Seq(Lift), s"path $p resolved to $found, want Seq($Lift)")
   }
 
+  test("batched dense, hot+rare and rare queries == single runs, no dead doc") {
+    val hot = eng.index.dictionary
+      .orderBy($"df".desc, $"term".asc).limit(3)
+      .select($"term").as[String].collect().toSeq.map(_ -> 1.0)
+    val mixed: Seq[(Long, Seq[(String, Double)])] = Seq(
+      1L -> hot, // dense: the dense-array kernel under the kill allow set
+      2L -> hot.take(2), // a second dense query in the same pass
+      3L -> (hot.take(2) ++ Seq("w:zzupserted" -> 1.0)), // hot+rare: WAND
+      4L -> Seq("w:dup" -> 1.0, "w:zzupserted" -> 1.0)) // rare: WAND
+    assert(mixed.exists { case (_, ts) => eng.routesDense(ts, rows = 20) },
+      "the batch must hold a dense query")
+    val batch = eng.searchManyByTerms(mixed, rows = 20)
+      .as[(Long, Long, Long, Long)].collect()
+    batch.foreach(r => assert(!dead.contains(r._3), s"query ${r._1} returned dead doc ${r._3}"))
+    val byQ = batch.groupBy(_._1).view.mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toSeq).toMap
+    mixed.foreach { case (qid, terms) =>
+      val single = eng.searchByTerms(terms, rows = 20)
+        .as[(Long, Long, Long)].collect().map(r => (r._2, r._3)).toSeq
+      assert(single.nonEmpty, s"query $qid matches nothing")
+      assert(byQ.getOrElse(qid, Seq.empty) == single, s"query $qid")
+    }
+  }
+
   test("upsert and delete replays are no-ops") {
     val before = IndexBuild.tombstoneUnits(spark, upsertDir)
     val r = IndexBuild.upsert(spark, updates, upsertDir, cfg, keyCols = Seq("path"))
