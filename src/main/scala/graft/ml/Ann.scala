@@ -91,7 +91,7 @@ object Ann {
       lit(0.0)))
 
   /** Per-query exact top-k over (query_id, vec_id, cos_q) rows via the
-    * bounded-heap Aggregator ([[graft.query.TopKAggKeyed]]): map-side
+    * bounded-heap Aggregator ([[graft.query.Wand.topKPerQuery]]): map-side
     * partial heaps of k entries merge under ObjectHashAggregate, so one
     * query's candidate set never funnels into a single rank-window sort
     * partition (VERDICT r02 #8). cos_q rides through Scored.score

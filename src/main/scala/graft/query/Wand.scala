@@ -87,40 +87,14 @@ final class BoundedTopK(val k: Int) extends Serializable {
 
 /** Typed bounded-heap top-k Aggregator — Spark runs it as partial
   * aggregation per partition + merge (the treeAggregate shape of the
-  * north_rule) via ObjectHashAggregate.
+  * north_rule) via ObjectHashAggregate. The ONE heap merge: keyed
+  * callers (per query, per group value) aggregate it over
+  * `groupByKey(_._1).mapValues(_._2)`.
   */
 final class TopKAgg(k: Int)(implicit outEnc: Encoder[Seq[Scored]])
     extends Aggregator[Scored, BoundedTopK, Seq[Scored]] {
   def zero: BoundedTopK = new BoundedTopK(k)
   def reduce(b: BoundedTopK, a: Scored): BoundedTopK = { b.offer(a.docId, a.score); b }
-  def merge(b1: BoundedTopK, b2: BoundedTopK): BoundedTopK = b1.merge(b2)
-  def finish(r: BoundedTopK): Seq[Scored] = r.sortedBestFirst.toSeq
-  def bufferEncoder: Encoder[BoundedTopK] = Encoders.kryo[BoundedTopK]
-  def outputEncoder: Encoder[Seq[Scored]] = outEnc
-}
-
-/** TopKAgg over keyed inputs (batched multi-query merge). */
-final class TopKAggKeyed(k: Int)(implicit outEnc: Encoder[Seq[Scored]])
-    extends Aggregator[(Long, Scored), BoundedTopK, Seq[Scored]] {
-  def zero: BoundedTopK = new BoundedTopK(k)
-  def reduce(b: BoundedTopK, a: (Long, Scored)): BoundedTopK = {
-    b.offer(a._2.docId, a._2.score); b
-  }
-  def merge(b1: BoundedTopK, b2: BoundedTopK): BoundedTopK = b1.merge(b2)
-  def finish(r: BoundedTopK): Seq[Scored] = r.sortedBestFirst.toSeq
-  def bufferEncoder: Encoder[BoundedTopK] = Encoders.kryo[BoundedTopK]
-  def outputEncoder: Encoder[Seq[Scored]] = outEnc
-}
-
-/** TopKAgg over string-keyed inputs (grouped-search merge: one bounded
-  * heap per group value, map-side partials like every other heap).
-  */
-final class TopKAggStr(k: Int)(implicit outEnc: Encoder[Seq[Scored]])
-    extends Aggregator[(String, Scored), BoundedTopK, Seq[Scored]] {
-  def zero: BoundedTopK = new BoundedTopK(k)
-  def reduce(b: BoundedTopK, a: (String, Scored)): BoundedTopK = {
-    b.offer(a._2.docId, a._2.score); b
-  }
   def merge(b1: BoundedTopK, b2: BoundedTopK): BoundedTopK = b1.merge(b2)
   def finish(r: BoundedTopK): Seq[Scored] = r.sortedBestFirst.toSeq
   def bufferEncoder: Encoder[BoundedTopK] = Encoders.kryo[BoundedTopK]
@@ -144,6 +118,10 @@ final class TopKAggStr(k: Int)(implicit outEnc: Encoder[Seq[Scored]])
   * re-rank, LireRequestHandler.java:554-668) maps to: WAND keeps a
   * per-segment bounded heap of size `candidates` of EXACT scores, the
   * global TopKAgg merge takes `rows`.
+  *
+  * The Engine's one scoring pass calls the top-k kernels per query per
+  * segment — a single query is a batch of one, merged by [[topK]]; a
+  * batch's queries by [[topKPerQuery]], the same heap keyed by query id.
   */
 object Wand {
 
@@ -450,23 +428,29 @@ object Wand {
         }
     }
 
-  /** Global bounded-heap merge: Dataset[Scored] -> (rank, doc_id, score_q). */
+  /** Global bounded-heap merge: Dataset[Scored] -> (rank, doc_id, score_q).
+    * `k` is checked on the driver here and in [[topKPerQuery]], where every
+    * search verb ends: a zero-capacity heap would fail inside a task.
+    */
   def topK(spark: SparkSession, scored: Dataset[Scored], k: Int): DataFrame = {
+    requireRows(k)
     import spark.implicits._
-    val agg = new TopKAgg(k)
-    scored.select(agg.toColumn)
+    scored.select(new TopKAgg(k).toColumn)
       .flatMap(_.zipWithIndex.map { case (s, i) => ((i + 1).toLong, s.docId, s.scoreQ) })
       .toDF("rank", "doc_id", "score_q")
   }
+
+  private def requireRows(k: Int): Unit =
+    require(k >= 1, s"rows (the top-k size) must be >= 1, got $k")
 
   /** Per-query global merge for batched search:
     * Dataset[(query_id, Scored)] -> (query_id, rank, doc_id, score_q).
     */
   def topKPerQuery(spark: SparkSession, scored: Dataset[(Long, Scored)], k: Int): DataFrame = {
+    requireRows(k)
     import spark.implicits._
-    val agg = new TopKAggKeyed(k)
-    scored.groupByKey(_._1)
-      .agg(agg.toColumn)
+    scored.groupByKey(_._1).mapValues(_._2)
+      .agg(new TopKAgg(k).toColumn)
       .flatMap { case (qid, top) =>
         top.zipWithIndex.map { case (s, i) => (qid, (i + 1).toLong, s.docId, s.scoreQ) }
       }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.index.{Codec, IndexBuild, IndexConfig}
 import graft.query.{Bm25, BruteScorer, Engine, Index}
+import graft.query.Engine.{QuerySpec, Route}
 
 class IndexSpec extends SparkSpec {
   import spark.implicits._
@@ -411,6 +412,20 @@ class IndexSpec extends SparkSpec {
     }
   }
 
+  test("rows or candidates below 1 fail on the driver, naming the argument") {
+    def message(call: => Any): String = intercept[IllegalArgumentException](call).getMessage
+    assert(message(engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 0)).contains("rows"))
+    assert(message(engine.searchByTerms(SparkEntry.FlagshipTerms, candidates = 0))
+      .contains("candidates"))
+    assert(message(engine.searchManyByTerms(SparkEntry.MultiQueries, rows = 0)).contains("rows"))
+  }
+
+  test("batched search rejects a repeated query id, naming it") {
+    val e = intercept[IllegalArgumentException](engine.searchManyByTerms(Seq(
+      7L -> SparkEntry.FlagshipTerms, 8L -> Seq("w:dup" -> 1.0), 7L -> Seq("w:dup" -> 1.0))))
+    assert(e.getMessage.contains("query_id 7"), e.getMessage)
+  }
+
   test("all-zero-df query returns empty result") {
     val r = engine.searchByTerms(Seq("w:zzz1" -> 1.0, "w:zzz2" -> 1.0), rows = 10)
     assert(r.count() == 0)
@@ -443,15 +458,18 @@ class IndexSpec extends SparkSpec {
     assert(got.map(_._3) == exp.map(_.scoreQ))
     // rank identity across ALL routes, forced, with and w/o fq
     val dfs = engine.index.dfOf(hotTerms.map(_._1))
-    val (n, avgdl) = engine.index.stats
+    val (n, _) = engine.index.stats
     val w = hotTerms.map { case (t, b) =>
       t -> b * Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
     for (p <- Seq(None, Some(col("lang") === "en"))) {
-      val s = engine.scanScore(w, 25, avgdl, p).collect().map(_.toSeq).toSeq
-      val d1 = engine.daatScore(w, 25, 25, avgdl, useWand = true, p).collect().map(_.toSeq).toSeq
-      val d2 = engine.daatScore(w, 25, 25, avgdl, useWand = false, p).collect().map(_.toSeq).toSeq
-      val d3 = engine.daatScore(w, 25, 25, avgdl, useWand = false, p, dense = true)
-        .collect().map(_.toSeq).toSeq
+      val s = engine.searchSpec(Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
+        docPred = p).collect().map(_.toSeq).toSeq
+      val d1 = engine.searchSpec(Some(QuerySpec(0L, w, Route.Daat, useWand = true)), 25, 25,
+        docPred = p).collect().map(_.toSeq).toSeq
+      val d2 = engine.searchSpec(Some(QuerySpec(0L, w, Route.Daat, useWand = false)), 25, 25,
+        docPred = p).collect().map(_.toSeq).toSeq
+      val d3 = engine.searchSpec(Some(QuerySpec(0L, w, Route.DenseArray, useWand = false)), 25, 25,
+        docPred = p).collect().map(_.toSeq).toSeq
       assert(s == d1, s"scan vs wand (pred=$p)")
       assert(s == d2, s"scan vs exhaustive (pred=$p)")
       assert(s == d3, s"scan vs dense-array (pred=$p)")
@@ -459,8 +477,8 @@ class IndexSpec extends SparkSpec {
     // dense-array under a BITMAP fq too (the route keeps the side-index)
     val fqApi = engine.searchByTerms(hotTerms, rows = 25, docFilter = Some(("lang", "en")))
       .collect().map(_.toSeq).toSeq
-    val fqScan = engine.scanScore(w, 25, avgdl, Some(col("lang") === "en"))
-      .collect().map(_.toSeq).toSeq
+    val fqScan = engine.searchSpec(Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
+        docPred = Some(col("lang") === "en")).collect().map(_.toSeq).toSeq
     assert(fqApi == fqScan, "dense-array bitmap fq diverges from the scan+pred form")
     // a rare query must keep the DAAT plan
     assert(!engine.routesDense(Seq("w:dup" -> 1.0), rows = 10))
@@ -484,9 +502,10 @@ class IndexSpec extends SparkSpec {
     assert(got.map(_._2) == exp.map(_.docId))
     assert(got.map(_._3) == exp.map(_.scoreQ))
     val dfs = engine.index.dfOf(mix.map(_._1))
-    val (n, avgdl) = engine.index.stats
+    val (n, _) = engine.index.stats
     val w = mix.map { case (t, b) => t -> b * Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    val s = engine.scanScore(w, 30, avgdl, None).collect().map(_.toSeq).toSeq
+    val s = engine.searchSpec(Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 30, 30)
+      .collect().map(_.toSeq).toSeq
     assert(s == got.map(r => Seq(r._1, r._2, r._3)), "scan route must agree on the mix")
     // a boosted hot term that dominates the weights SHOULD route dense:
     // nothing prunable remains when the dense term drives the threshold
@@ -500,10 +519,10 @@ class IndexSpec extends SparkSpec {
     // dense + bitmap fq: the dense-array route keeps the bitmap side-index;
     // results == the DAAT bitmap path
     val api3 = engine.searchByTerms(hotTerms, rows = 30, docFilter = Some(("lang", "en")))
-    val viaDaat = engine.daatScore(
+    val viaDaat = engine.searchSpec(Some(QuerySpec(0L,
       hotTerms.map { case (t, b) =>
         t -> b * Bm25.idf(engine.index.dfOf(Seq(t))(t).toDouble, n.toDouble) }.toMap,
-      30, 30, avgdl, useWand = true, None, bitmapFq = Some(("lang", "en")))
+      Route.Daat, useWand = true)), 30, 30, bitmapFq = Some(("lang", "en")))
       .collect().map(_.toSeq).toSeq
     assert(api3.collect().map(_.toSeq).toSeq == viaDaat,
       "dense+fq route must equal the DAAT bitmap route")
@@ -779,8 +798,8 @@ class IndexSpec extends SparkSpec {
       (null: String, graft.query.Scored(1L, 1.0)),
       ("a", graft.query.Scored(2L, 2.0)),
       (null: String, graft.query.Scored(3L, 3.0))))
-    val m = ds.groupByKey(_._1)
-      .agg(new graft.query.TopKAggStr(2).toColumn).collect().toMap
+    val m = ds.groupByKey(_._1).mapValues(_._2)
+      .agg(new graft.query.TopKAgg(2).toColumn).collect().toMap
     assert(m(null).map(_.docId) == Seq(3L, 1L) && m("a").map(_.docId) == Seq(2L))
   }
 
@@ -802,6 +821,50 @@ class IndexSpec extends SparkSpec {
       cursor = Some((page.last._3, page.last._2))
     }
     assert(pages.toSeq == full, "cursor walk diverged from the full ranking")
+  }
+
+  /** The corpus' three highest-df terms at boost 1: a dense query. */
+  private def hot3(eng: Engine): Seq[(String, Double)] =
+    eng.index.dictionary.orderBy($"df".desc, $"term".asc).limit(3)
+      .select($"term").as[String].collect().toSeq.map(_ -> 1.0)
+
+  /** Walk `terms` by search-after pages of 25 up to 100 docs; assert the
+    * walk equals the full top-100, (doc_id, score_q) rank by rank.
+    */
+  private def assertCursorWalk(eng: Engine, terms: Seq[(String, Double)]): Unit = {
+    val full = eng.searchByTerms(terms, rows = 100)
+      .as[(Long, Long, Long)].collect().toSeq.map(r => (r._2, r._3))
+    assert(full.size == 100, "test needs a >=100-doc match set")
+    val pages = scala.collection.mutable.Buffer[(Long, Long)]()
+    var cursor = (Long.MaxValue, Long.MinValue) // (score_q, doc_id): admits every doc
+    while (pages.size < 100) {
+      val page = eng.searchAfter(terms, cursor._1, cursor._2, rows = 25)
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(page.nonEmpty, s"ran dry at ${pages.size}")
+      assert(page.map(_._1) == (1 to page.size).map(_.toLong), "page-relative ranks")
+      pages ++= page.map(r => (r._2, r._3))
+      cursor = (page.last._3, page.last._2)
+    }
+    assert(pages.toSeq == full, "cursor walk diverged from the full ranking")
+  }
+
+  test("cursor paging on the dense-array kernel reproduces the full ranking") {
+    val hot = hot3(engine)
+    assert(engine.index.cfg.segShift <= engine.DenseArraySegShiftMax)
+    assert(engine.routesDense(hot, rows = 25) && engine.routesDense(hot, rows = 100),
+      "precondition: the query routes dense")
+    assertCursorWalk(engine, hot)
+  }
+
+  test("cursor paging on the columnar pass (wide segments) reproduces the full ranking") {
+    val d = tmpDir("widecursor")
+    IndexBuild.build(spark, corpus, d, IndexConfig(segShift = 23, rangeSegsShift = 1))
+    val wide = new Engine(new Index(spark, d))
+    val hot = hot3(wide)
+    assert(wide.index.cfg.segShift > wide.DenseArraySegShiftMax)
+    assert(wide.routesDense(hot, rows = 25) && wide.routesDense(hot, rows = 100),
+      "precondition: the query routes dense")
+    assertCursorWalk(wide, hot)
   }
 
   test("dictionary store: per-unit artifact equals segment-derived dfs, survives compaction") {

@@ -94,14 +94,15 @@ class PlanSpec extends SparkSpec {
     assert(exec.contains("ObjectHashAggregate"), s"no bounded-heap top-k:\n$exec")
     // the ultra-wide-segment FALLBACK keeps its codegen'd columnar shape
     val dfs = engine.index.dfOf(hotTerms.map(_._1))
-    val (n, avgdl) = engine.index.stats
+    val (n, _) = engine.index.stats
     val w = hotTerms.map { case (t, b) =>
       t -> b * graft.query.Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    val ps = plan(engine.scanScore(w, 30, avgdl, None))
+    val ps = plan(engine.searchSpec(Some(Engine.QuerySpec(0L, w, Engine.Route.Columnar,
+      useWand = false)), 30, 30))
     assert(ps.contains("graft_postings"), s"not the scan plan:\n$ps")
     assert(ps.contains("HashAggregate"), s"no hash aggregation:\n$ps")
     assert(ps.contains("partial_sum") || ps.contains("Partial"), s"no partial agg:\n$ps")
-    assert(ps.contains("TakeOrderedAndProject"), s"no bounded top-k:\n$ps")
+    assert(ps.contains("ObjectHashAggregate"), s"no bounded top-k:\n$ps")
   }
 
   test("bitmap-filtered search cogroups the filter side-index, never docmeta") {

@@ -164,11 +164,12 @@ class UpsertSpec extends SparkSpec {
       SparkEntry.FlagshipTerms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }
         .filter(_._3 > 0)
     }
-    val (n, avgdl) = eng.index.stats
+    val (n, _) = eng.index.stats
     val weights = kept.map { case (t, b, df) =>
       t -> b * graft.query.Bm25.idf(df.toDouble, n.toDouble)
     }.toMap
-    val scan = rows(eng.scanScore(weights, 60, avgdl, None)
+    val scan = rows(eng.searchSpec(Some(graft.query.Engine.QuerySpec(0L, weights,
+        graft.query.Engine.Route.Columnar, useWand = false)), 60, 60)
       .select("rank", "doc_id", "score_q"))
     val wand = rows(eng.searchByTerms(SparkEntry.FlagshipTerms, rows = 60))
     assert(scan == wand)
