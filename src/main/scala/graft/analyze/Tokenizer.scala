@@ -18,11 +18,13 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *                    "s:" (the `*_ha` hash-term fields)
   *
   * Everything here is expressed twice, and MUST stay in lock-step:
-  *   1. as Spark built-in column expressions (codegen'd, no UDFs) — the
-  *      engine path;
-  *   2. as plain Scala ([[tokenizeScala]] / [[termsScala]]) — the unit-test
-  *      brute-force scorer path;
+  *   1. as Spark built-in column expressions (codegen'd, no UDFs);
+  *   2. as plain Scala ([[tokenizeScala]] / [[termsScala]]) — the
+  *      reference the tests compare against;
   * and a third time in SQL by [[graft.sql.Oracle]] — the DuckDB oracle.
+  * The hot paths (build, span dedup, unigram LM, the native token
+  * expressions) run the one fast copy, [[TokenScanner]]: a byte-level
+  * scan whose tokens equal [[tokenizeScala]]'s on every input.
   *
   * The index/query symmetry of the reference (same hash fn at index and
   * query time, `ParallelSolrIndexer.java:563` vs `LireRequestHandler.java:226`)
@@ -120,24 +122,14 @@ object Tokenizer {
   def shingleTerm(a: String, b: String): String =
     "s:" + md5Hex(a + " " + b).substring(0, 3)
 
-  /** Token count without materializing tokens (no split, no md5) —
-    * equivalent to tokenizeScala(content).length; used where only the doc
-    * length dl = 2·n − 1 (words + shingles) is needed.
+  /** Token count, = tokenizeScala(content).length: the [[TokenScanner]]
+    * core's count, the one `dl` (= 2·n − 1, words + shingles) every path
+    * derives — docmeta, `graft_doclen`, the postings and the brute scorer.
     */
   def tokenCountScala(content: String): Int = {
-    if (content == null) return 0
-    var n = 0
-    var inTok = false
-    var i = 0
-    while (i < content.length) {
-      val c = content.charAt(i)
-      val lc = Character.toLowerCase(c)
-      val isTok = (lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9')
-      if (isTok && !inTok) n += 1
-      inTok = isTok
-      i += 1
-    }
-    n
+    val core = new TokenScanner
+    core.tokenize(content)
+    core.nToks
   }
 
   /** dl (words + shingles) from a token count: n + max(n-1, 0). */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.analyze.Tokenizer
+import graft.analyze.{TokenScanner, Tokenizer}
 
 /** Native Catalyst expression for the analyzer: content -> index terms
   * (words + 12-bit shingle hash terms), byte-identical to
@@ -47,8 +47,11 @@ case class GraftDocLen(child: Expression)
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_doclen"
-  override def nullSafeEval(input: Any): Any =
-    Tokenizer.dlOf(Tokenizer.tokenCountScala(input.toString))
+  override def nullSafeEval(input: Any): Any = {
+    val h = TokenScanner.local.get()
+    h.tokenize(input.asInstanceOf[UTF8String])
+    Tokenizer.dlOf(h.nToks)
+  }
   override protected def withNewChildInternal(newChild: Expression): GraftDocLen =
     copy(child = newChild)
 }
@@ -675,159 +678,11 @@ case class GraftShingleHashes(child: Expression, width: Int)
     copy(child = newChild)
 }
 
-/** Per-task scratch for the fused window-hash expressions
-  * ([[GraftShingleHashPairs]]): ONE MessageDigest + reused byte buffers,
-  * thread-local so a shared/instance-reused expression tree stays safe.
-  * Tokenization is the ASCII fast path of the build's FastDocTokens idea
-  * (lower + [a-z0-9]-run scan over raw UTF-8 bytes, no String/regex);
-  * non-ASCII rows fall back to [[Tokenizer.tokenizeScala]] — whose output
-  * tokens are pure [a-z0-9] by the split contract, so the digested bytes
-  * are identical to the fast path's by construction.
-  */
-private[graft] final class WindowHasher {
-  private val md = java.security.MessageDigest.getInstance("MD5")
-  private val digest = new Array[Byte](16)
-  private var lowered = new Array[Byte](1 << 12)
-  private var tokStart = new Array[Int](256)
-  private var tokEnd = new Array[Int](256)
-  private var win = new Array[Byte](256)
-  var nToks = 0
-
-  @inline private def isTok(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-
-  private def addTok(s: Int, e: Int): Unit = {
-    if (nToks == tokStart.length) {
-      tokStart = java.util.Arrays.copyOf(tokStart, nToks * 2)
-      tokEnd = java.util.Arrays.copyOf(tokEnd, nToks * 2)
-    }
-    tokStart(nToks) = s
-    tokEnd(nToks) = e
-    nToks += 1
-  }
-
-  /** Lower + tokenize `s` into byte ranges over the internal buffer.
-    * Byte-equal to Tokenizer.tokenizeScala on every input (ASCII fast
-    * path; Scala twin fallback for rows with any non-ASCII byte).
-    */
-  def tokenize(s: UTF8String): Unit = {
-    nToks = 0
-    val n = s.numBytes()
-    if (lowered.length < n) lowered = new Array[Byte](math.max(n, lowered.length * 2))
-    s.writeToMemory(lowered, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
-    var ascii = true
-    var i = 0
-    while (i < n && ascii) { if (lowered(i) < 0) ascii = false; i += 1 }
-    if (!ascii) {
-      // non-ASCII row: Scala-twin tokens (pure [a-z0-9] by the split
-      // contract) packed back into the buffer
-      val toks = Tokenizer.tokenizeScala(s.toString)
-      var need = 0
-      toks.foreach(t => need += t.length)
-      if (lowered.length < need) lowered = new Array[Byte](math.max(need, lowered.length * 2))
-      var off = 0
-      toks.foreach { t =>
-        var k = 0
-        while (k < t.length) { lowered(off + k) = t.charAt(k).toByte; k += 1 }
-        addTok(off, off + t.length)
-        off += t.length
-      }
-      return
-    }
-    i = 0
-    while (i < n) {
-      val c = lowered(i)
-      if (c >= 'A' && c <= 'Z') lowered(i) = (c + 32).toByte
-      i += 1
-    }
-    i = 0
-    while (i < n) {
-      if (isTok(lowered(i))) {
-        val st = i
-        var e = i + 1
-        while (e < n && isTok(lowered(e))) e += 1
-        addTok(st, e)
-        i = e
-      } else i += 1
-    }
-  }
-
-  // byte-range accessors for allocation-free per-token consumers (the
-  // fused vocab counter): valid until the next tokenize() call
-  def tokenLen(i: Int): Int = tokEnd(i) - tokStart(i)
-  def tokenHashCode(i: Int): Int = {
-    var h = 1
-    var j = tokStart(i)
-    while (j < tokEnd(i)) { h = 31 * h + lowered(j); j += 1 }
-    h ^ (h >>> 16)
-  }
-  def tokenEquals(i: Int, other: Array[Byte], off: Int, len: Int): Boolean = {
-    if (tokenLen(i) != len) return false
-    var j = 0
-    val s = tokStart(i)
-    while (j < len) {
-      if (lowered(s + j) != other(off + j)) return false
-      j += 1
-    }
-    true
-  }
-  def copyToken(i: Int, dst: Array[Byte], off: Int): Unit =
-    System.arraycopy(lowered, tokStart(i), dst, off, tokenLen(i))
-
-  /** md5 of tokens [from, from+width) joined by ' ' — the digested bytes
-    * equal UTF-8 of the shingle string, so hashes match md5Hex/Spark md5
-    * over the same shingle. Returns (h1, h2) = digest bytes 0-7 / 8-15,
-    * big-endian.
-    */
-  /** Allocation-free digest: result in [[lastH1]] / [[lastH2]] (the
-    * mapPartitions hot paths read the fields — no Tuple2 per window).
-    */
-  var lastH1: Long = 0L
-  var lastH2: Long = 0L
-
-  def hashWindow(from: Int, width: Int): (Long, Long) = {
-    hashWindowTo(from, width)
-    (lastH1, lastH2)
-  }
-
-  def hashWindowTo(from: Int, width: Int): Unit = {
-    var len = width - 1
-    var k = 0
-    while (k < width) { len += tokEnd(from + k) - tokStart(from + k); k += 1 }
-    if (win.length < len) win = new Array[Byte](math.max(len, win.length * 2))
-    var o = 0
-    k = 0
-    while (k < width) {
-      if (k > 0) { win(o) = ' '; o += 1 }
-      val s = tokStart(from + k)
-      val l = tokEnd(from + k) - s
-      System.arraycopy(lowered, s, win, o, l)
-      o += l
-      k += 1
-    }
-    md.update(win, 0, len)
-    md.digest(digest, 0, 16)
-    var h1 = 0L
-    var h2 = 0L
-    k = 0
-    while (k < 8) { h1 = (h1 << 8) | (digest(k) & 0xffL); k += 1 }
-    while (k < 16) { h2 = (h2 << 8) | (digest(k) & 0xffL); k += 1 }
-    lastH1 = h1
-    lastH2 = h2
-  }
-}
-
-private[graft] object WindowHasher {
-  val local = new ThreadLocal[WindowHasher] {
-    override def initialValue(): WindowHasher = new WindowHasher
-  }
-}
-
 /** Native analyzer tokens: content -> array of lowercase [a-z0-9] runs,
   * exactly [[Tokenizer.tokens]]' built-in composition
   * (filter(split(lower(c), "[^a-z0-9]+"), length > 0)) and
-  * [[Tokenizer.tokenizeScala]] — but via the [[WindowHasher]] ASCII fast
-  * path (byte scan, no regex, no intermediate split array with empties).
+  * [[Tokenizer.tokenizeScala]] — but via the [[TokenScanner]] core
+  * (byte scan, no regex, no intermediate split array with empties).
   * Null -> null, like lower/split. Each result owns its bytes (one copy
   * per row out of the thread-local scratch buffer), so any number of
   * results may be held at once. Pinned equal to both twins in
@@ -841,21 +696,21 @@ case class GraftTokens(child: Expression)
   override def prettyName: String = "graft_tokens"
 
   override def nullSafeEval(input: Any): Any = {
-    val h = WindowHasher.local.get()
+    val h = TokenScanner.local.get()
     h.tokenize(input.asInstanceOf[UTF8String])
-    // the hasher's buffer is thread-local scratch the next tokenize()
+    // the core's buffer is thread-local scratch the next tokenize()
     // overwrites, and a projection may hold several results at once: copy
     // the row's token bytes ONCE and build every token over that copy
     var total = 0
     var i = 0
-    while (i < h.nToks) { total += h.tokenLen(i); i += 1 }
+    while (i < h.nToks) { total += h.length(i); i += 1 }
     val bytes = new Array[Byte](total)
     val out = new Array[Any](h.nToks)
     var off = 0
     i = 0
     while (i < h.nToks) {
-      val len = h.tokenLen(i)
-      h.copyToken(i, bytes, off)
+      val len = h.length(i)
+      System.arraycopy(h.bytes, h.start(i), bytes, off, len)
       out(i) = UTF8String.fromBytes(bytes, off, len)
       off += len
       i += 1
@@ -897,31 +752,20 @@ case class GraftShingleHashPairs(child: Expression, width: Int, distinct: Boolea
   override def prettyName: String = "graft_shingle_hash_pairs"
 
   override def nullSafeEval(input: Any): Any = {
-    val h = WindowHasher.local.get()
+    val h = TokenScanner.local.get()
     h.tokenize(input.asInstanceOf[UTF8String])
     val nWin = h.nToks - width + 1
     if (nWin <= 0) return new GenericArrayData(Array.empty[Any])
-    if (!distinct) {
-      val out = new Array[Any](nWin)
-      var i = 0
-      while (i < nWin) {
-        val (h1, h2) = h.hashWindow(i, width)
-        out(i) = org.apache.spark.sql.catalyst.InternalRow(h1, h2)
-        i += 1
-      }
-      new GenericArrayData(out)
-    } else {
-      val seen = new java.util.HashSet[(Long, Long)]()
-      val buf = new java.util.ArrayList[Any](nWin)
-      var i = 0
-      while (i < nWin) {
-        val p = h.hashWindow(i, width)
-        if (seen.add(p))
-          buf.add(org.apache.spark.sql.catalyst.InternalRow(p._1, p._2))
-        i += 1
-      }
-      new GenericArrayData(buf.toArray)
+    val seen = if (distinct) new java.util.HashSet[(Long, Long)]() else null
+    val out = new java.util.ArrayList[Any](nWin)
+    var i = 0
+    while (i < nWin) {
+      h.hashWindowTo(i, width)
+      if (!distinct || seen.add((h.lastH1, h.lastH2)))
+        out.add(org.apache.spark.sql.catalyst.InternalRow(h.lastH1, h.lastH2))
+      i += 1
     }
+    new GenericArrayData(out.toArray)
   }
 
   override protected def withNewChildInternal(newChild: Expression): GraftShingleHashPairs =

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.analyze.Tokenizer
+import graft.analyze.{TokenScanner, TokenTable, Tokenizer}
 
 /** 64-bit FNV-1a term hash — the compact query-filter key stored next to
   * the term string. Collisions are tolerated: group/merge keys always use
@@ -317,81 +317,42 @@ object IndexBuild {
     corpus.select(col("doc_id"), col("content")).as[(Long, String)]
       .mapPartitions { docs =>
         val acc = new java.util.HashMap[String, java.util.HashMap[Long, PartialBuf]]()
-        // ASCII fast path: one fused lower+scan pass, an open-addressing
-        // char-range token table (no String per occurrence), shingle counts
-        // in an int[4096] (the 12-bit bucket IS the term), one reused
-        // MessageDigest. The pre-rewrite shape (regex split + per-token
-        // "w:"+tok HashMap + md5-hex-substring per shingle) was ~40% of
-        // build task CPU in a JFR profile, and its allocation churn is what
-        // inflated per-core CPU 2.2x from 2 to 8 threads. Non-ASCII docs
-        // (where per-char and per-string lowercasing can diverge) take the
-        // legacy path below — bit-identical output either way, pinned by
-        // IndexSpec's fast-vs-legacy partials test.
-        val fast = new FastDocTokens
-        val docPos = new java.util.HashMap[String, IntBuf]()
-        val docCounts = new java.util.HashMap[String, Int]()
+        // one TokenScanner + token table per task (FastDocTokens): no String
+        // per occurrence, no regex, shingle counts keyed by their 12-bit
+        // bucket. The earlier shape (regex split + per-token "w:"+tok
+        // HashMap + md5-hex-substring per shingle) was ~40% of build task
+        // CPU in a JFR profile, and its allocation churn is what inflated
+        // per-core CPU 2.2x from 2 to 8 threads.
+        val doc = new FastDocTokens
 
-        def addWord(term: String, segId: Long, local: Int, dl: Int, ps: IntBuf): Unit = {
-          val pb = acc
-            .computeIfAbsent(term, _ => new java.util.HashMap[Long, PartialBuf]())
-            .computeIfAbsent(segId, _ => new PartialBuf)
-          pb.packed.add(pack(local, ps.length, dl))
-          // self-counting run: ALL positions, count varint first — the
-          // pack() MaxTf saturation must not truncate phrase positions
-          // (pf is exact even past the clamp; only BM25's tf saturates)
-          val out = pb.posOut
-          Codec.writeVarInt(out, ps.length)
-          var k = 0
-          var prev = 0
-          while (k < ps.length) {
-            val p = ps(k)
-            Codec.writeVarInt(out, p - prev)
-            prev = p
-            k += 1
-          }
-        }
-        def addShingle(term: String, segId: Long, local: Int, dl: Int, count: Int): Unit =
+        def partial(term: String, segId: Long): PartialBuf =
           acc.computeIfAbsent(term, _ => new java.util.HashMap[Long, PartialBuf]())
             .computeIfAbsent(segId, _ => new PartialBuf)
-            .packed.add(pack(local, count, dl))
 
         docs.foreach { case (docId, content) =>
-          val segId = cfg.segOf(docId)
-          val local = cfg.localOf(docId)
-          if (fast.process(content)) {
-            if (fast.nTokens > 0) {
-              val dl = 2 * fast.nTokens - 1
-              fast.drainWords((term, ps) => addWord(term, segId, local, dl, ps))
-              fast.drainShingles((term, c) => addShingle(term, segId, local, dl, c))
-            }
-          } else {
-            // legacy path (non-ASCII content): the original per-doc logic,
-            // byte-identical to pre-fast-path builds
-            val toks = Tokenizer.tokenizeScala(content)
-            if (toks.nonEmpty) {
-              val n = toks.length
-              val dl = 2 * n - 1 // words + shingles, = termsScala(content).length
-              docPos.clear()
-              docCounts.clear()
-              var i = 0
-              while (i < n) {
-                docPos.computeIfAbsent("w:" + toks(i), _ => new IntBuf).add(i)
-                if (i < n - 1)
-                  docCounts.merge(Tokenizer.shingleTerm(toks(i), toks(i + 1)), 1,
-                    Integer.sum(_, _))
-                i += 1
-              }
-              val wi = docPos.entrySet().iterator()
-              while (wi.hasNext) {
-                val e = wi.next()
-                addWord(e.getKey, segId, local, dl, e.getValue)
-              }
-              val si = docCounts.entrySet().iterator()
-              while (si.hasNext) {
-                val e = si.next()
-                addShingle(e.getKey, segId, local, dl, e.getValue)
+          doc.process(content)
+          if (doc.nTokens > 0) {
+            val segId = cfg.segOf(docId)
+            val local = cfg.localOf(docId)
+            val dl = 2 * doc.nTokens - 1 // words + shingles, = termsScala(content).length
+            doc.drainWords { (term, ps) =>
+              val pb = partial(term, segId)
+              pb.packed.add(pack(local, ps.length, dl))
+              // self-counting run: ALL positions, count varint first — the
+              // pack() MaxTf saturation must not truncate phrase positions
+              // (pf is exact even past the clamp; only BM25's tf saturates)
+              val out = pb.posOut
+              Codec.writeVarInt(out, ps.length)
+              var k = 0
+              var prev = 0
+              while (k < ps.length) {
+                val p = ps(k)
+                Codec.writeVarInt(out, p - prev)
+                prev = p
+                k += 1
               }
             }
+            doc.drainShingles((term, c) => partial(term, segId).packed.add(pack(local, c, dl)))
           }
         }
         val out = Iterator.newBuilder[(String, Long, Array[Long], Array[Byte])]
@@ -1423,19 +1384,21 @@ object IndexBuild {
             .write.mode("overwrite").parquet(s"${segmentsDir(indexDir)}/range=$r")
         } finally spark.sparkContext.clearJobGroup()
       }
-      // docmeta (norms/identity side-store); dl via the counting-only
-      // tokenizer twin (dl = 2n-1) — no token materialization, no shingle
-      // md5s (the column-expression twin is tested identical but ~10x
-      // slower on the md5-per-shingle hot loop)
+      // docmeta (norms/identity side-store); dl = 2n-1 from the same
+      // TokenScanner count the postings use — no token materialization,
+      // no shingle md5s
       val meta = slice
         .select(col("doc_id"), col("repo"), col("path"), col("commit"),
           col("lang"), col("sha"), col("content"))
         .as[(Long, String, String, String, String, String, String)]
-        .map { case (id, repo, path, commit, lang, sha, content) =>
-          // same MaxDl clamp as pack(): docmeta dl, manifest sum_dl and the
-          // postings' inlined dl must agree for oversized docs
-          (id, repo, path, commit, lang, sha,
-            math.min(Tokenizer.dlOf(Tokenizer.tokenCountScala(content)), MaxDl))
+        .mapPartitions { rows =>
+          val core = new TokenScanner
+          rows.map { case (id, repo, path, commit, lang, sha, content) =>
+            core.tokenize(content)
+            // same MaxDl clamp as pack(): docmeta dl, manifest sum_dl and
+            // the postings' inlined dl must agree for oversized docs
+            (id, repo, path, commit, lang, sha, math.min(Tokenizer.dlOf(core.nToks), MaxDl))
+          }
         }
         .toDF("doc_id", "repo", "path", "commit", "lang", "sha", "dl")
       // stats + checksum observed DURING the write job (one job, not two):
@@ -1540,8 +1503,8 @@ private[index] final class IntBuf {
   }
   def length: Int = n
   def apply(i: Int): Int = a(i)
-  /** Reuse across docs (capacity kept): the fast-path token table drains
-    * each buffer at doc end and clears it instead of reallocating. */
+  /** Reuse across docs (capacity kept): FastDocTokens clears a word's
+    * buffer when its id is handed out again instead of reallocating. */
   def clear(): Unit = n = 0
 }
 
@@ -1560,183 +1523,64 @@ private[index] final class PartialBuf {
     if (pos == null) Array.emptyByteArray else pos.toByteArray
 }
 
-/** Per-task tokenizer + per-doc term accumulator for ASCII content — the
-  * build's hot loop, allocation-light by construction:
+/** Per-task, per-doc term accumulator of the build: one [[TokenScanner]]
+  * tokenizes the doc; its distinct words go through one [[TokenTable]]
+  * (ids in first-occurrence order) with their positions in an [[IntBuf]]
+  * per id, so a term String materializes ONCE per distinct token per doc,
+  * at drain. A shingle's term is "s:" + first 3 md5 hex digits of "a b",
+  * i.e. the digest's first 12 bits — counted in an int[4096] keyed by that
+  * bucket (no hex string, no substring, no HashMap), against an interned
+  * 4096-entry term-string table.
   *
-  *   - one fused pass lowers the content into a reused char buffer and
-  *     bails to the caller's legacy path on the first non-ASCII char
-  *     (where per-char and per-string lowercasing could diverge, e.g.
-  *     U+0130; for pure ASCII, toLowerCase(ROOT) is exactly A-Z+32);
-  *   - tokens are [a-z0-9] runs over that buffer, deduped per doc in an
-  *     open-addressing table keyed by char range — no String, no regex,
-  *     no HashMap node per occurrence (the term String materializes ONCE
-  *     per distinct token per doc, at drain);
-  *   - a shingle's term is "s:" + first 3 md5 hex digits of "a b", i.e.
-  *     the digest's first 12 bits — counted in an int[4096] keyed by that
-  *     bucket directly (no hex string, no substring, no HashMap), against
-  *     an interned 4096-entry term-string table; ONE MessageDigest
-  *     instance per task (the old per-call ThreadLocal get + per-thread
-  *     getInstance churn was ~8% of build CPU in a JFR profile).
-  *
-  * Output is pinned byte-identical to the legacy path (IndexSpec).
+  * Output is pinned equal to the tokenizeScala + shingleTerm brute force
+  * (IndexSpec).
   */
 private[index] final class FastDocTokens {
-  private var low = new Array[Char](1 << 12)
-  private var cap = 1 << 10
-  private var mask = cap - 1
-  private var starts = { val a = new Array[Int](cap); java.util.Arrays.fill(a, -1); a }
-  private var ends = new Array[Int](cap)
-  private var poss = new Array[IntBuf](cap)
-  private var used = new Array[Int](cap)
-  private var nUsed = 0
-  /** Token count of the last successfully processed doc. */
-  var nTokens = 0
-  private val md = java.security.MessageDigest.getInstance("MD5")
-  private var pair = new Array[Byte](64)
-  private val digest = new Array[Byte](16)
+  private val core = new TokenScanner
+  private val words = new TokenTable
+  private var poss = new Array[IntBuf](256)
   private val shCounts = new Array[Int](4096)
   private val shTouched = new Array[Int](4096)
   private var nSh = 0
 
-  @inline private def isTok(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
+  /** Token count of the last processed doc. */
+  def nTokens: Int = core.nToks
 
-  @inline private def hashOf(s: Int, e: Int): Int = {
-    var h = 1
-    var i = s
-    while (i < e) { h = 31 * h + low(i); i += 1 }
-    h ^ (h >>> 16)
-  }
-
-  /** Lower + tokenize + shingle-count `content`. Returns false (state
-    * cleared, nTokens = 0) if the content has any non-ASCII char — the
-    * caller must take the legacy path for that doc.
-    */
-  def process(content: String): Boolean = {
-    nTokens = 0
+  /** Tokenize `content` and collect its words and shingle buckets. */
+  def process(content: String): Unit = {
+    words.clear()
     var u = 0
-    while (u < nUsed) { starts(used(u)) = -1; poss(used(u)).clear(); u += 1 }
-    nUsed = 0
-    u = 0
     while (u < nSh) { shCounts(shTouched(u)) = 0; u += 1 }
     nSh = 0
-    if (content == null) return true
-    val n = content.length
-    if (low.length < n) low = new Array[Char](math.max(n, low.length * 2))
+    core.tokenize(content)
     var i = 0
-    while (i < n) {
-      val c = content.charAt(i)
-      if (c >= 0x80) return false
-      low(i) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+    while (i < core.nToks) {
+      val fresh = words.size
+      val id = words.add(core.bytes, core.start(i), core.length(i))
+      if (id == fresh) {
+        if (id == poss.length) poss = java.util.Arrays.copyOf(poss, 2 * id)
+        if (poss(id) == null) poss(id) = new IntBuf else poss(id).clear()
+      }
+      poss(id).add(i)
+      if (i > 0) {
+        core.hashWindowTo(i - 1, 2)
+        val bucket = (core.lastH1 >>> 52).toInt
+        if (shCounts(bucket) == 0) { shTouched(nSh) = bucket; nSh += 1 }
+        shCounts(bucket) += 1
+      }
       i += 1
     }
-    var prevS = -1
-    var prevE = -1
-    i = 0
-    while (i < n) {
-      if (isTok(low(i))) {
-        val s = i
-        var e = i + 1
-        while (e < n && isTok(low(e))) e += 1
-        addToken(s, e, nTokens)
-        if (prevS >= 0) addShingle(prevS, prevE, s, e)
-        prevS = s
-        prevE = e
-        nTokens += 1
-        i = e
-      } else i += 1
-    }
-    true
-  }
-
-  private def addToken(s: Int, e: Int, tokenIdx: Int): Unit = {
-    if (nUsed >= cap / 2) grow()
-    var idx = hashOf(s, e) & mask
-    while (true) {
-      val st = starts(idx)
-      if (st < 0) {
-        starts(idx) = s
-        ends(idx) = e
-        if (poss(idx) == null) poss(idx) = new IntBuf
-        poss(idx).add(tokenIdx)
-        used(nUsed) = idx
-        nUsed += 1
-        return
-      }
-      if (ends(idx) - st == e - s && rangeEq(st, s, e - s)) {
-        poss(idx).add(tokenIdx)
-        return
-      }
-      idx = (idx + 1) & mask
-    }
-  }
-
-  @inline private def rangeEq(a: Int, b: Int, len: Int): Boolean = {
-    var i = 0
-    while (i < len) { if (low(a + i) != low(b + i)) return false; i += 1 }
-    true
-  }
-
-  private def grow(): Unit = {
-    val oldStarts = starts
-    val oldEnds = ends
-    val oldPoss = poss
-    val oldUsed = used
-    val oldN = nUsed
-    cap *= 2
-    mask = cap - 1
-    starts = { val a = new Array[Int](cap); java.util.Arrays.fill(a, -1); a }
-    ends = new Array[Int](cap)
-    poss = new Array[IntBuf](cap)
-    used = new Array[Int](cap)
-    nUsed = 0
-    var u = 0
-    while (u < oldN) {
-      val oi = oldUsed(u)
-      val s = oldStarts(oi)
-      var idx = hashOf(s, oldEnds(oi)) & mask
-      while (starts(idx) >= 0) idx = (idx + 1) & mask
-      starts(idx) = s
-      ends(idx) = oldEnds(oi)
-      poss(idx) = oldPoss(oi)
-      used(nUsed) = idx
-      nUsed += 1
-      u += 1
-    }
-  }
-
-  private def addShingle(aS: Int, aE: Int, bS: Int, bE: Int): Unit = {
-    val len = (aE - aS) + 1 + (bE - bS)
-    if (pair.length < len) pair = new Array[Byte](math.max(len, pair.length * 2))
-    var k = 0
-    var i = aS
-    while (i < aE) { pair(k) = low(i).toByte; k += 1; i += 1 }
-    pair(k) = ' '
-    k += 1
-    i = bS
-    while (i < bE) { pair(k) = low(i).toByte; k += 1; i += 1 }
-    md.update(pair, 0, len)
-    md.digest(digest, 0, 16): Unit
-    // bucket = first 3 hex digits of the digest = first 12 bits
-    val bucket = ((digest(0) & 0xff) << 4) | ((digest(1) & 0xf0) >>> 4)
-    if (shCounts(bucket) == 0) { shTouched(nSh) = bucket; nSh += 1 }
-    shCounts(bucket) += 1
   }
 
   /** Visit each distinct word term ("w:"-prefixed) with its positions,
     * first-occurrence order. Valid until the next process() call. */
   def drainWords(f: (String, IntBuf) => Unit): Unit = {
-    var u = 0
-    while (u < nUsed) {
-      val idx = used(u)
-      val s = starts(idx)
-      val len = ends(idx) - s
-      val arr = new Array[Char](len + 2)
-      arr(0) = 'w'
-      arr(1) = ':'
-      System.arraycopy(low, s, arr, 2, len)
-      f(new String(arr), poss(idx))
-      u += 1
+    var id = 0
+    while (id < words.size) {
+      val word = new String(words.keyBytes, words.offset(id), words.length(id),
+        java.nio.charset.StandardCharsets.ISO_8859_1)
+      f("w:" + word, poss(id))
+      id += 1
     }
   }
 

@@ -109,7 +109,7 @@ object Ann {
       .as[(Long, Long, Long)]
       .map { case (q, v, c) =>
         (q, graft.query.Scored(v, c.toDouble / graft.query.Bm25.Quant)) }
-    graft.query.Wand.topKPerQuery(spark, ds, k)
+    graft.query.Wand.topKPerQuery(ds, k)
       .toDF("query_id", "rank", "vec_id", "cos_q")
   }
 

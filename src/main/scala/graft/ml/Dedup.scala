@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import graft.analyze.Tokenizer
-import graft.functions.WindowHasher
+import graft.analyze.TokenScanner
 
 /** Deduplication operators for a training-data pipeline: exact,
   * MinHash+LSH banding, SimHash, n-gram Jaccard, embedding cosine.
@@ -213,7 +213,7 @@ object Dedup {
                                    keepGate: Long): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // window hash = md5 as a (h1, h2) long pair (the shared WindowHasher
+    // window hash = md5 as a (h1, h2) long pair (the shared TokenScanner
     // core — pinned equal to the md5-hex forms through the
     // GraftShingleHashPairs expression twins in FunctionsSpec): identical
     // grouping semantics to the md5-hex shape (digest ↔ hex is a
@@ -224,8 +224,8 @@ object Dedup {
     // queryExecution.toRdd rather than posexplode(expression): the
     // Generate + struct-field + broadcast-hash-probe pipeline ran
     // interpreter-bound at ~290 CPU-s per pass where the fused loop pays
-    // ~70 (guide §1.2 per-task work; same measurement pattern as the
-    // build's FastDocTokens).
+    // ~70 (guide §1.2 per-task work; the build's tokenize loop was
+    // measured the same way).
     // two passes so the cap bounds the AGGREGATION, not just the pair
     // emission: a corpus-boilerplate window (10M occurrences at scale)
     // must never materialize one 10M-element collect_list buffer — the
@@ -329,7 +329,7 @@ object Dedup {
   }
 
   /** The one window-hash pass over the corpus, as a tight mapPartitions
-    * loop (shared [[graft.functions.WindowHasher]] core — the same
+    * loop (shared [[graft.analyze.TokenScanner]] core — the same
     * tokenize + md5 the GraftShingleHashPairs expression evaluates, pinned
     * equal to the md5-hex twins in FunctionsSpec). `step` is built once
     * per partition and called once per window; a probing step filters each
@@ -341,7 +341,7 @@ object Dedup {
       step: () => WindowStep): DataFrame = {
     val sel = corpus.select(col("doc_id"), col("content"))
     val outRdd = sel.queryExecution.toRdd.mapPartitions { it =>
-      val h = WindowHasher.local.get()
+      val h = new TokenScanner
       val f = step()
       val out = new ArrayBuffer[InternalRow]()
       it.flatMap { row =>

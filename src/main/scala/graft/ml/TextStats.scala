@@ -160,17 +160,17 @@ object TextStats {
     import spark.implicits._
     // native tokens (GraftTokens — pinned equal to Tokenizer.tokens):
     // the count pass (fused, below), the join route's explode and the
-    // scoring pass all consume the ONE WindowHasher tokenizer core, so
+    // scoring pass all consume the ONE TokenScanner tokenizer core, so
     // the no-drift contract below is unchanged; the regex split+filter
     // composition was the dominant per-row cost of the count pass
     val tokCol = graft.functions.GraftFunctions.graft_tokens(col("content"))
     val toks = corpus.select(col("doc_id"), explode(tokCol).as("tok"))
     // fused vocab count: one mapPartitions pass tallying token byte
-    // ranges in an arena-backed open map (no per-token UTF8String, no
-    // Generate fan-out of 60M+ token rows), emitting per-partition
-    // (tok, c) partials into the final vocab-sized aggregation —
-    // identical counts to explode(tokCol).groupBy(tok).count (the shape
-    // the over-cap join route and the oracle mirror; pinned in MlSpec)
+    // ranges in a TokenTable (no per-token UTF8String, no Generate
+    // fan-out of 60M+ token rows), emitting per-partition (tok, c)
+    // partials into the final vocab-sized aggregation — identical counts
+    // to explode(tokCol).groupBy(tok).count (the shape the over-cap join
+    // route and the oracle mirror; pinned in MlSpec)
     val counts = vocabCounts(corpus)
     val collected = // bounded probe-and-collect: ≤ cap+1 rows ever held.
       // limit(cap+1).collect() instead of toLocalIterator: identical
@@ -274,83 +274,40 @@ object TextStats {
   }
 
   /** Corpus token counts (tok, c) — the unigram-LM vocabulary pass as a
-    * fused mapPartitions loop: tokens tallied as byte ranges in an
-    * arena-backed open-addressed map per partition (the FastDocTokens
-    * pattern; no per-token String/UTF8String, no 60M-row Generate), then
-    * per-partition partials sum in a vocab-sized aggregation. Counts are
-    * identical to `explode(graft_tokens(content)).groupBy(tok).count` —
-    * the same [[graft.functions.WindowHasher]] tokenizer core, pinned
-    * equal to Tokenizer.tokens in FunctionsSpec.
+    * fused mapPartitions loop: one [[graft.analyze.TokenScanner]] per task
+    * tokenizes each row and one [[graft.analyze.TokenTable]] maps its
+    * token byte ranges to ids with a count per id (no per-token
+    * String/UTF8String, no 60M-row Generate), then per-partition partials
+    * sum in a vocab-sized aggregation. Counts are identical to
+    * `explode(graft_tokens(content)).groupBy(tok).count` — the same core,
+    * pinned equal to Tokenizer.tokens in FunctionsSpec.
     */
   private[graft] def vocabCounts(corpus: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val sel = corpus.select(col("content"))
     val outRdd = sel.queryExecution.toRdd.mapPartitions { it =>
-      val h = graft.functions.WindowHasher.local.get()
-      var cap = 1 << 12
-      var mask = cap - 1
-      var offs = new Array[Int](cap)
-      var lens = new Array[Int](cap)
-      var cnts = new Array[Long](cap)
-      var n = 0
-      var arena = new Array[Byte](1 << 16)
-      var arenaN = 0
-      def grow(): Unit = {
-        val oo = offs; val ol = lens; val oc = cnts; val ocap = cap
-        cap *= 2; mask = cap - 1
-        offs = new Array[Int](cap); lens = new Array[Int](cap); cnts = new Array[Long](cap)
-        var i = 0
-        while (i < ocap) {
-          if (oc(i) != 0L) {
-            // re-hash from the arena copy
-            var hh = 1
-            var j = oo(i)
-            val e = oo(i) + ol(i)
-            while (j < e) { hh = 31 * hh + arena(j); j += 1 }
-            var slot = (hh ^ (hh >>> 16)) & mask
-            while (cnts(slot) != 0L) slot = (slot + 1) & mask
-            offs(slot) = oo(i); lens(slot) = ol(i); cnts(slot) = oc(i)
-          }
-          i += 1
-        }
-      }
+      val core = new graft.analyze.TokenScanner
+      val vocab = new graft.analyze.TokenTable
+      var cnts = new Array[Long](1024)
       while (it.hasNext) {
         val row = it.next()
         if (!row.isNullAt(0)) {
-          h.tokenize(row.getUTF8String(0))
+          core.tokenize(row.getUTF8String(0))
           var t = 0
-          while (t < h.nToks) {
-            if (n * 2 >= cap) grow()
-            var slot = h.tokenHashCode(t) & mask
-            var done = false
-            while (!done) {
-              if (cnts(slot) == 0L) {
-                val len = h.tokenLen(t)
-                if (arenaN + len > arena.length)
-                  arena = java.util.Arrays.copyOf(arena, math.max(arenaN + len, arena.length * 2))
-                h.copyToken(t, arena, arenaN)
-                offs(slot) = arenaN; lens(slot) = len; cnts(slot) = 1L
-                arenaN += len; n += 1
-                done = true
-              } else if (h.tokenEquals(t, arena, offs(slot), lens(slot))) {
-                cnts(slot) += 1L
-                done = true
-              } else slot = (slot + 1) & mask
-            }
+          while (t < core.nToks) {
+            val id = vocab.add(core.bytes, core.start(t), core.length(t))
+            if (id == cnts.length) cnts = java.util.Arrays.copyOf(cnts, 2 * id)
+            cnts(id) += 1L
             t += 1
           }
         }
       }
-      val out = Seq.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
-      var i = 0
-      while (i < cap) {
-        if (cnts(i) != 0L)
-          out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](org.apache.spark.unsafe.types.UTF8String.fromBytes(
-              arena, offs(i), lens(i)), cnts(i)))
-        i += 1
+      Iterator.tabulate(vocab.size) { id =>
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          Array[Any](org.apache.spark.unsafe.types.UTF8String.fromBytes(
+            vocab.keyBytes, vocab.offset(id), vocab.length(id)), cnts(id))):
+          org.apache.spark.sql.catalyst.InternalRow
       }
-      out.result().iterator
     }
     org.apache.spark.sql.classic.GraftBridge.internalDf(corpus.sparkSession, outRdd,
       StructType(Seq(StructField("tok", StringType, nullable = false),

@@ -259,6 +259,7 @@ final class Engine(val index: Index) {
   // product encoder reflects over its type, a share of every plan's time
   private implicit val scoredEnc: Encoder[Scored] = Encoders.product[Scored]
   private implicit val keyedEnc: Encoder[(Long, Scored)] = Encoders.product[(Long, Scored)]
+  private implicit val segHitEnc: Encoder[SegHit] = Encoders.product[SegHit]
 
   /** T1/T2 pruning, mirrored 1:1 in the SQL oracle (Oracle.pruneSql):
     *   sorted   = query terms by (df asc, term asc)   — rarest-first
@@ -571,7 +572,7 @@ final class Engine(val index: Index) {
     require(toks.nonEmpty, "empty phrase")
     if (toks.length == 1) // Lucene parses a one-word phrase as a TermQuery
       return searchByTerms(Seq(("w:" + toks(0)) -> 1.0), rows)
-    Wand.topK(spark, phraseScores(toks, 1.0, slop), rows)
+    Wand.topK(phraseScores(toks, 1.0, slop), rows)
   }
 
   /** All (docId, score) phrase contributions, pre-top-k — the scoring
@@ -1039,7 +1040,7 @@ final class Engine(val index: Index) {
       return searchBool(shouldSeq, mustSeq, notSeq, rows, mustGroups = groupSeq)
     val notSet = notSeq.toSet
     if (mustSeq.exists(t => notSet(t._1))) // +t -t: unsatisfiable
-      return Wand.topK(spark, spark.emptyDataset[Scored], rows)
+      return Wand.topK(spark.emptyDataset[Scored], rows)
     // ONE df lookup for every clause kind (group filtering + scoring —
     // on a vocabulary too large for the driver dictMap each dfOf is its
     // own dictionary-scan job, so they must not repeat per clause)
@@ -1051,11 +1052,11 @@ final class Engine(val index: Index) {
     val groupsKept = groupSeq.map(g => g.filterNot(t => notSet(t._1))
       .filter(t => dfs.getOrElse(t._1, 0L) > 0L))
     if (groupSeq.nonEmpty && groupsKept.exists(_.isEmpty))
-      return Wand.topK(spark, spark.emptyDataset[Scored], rows)
+      return Wand.topK(spark.emptyDataset[Scored], rows)
     val scoringTerms =
       shouldSeq.filterNot(t => notSet(t._1)) ++ mustSeq ++ groupsKept.flatten
     if (mustSeq.exists(t => dfs.getOrElse(t._1, 0L) == 0L)) // required term absent
-      return Wand.topK(spark, spark.emptyDataset[Scored], rows)
+      return Wand.topK(spark.emptyDataset[Scored], rows)
     val kept = scoringTerms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }
       .filter(_._3 > 0)
     val (n, avgdl) = index.stats
@@ -1128,7 +1129,7 @@ final class Engine(val index: Index) {
           (if (weights.isEmpty) Nil
            else Seq(scanScoreAll(weights, avgdl))) ++ scoringDfs.map(_._1)
         if (parts.isEmpty) // purely negative query matches nothing, as in Lucene
-          return Wand.topK(spark, spark.emptyDataset[Scored], rows)
+          return Wand.topK(spark.emptyDataset[Scored], rows)
         var r = parts.reduce(_ unionAll _)
           .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
         if (mustSeq.nonEmpty)
@@ -1155,8 +1156,7 @@ final class Engine(val index: Index) {
         case Occur.Should => ()
       }
     }
-    Wand.topK(spark,
-      res.select(col("doc_id").as("docId"), col("score")).as[Scored], rows)
+    Wand.topK(res.select(col("doc_id").as("docId"), col("score")).as[Scored], rows)
   }
 
   /** Lucene BooleanQuery semantics — the QueryParser `a +b -c` surface the
@@ -1235,7 +1235,7 @@ final class Engine(val index: Index) {
   private[graft] def searchSpec(spec: Option[Engine.QuerySpec], rows: Int, candidates: Int,
       bitmapFq: Option[(String, String)] = None,
       docPred: Option[Column] = None): DataFrame =
-    Wand.topK(spark, scorePass(spec.toSeq, rows, candidates, bitmapFq, docPred).map(_._2), rows)
+    Wand.topK(scorePass(spec.toSeq, rows, candidates, bitmapFq, docPred).map(_._2), rows)
 
   /** THE scoring pass of 1..N term queries — [[searchByTerms]] (so
     * [[searchAfter]], [[searchPage]]), [[searchBool]] and
@@ -1545,7 +1545,7 @@ final class Engine(val index: Index) {
       val kept = ts.flatMap { case (t, b) => dfs.get(t).filter(_ > 0).map(df => (t, b, df)) }
       if (kept.isEmpty) None else Some(specOf(qid, kept, n, rows, candidates, useWand = true))
     }
-    Wand.topKPerQuery(spark, scorePass(specs, rows, candidates, None, None), rows)
+    Wand.topKPerQuery(scorePass(specs, rows, candidates, None, None), rows)
   }
 
   /** Paged search — Solr's `start` offset (every Solr handler takes
@@ -2092,13 +2092,13 @@ final class Engine(val index: Index) {
     // checkpoint stops Spark re-running the whole scoring pass twice
     // (fault-tolerance trade as in Curation: a lost block fails the query
     // instead of recomputing — acceptable for an interactive result set)
-    val merged = perVal.groupByKey(_._1).mapValues(_._2)
-      .agg(new TopKAgg(groupLimit).toColumn.name("docs"))
+    val merged = perVal.groupByKey(_._1)
+      .agg(new TopKAgg[(String, Scored)](groupLimit, _._2).toColumn.name("docs"))
       .localCheckpoint()
     // group order = TopKAgg over each group's best doc (its head): the
     // heap's (score_q DESC, docId ASC) IS Solr's group sort by top doc
     val topBests = merged.map(_._2.head)
-      .select(new TopKAgg(groups).toColumn)
+      .select(new TopKAgg[Scored](groups, identity).toColumn)
       .flatMap(_.zipWithIndex.map { case (s, i) => ((i + 1).toLong, s.docId) })
       .toDF("group_rank", "bdoc")
     val exploded = merged.flatMap { case (v, docs) =>

@@ -1,6 +1,7 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.roaringbitmap.RoaringBitmap
@@ -87,14 +88,19 @@ final class BoundedTopK(val k: Int) extends Serializable {
 
 /** Typed bounded-heap top-k Aggregator — Spark runs it as partial
   * aggregation per partition + merge (the treeAggregate shape of the
-  * north_rule) via ObjectHashAggregate. The ONE heap merge: keyed
-  * callers (per query, per group value) aggregate it over
-  * `groupByKey(_._1).mapValues(_._2)`.
+  * north_rule) via ObjectHashAggregate. The ONE heap merge: `scoredOf`
+  * projects an input row to its [[Scored]], so keyed callers (per query,
+  * per group value) aggregate `groupByKey(_._1)` rows with `_._2`
+  * directly, without a `mapValues` object round trip per row.
   */
-final class TopKAgg(k: Int)(implicit outEnc: Encoder[Seq[Scored]])
-    extends Aggregator[Scored, BoundedTopK, Seq[Scored]] {
+final class TopKAgg[IN](k: Int, scoredOf: IN => Scored)(implicit outEnc: Encoder[Seq[Scored]])
+    extends Aggregator[IN, BoundedTopK, Seq[Scored]] {
   def zero: BoundedTopK = new BoundedTopK(k)
-  def reduce(b: BoundedTopK, a: Scored): BoundedTopK = { b.offer(a.docId, a.score); b }
+  def reduce(b: BoundedTopK, a: IN): BoundedTopK = {
+    val s = scoredOf(a)
+    b.offer(s.docId, s.score)
+    b
+  }
   def merge(b1: BoundedTopK, b2: BoundedTopK): BoundedTopK = b1.merge(b2)
   def finish(r: BoundedTopK): Seq[Scored] = r.sortedBestFirst.toSeq
   def bufferEncoder: Encoder[BoundedTopK] = Encoders.kryo[BoundedTopK]
@@ -432,13 +438,20 @@ object Wand {
     * `k` is checked on the driver here and in [[topKPerQuery]], where every
     * search verb ends: a zero-capacity heap would fail inside a task.
     */
-  def topK(spark: SparkSession, scored: Dataset[Scored], k: Int): DataFrame = {
+  def topK(scored: Dataset[Scored], k: Int): DataFrame = {
     requireRows(k)
-    import spark.implicits._
-    scored.select(new TopKAgg(k).toColumn)
+    scored.select(new TopKAgg[Scored](k, identity).toColumn)
       .flatMap(_.zipWithIndex.map { case (s, i) => ((i + 1).toLong, s.docId, s.scoreQ) })
       .toDF("rank", "doc_id", "score_q")
   }
+
+  // the merges' encoders, derived once: deriving one reflects over its
+  // type, a share of every query's plan time
+  private implicit val topEnc: Encoder[Seq[Scored]] = ExpressionEncoder[Seq[Scored]]()
+  private implicit val rankedEnc: Encoder[(Long, Long, Long)] =
+    Encoders.product[(Long, Long, Long)]
+  private implicit val keyedRankedEnc: Encoder[(Long, Long, Long, Long)] =
+    Encoders.product[(Long, Long, Long, Long)]
 
   private def requireRows(k: Int): Unit =
     require(k >= 1, s"rows (the top-k size) must be >= 1, got $k")
@@ -446,11 +459,10 @@ object Wand {
   /** Per-query global merge for batched search:
     * Dataset[(query_id, Scored)] -> (query_id, rank, doc_id, score_q).
     */
-  def topKPerQuery(spark: SparkSession, scored: Dataset[(Long, Scored)], k: Int): DataFrame = {
+  def topKPerQuery(scored: Dataset[(Long, Scored)], k: Int): DataFrame = {
     requireRows(k)
-    import spark.implicits._
-    scored.groupByKey(_._1).mapValues(_._2)
-      .agg(new TopKAgg(k).toColumn)
+    scored.groupByKey(_._1)(Encoders.scalaLong)
+      .agg(new TopKAgg[(Long, Scored)](k, _._2).toColumn)
       .flatMap { case (qid, top) =>
         top.zipWithIndex.map { case (s, i) => (qid, (i + 1).toLong, s.docId, s.scoreQ) }
       }

@@ -606,6 +606,27 @@ class IndexSpec extends SparkSpec {
     assert(idx.map(_._3) == brute.map(_.scoreQ))
   }
 
+  test("dl agrees across docmeta and postings on U+0130: top-k == brute scorer") {
+    import org.apache.spark.sql.functions.sha2
+    // "aİb" lowers to "ai̇b" as a whole string: tokens "ai", "b" — every
+    // path must count the same tokens, or sum_dl/avgdl disagree with the
+    // postings' inlined dl
+    val docs = Seq(1L -> "a\u0130b c", 2L -> "b c c", 3L -> "ai b",
+      4L -> "c d e f", 5L -> "b", 6L -> "a\u0130b a\u0130b c d \u0130\u0130")
+    val df = docs.map { case (id, c) => (id, "r", s"p$id", "c0", "en", c) }
+      .toDF("doc_id", "repo", "path", "commit", "lang", "content")
+      .withColumn("sha", sha2($"content", 256))
+    val d = tmpDir("dotted-i")
+    IndexBuild.build(spark, df, d, cfg)
+    val eng = new Engine(new Index(spark, d))
+    for (terms <- Seq(Seq("w:ai" -> 1.0, "w:b" -> 1.0, "w:c" -> 1.0), Seq("w:c" -> 1.0),
+                      Seq("w:b" -> 2.0, "w:d" -> 1.0))) {
+      val got = eng.searchByTerms(terms, rows = 10).as[(Long, Long, Long)].collect().toSeq
+      val exp = BruteScorer.topK(docs, terms, 10)
+      assert(got.map(r => (r._2, r._3)) == exp.map(e => (e.docId, e.scoreQ)), s"$terms")
+    }
+  }
+
   test("index metadata resolution: ONE directory listing per surface (counting FS)") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.countfs.impl", classOf[CountingFs].getName)
@@ -798,8 +819,9 @@ class IndexSpec extends SparkSpec {
       (null: String, graft.query.Scored(1L, 1.0)),
       ("a", graft.query.Scored(2L, 2.0)),
       (null: String, graft.query.Scored(3L, 3.0))))
-    val m = ds.groupByKey(_._1).mapValues(_._2)
-      .agg(new graft.query.TopKAgg(2).toColumn).collect().toMap
+    val m = ds.groupByKey(_._1)
+      .agg(new graft.query.TopKAgg[(String, graft.query.Scored)](2, _._2).toColumn)
+      .collect().toMap
     assert(m(null).map(_.docId) == Seq(3L, 1L) && m("a").map(_.docId) == Seq(2L))
   }
 
