@@ -330,7 +330,7 @@ object SparkEntry {
     "q_block_join_total" -> ((s, dir) =>
       Engine.forDir(s, dir).blockJoinParents(FlagshipTerms, scoreMode = "total", rows = 10)),
     // Solr q+fq+group: the fq bitmap intersects the dense score array's
-    // touched set inside the segment (same cogroup)
+    // touched set inside the segment (same side join)
     "q_grouped_filtered" -> ((s, dir) =>
       Engine.forDir(s, dir).searchGrouped(FlagshipTerms, "repo",
         groupLimit = 3, groups = 8, docFilter = Some(("lang", "en")))),
@@ -370,7 +370,7 @@ object SparkEntry {
     "q_wand_filtered" -> ((s, dir) =>
       Engine.forDir(s, dir).searchByTerms(FlagshipTerms, rows = 60,
         docFilter = Some(("lang", "en")))),
-    // fq via an arbitrary predicate (docmeta-scan bitmap cogroup fallback)
+    // fq via an arbitrary predicate (docmeta-scan bitmap side join fallback)
     "q_wand_filtered_pred" -> ((s, dir) =>
       Engine.forDir(s, dir).searchByTerms(FlagshipTerms, rows = 60,
         docPred = Some(col("lang") === lit("en")))),
@@ -633,7 +633,7 @@ object SparkEntry {
         .select((col("rank") + CursorStart).as("rank"), col("doc_id"), col("score_q"))
     }),
     // Lucene BooleanQuery MUST: required term filters AND scores; the
-    // boolean bitmap algebra runs inside the segment cogroup
+    // boolean bitmap algebra runs inside the segment-local pass
     "q_bool_must" -> ((s, dir) =>
       Engine.forDir(s, dir).searchBool(FlagshipTerms,
         must = BoolMustTerms, rows = 60)),

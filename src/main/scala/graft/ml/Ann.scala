@@ -91,7 +91,7 @@ object Ann {
       lit(0.0)))
 
   /** Per-query exact top-k over (query_id, vec_id, cos_q) rows via the
-    * bounded-heap Aggregator ([[graft.query.Wand.topKPerQuery]]): map-side
+    * bounded-heap Aggregator ([[graft.query.TopKAgg]]): map-side
     * partial heaps of k entries merge under ObjectHashAggregate, so one
     * query's candidate set never funnels into a single rank-window sort
     * partition (VERDICT r02 #8). cos_q rides through Scored.score
@@ -101,6 +101,7 @@ object Ann {
     * replaces — hash-identical output.
     */
   private[graft] def topKByCos(scored: DataFrame, k: Int): DataFrame = {
+    require(k >= 1, s"k (the top-k size) must be >= 1, got $k")
     val spark = scored.sparkSession
     import spark.implicits._
     val ds = scored
@@ -109,7 +110,11 @@ object Ann {
       .as[(Long, Long, Long)]
       .map { case (q, v, c) =>
         (q, graft.query.Scored(v, c.toDouble / graft.query.Bm25.Quant)) }
-    graft.query.Wand.topKPerQuery(ds, k)
+    ds.groupByKey(_._1)
+      .agg(new graft.query.TopKAgg[(Long, graft.query.Scored)](k, _._2).toColumn)
+      .flatMap { case (qid, top) =>
+        top.zipWithIndex.map { case (s, i) => (qid, (i + 1).toLong, s.docId, s.scoreQ) }
+      }
       .toDF("query_id", "rank", "vec_id", "cos_q")
   }
 

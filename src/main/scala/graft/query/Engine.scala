@@ -1,9 +1,12 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.RoaringBitmap
-import graft.index.{Bitmaps, Codec, IndexBuild, IndexConfig, TermHash}
+import graft.index.{Bitmaps, Codec, IndexBuild, IndexConfig, TermHash, WholeFileParquet}
 import graft.corpus.Corpus
 
 /** Read-side view of a built index (segments + docmeta + manifest). Only
@@ -65,9 +68,15 @@ final class Index(val spark: SparkSession, val indexDir: String,
     (n, if (n == 0) 1.0 else sdl.toDouble / n.toDouble)
   }
 
+  /** Postings rows of every live unit, read through [[WholeFileParquet]]:
+    * a segment lives in exactly one file and a file in exactly one scan
+    * partition, so each scan task holds whole segments and the query pass
+    * scores them in place (no exchange keyed on seg_id).
+    */
   lazy val segments: DataFrame = spark.read
+    .format(classOf[WholeFileParquet].getName)
     .option("basePath", IndexBuild.segmentsDir(indexDir))
-    .parquet(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
+    .load(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
 
   /** Persisted per-segment fq bitmaps (seg_id, fcol, value, bitmap) in
     * every live unit? Absent when the index was built with
@@ -225,12 +234,21 @@ final class Index(val spark: SparkSession, val indexDir: String,
 
   /** Rows of `terms` in `from` (the segments, or the dictionary): the
     * term_id pushdown plus the term-string hash-collision guard, projected
-    * to the caller's own `cols` (only those columns are read).
+    * to the caller's own `cols` (only those columns are read). Both are
+    * `InSet`s, which parquet receives as the same `In` pushdown: an `In`
+    * inlines its long literals into the generated scan code, so every
+    * new query compiled its own stage (~40 ms a query at perfbench
+    * scale); an `InSet` reads its values as a reference, so queries with
+    * the same term count share one compiled stage.
     */
   private[graft] def termRows(terms: Seq[String], from: DataFrame = segments)(
-      cols: Column*): DataFrame =
-    from.where(col("term_id").isin(terms.map(TermHash.hash): _*) && col("term").isin(terms: _*))
+      cols: Column*): DataFrame = {
+    def inSet(c: String, values: Seq[Any]): Column =
+      GraftBridge.column(InSet(GraftBridge.expression(col(c)), values.toSet))
+    from.where(inSet("term_id", terms.map(TermHash.hash)) &&
+        inSet("term", terms.map(UTF8String.fromString)))
       .select(cols: _*)
+  }
 
   /** Global df per query term (term string checked: hash-collision guard). */
   def dfOf(terms: Seq[String]): Map[String, Long] = dictMap match {
@@ -247,6 +265,15 @@ object Index {
   val DictDriverMaxDefault = 2000000L
 }
 
+/** One side partition's bitmap rows of one segment ([[Engine]]'s
+  * per-segment filter path): parallel arrays of tag (0 = allow, 1 = kill,
+  * 2 + i = the i-th value field), value and serialized bitmap. `part` is
+  * the side partition, so a task that meets the same segment's side rows
+  * once per hit keeps each partition's rows once.
+  */
+private[query] final case class SegSide(seg_id: Long, part: Int, tags: Array[Int],
+                                        values: Array[String], bitmaps: Array[Array[Byte]])
+
 /** Query facade — the reference's request-handler verbs re-expressed
   * (SURVEY.md §2.11): searchByTerms / searchByContent / searchById /
   * randomDocs, plus the df-ordered accuracy pruning (T1/T2) and the
@@ -260,6 +287,9 @@ final class Engine(val index: Index) {
   private implicit val scoredEnc: Encoder[Scored] = Encoders.product[Scored]
   private implicit val keyedEnc: Encoder[(Long, Scored)] = Encoders.product[(Long, Scored)]
   private implicit val segHitEnc: Encoder[SegHit] = Encoders.product[SegHit]
+  private implicit val sideRowEnc: Encoder[(Long, Int, String, Array[Byte])] =
+    Encoders.product[(Long, Int, String, Array[Byte])]
+  private implicit val segSideEnc: Encoder[SegSide] = Encoders.product[SegSide]
 
   /** T1/T2 pruning, mirrored 1:1 in the SQL oracle (Oracle.pruneSql):
     *   sorted   = query terms by (df asc, term asc)   — rarest-first
@@ -336,7 +366,7 @@ final class Engine(val index: Index) {
 
   /** THE routing decision searchByTerms will take for these arguments —
     * exposed so route pins test the decision itself (the executed dense
-    * and WAND plans are both segment cogroups and not distinguishable by
+    * and WAND plans are both segment-local passes and not distinguishable by
     * plan text). Same spec as searchByTerms ([[termSpec]]): cannot diverge.
     */
   private[graft] def routesDense(terms: Seq[(String, Double)], rows: Int = 60,
@@ -408,72 +438,89 @@ final class Engine(val index: Index) {
     *     rows from the filter side-index.
     * A segment drops when a covered fq has no bitmap row there (no doc
     * carries the value), when its allow set is empty, and when it has no
-    * hits. fq, kill and value rows travel in ONE tagged exchange; a
-    * tombstone-free pass with no fq and no values stays a plain
-    * groupByKey — no cogroup, no tombstone scan. `fq` and `docPred` are
-    * alternatives ([[fqSplit]] never sets both).
+    * hits.
+    *
+    * The kernel runs in the task that holds the hits: `hits` (a scan of
+    * [[Index.segments]] with its `seg_id` column; `segOf` reads it back)
+    * keeps every segment whole in one scan partition, and each task
+    * groups its rows by segment — no exchange keyed on seg_id. Side rows
+    * (fq, kill and value bitmaps; the predicate's matching docs, packed
+    * per side partition into per-segment bitmaps) are packed into one
+    * [[SegSide]] per segment and side partition and join the hits on
+    * seg_id with no strategy hint: a small side broadcasts and the hits
+    * stay in their scan partitions; a large one makes Spark shuffle both
+    * sides by seg_id, which keeps whole segments per partition too (AQE's
+    * skew-join split divides a partition by map task, and a segment's
+    * hits all come from the one scan task that read its file). The
+    * join pairs each hit with each of its segment's side rows; the
+    * grouping keeps one copy of each. A pass with no side input (no fq,
+    * predicate, kills or values) reads no side store at all. `fq` and
+    * `docPred` are alternatives ([[fqSplit]] never sets both).
     */
-  private def perSegment[H, R: Encoder](hits: KeyValueGroupedDataset[Long, H],
+  private def perSegment[H, R: Encoder](hits: Dataset[H],
       fq: Option[(String, String)] = None, docPred: Option[Column] = None,
-      valueFields: Seq[String] = Nil)(
+      valueFields: Seq[String] = Nil)(segOf: H => Long)(
       kernel: (Long, Iterator[H], RoaringBitmap, Array[Array[(String, RoaringBitmap)]]) => Iterator[R]
   ): Dataset[R] = {
+    require(docPred.isEmpty || (fq.isEmpty && valueFields.isEmpty),
+      "a docmeta predicate is a pass's only side input")
     val cfg = index.cfg
-    val noValues = Array.empty[Array[(String, RoaringBitmap)]]
-    docPred match {
-      case Some(pred) =>
-        require(fq.isEmpty && valueFields.isEmpty, "a docmeta predicate is a pass's only side input")
-        val allowedBySeg = index.docmeta.where(pred)
-          .select(col("doc_id")).as[Long]
-          .groupByKey(d => cfg.segOf(d))
-        hits.cogroup(allowedBySeg) { (seg, hitIt, docIt) =>
-          if (!hitIt.hasNext) Iterator.empty
-          else {
-            val allow = new RoaringBitmap()
-            docIt.foreach(d => allow.add(cfg.localOf(d)))
-            if (allow.isEmpty) Iterator.empty else kernel(seg, hitIt, allow, noValues)
-          }
+    // side rows (seg_id, tag, value, bitmap): 0 = allow (fq bitmap or the
+    // predicate's matching docs), 1 = kill, 2 + i = valueFields(i)
+    def tagged(rows: DataFrame, tag: Int, value: Column): Dataset[(Long, Int, String, Array[Byte])] =
+      rows.select(col("seg_id"), lit(tag).as("tag"), value.as("value"), col("bitmap"))
+        .as[(Long, Int, String, Array[Byte])]
+    val noValue = lit(null).cast("string")
+    val sideRows =
+      fq.toSeq.map { case (c, v) =>
+        tagged(index.filters.where(col("fcol") === lit(c) && col("value") === lit(v)), 0, noValue)
+      } ++
+      docPred.toSeq.map { pred =>
+        index.docmeta.where(pred).select(col("doc_id")).as[Long].mapPartitions { ids =>
+          val bySeg = scala.collection.mutable.LongMap.empty[RoaringBitmap]
+          ids.foreach(d => bySeg.getOrElseUpdate(cfg.segOf(d), new RoaringBitmap()).add(cfg.localOf(d)))
+          bySeg.iterator.map { case (seg, bm) => (seg, 0, null: String, Bitmaps.serialize(bm)) }
         }
-      case None =>
-        // tagged bitmap rows: 0 = fq, 1 = kill, 2 + i = valueFields(i)
-        def tagged(rows: DataFrame, tag: Int, value: Column): DataFrame =
-          rows.select(col("seg_id"), lit(tag).as("tag"), value.as("value"), col("bitmap"))
-        val noValue = lit(null).cast("string")
-        val bitmapRows =
-          fq.toSeq.map { case (c, v) =>
-            tagged(index.filters.where(col("fcol") === lit(c) && col("value") === lit(v)), 0, noValue)
-          } ++
-          index.killBitmapsOpt.toSeq.map(k => tagged(k.toDF("seg_id", "bitmap"), 1, noValue)) ++
-          valueFields.zipWithIndex.map { case (f, i) =>
-            tagged(index.filters.where(col("fcol") === lit(f)), 2 + i, col("value"))
-          }
-        if (bitmapRows.isEmpty)
-          hits.flatMapGroups((seg, it) => kernel(seg, it, null, noValues))
+      } ++
+      (if (docPred.isDefined) Nil
+       else index.killBitmapsOpt.toSeq.map(k => tagged(k.toDF("seg_id", "bitmap"), 1, noValue))) ++
+      valueFields.zipWithIndex.map { case (f, i) =>
+        tagged(index.filters.where(col("fcol") === lit(f)), 2 + i, col("value"))
+      }
+    val hasAllow = fq.isDefined || docPred.isDefined
+    val nFields = valueFields.length
+    val segShift = cfg.segShift
+    def scoreSegments(rows: Iterator[(H, SegSide)]): Iterator[R] =
+      Engine.groupBySegment(rows, segOf).flatMap { case (seg, segHits, sides) =>
+        def rowsOf(tag: Int): Array[(String, Array[Byte])] = sides.flatMap { s =>
+          s.tags.indices.iterator.filter(s.tags(_) == tag).map(i => (s.values(i), s.bitmaps(i)))
+        }
+        val allowBs = rowsOf(0).map(_._2)
+        if (hasAllow && allowBs.isEmpty) Iterator.empty
         else {
-          val hasFq = fq.isDefined
-          val nFields = valueFields.length
-          val segShift = cfg.segShift
-          val bms = bitmapRows.reduce(_ unionAll _).as[(Long, Int, String, Array[Byte])]
-          hits.cogroup(bms.groupByKey(_._1)) { (seg, hitIt, bmIt) =>
-            val byTag = bmIt.toArray.groupBy(_._2)
-            def rowsOf(tag: Int) = byTag.getOrElse(tag, Array.empty[(Long, Int, String, Array[Byte])])
-            val fqBs = rowsOf(0).map(_._4)
-            if (!hitIt.hasNext || (hasFq && fqBs.isEmpty)) Iterator.empty
+          val killBs = rowsOf(1).map(_._2)
+          val allow =
+            if (allowBs.isEmpty) Engine.flipAllow(killBs.toSeq, segShift)
             else {
-              val killBs = rowsOf(1).map(_._4)
-              val allow =
-                if (fqBs.isEmpty) Engine.flipAllow(killBs.toSeq, segShift)
-                else {
-                  val a = Engine.orAll(fqBs) // defensive OR: one bitmap per value expected
-                  if (killBs.nonEmpty) a.andNot(Engine.orAll(killBs))
-                  a
-                }
-              if (allow != null && allow.isEmpty) Iterator.empty
-              else kernel(seg, hitIt, allow, Array.tabulate(nFields)(i =>
-                rowsOf(2 + i).map(r => (r._3, Bitmaps.deserialize(r._4)))))
+              val a = Engine.orAll(allowBs)
+              if (killBs.nonEmpty) a.andNot(Engine.orAll(killBs))
+              a
             }
-          }
+          if (allow != null && allow.isEmpty) Iterator.empty
+          else kernel(seg, segHits.iterator, allow, Array.tabulate(nFields)(i =>
+            rowsOf(2 + i).map { case (v, b) => (v, Bitmaps.deserialize(b)) }))
         }
+      }
+    if (sideRows.isEmpty) hits.mapPartitions(it => scoreSegments(it.map(h => (h, null))))
+    else {
+      val side = sideRows.reduce(_ unionAll _).mapPartitions { rows =>
+        val part = org.apache.spark.TaskContext.getPartitionId()
+        rows.toArray.groupBy(_._1).iterator.map { case (seg, rs) =>
+          SegSide(seg, part, rs.map(_._2), rs.map(_._3), rs.map(_._4))
+        }
+      }
+      hits.joinWith(side, hits("seg_id") === side("seg_id"), "left_outer")
+        .mapPartitions(scoreSegments)
     }
   }
 
@@ -499,7 +546,9 @@ final class Engine(val index: Index) {
     }
 
   /** Primary programmatic API (reference `hashes` verb, SURVEY.md §3.2).
-    * Returns (rank, doc_id, score_q), k=`rows`.
+    * Returns (rank, doc_id, score_q), k=`rows`, as local rows: the query
+    * runs at call time, one Spark job without a doc filter
+    * ([[Wand.topK]]).
     *
     * A batch of one through [[scorePass]] on its [[specOf]] route:
     * rare/mixed terms -> per-segment DAAT (block-max WAND when `accuracy`
@@ -515,11 +564,24 @@ final class Engine(val index: Index) {
       candidates: Int = 10000,
       docPred: Option[Column] = None,
       docFilter: Option[(String, String)] = None,
-      after: Option[(Long, Long)] = None): DataFrame = {
+      after: Option[(Long, Long)] = None): DataFrame =
+    Wand.topK(termsPass(terms, rows, accuracy, candidates, docPred, docFilter, after), rows)(_._2)
+
+  /** [[searchByTerms]]'s scoring pass before the merge: the plan its
+    * (local) result no longer shows, pinned in PlanSpec.
+    */
+  private[graft] def termsPass(
+      terms: Seq[(String, Double)],
+      rows: Int = 60,
+      accuracy: Double = 1.0,
+      candidates: Int = 10000,
+      docPred: Option[Column] = None,
+      docFilter: Option[(String, String)] = None,
+      after: Option[(Long, Long)] = None): Dataset[(Long, Scored)] = {
     val (bitmapFq, pred) = fqSplit(docPred, docFilter)
     val spec = termSpec(terms, rows, accuracy, candidates)
       .map(s => after.fold(s)(a => s.copy(after = a)))
-    searchSpec(spec, rows, candidates, bitmapFq, pred)
+    scorePass(spec.toSeq, rows, candidates, bitmapFq, pred)
   }
 
   /** Search-after cursor paging (Solr cursorMark semantics — the deep-page
@@ -551,7 +613,7 @@ final class Engine(val index: Index) {
     val names = terms.distinct
     val cfg = index.cfg
     val nTerms = names.size
-    perSegment(segHits(names).groupByKey(_.seg_id)) { (seg, it, allow, _) =>
+    perSegment(segHits(names))(_.seg_id) { (seg, it, allow, _) =>
       Engine.conjunction(seg, it.toArray, nTerms, cfg, allow)
     }
   }
@@ -572,7 +634,7 @@ final class Engine(val index: Index) {
     require(toks.nonEmpty, "empty phrase")
     if (toks.length == 1) // Lucene parses a one-word phrase as a TermQuery
       return searchByTerms(Seq(("w:" + toks(0)) -> 1.0), rows)
-    Wand.topK(phraseScores(toks, 1.0, slop), rows)
+    Wand.topK(phraseScores(toks, 1.0, slop), rows)(identity)
   }
 
   /** All (docId, score) phrase contributions, pre-top-k — the scoring
@@ -624,7 +686,7 @@ final class Engine(val index: Index) {
       .as[(Long, String, Array[Byte], Array[Byte])]
     val cfg = index.cfg
     val nDistinct = names.size
-    perSegment(hits.groupByKey(_._1)) { (seg, it, allow, _) =>
+    perSegment(hits)(_._1) { (seg, it, allow, _) =>
       Engine.phraseMatches(seg, it.toArray, words, nDistinct, cfg, allow, weight, avgdl, slop)
     }
   }
@@ -960,7 +1022,14 @@ final class Engine(val index: Index) {
     * doc_id-keyed so AQE plans the final joins.
     */
   def searchParsed(corpus: DataFrame, q: String, rows: Int = 60,
-                   maxExpansions: Int = 50): DataFrame = {
+                   maxExpansions: Int = 50): DataFrame =
+    Wand.topK(parsedPass(corpus, q, rows, maxExpansions), rows)(identity)
+
+  /** [[searchParsed]]'s (doc_id, score) rows before the merge (see
+    * [[termsPass]]).
+    */
+  private[graft] def parsedPass(corpus: DataFrame, q: String, rows: Int = 60,
+                                maxExpansions: Int = 50): Dataset[Scored] = {
     import Engine.{FuzzyClause, Occur, PhraseClause, PrefixClause, TermClause, WildcardClause}
     val should = Seq.newBuilder[(String, Double)]
     val must = Seq.newBuilder[(String, Double)]
@@ -1037,10 +1106,10 @@ final class Engine(val index: Index) {
     val groupSeq = groups.result()
     val phraseSeq = phrases.result()
     if (phraseSeq.isEmpty)
-      return searchBool(shouldSeq, mustSeq, notSeq, rows, mustGroups = groupSeq)
+      return boolPass(shouldSeq, mustSeq, notSeq, rows, mustGroups = groupSeq).map(_._2)
     val notSet = notSeq.toSet
     if (mustSeq.exists(t => notSet(t._1))) // +t -t: unsatisfiable
-      return Wand.topK(spark.emptyDataset[Scored], rows)
+      return spark.emptyDataset[Scored]
     // ONE df lookup for every clause kind (group filtering + scoring —
     // on a vocabulary too large for the driver dictMap each dfOf is its
     // own dictionary-scan job, so they must not repeat per clause)
@@ -1052,11 +1121,11 @@ final class Engine(val index: Index) {
     val groupsKept = groupSeq.map(g => g.filterNot(t => notSet(t._1))
       .filter(t => dfs.getOrElse(t._1, 0L) > 0L))
     if (groupSeq.nonEmpty && groupsKept.exists(_.isEmpty))
-      return Wand.topK(spark.emptyDataset[Scored], rows)
+      return spark.emptyDataset[Scored]
     val scoringTerms =
       shouldSeq.filterNot(t => notSet(t._1)) ++ mustSeq ++ groupsKept.flatten
     if (mustSeq.exists(t => dfs.getOrElse(t._1, 0L) == 0L)) // required term absent
-      return Wand.topK(spark.emptyDataset[Scored], rows)
+      return spark.emptyDataset[Scored]
     val kept = scoringTerms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }
       .filter(_._3 > 0)
     val (n, avgdl) = index.stats
@@ -1129,7 +1198,7 @@ final class Engine(val index: Index) {
           (if (weights.isEmpty) Nil
            else Seq(scanScoreAll(weights, avgdl))) ++ scoringDfs.map(_._1)
         if (parts.isEmpty) // purely negative query matches nothing, as in Lucene
-          return Wand.topK(spark.emptyDataset[Scored], rows)
+          return spark.emptyDataset[Scored]
         var r = parts.reduce(_ unionAll _)
           .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
         if (mustSeq.nonEmpty)
@@ -1156,7 +1225,7 @@ final class Engine(val index: Index) {
         case Occur.Should => ()
       }
     }
-    Wand.topK(res.select(col("doc_id").as("docId"), col("score")).as[Scored], rows)
+    res.select(col("doc_id").as("docId"), col("score")).as[Scored]
   }
 
   /** Lucene BooleanQuery semantics — the QueryParser `a +b -c` surface the
@@ -1188,11 +1257,24 @@ final class Engine(val index: Index) {
                  candidates: Int = 10000,
                  docPred: Option[Column] = None,
                  docFilter: Option[(String, String)] = None,
-                 mustGroups: Seq[Seq[(String, Double)]] = Nil): DataFrame = {
+                 mustGroups: Seq[Seq[(String, Double)]] = Nil): DataFrame =
+    Wand.topK(boolPass(should, must, mustNot, rows, accuracy, candidates, docPred, docFilter,
+      mustGroups), rows)(_._2)
+
+  /** [[searchBool]]'s scoring pass before the merge (see [[termsPass]]). */
+  private[graft] def boolPass(should: Seq[(String, Double)],
+                              must: Seq[(String, Double)] = Nil,
+                              mustNot: Seq[String] = Nil,
+                              rows: Int = 60, accuracy: Double = 1.0,
+                              candidates: Int = 10000,
+                              docPred: Option[Column] = None,
+                              docFilter: Option[(String, String)] = None,
+                              mustGroups: Seq[Seq[(String, Double)]] = Nil)
+      : Dataset[(Long, Scored)] = {
     val notSet = mustNot.toSet
     // +t -t is unsatisfiable (Lucene: required AND prohibited -> no doc)
     if (must.exists(t => notSet(t._1)))
-      return searchSpec(None, rows, candidates)
+      return scorePass(Nil, rows, candidates, None, None)
     // a SHOULD term that is also prohibited can never contribute (every
     // doc holding it is excluded) — drop it from the scoring set up front
     val shouldKept = keptTerms(should.filterNot(t => notSet(t._1)), accuracy)
@@ -1201,7 +1283,7 @@ final class Engine(val index: Index) {
     val reqDfs = index.dfOf(
       (must.map(_._1) ++ mustGroups.flatten.map(_._1)).distinct)
     if (must.exists(t => reqDfs.getOrElse(t._1, 0L) == 0L))
-      return searchSpec(None, rows, candidates) // required term absent from the corpus
+      return scorePass(Nil, rows, candidates, None, None) // required term absent from the corpus
     val mustKept = must.map { case (t, b) => (t, b, reqDfs.getOrElse(t, 0L)) }
     // OR-required groups (Lucene's required multi-term rewrite, `+pre*`):
     // members score like SHOULD terms but are exempt from accuracy
@@ -1214,7 +1296,7 @@ final class Engine(val index: Index) {
         .map { case (t, b) => (t, b, reqDfs.getOrElse(t, 0L)) }
         .filter(_._3 > 0))
     if (mustGroups.nonEmpty && groupsKept.exists(_.isEmpty))
-      return searchSpec(None, rows, candidates)
+      return scorePass(Nil, rows, candidates, None, None)
     val kept = shouldKept ++ mustKept ++ groupsKept.flatten
     val (bitmapFq, pred) = fqSplit(docPred, docFilter)
     val spec = if (kept.isEmpty) None else {
@@ -1226,27 +1308,20 @@ final class Engine(val index: Index) {
       Some(local.copy(must = must.map(_._1).toSet, mustNot = notSet,
         mustGroups = groupsKept.map(_.iterator.map(_._1).toSet)))
     }
-    searchSpec(spec, rows, candidates, bitmapFq, pred)
+    scorePass(spec.toSeq, rows, candidates, bitmapFq, pred)
   }
-
-  /** A single query is a batch of one: its [[scorePass]] under the global
-    * [[Wand.topK]] merge, (rank, doc_id, score_q); None scores nothing.
-    */
-  private[graft] def searchSpec(spec: Option[Engine.QuerySpec], rows: Int, candidates: Int,
-      bitmapFq: Option[(String, String)] = None,
-      docPred: Option[Column] = None): DataFrame =
-    Wand.topK(scorePass(spec.toSeq, rows, candidates, bitmapFq, docPred).map(_._2), rows)
 
   /** THE scoring pass of 1..N term queries — [[searchByTerms]] (so
     * [[searchAfter]], [[searchPage]]), [[searchBool]] and
     * [[searchManyByTerms]] only build [[Engine.QuerySpec]]s and call it.
     * Segment-local specs share ONE [[segmentPass]], columnar specs ONE
-    * [[columnarPass]]; the caller's heap merges their (query id,
-    * candidate) rows. The doc filter is one per pass: a covered
-    * `bitmapFq` takes its result-identical predicate form on the
-    * columnar side.
+    * [[columnarPass]]; the caller's merge ([[Wand.topK]],
+    * [[Wand.topKPerQuery]]) folds their (query id, candidate) rows into
+    * one heap per query per task and merges the tasks' heaps on the
+    * driver. The doc filter is one per pass: a covered `bitmapFq` takes
+    * its result-identical predicate form on the columnar side.
     */
-  private def scorePass(specs: Seq[Engine.QuerySpec], rows: Int, candidates: Int,
+  private[graft] def scorePass(specs: Seq[Engine.QuerySpec], rows: Int, candidates: Int,
       bitmapFq: Option[(String, String)],
       docPred: Option[Column]): Dataset[(Long, Scored)] = {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
@@ -1260,13 +1335,15 @@ final class Engine(val index: Index) {
   }
 
   /** The segment-local side of [[scorePass]]: ONE scan of the specs'
-    * terms plus their MUST_NOT terms, ONE [[perSegment]] grouping — fq,
-    * predicate and tombstones resolve to the allow bitmap BEFORE any heap
-    * (a covered fq cogroups the persisted per-segment bitmaps, no docmeta
-    * scan). Each segment's rows materialize once and every spec scores
-    * them ([[Engine.QuerySpec.scoreSegment]]) into a `heapSize` heap: the
-    * exact top-`rows` needs per-segment top-`rows`; a smaller
-    * `candidates` is the reference's approximate phase-1 budget.
+    * terms plus their MUST_NOT terms, scored in the scan task by
+    * [[perSegment]] — fq, predicate and tombstones resolve to the allow
+    * bitmap BEFORE any heap (a covered fq joins the persisted per-segment
+    * bitmaps, no docmeta scan). Each segment's rows materialize once and
+    * every spec scores them ([[Engine.QuerySpec.scoreSegment]]) into a
+    * `heapSize` heap: the exact top-`rows` needs per-segment top-`rows`;
+    * a smaller `candidates` is the reference's approximate phase-1
+    * budget. Without side inputs the pass has no exchange: the scan, the
+    * kernels and the task's heaps are one stage.
     */
   private def segmentPass(specs: Seq[Engine.QuerySpec], heapSize: Int, avgdl: Double,
       bitmapFq: Option[(String, String)],
@@ -1274,7 +1351,7 @@ final class Engine(val index: Index) {
     val names = specs.flatMap(s => s.weights.keys ++ s.mustNot).distinct
     val cfg = index.cfg
     val specsB = spark.sparkContext.broadcast(specs.toArray)
-    perSegment(segHits(names).groupByKey(_.seg_id), bitmapFq, docPred) { (seg, it, allow, _) =>
+    perSegment(segHits(names), bitmapFq, docPred)(_.seg_id) { (seg, it, allow, _) =>
       val segRows = it.toArray // shared once, re-traversed per spec (≤|q| rows)
       specsB.value.iterator.flatMap { s =>
         s.scoreSegment(seg, segRows, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
@@ -1529,12 +1606,22 @@ final class Engine(val index: Index) {
     * one df lookup for the batch, each query on its own [[specOf]] route
     * (sparse queries on block-max WAND) — so each query's results are
     * rank-identical to its single run; the merge is the per-query heap
-    * ([[Wand.topKPerQuery]]). Output: (query_id, rank, doc_id, score_q).
+    * ([[Wand.topKPerQuery]]), and the whole batch is one Spark job run at
+    * call time. Output: (query_id, rank, doc_id, score_q), local rows.
     */
   def searchManyByTerms(
       queries: Seq[(Long, Seq[(String, Double)])],
       rows: Int = 60,
-      candidates: Int = 10000): DataFrame = {
+      candidates: Int = 10000): DataFrame =
+    Wand.topKPerQuery(manyPass(queries, rows, candidates), rows)
+
+  /** [[searchManyByTerms]]'s scoring pass before the merge (see
+    * [[termsPass]]).
+    */
+  private[graft] def manyPass(
+      queries: Seq[(Long, Seq[(String, Double)])],
+      rows: Int = 60,
+      candidates: Int = 10000): Dataset[(Long, Scored)] = {
     val ids = queries.map(_._1)
     val repeated = ids.diff(ids.distinct)
     require(repeated.isEmpty, s"query ids must be distinct: query_id ${repeated.head} repeats")
@@ -1545,7 +1632,7 @@ final class Engine(val index: Index) {
       val kept = ts.flatMap { case (t, b) => dfs.get(t).filter(_ > 0).map(df => (t, b, df)) }
       if (kept.isEmpty) None else Some(specOf(qid, kept, n, rows, candidates, useWand = true))
     }
-    Wand.topKPerQuery(scorePass(specs, rows, candidates, None, None), rows)
+    scorePass(specs, rows, candidates, None, None)
   }
 
   /** Paged search — Solr's `start` offset (every Solr handler takes
@@ -1557,10 +1644,16 @@ final class Engine(val index: Index) {
     * here).
     */
   def searchPage(terms: Seq[(String, Double)], start: Int, rows: Int = 60,
-                 accuracy: Double = 1.0, candidates: Int = 10000): DataFrame =
+                 accuracy: Double = 1.0, candidates: Int = 10000): DataFrame = {
+    // Solr rejects a negative start; start + rows is the heap size, so it
+    // must fit an Int
+    require(start >= 0, s"start must be >= 0, got $start")
+    require(start.toLong + rows <= Int.MaxValue,
+      s"start + rows must be <= ${Int.MaxValue}, got start $start + rows $rows")
     searchByTerms(terms, rows = start + rows, accuracy = accuracy,
       candidates = math.max(candidates, start + rows))
       .where(col("rank") > start)
+  }
 
   /** Solr `/export` handler analog: the FULL sorted match set — every
     * matching doc with its exact BM25 score and global rank, no top-k
@@ -1607,9 +1700,9 @@ final class Engine(val index: Index) {
     *
     * Fast path (field covered by the persisted filter side-index): the
     * match set never leaves its segment — per segment, the query terms'
-    * postings OR into one local bitmap, which cogroups with the
-    * per-(value) filter bitmaps (and the kill bitmaps, tagged onto the
-    * same cogroup like P2's fq path); each facet count is a popcount of
+    * postings OR into one local bitmap, which meets the per-(value)
+    * filter bitmaps (and the kill bitmaps, through the same side join as
+    * P2's fq path) in the scan task; each facet count is a popcount of
     * `match AND value [ANDNOT kill]`, and only (value, count) rows — a
     * handful per segment — reach the final tiny aggregation. The slow
     * path's per-query shuffle of EVERY matching doc_id (distinct +
@@ -1642,7 +1735,7 @@ final class Engine(val index: Index) {
     import spark.implicits._
     val hits = index.termRows(terms.map(_._1).distinct)(col("seg_id"), col("postings"))
       .as[(Long, Array[Byte])]
-    perSegment(hits.groupByKey(_._1), fq = docFilter, valueFields = Seq(field)) {
+    perSegment(hits, fq = docFilter, valueFields = Seq(field))(_._1) {
       (_, it, allow, values) =>
         // matching docs under NO value bitmap (a null `field`) count into
         // the null group, as facetScan's docmeta grouping counts them
@@ -1857,7 +1950,7 @@ final class Engine(val index: Index) {
     import spark.implicits._
     val hits = index.termRows(terms.map(_._1).distinct)(col("seg_id"), col("postings"))
       .as[(Long, Array[Byte])]
-    perSegment(hits.groupByKey(_._1), valueFields = Seq(field, pivotField)) {
+    perSegment(hits, valueFields = Seq(field, pivotField))(_._1) {
       (_, it, allow, values) =>
         // one f1 slice = the docs of one (value) cell; each slice then
         // splits by the f2 bitmaps — both levels keep their null group
@@ -1947,7 +2040,7 @@ final class Engine(val index: Index) {
       if (viaBitmap) {
         val wB = spark.sparkContext.broadcast(weights)
         val cfg = index.cfg
-        perSegment(segHits(weights.keys.toSeq).groupByKey(_.seg_id), valueFields = Seq("repo")) {
+        perSegment(segHits(weights.keys.toSeq), valueFields = Seq("repo"))(_.seg_id) {
           (seg, it, allow, values) =>
             Wand.scoreSegmentValueAgg(seg, it, values(0), allow, wB.value, avgdl, cfg)
         }
@@ -2055,7 +2148,7 @@ final class Engine(val index: Index) {
     val cfg = index.cfg
     // fq resolution is the ONE rule shared with searchByTerms/searchBool
     // ([[fqSplit]]): a sole equality fq on a fully covered column rides
-    // the bitmap cogroup; anything else — an arbitrary docPred (Solr
+    // the bitmap side join; anything else — an arbitrary docPred (Solr
     // q+fq+group), a combined pred+fq, or an uncovered column — becomes a
     // predicate on the scan fallback (silently ignoring it would be the
     // P2 bug class all over again)
@@ -2064,13 +2157,13 @@ final class Engine(val index: Index) {
       index.filterColsComplete.contains(field) && denseArrayFits
     val perVal: org.apache.spark.sql.Dataset[(String, Scored)] =
       if (viaBitmap) {
-        // a sole covered equality fq rides the same cogroup as the value
+        // a sole covered equality fq rides the same side join as the value
         // bitmaps (as in searchByTerms) and intersects the touched set
         // inside the segment
         val wB = spark.sparkContext.broadcast(weights)
         val gl = groupLimit
-        perSegment(segHits(weights.keys.toSeq).groupByKey(_.seg_id), fq = bitmapFq,
-          valueFields = Seq(field)) { (seg, it, allow, values) =>
+        perSegment(segHits(weights.keys.toSeq), fq = bitmapFq,
+          valueFields = Seq(field))(_.seg_id) { (seg, it, allow, values) =>
           Wand.scoreSegmentGrouped(seg, it, values(0), allow, wB.value, avgdl, gl, cfg)
         }
       } else
@@ -2339,6 +2432,28 @@ object Engine {
       .levenshteinDistance(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 
   /** OR-merge serialized bitmaps; callers guarantee nonEmpty. */
+  /** One task's (hit, side) join rows grouped by segment: each segment
+    * once, with its hits once and its side rows once per side partition.
+    * The join pairs every hit with every side row of its segment, so the
+    * hits paired with the first side partition seen are all of them; a
+    * null side (no side input, or none for the segment) is one partition.
+    */
+  private[query] def groupBySegment[H](rows: Iterator[(H, SegSide)],
+      segOf: H => Long): Iterator[(Long, Seq[H], Array[SegSide])] = {
+    final class Acc(val part: Int) {
+      val hits = scala.collection.mutable.ArrayBuffer.empty[H]
+      val sides = scala.collection.mutable.ArrayBuffer.empty[SegSide]
+    }
+    val bySeg = scala.collection.mutable.LongMap.empty[Acc]
+    rows.foreach { case (h, side) =>
+      val part = if (side == null) -1 else side.part
+      val acc = bySeg.getOrElseUpdate(segOf(h), new Acc(part))
+      if (part == acc.part) acc.hits += h
+      if (side != null && !acc.sides.exists(_.part == part)) acc.sides += side
+    }
+    bySeg.iterator.map { case (seg, acc) => (seg, acc.hits.toSeq, acc.sides.toArray) }
+  }
+
   private[query] def orAll(bs: Iterable[Array[Byte]]): RoaringBitmap = {
     val it = bs.iterator
     val bm = graft.index.Bitmaps.deserialize(it.next())

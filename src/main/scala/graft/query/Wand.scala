@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.roaringbitmap.RoaringBitmap
@@ -86,11 +85,33 @@ final class BoundedTopK(val k: Int) extends Serializable {
   }
 }
 
+/** One [[BoundedTopK]] per query id — a task's partial of the scoring
+  * pass merge ([[Wand.topKPerQuery]]).
+  */
+final class QueryHeaps(val k: Int) extends Serializable {
+  val byQuery = scala.collection.mutable.LongMap.empty[BoundedTopK]
+  def offer(qid: Long, s: Scored): QueryHeaps = {
+    byQuery.getOrElseUpdate(qid, new BoundedTopK(k)).offer(s.docId, s.score)
+    this
+  }
+  def merge(o: QueryHeaps): QueryHeaps = {
+    o.byQuery.foreach { case (qid, h) =>
+      byQuery.get(qid) match {
+        case Some(mine) => mine.merge(h)
+        case None => byQuery.update(qid, h)
+      }
+    }
+    this
+  }
+}
+
 /** Typed bounded-heap top-k Aggregator — Spark runs it as partial
   * aggregation per partition + merge (the treeAggregate shape of the
-  * north_rule) via ObjectHashAggregate. The ONE heap merge: `scoredOf`
-  * projects an input row to its [[Scored]], so keyed callers (per query,
-  * per group value) aggregate `groupByKey(_._1)` rows with `_._2`
+  * north_rule) via ObjectHashAggregate. For the merges that stay inside
+  * a lazy plan (grouped search's per-value and group-rank heaps, the ANN
+  * top-k); a scoring pass merges through [[Wand.topK]] instead. `scoredOf`
+  * projects an input row to its [[Scored]], so keyed callers (per group
+  * value, per query) aggregate `groupByKey(_._1)` rows with `_._2`
   * directly, without a `mapValues` object round trip per row.
   */
 final class TopKAgg[IN](k: Int, scoredOf: IN => Scored)(implicit outEnc: Encoder[Seq[Scored]])
@@ -123,11 +144,12 @@ final class TopKAgg[IN](k: Int, scoredOf: IN => Scored)(implicit outEnc: Encoder
   * The reference's phase-1/phase-2 split (approximate top-10⁴ then exact
   * re-rank, LireRequestHandler.java:554-668) maps to: WAND keeps a
   * per-segment bounded heap of size `candidates` of EXACT scores, the
-  * global TopKAgg merge takes `rows`.
+  * driver-side merge takes `rows`.
   *
   * The Engine's one scoring pass calls the top-k kernels per query per
-  * segment — a single query is a batch of one, merged by [[topK]]; a
-  * batch's queries by [[topKPerQuery]], the same heap keyed by query id.
+  * segment inside the scan task — a single query is a batch of one,
+  * merged by [[topK]]; a batch's queries by [[topKPerQuery]], the same
+  * per-task heaps keyed by query id.
   */
 object Wand {
 
@@ -434,38 +456,51 @@ object Wand {
         }
     }
 
-  /** Global bounded-heap merge: Dataset[Scored] -> (rank, doc_id, score_q).
-    * `k` is checked on the driver here and in [[topKPerQuery]], where every
-    * search verb ends: a zero-capacity heap would fail inside a task.
+  /** The merge of a single query's candidates: (rank, doc_id, score_q)
+    * over [[topKPerQuery]]'s heaps, with `scoredOf` projecting a row to
+    * its [[Scored]] (a scoring pass's `(query_id, Scored)` rows take
+    * `_._2`). `k` is checked on the driver here and in [[topKPerQuery]],
+    * where every search verb ends: a zero-capacity heap would fail inside
+    * a task.
     */
-  def topK(scored: Dataset[Scored], k: Int): DataFrame = {
-    requireRows(k)
-    scored.select(new TopKAgg[Scored](k, identity).toColumn)
-      .flatMap(_.zipWithIndex.map { case (s, i) => ((i + 1).toLong, s.docId, s.scoreQ) })
-      .toDF("rank", "doc_id", "score_q")
+  def topK[T](scored: Dataset[T], k: Int)(scoredOf: T => Scored): DataFrame = {
+    val top = heaps(scored, k)(_ => 0L, scoredOf).get(0L).fold(Array.empty[Scored])(_.sortedBestFirst)
+    scored.sparkSession.createDataset(top.toSeq.zipWithIndex.map { case (s, i) =>
+      ((i + 1).toLong, s.docId, s.scoreQ)
+    })(rankedEnc).toDF("rank", "doc_id", "score_q")
   }
 
-  // the merges' encoders, derived once: deriving one reflects over its
-  // type, a share of every query's plan time
-  private implicit val topEnc: Encoder[Seq[Scored]] = ExpressionEncoder[Seq[Scored]]()
-  private implicit val rankedEnc: Encoder[(Long, Long, Long)] =
-    Encoders.product[(Long, Long, Long)]
-  private implicit val keyedRankedEnc: Encoder[(Long, Long, Long, Long)] =
+  /** Per-query merge for batched search:
+    * Dataset[(query_id, Scored)] -> (query_id, rank, doc_id, score_q).
+    */
+  def topKPerQuery(scored: Dataset[(Long, Scored)], k: Int): DataFrame = {
+    val byQuery = heaps(scored, k)(_._1, _._2)
+    scored.sparkSession.createDataset(byQuery.toSeq.sortBy(_._1).flatMap { case (qid, h) =>
+      h.sortedBestFirst.toSeq.zipWithIndex.map { case (s, i) => (qid, (i + 1).toLong, s.docId, s.scoreQ) }
+    })(keyedRankedEnc).toDF("query_id", "rank", "doc_id", "score_q")
+  }
+
+  /** THE merge of every scoring pass: each task folds its rows into one
+    * `k`-bounded heap per query id (fed by the per-segment heaps), and
+    * `RDD.aggregate` merges the tasks' heaps on the driver as they finish
+    * — one job and no exchange after the pass's own, and the driver holds
+    * at most two heaps per query, bounded by `k`, not by corpus size. The
+    * verbs' results are local rows, materialized at call time as a Solr
+    * response is. Rank-identical to a bounded-heap aggregate: the heap's
+    * (score_q DESC, docId ASC) order is total, so merge order is free.
+    */
+  private def heaps[T](scored: Dataset[T], k: Int)(qidOf: T => Long,
+      scoredOf: T => Scored): scala.collection.mutable.LongMap[BoundedTopK] = {
+    requireRows(k)
+    scored.rdd.aggregate(new QueryHeaps(k))((h, x) => h.offer(qidOf(x), scoredOf(x)), _ merge _).byQuery
+  }
+
+  // the merged rows' encoders, derived once: deriving one reflects over
+  // its type, a share of every query's plan time
+  private val rankedEnc: Encoder[(Long, Long, Long)] = Encoders.product[(Long, Long, Long)]
+  private val keyedRankedEnc: Encoder[(Long, Long, Long, Long)] =
     Encoders.product[(Long, Long, Long, Long)]
 
   private def requireRows(k: Int): Unit =
     require(k >= 1, s"rows (the top-k size) must be >= 1, got $k")
-
-  /** Per-query global merge for batched search:
-    * Dataset[(query_id, Scored)] -> (query_id, rank, doc_id, score_q).
-    */
-  def topKPerQuery(scored: Dataset[(Long, Scored)], k: Int): DataFrame = {
-    requireRows(k)
-    scored.groupByKey(_._1)(Encoders.scalaLong)
-      .agg(new TopKAgg[(Long, Scored)](k, _._2).toColumn)
-      .flatMap { case (qid, top) =>
-        top.zipWithIndex.map { case (s, i) => (qid, (i + 1).toLong, s.docId, s.scoreQ) }
-      }
-      .toDF("query_id", "rank", "doc_id", "score_q")
-  }
 }

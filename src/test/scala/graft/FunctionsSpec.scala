@@ -153,7 +153,7 @@ class FunctionsSpec extends SparkSpec {
     val second = graft.functions.GraftTokens(Literal("gamma")).eval()
     assert(strs(first) == Seq("alpha", "beta"))
     assert(strs(second) == Seq("gamma"))
-    // two WindowHasher-backed columns in ONE projection, over a local
+    // two GraftTokens columns (thread-local TokenScanner) in ONE projection, over a local
     // relation (folded by an interpreted projection that evaluates every
     // column before writing any) and over a cached scan
     val rows = Seq((1L, "Alpha beta", "gamma DELTA eps"), (2L, "x", "y z"),

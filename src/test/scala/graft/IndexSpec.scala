@@ -38,11 +38,11 @@ class IndexSpec extends SparkSpec {
 
   test("fast-path partials == legacy brute force (ASCII, non-ASCII, growth, clamps)") {
     import graft.analyze.Tokenizer
-    // ASCII docs drive the FastDocTokens path; the non-ASCII docs route to
-    // the in-partition legacy path; the brute force below IS the legacy
-    // algorithm (tokenizeScala + shingleTerm), so equality pins both routes
-    // and their seam. 700 distinct tokens force two table growths (cap 1024,
-    // load 1/2); the repeated-token doc exercises multi-position runs.
+    // every doc takes the one TokenScanner path: ASCII docs its byte scan,
+    // the non-ASCII doc its tokenizeScala fallback; the brute force below
+    // is the reference algorithm (tokenizeScala + shingleTerm), so equality
+    // pins both and their seam. 700 distinct tokens force TokenTable to
+    // grow; the repeated-token doc exercises multi-position runs.
     val wide = (0 until 700).map(i => s"tok$i parse$i").mkString(" ")
     val testDocs: Seq[(Long, String)] = Seq(
       1L -> "Merge Sort MERGE sort merge9 9sort",
@@ -50,7 +50,7 @@ class IndexSpec extends SparkSpec {
       3L -> "", // no tokens
       5L -> null, // null content
       64L -> wide, // second segment; table growth
-      65L -> "naïve café schön ÄÖÜ merge sort", // non-ASCII -> legacy path
+      65L -> "naïve café schön ÄÖÜ merge sort", // non-ASCII -> tokenizeScala fallback
       66L -> "a b a b a c a", // dense repeats
       130L -> ("x " * 300).trim) // third segment; tf 300 on one token
     val cfg2 = IndexConfig(segShift = 6, rangeSegsShift = 2)
@@ -366,11 +366,12 @@ class IndexSpec extends SparkSpec {
       2L -> SparkEntry.FlagshipTerms, // sparse: batched WAND
       3L -> (hotTerms.take(2) ++ Seq("w:dup" -> 1.0))) // hot+rare: stays WAND
     assert(engine.routesDense(hotTerms, rows = 20), "precondition: query 1 routes dense")
-    val df = engine.searchManyByTerms(mixed, rows = 20)
-    val exec = df.queryExecution.executedPlan.toString
+    val pass = engine.manyPass(mixed, rows = 20).toDF()
+    val exec = pass.queryExecution.executedPlan.toString
     assert(!exec.contains("graft_postings"),
       s"a dense query in the batch must not engage the columnar pass:\n$exec")
-    assert(segmentScans(df, indexDir) == 1, s"the batch must scan the segments once:\n$exec")
+    assert(segmentScans(pass, indexDir) == 1, s"the batch must scan the segments once:\n$exec")
+    val df = engine.searchManyByTerms(mixed, rows = 20)
     val batch = df.as[(Long, Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toSeq).toMap
     mixed.foreach { case (qid, terms) =>
@@ -394,14 +395,12 @@ class IndexSpec extends SparkSpec {
       4L -> hotTerms.take(2), // a second dense query in the same columnar pass
       2L -> SparkEntry.FlagshipTerms, // sparse: batched WAND
       3L -> (hotTerms.take(2) ++ Seq("w:dup" -> 1.0))) // hot+rare: stays WAND
-    val df = wide.searchManyByTerms(mixed, rows = 20)
-    val p = df.queryExecution.explainString(
+    val p = wide.manyPass(mixed, rows = 20).queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(p.contains("graft_postings"), s"dense batch not on the columnar pass:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"weight table not broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"posting rows shuffled for the join:\n$p")
-    val exec = df.queryExecution.executedPlan.toString
-    assert(exec.contains("ObjectHashAggregate"), s"no bounded-heap top-k:\n$exec")
+    val df = wide.searchManyByTerms(mixed, rows = 20)
     val batch = df.as[(Long, Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toSeq).toMap
     mixed.foreach { case (qid, terms) =>
@@ -418,6 +417,22 @@ class IndexSpec extends SparkSpec {
     assert(message(engine.searchByTerms(SparkEntry.FlagshipTerms, candidates = 0))
       .contains("candidates"))
     assert(message(engine.searchManyByTerms(SparkEntry.MultiQueries, rows = 0)).contains("rows"))
+  }
+
+  test("searchPage rejects a negative start and an overflowing start + rows, naming start") {
+    def message(call: => Any): String = intercept[IllegalArgumentException](call).getMessage
+    // a negative start once ran top-(start + rows) and kept ranks > start:
+    // 55 rows for start -5, rows 60
+    assert(message(engine.searchPage(SparkEntry.FlagshipTerms, start = -5, rows = 60))
+      .contains("start"))
+    // start + rows past Int.MaxValue once wrapped negative and failed naming rows
+    assert(message(engine.searchPage(SparkEntry.FlagshipTerms, start = Int.MaxValue - 10,
+      rows = 60)).contains("start"))
+    val page = engine.searchPage(SparkEntry.FlagshipTerms, start = 5, rows = 10)
+      .as[(Long, Long, Long)].collect().toSeq
+    val top = engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 15)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(page == top.drop(5))
   }
 
   test("batched search rejects a repeated query id, naming it") {
@@ -451,7 +466,8 @@ class IndexSpec extends SparkSpec {
       "dense query must route to the dense-array plan")
     val api = engine.searchByTerms(hotTerms, rows = 30)
     // the dense-array route never decodes/explodes postings columnar-side
-    assert(!api.queryExecution.executedPlan.toString.contains("graft_postings"))
+    val pass = engine.termsPass(hotTerms, rows = 30).queryExecution.executedPlan.toString
+    assert(pass.contains("segments") && !pass.contains("graft_postings"), pass)
     val got = api.as[(Long, Long, Long)].collect().toSeq
     val exp = BruteScorer.topK(docs, hotTerms, 30)
     assert(got.map(_._2) == exp.map(_.docId))
@@ -462,13 +478,13 @@ class IndexSpec extends SparkSpec {
     val w = hotTerms.map { case (t, b) =>
       t -> b * Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
     for (p <- Seq(None, Some(col("lang") === "en"))) {
-      val s = engine.searchSpec(Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
+      val s = specTopK(engine, Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
         docPred = p).collect().map(_.toSeq).toSeq
-      val d1 = engine.searchSpec(Some(QuerySpec(0L, w, Route.Daat, useWand = true)), 25, 25,
+      val d1 = specTopK(engine, Some(QuerySpec(0L, w, Route.Daat, useWand = true)), 25, 25,
         docPred = p).collect().map(_.toSeq).toSeq
-      val d2 = engine.searchSpec(Some(QuerySpec(0L, w, Route.Daat, useWand = false)), 25, 25,
+      val d2 = specTopK(engine, Some(QuerySpec(0L, w, Route.Daat, useWand = false)), 25, 25,
         docPred = p).collect().map(_.toSeq).toSeq
-      val d3 = engine.searchSpec(Some(QuerySpec(0L, w, Route.DenseArray, useWand = false)), 25, 25,
+      val d3 = specTopK(engine, Some(QuerySpec(0L, w, Route.DenseArray, useWand = false)), 25, 25,
         docPred = p).collect().map(_.toSeq).toSeq
       assert(s == d1, s"scan vs wand (pred=$p)")
       assert(s == d2, s"scan vs exhaustive (pred=$p)")
@@ -477,7 +493,7 @@ class IndexSpec extends SparkSpec {
     // dense-array under a BITMAP fq too (the route keeps the side-index)
     val fqApi = engine.searchByTerms(hotTerms, rows = 25, docFilter = Some(("lang", "en")))
       .collect().map(_.toSeq).toSeq
-    val fqScan = engine.searchSpec(Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
+    val fqScan = specTopK(engine, Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
         docPred = Some(col("lang") === "en")).collect().map(_.toSeq).toSeq
     assert(fqApi == fqScan, "dense-array bitmap fq diverges from the scan+pred form")
     // a rare query must keep the DAAT plan
@@ -504,7 +520,7 @@ class IndexSpec extends SparkSpec {
     val dfs = engine.index.dfOf(mix.map(_._1))
     val (n, _) = engine.index.stats
     val w = mix.map { case (t, b) => t -> b * Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    val s = engine.searchSpec(Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 30, 30)
+    val s = specTopK(engine, Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 30, 30)
       .collect().map(_.toSeq).toSeq
     assert(s == got.map(r => Seq(r._1, r._2, r._3)), "scan route must agree on the mix")
     // a boosted hot term that dominates the weights SHOULD route dense:
@@ -519,7 +535,7 @@ class IndexSpec extends SparkSpec {
     // dense + bitmap fq: the dense-array route keeps the bitmap side-index;
     // results == the DAAT bitmap path
     val api3 = engine.searchByTerms(hotTerms, rows = 30, docFilter = Some(("lang", "en")))
-    val viaDaat = engine.searchSpec(Some(QuerySpec(0L,
+    val viaDaat = specTopK(engine, Some(QuerySpec(0L,
       hotTerms.map { case (t, b) =>
         t -> b * Bm25.idf(engine.index.dfOf(Seq(t))(t).toDouble, n.toDouble) }.toMap,
       Route.Daat, useWand = true)), 30, 30, bitmapFq = Some(("lang", "en")))
@@ -562,8 +578,9 @@ class IndexSpec extends SparkSpec {
     val viaPred = engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,
       docPred = Some(col("lang") === "en"))
     assert(viaBitmap.collect().map(_.toSeq).toSeq == viaPred.collect().map(_.toSeq).toSeq)
-    val plan = viaBitmap.queryExecution.executedPlan.toString
-    assert(!plan.contains("docmeta"), "bitmap path must not scan docmeta")
+    val plan = engine.termsPass(SparkEntry.FlagshipTerms, rows = 30,
+      docFilter = Some(("lang", "en"))).queryExecution.executedPlan.toString
+    assert(plan.contains("filters") && !plan.contains("docmeta"), "bitmap path must not scan docmeta")
     // a column without a persisted bitmap falls back to the predicate path
     val path = corpus.select($"path").as[String].head()
     val f = engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
@@ -14,7 +14,7 @@ import graft.query.{Bm25, Engine}
   */
 class PlanSpec extends SparkSpec {
 
-  private def plan(df: DataFrame): String =
+  private def plan(df: Dataset[_]): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
   lazy val engine = Engine.forDir(spark, sfTiny)
@@ -84,29 +84,29 @@ class PlanSpec extends SparkSpec {
       .select(col("term")).as[String](org.apache.spark.sql.Encoders.STRING)
       .collect().toSeq.map(_ -> 1.0)
     assert(engine.routesDense(hotTerms, rows = 30))
-    val df = engine.searchByTerms(hotTerms, rows = 30)
-    val p = plan(df)
+    val p = plan(engine.termsPass(hotTerms, rows = 30))
     // scores never leave the segment task: no columnar posting decode, no
-    // shuffle keyed on doc_id — only the seg-keyed cogroup + bounded heap
+    // exchange at all — the scan task scores its segments and the heaps
+    // merge on the driver, so the verb's result is local rows
     assert(!p.contains("graft_postings"), s"columnar decode present:\n$p")
     assert(!p.contains("hashpartitioning(doc_id"), s"doc-keyed shuffle present:\n$p")
-    val exec = df.queryExecution.executedPlan.toString
-    assert(exec.contains("ObjectHashAggregate"), s"no bounded-heap top-k:\n$exec")
+    assert(!p.contains("Exchange"), s"exchange in the segment-local pass:\n$p")
+    val merged = plan(engine.searchByTerms(hotTerms, rows = 30))
+    assert(merged.contains("LocalTableScan"), s"merged top-k is not local rows:\n$merged")
     // the ultra-wide-segment FALLBACK keeps its codegen'd columnar shape
     val dfs = engine.index.dfOf(hotTerms.map(_._1))
     val (n, _) = engine.index.stats
     val w = hotTerms.map { case (t, b) =>
       t -> b * graft.query.Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    val ps = plan(engine.searchSpec(Some(Engine.QuerySpec(0L, w, Engine.Route.Columnar,
-      useWand = false)), 30, 30))
+    val ps = plan(engine.scorePass(Seq(Engine.QuerySpec(0L, w, Engine.Route.Columnar,
+      useWand = false)), 30, 30, None, None))
     assert(ps.contains("graft_postings"), s"not the scan plan:\n$ps")
     assert(ps.contains("HashAggregate"), s"no hash aggregation:\n$ps")
     assert(ps.contains("partial_sum") || ps.contains("Partial"), s"no partial agg:\n$ps")
-    assert(ps.contains("ObjectHashAggregate"), s"no bounded top-k:\n$ps")
   }
 
   test("bitmap-filtered search cogroups the filter side-index, never docmeta") {
-    val p = plan(engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,
+    val p = plan(engine.termsPass(SparkEntry.FlagshipTerms, rows = 30,
       docFilter = Some(("lang", "en"))))
     assert(p.contains("filters"), s"filter side-index not scanned:\n$p")
     assert(!p.contains("docmeta"), s"docmeta scanned:\n$p")
@@ -124,10 +124,11 @@ class PlanSpec extends SparkSpec {
     val grp = engine.rangeExpansions(Some("w:sa"), Some("w:sp"),
       incLo = true, incHi = false, 4)
     assert(grp.size >= 2)
-    val plain = plan(engine.searchBool(
+    val plain = plan(engine.boolPass(
       Seq("w:license" -> 1.0) ++ grp.map(_ -> 0.5), rows = 30))
-    val grouped = plan(engine.searchBool(Seq("w:license" -> 1.0), rows = 30,
+    val grouped = plan(engine.boolPass(Seq("w:license" -> 1.0), rows = 30,
       mustGroups = Seq(grp.map(_ -> 0.5))))
+    assert(plain.contains("segments"), s"not the scoring pass:\n$plain")
     assert(shape(grouped) == shape(plain),
       s"group path changed the plan shape:\nPLAIN:\n$plain\nGROUPED:\n$grouped")
   }
@@ -136,13 +137,14 @@ class PlanSpec extends SparkSpec {
     // the common case must not pay for the Solr-update machinery: neither
     // the WAND route nor the dense scan route may read the tombstones dir
     // or add an exclusion join when none exist
-    val wand = plan(engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30))
+    val wand = plan(engine.termsPass(SparkEntry.FlagshipTerms, rows = 30))
     val hotTerms = engine.index.dictionary
       .orderBy(col("df").desc, col("term").asc).limit(3)
       .select(col("term")).as[String](org.apache.spark.sql.Encoders.STRING)
       .collect().toSeq.map(_ -> 1.0)
-    val scan = plan(engine.searchByTerms(hotTerms, rows = 30))
+    val scan = plan(engine.termsPass(hotTerms, rows = 30))
     Seq("wand" -> wand, "scan" -> scan).foreach { case (name, p) =>
+      assert(p.contains("segments"), s"$name: not the scoring pass:\n$p")
       assert(!p.contains("tombstones"), s"$name route scans tombstones:\n$p")
       assert(!p.toLowerCase.contains("leftanti"), s"$name route anti-joins:\n$p")
     }
@@ -191,15 +193,34 @@ class PlanSpec extends SparkSpec {
       .select(col("term")).as[String](org.apache.spark.sql.Encoders.STRING)
       .collect().toSeq.map(_ -> 1.0)
     assert(engine.routesDense(hotTerms, rows = 20), "precondition: the batch routes dense")
-    val df = engine.searchManyByTerms(Seq(1L -> hotTerms, 2L -> hotTerms.take(2),
+    val df = engine.manyPass(Seq(1L -> hotTerms, 2L -> hotTerms.take(2),
       3L -> SparkEntry.FlagshipTerms), rows = 20)
     val p = plan(df)
     assert(!p.contains("graft_postings"), s"dense batch decodes postings columnar-side:\n$p")
     assert(!p.contains("BroadcastHashJoin"), s"dense batch joins a weight table:\n$p")
     assert(!p.contains("SortMergeJoin"), s"dense batch shuffles for a join:\n$p")
     assert(segmentScans(df, engine.index.indexDir) == 1, s"segments not scanned exactly once:\n$p")
-    val exec = df.queryExecution.executedPlan.toString
-    assert(exec.contains("ObjectHashAggregate"), s"no bounded-heap top-k:\n$exec")
+    assert(!p.contains("Exchange"), s"exchange in the batched segment-local pass:\n$p")
+  }
+
+  test("unfiltered single-query pass: zero Exchange nodes before the driver merge") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    val hotTerms = engine.index.dictionary
+      .orderBy(col("df").desc, col("term").asc).limit(3)
+      .select(col("term")).as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().toSeq.map(_ -> 1.0)
+    for ((tag, pass) <- Seq(
+        "wand" -> engine.termsPass(SparkEntry.FlagshipTerms, rows = 30, accuracy = 0.5),
+        "daat" -> engine.termsPass(SparkEntry.FlagshipTerms, rows = 30),
+        "dense" -> engine.termsPass(hotTerms, rows = 30))) {
+      pass.collect() // the executed (final) plan
+      val exec = pass.queryExecution.executedPlan
+      val exchanges = helper.collect(exec) { case e: Exchange => e }
+      assert(exchanges.isEmpty, s"$tag pass has exchanges:\n$exec")
+      assert(segmentScans(pass, engine.index.indexDir) == 1, s"$tag: not one scan:\n$exec")
+    }
   }
 
   test("grouped search: keyed heap agg, broadcast group-rank join, no window/cartesian") {
@@ -295,8 +316,8 @@ class PlanSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      val p = plan(e2.parsedPass(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60).toDF())
       val df = e2.searchParsed(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60)
-      val p = plan(df)
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         s"expected a fail-open shuffle join:\n$p")
       val exchanges = "(?s)\\(\\d+\\) Exchange\\s*\\nInput \\[\\d+\\]: \\[([^\\]]*)\\]".r
@@ -386,8 +407,7 @@ class PlanSpec extends SparkSpec {
     // required term + SHOULD phrase + prohibited term: the scanScoreMembership
     // route. Membership joins are gone (bitmask in the scan aggregation);
     // the only join is the phrase-contribution left_outer graft.
-    val df = engine.searchParsed(corpus, "+w:the \"hash join\" -w:stream", rows = 60)
-    val p = plan(df)
+    val p = plan(engine.parsedPass(corpus, "+w:the \"hash join\" -w:stream", rows = 60).toDF())
     assert(!p.contains("LeftSemi"), s"membership semi-join survived the fold:\n$p")
     assert(!p.contains("LeftAnti"), s"prohibited-term anti-join survived the fold:\n$p")
     // exactly TWO postings scans: the flagged scoring scan and the phrase

@@ -37,7 +37,7 @@ abstract class SparkSpec extends AnyFunSuite {
     * (descending into adaptive plans): how many times a query reads the
     * postings.
     */
-  def segmentScans(df: org.apache.spark.sql.DataFrame, indexDir: String): Int = {
+  def segmentScans(df: org.apache.spark.sql.Dataset[_], indexDir: String): Int = {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val segDir = new org.apache.hadoop.fs.Path(graft.index.IndexBuild.segmentsDir(indexDir))
@@ -47,6 +47,37 @@ abstract class SparkSpec extends AnyFunSuite {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(segDir)) => s
     }.size
+  }
+
+  /** One query spec's top-`rows` (rank, doc_id, score_q) through the
+    * engine's scoring pass and merge, on the spec's own route: the route
+    * pins force routes the engine's rule would not pick. None scores
+    * nothing.
+    */
+  def specTopK(engine: graft.query.Engine, spec: Option[graft.query.Engine.QuerySpec],
+               rows: Int, candidates: Int,
+               bitmapFq: Option[(String, String)] = None,
+               docPred: Option[org.apache.spark.sql.Column] = None): org.apache.spark.sql.DataFrame =
+    graft.query.Wand.topK(engine.scorePass(spec.toSeq, rows, candidates, bitmapFq, docPred),
+      rows)(_._2)
+
+  /** `body`'s result and the number of Spark jobs it started, counted by
+    * a listener once the bus has delivered every event of the call.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.TestBus.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Every live unit of `indexDir` holds each always-written store and a

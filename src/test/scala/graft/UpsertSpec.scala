@@ -168,7 +168,7 @@ class UpsertSpec extends SparkSpec {
     val weights = kept.map { case (t, b, df) =>
       t -> b * graft.query.Bm25.idf(df.toDouble, n.toDouble)
     }.toMap
-    val scan = rows(eng.searchSpec(Some(graft.query.Engine.QuerySpec(0L, weights,
+    val scan = rows(specTopK(eng, Some(graft.query.Engine.QuerySpec(0L, weights,
         graft.query.Engine.Route.Columnar, useWand = false)), 60, 60)
       .select("rank", "doc_id", "score_q"))
     val wand = rows(eng.searchByTerms(SparkEntry.FlagshipTerms, rows = 60))
