@@ -137,10 +137,10 @@ object SparkEntry {
     */
   val ParsedMixedQuery = "+\"hash join\" w:window^2 -w:stream w:sm*^0.5 w:hach~1"
 
-  /** Folded-membership gate: same mix plus a REQUIRED TERM (`+w:license`),
-    * which routes the phrase-mixed composition through
-    * [[graft.query.Engine.scanScoreMembership]] — term-side MUST/NOT ride
-    * the scoring scan as a bitmask instead of membership joins.
+  /** Required-term gate: same mix plus a REQUIRED TERM (`+w:the`): the
+    * term's postings AND into the per-segment allow bitmap next to the
+    * MUST phrase's virtual posting list, in the same one segment pass
+    * ([[graft.query.Engine.searchParsed]]).
     */
   val ParsedMixedReqQuery =
     "+w:the +\"hash join\" w:window^2 -w:stream w:sm*^0.5 w:hach~1"
@@ -688,8 +688,8 @@ object SparkEntry {
     "q_parsed_mixed" -> ((s, dir) =>
       Engine.forDir(s, dir).searchParsed(Corpus.fromDocuments(s, dir),
         ParsedMixedQuery, rows = 60)),
-    // required-term variant: MUST/NOT membership folds into the scoring
-    // scan (scanScoreMembership bitmask route) instead of joins
+    // required-term variant: MUST/NOT membership is the per-segment
+    // allow bitmap of the one scoring pass, phrase included
     "q_parsed_mixed_req" -> ((s, dir) =>
       Engine.forDir(s, dir).searchParsed(Corpus.fromDocuments(s, dir),
         ParsedMixedReqQuery, rows = 60)),
@@ -701,8 +701,9 @@ object SparkEntry {
     "q_parsed_group" -> ((s, dir) =>
       Engine.forDir(s, dir).searchParsed(Corpus.fromDocuments(s, dir),
         ParsedGroupQuery, rows = 60, maxExpansions = ParsedGroupMaxExpansions)),
-    // Lucene PhraseQuery: shingle-index candidates (conjunction leapfrog)
-    // + stored-content verify; tf = phrase frequency, weight = Σ idf
+    // Lucene PhraseQuery from positional postings: a per-segment leapfrog
+    // over the words with position intersection, scored as one more
+    // posting list; tf = phrase frequency, weight = Σ idf
     "q_phrase" -> ((s, dir) =>
       Engine.forDir(s, dir).searchPhrase(Corpus.fromDocuments(s, dir),
         PhraseBigram, rows = 60)),

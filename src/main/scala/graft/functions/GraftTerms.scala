@@ -870,7 +870,7 @@ case class GraftPhrasePfDl(child: Expression, toks: Seq[String], maxDl: Int,
         i += 1
       }
     } else {
-      // sloppy rule (Engine.phraseScores scaladoc): anchor i matches when
+      // sloppy rule (Engine.phraseMatches scaladoc): anchor i matches when
       // every word j has an occurrence in [i+j-slop, i+j+slop]; windows
       // are checked independently (the positional route's exact mirror)
       var i = 0

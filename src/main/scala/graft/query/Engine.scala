@@ -242,13 +242,9 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * the same term count share one compiled stage.
     */
   private[graft] def termRows(terms: Seq[String], from: DataFrame = segments)(
-      cols: Column*): DataFrame = {
-    def inSet(c: String, values: Seq[Any]): Column =
-      GraftBridge.column(InSet(GraftBridge.expression(col(c)), values.toSet))
-    from.where(inSet("term_id", terms.map(TermHash.hash)) &&
-        inSet("term", terms.map(UTF8String.fromString)))
+      cols: Column*): DataFrame =
+    from.where(Index.inSet("term_id", terms.map(TermHash.hash)) && Index.termIn(terms))
       .select(cols: _*)
-  }
 
   /** Global df per query term (term string checked: hash-collision guard). */
   def dfOf(terms: Seq[String]): Map[String, Long] = dictMap match {
@@ -263,6 +259,14 @@ object Index {
     * source-code vocabulary exceeds it and takes the distributed route.
     */
   val DictDriverMaxDefault = 2000000L
+
+  /** `c IN values` as an [[InSet]] (see [[Index.termRows]]). */
+  private[graft] def inSet(c: String, values: Seq[Any]): Column =
+    GraftBridge.column(InSet(GraftBridge.expression(col(c)), values.toSet))
+
+  /** `term IN terms`, as an [[InSet]]. */
+  private[graft] def termIn(terms: Seq[String]): Column =
+    inSet("term", terms.map(UTF8String.fromString))
 }
 
 /** One side partition's bitmap rows of one segment ([[Engine]]'s
@@ -273,6 +277,14 @@ object Index {
   */
 private[query] final case class SegSide(seg_id: Long, part: Int, tags: Array[Int],
                                         values: Array[String], bitmaps: Array[Array[Byte]])
+
+/** One row of the scoring pass's segments scan: a [[SegHit]] plus the
+  * term's positions blob, read only for phrase words (null otherwise).
+  */
+private[query] final case class SegRow(seg_id: Long, term: String, df: Int, max_tf: Int,
+                                       min_dl: Int, postings: Array[Byte], positions: Array[Byte]) {
+  def hit: SegHit = SegHit(seg_id, term, df, max_tf, min_dl, postings)
+}
 
 /** Query facade — the reference's request-handler verbs re-expressed
   * (SURVEY.md §2.11): searchByTerms / searchByContent / searchById /
@@ -287,6 +299,7 @@ final class Engine(val index: Index) {
   private implicit val scoredEnc: Encoder[Scored] = Encoders.product[Scored]
   private implicit val keyedEnc: Encoder[(Long, Scored)] = Encoders.product[(Long, Scored)]
   private implicit val segHitEnc: Encoder[SegHit] = Encoders.product[SegHit]
+  private implicit val segRowEnc: Encoder[SegRow] = Encoders.product[SegRow]
   private implicit val sideRowEnc: Encoder[(Long, Int, String, Array[Byte])] =
     Encoders.product[(Long, Int, String, Array[Byte])]
   private implicit val segSideEnc: Encoder[SegSide] = Encoders.product[SegSide]
@@ -308,13 +321,6 @@ final class Engine(val index: Index) {
     val budget = math.max(3, math.floor(terms.size * accuracy).toInt)
     base.take(budget)
   }
-
-  /** Instance copy of [[Engine.PhraseBroadcastMaxCand]] — a test knob so
-    * PlanSpec can force the phrase graft's fail-open (non-broadcast) join
-    * at test scale and pin its exchange shape (VERDICT r05 next #9);
-    * production engines never change it.
-    */
-  private[graft] var phraseBroadcastMax: Long = Engine.PhraseBroadcastMaxCand
 
   /** Dense-query threshold: when the DOMINANT-WEIGHT terms' Σdf/N exceeds
     * this, the query blankets the corpus (every code file contains
@@ -342,7 +348,7 @@ final class Engine(val index: Index) {
 
   /** Global doc id from exploded-posting (seg_id, local) columns — the ONE
     * definition of the packing (IndexConfig.globalOf as a Column); every
-    * exploded-postings plan ([[scanScoreBase]], [[columnarPass]]) must
+    * exploded-postings plan ([[scanScoreAll]], [[columnarPass]]) must
     * use it.
     */
   private def packedDocId(seg: Column, local: Column): Column =
@@ -419,10 +425,22 @@ final class Engine(val index: Index) {
     else Some(specOf(0L, kept, index.stats._1, rows, candidates, useWand = accuracy < 0.9))
   }
 
+  private val segHitCols = Seq("seg_id", "term", "df", "max_tf", "min_dl", "postings")
+
   /** Segment hit rows of `terms` in the [[SegHit]] projection. */
   private def segHits(terms: Seq[String]): Dataset[SegHit] =
-    index.termRows(terms)(
-      Seq("seg_id", "term", "df", "max_tf", "min_dl", "postings").map(col): _*).as[SegHit]
+    index.termRows(terms)(segHitCols.map(col): _*).as[SegHit]
+
+  /** The scoring pass's rows of `terms`: [[segHits]] plus the positions
+    * blob of the `phraseWords` rows. Without phrase words the column is a
+    * null literal, so the scan reads no positions at all.
+    */
+  private def segRows(terms: Seq[String], phraseWords: Seq[String]): Dataset[SegRow] = {
+    val positions =
+      if (phraseWords.isEmpty) lit(null).cast("binary")
+      else when(Index.termIn(phraseWords), col("positions"))
+    index.termRows(terms)(segHitCols.map(col) :+ positions.as("positions"): _*).as[SegRow]
+  }
 
   /** THE per-segment filter path — liresolr's collector-side filtering
     * (each fq an accepted-docs set intersecting every scorer, deleted docs
@@ -603,7 +621,8 @@ final class Engine(val index: Index) {
       after = Some((afterScoreQ, afterDocId)))
 
   /** Doc ids containing ALL `terms` (Lucene's ConjunctionDISI) — the
-    * phrase-query phase-1 candidate generator. Per segment, a leapfrog
+    * candidate generator of the stored-field phrase verify
+    * ([[phraseScoresStored]]). Per segment, a leapfrog
     * intersection over the block-skipping posting iterators: the rarest
     * list leads, hot lists `advanceTo`-skip whole blocks (one header read
     * per skipped block), tombstones excluded at emission. Only candidate
@@ -619,77 +638,32 @@ final class Engine(val index: Index) {
   }
 
   /** Lucene PhraseQuery over the word-term field (the Solr host's
-    * `"exact phrase"` query form), answered from positional postings alone
-    * ([[phraseScoresPositional]]); `corpus` is not read.
+    * `"exact phrase"` query form), answered from positional postings alone;
+    * `corpus` is not read. A batch of one through [[scorePass]]: the
+    * phrase is one SHOULD phrase clause of a [[boolPass]] spec, so its
+    * matches score in the segment task as one more posting list
+    * ([[Engine.Phrase]]).
     *
     * Scoring is Lucene's PhraseQuery under BM25: tf = phrase frequency,
     * weight = Σ idf(term_i) over phrase POSITIONS (duplicates counted, as
     * BM25Similarity.idfExplain sums over the query's terms array), the
     * same tfNorm and quantized tie order as every other route, dl from
-    * the postings' inlined dl.
+    * the postings' inlined dl. `slop > 0` is the sloppy PhraseQuery
+    * ([[Engine.phraseMatches]]); a negative slop is rejected.
     */
   def searchPhrase(corpus: DataFrame, phrase: String, rows: Int = 60,
                    slop: Int = 0): DataFrame = {
     val toks = graft.analyze.Tokenizer.tokenizeScala(phrase)
     require(toks.nonEmpty, "empty phrase")
+    val p = Engine.Phrase(toks.toSeq.map("w:" + _), slop)
     if (toks.length == 1) // Lucene parses a one-word phrase as a TermQuery
-      return searchByTerms(Seq(("w:" + toks(0)) -> 1.0), rows)
-    Wand.topK(phraseScores(toks, 1.0, slop), rows)(identity)
+      searchByTerms(Seq(p.words.head -> 1.0), rows)
+    else Wand.topK(phrasePass(p, rows), rows)(_._2)
   }
 
-  /** All (docId, score) phrase contributions, pre-top-k — the scoring
-    * pipeline of [[searchPhrase]], reused by the parsed-query score
-    * composition. Empty when a phrase word is unindexed.
-    *
-    * `slop > 0` = sloppy PhraseQuery: an anchor position `p` of the first
-    * word matches when EVERY word `j` has a position within `slop` of its
-    * expected slot `p + j`; pf = the anchor count, scored exactly like the
-    * exact route (tf = pf). slop 0 degenerates to the exact rule. For a
-    * two-word phrase this is Lucene's match set (`|q − (p+1)| ≤ slop` —
-    * reversed adjacent order matches at slop 2, as in Lucene); the
-    * DELIBERATE deviations, same pattern as the fuzzy boost's 1/(1+d):
-    * each match weighs 1 where Lucene's SloppyPhraseScorer accumulates
-    * 1/(1+matchLength) (a float rule that cannot be mirrored exactly in
-    * integer-quantized cross-engine scoring), and ≥3-word phrases bound
-    * each word's displacement independently where Lucene bounds the SUM.
-    */
-  private[graft] def phraseScores(toks: Array[String],
-      boost: Double, slop: Int = 0): org.apache.spark.sql.Dataset[Scored] = {
-    require(slop >= 0, s"negative slop: $slop")
-    val words = toks.toSeq.map("w:" + _)
-    val dfs = index.dfOf(words.distinct)
-    if (words.exists(w => dfs.getOrElse(w, 0L) == 0L)) // a phrase term absent from the corpus
-      return spark.emptyDataset[Scored]
-    val (n, avgdl) = index.stats
-    val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
-    phraseScoresPositional(toks, boost * idfSum, avgdl, slop)
-  }
-
-  /** Positional PhraseQuery: per segment, ONE leapfrog conjunction over
-    * the phrase words' posting iterators WITH their position blobs ([[Codec.IterPos]]); at each
-    * conjunction match the exact phrase frequency comes from position
-    * intersection ([[Engine.phraseMatches]]). No stored-field access at
-    * all — the stored-field verify's scale-killer (a corpus-hot phrase
-    * degraded to a content-shuffling sort-merge join, VERDICT r04 #2) is
-    * structurally gone: only the phrase words' posting+position rows are
-    * read (positions of blocks the leapfrog skips are skipped bytes), and
-    * only (doc_id, score) rows leave the segment task. Scoring identical
-    * to the stored route: tf = pf, weight = boost·Σ idf over phrase
-    * positions, dl from the postings' inlined dl (pinned equal to
-    * [[phraseScoresStored]] in BoolPhraseSpec).
-    */
-  private def phraseScoresPositional(toks: Array[String], weight: Double,
-      avgdl: Double, slop: Int = 0): Dataset[Scored] = {
-    val words = toks.map("w:" + _)
-    val names = words.distinct.toSeq
-    val hits = index.termRows(names)(col("seg_id"), col("term"), col("postings"), col("positions"))
-      .as[(Long, String, Array[Byte], Array[Byte])]
-    val cfg = index.cfg
-    val nDistinct = names.size
-    perSegment(hits)(_._1) { (seg, it, allow, _) =>
-      Engine.phraseMatches(seg, it.toArray, words, nDistinct, cfg, allow, weight, avgdl, slop)
-    }
-  }
+  /** [[searchPhrase]]'s scoring pass before the merge (see [[termsPass]]). */
+  private[graft] def phrasePass(p: Engine.Phrase, rows: Int = 60): Dataset[(Long, Scored)] =
+    boolPass(Nil, rows = rows, phrases = Seq((p, 1.0, Engine.Occur.Should)))
 
   /** Stored-field phrase verify: shingle-assisted candidate conjunction +
     * content re-tokenization. Never selected at run time — it is the
@@ -726,7 +700,7 @@ final class Engine(val index: Index) {
     // corpus-hot phrase at 100x degrades to the shuffle join instead of
     // an 8 GB-limit broadcast failure.
     val candSide =
-      if (dfs.values.min <= phraseBroadcastMax) broadcast(cand) else cand
+      if (dfs.values.min <= Engine.PhraseBroadcastMaxCand) broadcast(cand) else cand
     corpus
       .join(candSide, Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("docId"), pfDl.as("pd"))
@@ -987,55 +961,39 @@ final class Engine(val index: Index) {
   }
 
   /** Execute a full Lucene query string ([[Engine.parseLucene]] grammar):
-    * term / phrase / prefix / wildcard / fuzzy clauses with `+` / `-` /
-    * `^boost`.
+    * term / phrase / prefix / wildcard / fuzzy / range clauses with `+` /
+    * `-` / `^boost`.
     *
-    * Dispatch: multi-term clauses resolve to weighted term lists off the
-    * persisted dictionary (driver-side, vocabulary-sized); a query without
-    * phrase clauses runs as one [[searchBool]] (everything in-segment). A
-    * query MIXING phrases with other clauses composes scores the way
-    * Lucene's BooleanQuery sums its subscorers:
-    *
-    *   score(doc) = Σ term-clause BM25 (the exploded-postings exact-score
-    *                plan, [[scanScoreAll]])
-    *              + Σ phrase-clause scores ([[phraseScores]])
-    *
-    * summed by one hash aggregation over the unioned contribution tables,
-    * then MUST clauses intersect, MUST_NOT clauses exclude, and the
-    * bounded heap ranks. No global sort, no driver-side scoring.
-    *
-    * A MUST multi-term clause (`+pre*`, `+term~`, `+[a TO b]`) is Lucene's
-    * required rewrite: an OR-required GROUP — the doc must hold at least
-    * one expanded term; all matching expansions score. Groups fold into
-    * the same per-segment allow bitmap as MUST terms (the group's postings
-    * union ANDs in — [[Engine.boolAllow]]), and are exempt from accuracy
-    * pruning like every required clause.
-    *
-    * On the phrase-mixed path, when any required term/group clause is
-    * present, term-side membership (MUST / groups / MUST_NOT) rides the
-    * scoring scan itself as a per-term bitmask ([[scanScoreMembership]]) —
-    * no membership join touches postings a second time — and the phrase
-    * contributions graft on with one doc_id left_outer join. Without a
-    * required clause (a phrase-only doc can then match), the general
-    * shape unions all contribution tables, aggregates, and applies the
-    * membership joins ([[conjunctiveDocs]] / [[matchSet]]), every table
-    * doc_id-keyed so AQE plans the final joins.
+    * Multi-term clauses resolve to weighted term lists off the persisted
+    * dictionary (driver-side, vocabulary-sized). Every query then runs as
+    * ONE [[boolPass]] spec, the pass [[searchBool]] runs — Lucene's
+    * BooleanQuery, scored in one walk per segment:
+    *   - term clauses are the spec's terms (SHOULD, MUST, MUST_NOT);
+    *   - a MUST multi-term clause (`+pre*`, `+term~`, `+[a TO b]`) is
+    *     Lucene's required rewrite: an OR-required GROUP (the doc holds at
+    *     least one expanded term; all matching expansions score), exempt
+    *     from accuracy pruning like every required clause;
+    *   - a phrase clause is one more posting list, built in the segment
+    *     task from its words' positions ([[Engine.Phrase]]), so it scores,
+    *     filters (MUST) or excludes (MUST_NOT) exactly like a term.
+    * The required/prohibited algebra folds into the per-segment allow
+    * bitmap ([[Engine.boolAllow]]); score(doc) = Σ boost·idf·tfNorm over
+    * the matching SHOULD and MUST clauses, a phrase's tf being its phrase
+    * frequency. Without a doc filter the query is one Spark job.
     */
   def searchParsed(corpus: DataFrame, q: String, rows: Int = 60,
                    maxExpansions: Int = 50): DataFrame =
-    Wand.topK(parsedPass(corpus, q, rows, maxExpansions), rows)(identity)
+    Wand.topK(parsedPass(q, rows, maxExpansions), rows)(_._2)
 
-  /** [[searchParsed]]'s (doc_id, score) rows before the merge (see
-    * [[termsPass]]).
-    */
-  private[graft] def parsedPass(corpus: DataFrame, q: String, rows: Int = 60,
-                                maxExpansions: Int = 50): Dataset[Scored] = {
+  /** [[searchParsed]]'s scoring pass before the merge (see [[termsPass]]). */
+  private[graft] def parsedPass(q: String, rows: Int = 60,
+                                maxExpansions: Int = 50): Dataset[(Long, Scored)] = {
     import Engine.{FuzzyClause, Occur, PhraseClause, PrefixClause, TermClause, WildcardClause}
     val should = Seq.newBuilder[(String, Double)]
     val must = Seq.newBuilder[(String, Double)]
     val mustNot = Seq.newBuilder[String]
     val groups = Seq.newBuilder[Seq[(String, Double)]]
-    val phrases = Seq.newBuilder[(Array[String], Double, Engine.Occur, Int)]
+    val phrases = Seq.newBuilder[(Engine.Phrase, Double, Engine.Occur)]
     val clauses = Engine.parseLucene(q)
     // under the expansion cap each rewrite is an in-memory dictionary
     // pass (cheap); over it each is its own blocking driver-side
@@ -1096,136 +1054,12 @@ final class Engine(val index: Index) {
           case Occur.MustNot => mustNot += ("w:" + toks.head)
         }
       case (PhraseClause(toks, b, occ, slop), _) =>
-        phrases += ((toks.toArray, b, occ, slop))
+        phrases += ((Engine.Phrase(toks.map("w:" + _), slop), b, occ))
       case (c, None) =>
         throw new IllegalStateException(s"clause $c missing its expansion")
     }
-    val shouldSeq = should.result()
-    val mustSeq = must.result()
-    val notSeq = mustNot.result().distinct
-    val groupSeq = groups.result()
-    val phraseSeq = phrases.result()
-    if (phraseSeq.isEmpty)
-      return boolPass(shouldSeq, mustSeq, notSeq, rows, mustGroups = groupSeq).map(_._2)
-    val notSet = notSeq.toSet
-    if (mustSeq.exists(t => notSet(t._1))) // +t -t: unsatisfiable
-      return spark.emptyDataset[Scored]
-    // ONE df lookup for every clause kind (group filtering + scoring —
-    // on a vocabulary too large for the driver dictMap each dfOf is its
-    // own dictionary-scan job, so they must not repeat per clause)
-    val dfs = index.dfOf((shouldSeq.map(_._1) ++ mustSeq.map(_._1) ++
-      groupSeq.flatten.map(_._1)).distinct)
-    // required groups next to phrases: prohibited members drop (their docs
-    // are excluded anyway); a group left with no corpus-present member
-    // empties the result, as a df=0 MUST term does
-    val groupsKept = groupSeq.map(g => g.filterNot(t => notSet(t._1))
-      .filter(t => dfs.getOrElse(t._1, 0L) > 0L))
-    if (groupSeq.nonEmpty && groupsKept.exists(_.isEmpty))
-      return spark.emptyDataset[Scored]
-    val scoringTerms =
-      shouldSeq.filterNot(t => notSet(t._1)) ++ mustSeq ++ groupsKept.flatten
-    if (mustSeq.exists(t => dfs.getOrElse(t._1, 0L) == 0L)) // required term absent
-      return spark.emptyDataset[Scored]
-    val kept = scoringTerms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }
-      .filter(_._3 > 0)
-    val (n, avgdl) = index.stats
-    val weights = weightsOf(kept, n)
-    // build each phrase's contribution ONCE and reuse the same DataFrame
-    // for both the score union and the MUST/MUST_NOT membership join —
-    // identical canonical subtrees let Catalyst/AQE reuse the exchange,
-    // where the previous shape (a second phraseScores call at boost 1.0)
-    // guaranteed two full postings + verify passes per required phrase
-    val phraseDfs =
-      phraseSeq.map { case p @ (toks, b, occ, slop) =>
-        val boost = if (occ == Occur.MustNot) 1.0 else b
-        // |phrase hits| <= min df over the phrase's words — the same
-        // dictionary-known bound that gates the stored-verify broadcast;
-        // an unindexed word bounds the (empty) contribution at 0
-        val words = toks.map("w:" + _).distinct.toSeq
-        val d = index.dfOf(words)
-        val bound = if (d.size < words.size) 0L else d.values.min
-        (p, phraseScores(toks, boost, slop).toDF("doc_id", "score"), bound)
-      }
-    val scoringDfs = phraseDfs.collect {
-      case ((_, _, occ, _), df0, bound) if occ != Occur.MustNot => (df0, bound)
-    }
-    // Required term/group clauses present: every result doc holds a
-    // required — and therefore scoring — term, so the membership-folded
-    // scan ([[scanScoreMembership]]) is complete on its own: phrase
-    // contributions graft on with ONE left_outer join, replacing the
-    // union+agg+semi/anti-join cascade whose membership joins each
-    // re-shuffled postings against the aggregate (the prohibited-term
-    // anti-join folds into the same scan). The rare mask-overflow query
-    // (≥63 required clauses) and the required-clause-free shape — where
-    // a phrase-only doc can match, so the scan alone is NOT complete —
-    // keep the general union shape.
-    val folded = (mustSeq.nonEmpty || groupsKept.nonEmpty) &&
-      mustSeq.length + groupsKept.length < 63
-    var res =
-      if (folded) {
-        val base = scanScoreMembership(weights, avgdl, mustSeq.map(_._1),
-          groupsKept.map(_.map(_._1)), notSeq)
-        if (scoringDfs.isEmpty) base
-        else {
-          // +0.0 on phrase-free docs is exact, so folded scores are
-          // bit-identical to the union shape's for single-phrase queries.
-          // ONE scoring phrase (the common mixed-query shape): its
-          // per-segment leapfrog/verify emits each doc at most once (a doc
-          // lives in exactly one segment), so the doc_id re-aggregation is
-          // a no-op shuffle — rename and graft directly. Phrases can share
-          // docs across clauses, so >=2 keep the union+sum.
-          val pAgg = scoringDfs match {
-            case Seq((one, _)) => one.withColumnRenamed("score", "pscore")
-            case many => many.map(_._1).reduce(_ unionAll _)
-              .groupBy(col("doc_id")).agg(sum(col("score")).as("pscore"))
-          }
-          // explicit broadcast under the dictionary-known bound (the
-          // stored-verify gate's rule): the graft join then builds on the
-          // phrase side with no shuffle or sort of the scoring aggregate.
-          // A corpus-hot phrase fails open to a sort-merge join of two
-          // doc_id-keyed aggregates — (doc_id, score) rows only, never
-          // content (the r04 scale-killer shape is structurally gone).
-          val pSide =
-            if (scoringDfs.map(_._2).sum <= phraseBroadcastMax)
-              broadcast(pAgg)
-            else pAgg
-          base.join(pSide, Seq("doc_id"), "left_outer")
-            .select(col("doc_id"),
-              (col("score") + coalesce(col("pscore"), lit(0.0))).as("score"))
-        }
-      } else {
-        val parts: Seq[DataFrame] =
-          (if (weights.isEmpty) Nil
-           else Seq(scanScoreAll(weights, avgdl))) ++ scoringDfs.map(_._1)
-        if (parts.isEmpty) // purely negative query matches nothing, as in Lucene
-          return spark.emptyDataset[Scored]
-        var r = parts.reduce(_ unionAll _)
-          .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
-        if (mustSeq.nonEmpty)
-          r = r.join(conjunctiveDocs(mustSeq.map(_._1)).toDF("doc_id"),
-            Seq("doc_id"), "left_semi")
-        groupsKept.foreach { g => // ≥1 member per required group
-          r = r.join(matchSet(g), Seq("doc_id"), "left_semi")
-        }
-        if (notSeq.nonEmpty)
-          r = r.join(matchSet(notSeq.map(_ -> 1.0)), Seq("doc_id"), "left_anti")
-        r
-      }
-    phraseDfs.foreach { case ((_, _, occ, _), df0, bound) =>
-      // same dictionary-known bound gates the membership side: a required
-      // (or prohibited) phrase's doc set broadcasts when it provably fits
-      val side =
-        if (bound <= phraseBroadcastMax) broadcast(df0.select("doc_id"))
-        else df0.select("doc_id")
-      occ match {
-        case Occur.Must =>
-          res = res.join(side, Seq("doc_id"), "left_semi")
-        case Occur.MustNot =>
-          res = res.join(side, Seq("doc_id"), "left_anti")
-        case Occur.Should => ()
-      }
-    }
-    res.select(col("doc_id").as("docId"), col("score")).as[Scored]
+    boolPass(should.result(), must.result(), mustNot.result().distinct, rows,
+      mustGroups = groups.result(), phrases = phrases.result())
   }
 
   /** Lucene BooleanQuery semantics — the QueryParser `a +b -c` surface the
@@ -1261,7 +1095,11 @@ final class Engine(val index: Index) {
     Wand.topK(boolPass(should, must, mustNot, rows, accuracy, candidates, docPred, docFilter,
       mustGroups), rows)(_._2)
 
-  /** [[searchBool]]'s scoring pass before the merge (see [[termsPass]]). */
+  /** [[searchBool]]'s scoring pass before the merge (see [[termsPass]]),
+    * and the one spec builder of [[parsedPass]] and [[phrasePass]]:
+    * `phrases` are (phrase, boost, occur) clauses, each taking part under
+    * its [[Engine.Phrase.key]] exactly as a term would.
+    */
   private[graft] def boolPass(should: Seq[(String, Double)],
                               must: Seq[(String, Double)] = Nil,
                               mustNot: Seq[String] = Nil,
@@ -1269,21 +1107,25 @@ final class Engine(val index: Index) {
                               candidates: Int = 10000,
                               docPred: Option[Column] = None,
                               docFilter: Option[(String, String)] = None,
-                              mustGroups: Seq[Seq[(String, Double)]] = Nil)
+                              mustGroups: Seq[Seq[(String, Double)]] = Nil,
+                              phrases: Seq[(Engine.Phrase, Double, Engine.Occur)] = Nil)
       : Dataset[(Long, Scored)] = {
-    val notSet = mustNot.toSet
+    import Engine.Occur
+    lazy val noMatch = scorePass(Nil, rows, candidates, None, None)
+    def phraseKeys(occ: Occur): Seq[String] = phrases.collect { case (p, _, `occ`) => p.key }
+    val notSet = mustNot.toSet ++ phraseKeys(Occur.MustNot)
     // +t -t is unsatisfiable (Lucene: required AND prohibited -> no doc)
-    if (must.exists(t => notSet(t._1)))
-      return scorePass(Nil, rows, candidates, None, None)
-    // a SHOULD term that is also prohibited can never contribute (every
+    if ((must.map(_._1) ++ phraseKeys(Occur.Must)).exists(notSet)) return noMatch
+    // a SHOULD clause that is also prohibited can never contribute (every
     // doc holding it is excluded) — drop it from the scoring set up front
     val shouldKept = keptTerms(should.filterNot(t => notSet(t._1)), accuracy)
-    // ONE df lookup for all required clauses (each dfOf can be its own
-    // dictionary-scan job on a vocabulary too large for the driver map)
+    // ONE df lookup for all required clauses and phrase words (each dfOf
+    // can be its own dictionary-scan job on a vocabulary too large for
+    // the driver map)
     val reqDfs = index.dfOf(
-      (must.map(_._1) ++ mustGroups.flatten.map(_._1)).distinct)
+      (must.map(_._1) ++ mustGroups.flatten.map(_._1) ++ phrases.flatMap(_._1.words)).distinct)
     if (must.exists(t => reqDfs.getOrElse(t._1, 0L) == 0L))
-      return scorePass(Nil, rows, candidates, None, None) // required term absent from the corpus
+      return noMatch // required term absent from the corpus
     val mustKept = must.map { case (t, b) => (t, b, reqDfs.getOrElse(t, 0L)) }
     // OR-required groups (Lucene's required multi-term rewrite, `+pre*`):
     // members score like SHOULD terms but are exempt from accuracy
@@ -1295,20 +1137,37 @@ final class Engine(val index: Index) {
       g.filterNot(t => notSet(t._1))
         .map { case (t, b) => (t, b, reqDfs.getOrElse(t, 0L)) }
         .filter(_._3 > 0))
-    if (mustGroups.nonEmpty && groupsKept.exists(_.isEmpty))
-      return scorePass(Nil, rows, candidates, None, None)
+    if (mustGroups.nonEmpty && groupsKept.exists(_.isEmpty)) return noMatch
+    // a phrase with a word absent from the corpus matches nothing: a MUST
+    // one empties the result, as a df=0 MUST term does; others drop out
+    val (phrasesKept, absent) = phrases
+      .filterNot { case (p, _, occ) => occ == Occur.Should && notSet(p.key) }
+      .partition(_._1.words.forall(w => reqDfs.getOrElse(w, 0L) > 0L))
+    if (absent.exists(_._3 == Occur.Must)) return noMatch
+    val n = index.stats._1
+    // a scoring phrase weighs boost · Σ idf over its word POSITIONS; the
+    // same phrase twice sums its boosts, as [[weightsOf]] does for terms
+    val phraseWeights = phrasesKept.collect { case (p, b, occ) if occ != Occur.MustNot =>
+      p.key -> b * p.words.map(w => Bm25.idf(reqDfs(w).toDouble, n.toDouble)).sum
+    }.groupMapReduce(_._1)(_._2)(_ + _)
     val kept = shouldKept ++ mustKept ++ groupsKept.flatten
+    if (kept.isEmpty && phraseWeights.isEmpty) return noMatch
     val (bitmapFq, pred) = fqSplit(docPred, docFilter)
-    val spec = if (kept.isEmpty) None else {
-      val routed = specOf(0L, kept, index.stats._1, rows, candidates, useWand = accuracy < 0.9)
-      val local =
-        if (routed.route == Engine.Route.Columnar)
-          routed.copy(route = Engine.Route.Daat, useWand = false)
-        else routed
-      Some(local.copy(must = must.map(_._1).toSet, mustNot = notSet,
-        mustGroups = groupsKept.map(_.iterator.map(_._1).toSet)))
-    }
-    scorePass(spec.toSeq, rows, candidates, bitmapFq, pred)
+    // the route comes from the term clauses; the columnar plan cannot
+    // hold the boolean bitmaps or phrase lists, so it becomes DAAT
+    val routed =
+      if (kept.isEmpty) Engine.QuerySpec(0L, Map.empty, Engine.Route.Daat, useWand = accuracy < 0.9)
+      else specOf(0L, kept, n, rows, candidates, useWand = accuracy < 0.9)
+    val local =
+      if (routed.route == Engine.Route.Columnar)
+        routed.copy(route = Engine.Route.Daat, useWand = false)
+      else routed
+    val spec = local.copy(weights = local.weights ++ phraseWeights,
+      must = must.map(_._1).toSet ++ phraseKeys(Occur.Must),
+      mustNot = mustNot.toSet ++ phrasesKept.collect { case (p, _, Occur.MustNot) => p.key },
+      mustGroups = groupsKept.map(_.iterator.map(_._1).toSet),
+      phrases = phrasesKept.map(_._1).distinct)
+    scorePass(Seq(spec), rows, candidates, bitmapFq, pred)
   }
 
   /** THE scoring pass of 1..N term queries — [[searchByTerms]] (so
@@ -1335,7 +1194,8 @@ final class Engine(val index: Index) {
   }
 
   /** The segment-local side of [[scorePass]]: ONE scan of the specs'
-    * terms plus their MUST_NOT terms, scored in the scan task by
+    * terms, their MUST_NOT terms and their phrase words (with positions,
+    * read only when some spec has a phrase), scored in the scan task by
     * [[perSegment]] — fq, predicate and tombstones resolve to the allow
     * bitmap BEFORE any heap (a covered fq joins the persisted per-segment
     * bitmaps, no docmeta scan). Each segment's rows materialize once and
@@ -1348,88 +1208,40 @@ final class Engine(val index: Index) {
   private def segmentPass(specs: Seq[Engine.QuerySpec], heapSize: Int, avgdl: Double,
       bitmapFq: Option[(String, String)],
       docPred: Option[Column]): Dataset[(Long, Scored)] = {
-    val names = specs.flatMap(s => s.weights.keys ++ s.mustNot).distinct
+    val phraseWords = specs.flatMap(_.phrases.flatMap(_.words)).distinct
+    val names = (specs.flatMap(_.scanTerms) ++ phraseWords).distinct
     val cfg = index.cfg
     val specsB = spark.sparkContext.broadcast(specs.toArray)
-    perSegment(segHits(names), bitmapFq, docPred)(_.seg_id) { (seg, it, allow, _) =>
-      val segRows = it.toArray // shared once, re-traversed per spec (≤|q| rows)
+    perSegment(segRows(names, phraseWords), bitmapFq, docPred)(_.seg_id) { (seg, it, allow, _) =>
+      val rows = it.toArray
+      val hits = rows.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
+      val positions = rows.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
       specsB.value.iterator.flatMap { s =>
-        s.scoreSegment(seg, segRows, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
+        s.scoreSegment(seg, hits, positions, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
       }
     }
   }
 
   /** All matching docs with exact raw scores — no top-k, no quantization:
-    * (doc_id, score). The exploded-postings hash-agg plan (map-side
-    * partial sums per segment file), tombstones excluded before anything
-    * downstream.
+    * (doc_id, score). The exploded-postings hash-agg plan (term_id+term
+    * collision guard, broadcast weight join, map-side partial sums per
+    * segment file), tombstones excluded before anything downstream
+    * ([[liveScores]]).
     */
   private[graft] def scanScoreAll(
       weights: Map[String, Double], avgdl: Double,
-      docPred: Option[Column] = None): DataFrame =
-    scanScoreBase(weights, avgdl, docPred, membership = None)
-
-  /** Shared builder behind [[scanScoreAll]] and [[scanScoreMembership]] —
-    * ONE copy of the exploded-postings scan (term_id+term collision
-    * guard, broadcast weight join, BM25 part, [[liveScores]] exclusion)
-    * so the two routes cannot drift. `membership = None` keeps the plan byte-
-    * identical to the historical scanScoreAll (no mask column anywhere).
-    */
-  private def scanScoreBase(
-      weights: Map[String, Double], avgdl: Double,
-      docPred: Option[Column],
-      membership: Option[(Seq[String], Seq[Seq[String]], Seq[String])]): DataFrame = {
-    // (term, weight, membership bitmask) rows; prohibited terms ride the
-    // scan at weight 0 (zero score contribution by construction)
-    val wRows: Seq[(String, Double, Long)] = membership match {
-      case None => weights.toSeq.map { case (t, w) => (t, w, 0L) }
-      case Some((must, groups, mustNot)) =>
-        val notBit = 1L << (must.length + groups.length)
-        def maskOf(t: String): Long = {
-          var m = 0L
-          var i = 0
-          while (i < must.length) { if (must(i) == t) m |= 1L << i; i += 1 }
-          var j = 0
-          while (j < groups.length) {
-            if (groups(j).contains(t)) m |= 1L << (must.length + j); j += 1
-          }
-          m
-        }
-        weights.toSeq.map { case (t, w) => (t, w, maskOf(t)) } ++
-          mustNot.map(t => (t, 0.0, notBit))
-    }
-    val names = wRows.map(_._1)
-    val wDf = membership match {
-      case None => wRows.map { case (t, w, _) => (t, w) }.toDF("term", "w")
-      case Some(_) => wRows.toDF("term", "w", "mask")
-    }
-    val maskCols = if (membership.isDefined) Seq(col("mask")) else Nil
-    val exploded = index.termRows(names)(col("seg_id"), col("term"), col("postings"))
-      .join(broadcast(wDf), Seq("term"))
-      .select(Seq(col("seg_id"), col("w")) ++ maskCols :+
-        explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"): _*)
-      .select(Seq(
-        packedDocId(col("seg_id"), col("p.local")).as("doc_id"),
+      docPred: Option[Column] = None): DataFrame = {
+    val exploded = index.termRows(weights.keys.toSeq)(col("seg_id"), col("term"), col("postings"))
+      .join(broadcast(weights.toSeq.toDF("term", "w")), Seq("term"))
+      .select(col("seg_id"), col("w"),
+        explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"))
+      .select(packedDocId(col("seg_id"), col("p.local")).as("doc_id"),
         (col("w") * Bm25.tfNormCol(col("p.tf").cast("double"),
-          col("p.dl").cast("double"), lit(avgdl))).as("part")) ++ maskCols: _*)
-    liveScores(exploded, docPred) { base =>
-      membership match {
-        case None =>
-          base.groupBy(col("doc_id")).agg(sum(col("part")).as("score"))
-        case Some((must, groups, _)) =>
-          val notBit = 1L << (must.length + groups.length)
-          val requiredMask = notBit - 1 // all must+group bits
-          base.groupBy(col("doc_id"))
-            .agg(sum(col("part")).as("score"),
-              org.apache.spark.sql.functions.bit_or(col("mask")).as("mask"))
-            .where(col("mask").bitwiseAND(lit(requiredMask)) === lit(requiredMask) &&
-              col("mask").bitwiseAND(lit(notBit)) === lit(0L))
-            .select(col("doc_id"), col("score"))
-      }
-    }
+          col("p.dl").cast("double"), lit(avgdl))).as("part"))
+    liveScores(exploded, docPred)(_.groupBy(col("doc_id")).agg(sum(col("part")).as("score")))
   }
 
-  /** THE live-doc rule of the exploded-postings plans ([[scanScoreBase]],
+  /** THE live-doc rule of the exploded-postings plans ([[scanScoreAll]],
     * [[columnarPass]]); `agg` folds posting rows into per-doc scores. A
     * docmeta predicate semi-joins the posting rows ([[Index.docmeta]]
     * excludes tombstoned docs, so it is also the kill filter); otherwise
@@ -1444,32 +1256,6 @@ final class Engine(val index: Index) {
       agg(exploded).join(index.killedDocIds, Seq("doc_id"), "left_anti")
     case None => agg(exploded)
   }
-
-  /** [[scanScoreAll]] with Boolean membership folded into the SAME scan
-    * and aggregation — the phrase-mixed path's required/prohibited
-    * algebra without any extra postings pass or join shuffle.
-    *
-    * Every required clause's terms are already scoring terms, so their
-    * presence per doc is knowable from the rows the scoring scan reads
-    * anyway; prohibited terms ride the same scan at weight 0 (zero score
-    * contribution by construction). Each term carries a driver-computed
-    * bitmask — bit i = MUST term i, bit |must|+j = member of group j,
-    * top bit = prohibited — broadcast with the weights, and ONE extra
-    * `bit_or` next to the score sum replaces what was previously a
-    * [[conjunctiveDocs]] semi-join, one [[matchSet]] semi-join per
-    * group, and a [[matchSet]] anti-join: at corpus scale those each
-    * re-shuffled a hot term's full postings against the aggregate.
-    * Returns (doc_id, score) already membership-filtered; score values
-    * are bit-identical to the scanScoreAll + joins shape (same
-    * contributions, same sum order class). Caller guarantees
-    * |must| + |groups| < 63 and weights ∩ mustNot = ∅.
-    */
-  private[graft] def scanScoreMembership(
-      weights: Map[String, Double], avgdl: Double,
-      must: Seq[String], groups: Seq[Seq[String]],
-      mustNot: Seq[String]): DataFrame =
-    scanScoreBase(weights, avgdl, docPred = None,
-      membership = Some((must, groups, mustNot)))
 
   /** The columnar side of [[scorePass]] (dense queries on segments wider
     * than [[DenseArraySegShiftMax]]): the postings of the specs' terms
@@ -2283,33 +2069,72 @@ object Engine {
     case object Columnar extends Route
   }
 
-  /** One term query of the engine's scoring pass: `weights` (boost·idf)
-    * and `route` as the engine's `specOf` gives them, `useWand` (block-max
+  /** One query of the engine's scoring pass: `weights` (boost·idf) and
+    * `route` as the engine's `specOf` gives them, `useWand` (block-max
     * pruning on the DAAT route), the search-after cursor `after` (score_q,
-    * doc_id; the default admits every doc), and BooleanQuery clauses
-    * ([[boolAllow]]).
+    * doc_id; the default admits every doc), BooleanQuery clauses
+    * ([[boolAllow]]) and phrase clauses: each phrase takes part in
+    * `weights`, `must` and `mustNot` under its [[Phrase.key]].
     */
   private[graft] final case class QuerySpec(
       qid: Long, weights: Map[String, Double], route: Route, useWand: Boolean,
       after: (Long, Long) = (Long.MaxValue, Long.MinValue),
       must: Set[String] = Set.empty, mustNot: Set[String] = Set.empty,
-      mustGroups: Seq[Set[String]] = Nil) {
+      mustGroups: Seq[Set[String]] = Nil, phrases: Seq[Phrase] = Nil) {
+
+    /** The terms the segments scan reads for this query: weighted and
+      * prohibited terms (phrase keys stand for their words, which the
+      * scan adds with their positions).
+      */
+    def scanTerms: Seq[String] = {
+      val keys = phrases.iterator.map(_.key).toSet
+      (weights.keysIterator ++ mustNot.iterator).filterNot(keys).toSeq
+    }
 
     /** This query's top-`heapSize` of one segment, after the cursor and
       * under `allow0` (fq/kill, null = every doc) narrowed by its clauses;
-      * the kernels skip rows of terms it does not weight.
+      * each phrase first joins `rows` as its virtual posting list, built
+      * from its words' `positions` ([[Phrase.hit]]). The kernels skip
+      * rows of terms it does not weight.
       */
-    def scoreSegment(seg: Long, rows: Array[SegHit], allow0: RoaringBitmap,
-        heapSize: Int, avgdl: Double, cfg: IndexConfig): Iterator[Scored] = {
+    def scoreSegment(seg: Long, rows: Array[SegHit], positions: Map[String, Array[Byte]],
+        allow0: RoaringBitmap, heapSize: Int, avgdl: Double, cfg: IndexConfig): Iterator[Scored] = {
+      val all = if (phrases.isEmpty) rows else rows ++ phrases.flatMap(_.hit(seg, rows, positions))
       val allow =
         if (must.isEmpty && mustNot.isEmpty && mustGroups.isEmpty) allow0
-        else boolAllow(rows, must, mustNot, allow0, cfg.segShift, mustGroups)
+        else boolAllow(all, must, mustNot, allow0, cfg.segShift, mustGroups)
       val (aScore, aDoc) = after
       if (allow != null && allow.isEmpty) Iterator.empty
       else if (route == Route.DenseArray)
-        Wand.scoreSegmentDense(seg, rows.iterator, weights, avgdl, heapSize, cfg, allow, aScore, aDoc)
+        Wand.scoreSegmentDense(seg, all.iterator, weights, avgdl, heapSize, cfg, allow, aScore, aDoc)
       else
-        Wand.scoreSegment(seg, rows.iterator, weights, avgdl, heapSize, cfg, allow, useWand, aScore, aDoc)
+        Wand.scoreSegment(seg, all.iterator, weights, avgdl, heapSize, cfg, allow, useWand, aScore, aDoc)
+    }
+  }
+
+  /** A PhraseQuery clause: its `w:` words in order and its slop. In a
+    * segment its matches are one more posting list — (doc, phrase
+    * frequency, dl) rows, so tf = pf — and score, filter and exclude
+    * through the term kernels unchanged (Lucene's PhraseQuery is likewise
+    * one more sub-scorer of the BooleanQuery walk).
+    */
+  private[graft] final case class Phrase(words: Seq[String], slop: Int) {
+    require(slop >= 0, s"negative slop: $slop")
+
+    /** The virtual list's term. Quotes and spaces are outside the term
+      * alphabet [a-z0-9:], so no indexed term can take it.
+      */
+    val key: String = words.mkString("\"", " ", "\"~" + slop)
+
+    /** This phrase's posting list in segment `seg` from its words' `rows`
+      * and `positions` ([[phraseMatches]]); None when it matches no doc
+      * there.
+      */
+    def hit(seg: Long, rows: Array[SegHit], positions: Map[String, Array[Byte]]): Option[SegHit] = {
+      val ps = phraseMatches(seg, rows, positions, words.toArray, slop)
+      if (ps.isEmpty) None
+      else Some(SegHit(seg, key, ps.length, ps.iterator.map(_.tf).max,
+        ps.iterator.map(_.dl).min, Codec.encode(ps)))
     }
   }
 
@@ -2328,7 +2153,9 @@ object Engine {
     */
   val MissingFeatureDistQ: Long = 10000000001L
 
-  /** Phrase-candidate broadcast gate: ids are 8 B + row overhead, so 2M
+  /** Phrase-candidate broadcast gate of the stored-field phrase verify
+    * (`phraseScoresStored`, the positional route's test reference): ids
+    * are 8 B + row overhead, so 2M
     * candidates ≈ 16-30 MB broadcast — comfortably inside executor
     * memory while covering every realistic phrase (a rarer-than-1-in-300
     * word at the 600M-doc scale). Above it the semi-join falls back to
@@ -2388,7 +2215,7 @@ object Engine {
         graft.analyze.Tokenizer.tokens(content)) { ts =>
       // slop 0: per-anchor k-way consecutive conjunction; slop > 0: per
       // word an EXISTS over its [i+j-slop, i+j+slop] window (the
-      // independent-window sloppy rule of [[phraseScores]]) — the anchor
+      // independent-window sloppy rule of [[phraseMatches]]) — the anchor
       // sequence then spans every position of the first word, not just
       // those with k-1 following slots
       val anchors =
@@ -2533,41 +2360,55 @@ object Engine {
   }
 
   /** Segment-local positional PhraseQuery kernel: leapfrog conjunction
-    * over the phrase's DISTINCT word iterators (rarest leads, hot lists
-    * block-skip — position payloads of skipped blocks are skipped bytes),
-    * and at each doc where all words co-occur, the exact phrase frequency
-    * by ordered position intersection: pf = |{p ∈ pos(w₀) : p+j ∈ pos(wⱼ)
-    * ∀j}|. Within a doc the per-slot pointers only move forward (targets
-    * p+j are monotone in p), so the intersection is linear in Σ|positions|.
-    * Duplicate phrase words share one iterator/position array. Emits
-    * Scored(globalDocId, weight·tfNorm(pf, dl)) for pf > 0 matches;
-    * tombstone/allow-filtered. Reference anchor: Lucene
-    * ExactPhraseMatcher over positional postings (the host's `q="a b"`
-    * surface, lire.html:83).
+    * over the phrase's DISTINCT word iterators with their position blobs
+    * ([[Codec.IterPos]]; rarest leads, hot lists block-skip — position
+    * payloads of skipped blocks are skipped bytes), and at each doc where
+    * all words co-occur, the phrase frequency by ordered position
+    * intersection: pf = |{p ∈ pos(w₀) : p+j ∈ pos(wⱼ) ∀j}|. Within a doc
+    * the per-slot pointers only move forward (targets p+j are monotone in
+    * p), so the intersection is linear in Σ|positions|. Duplicate phrase
+    * words share one iterator/position array. Returns the (local, pf, dl)
+    * postings of the pf > 0 docs, ascending, dl from the postings'
+    * inlined dl; empty when a word has no row in the segment. Reference
+    * anchor: Lucene ExactPhraseMatcher over positional postings (the
+    * host's `q="a b"` surface, lire.html:83).
+    *
+    * `slop > 0` = sloppy PhraseQuery: an anchor position `p` of the first
+    * word matches when EVERY word `j` has a position within `slop` of its
+    * expected slot `p + j`; pf = the anchor count. slop 0 degenerates to
+    * the exact rule. For a two-word phrase this is Lucene's match set
+    * (`|q − (p+1)| ≤ slop` — reversed adjacent order matches at slop 2, as
+    * in Lucene); the DELIBERATE deviations, same pattern as the fuzzy
+    * boost's 1/(1+d): each match weighs 1 where Lucene's
+    * SloppyPhraseScorer accumulates 1/(1+matchLength) (a float rule that
+    * cannot be mirrored exactly in integer-quantized cross-engine
+    * scoring), and ≥3-word phrases bound each word's displacement
+    * independently where Lucene bounds the SUM.
     */
-  private[query] def phraseMatches(seg: Long,
-      rows: Array[(Long, String, Array[Byte], Array[Byte])],
-      words: Array[String], nDistinct: Int, cfg: IndexConfig,
-      allow: RoaringBitmap, weight: Double, avgdl: Double,
-      slop: Int = 0): Iterator[Scored] = {
+  private[query] def phraseMatches(seg: Long, rows: Array[SegHit],
+      positions: Map[String, Array[Byte]], words: Array[String],
+      slop: Int): Array[Codec.Posting] = {
+    val distinct = words.distinct
     val byTerm = new java.util.HashMap[String, Codec.IterPos]()
     rows.foreach { r =>
-      // no build path writes two rows per (segment, term) (compaction units
-      // hold disjoint doc ranges); a duplicate here is index corruption —
-      // fail loudly rather than silently misrank
-      require(byTerm.put(r._2, {
-        require(r._4 != null,
-          s"positional phrase route on positionless row (term ${r._2}, seg $seg)")
-        new Codec.IterPos(r._3, r._4)
-      }) == null, s"duplicate (segment, term) row for ${r._2} in seg $seg")
+      if (distinct.contains(r.term)) {
+        // no build path writes two rows per (segment, term) (compaction
+        // units hold disjoint doc ranges); a duplicate here is index
+        // corruption — fail loudly rather than silently misrank
+        require(byTerm.put(r.term, {
+          val pos = positions.getOrElse(r.term, null)
+          require(pos != null,
+            s"positional phrase route on positionless row (term ${r.term}, seg $seg)")
+          new Codec.IterPos(r.postings, pos)
+        }) == null, s"duplicate (segment, term) row for ${r.term} in seg $seg")
+      }
     }
-    if (byTerm.size < nDistinct) return Iterator.empty
-    val its: Array[Codec.IterPos] =
-      words.distinct.map(byTerm.get).sortBy(_.numEntries)
-    if (its.exists(_.numEntries == 0)) return Iterator.empty
+    if (byTerm.size < distinct.length) return Array.empty
+    val its: Array[Codec.IterPos] = distinct.map(byTerm.get).sortBy(_.numEntries)
+    if (its.exists(_.numEntries == 0)) return Array.empty
     val slots: Array[Codec.IterPos] = words.map(byTerm.get) // dups share one iter
     val ptrs = new Array[Int](words.length)
-    val out = Array.newBuilder[Scored]
+    val out = Array.newBuilder[Codec.Posting]
     var live = true
     while (live) {
       var target = its(0).curLocal
@@ -2582,39 +2423,35 @@ object Engine {
         }
       }
       if (live) {
-        if (allow == null || allow.contains(target)) {
-          val p0 = slots(0).curPositions
-          java.util.Arrays.fill(ptrs, 0)
-          var pf = 0
-          var a = 0
-          while (a < p0.length) {
-            val p = p0(a)
-            var ok = true
-            var j = 1
-            while (ok && j < slots.length) {
-              // word j accepted anywhere in [p+j-slop, p+j+slop]; anchors
-              // ascend, so the window's lower bound ascends and each slot
-              // pointer only moves forward — linear in Σ|positions| at any
-              // slop (slop 0 = the exact conjunction)
-              val lj = slots(j).curPositions
-              var q = ptrs(j)
-              val lo = p + j - slop
-              while (q < lj.length && lj(q) < lo) q += 1
-              ptrs(j) = q
-              ok = q < lj.length && lj(q) <= p + j + slop
-              j += 1
-            }
-            if (ok) pf += 1
-            a += 1
+        val p0 = slots(0).curPositions
+        java.util.Arrays.fill(ptrs, 0)
+        var pf = 0
+        var a = 0
+        while (a < p0.length) {
+          val p = p0(a)
+          var ok = true
+          var j = 1
+          while (ok && j < slots.length) {
+            // word j accepted anywhere in [p+j-slop, p+j+slop]; anchors
+            // ascend, so the window's lower bound ascends and each slot
+            // pointer only moves forward — linear in Σ|positions| at any
+            // slop (slop 0 = the exact conjunction)
+            val lj = slots(j).curPositions
+            var q = ptrs(j)
+            val lo = p + j - slop
+            while (q < lj.length && lj(q) < lo) q += 1
+            ptrs(j) = q
+            ok = q < lj.length && lj(q) <= p + j + slop
+            j += 1
           }
-          if (pf > 0)
-            out += Scored(cfg.globalOf(seg, target),
-              weight * Bm25.tfNorm(pf.toDouble, slots(0).curDl.toDouble, avgdl))
+          if (ok) pf += 1
+          a += 1
         }
+        if (pf > 0) out += Codec.Posting(target, pf, slots(0).curDl)
         if (!its(0).next()) live = false
       }
     }
-    out.result().iterator
+    out.result()
   }
 
   /** Fold Lucene BooleanQuery clauses into a segment's allow bitmap:

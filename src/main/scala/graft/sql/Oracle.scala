@@ -542,7 +542,7 @@ object Oracle {
     require(toks.length >= 2, "phraseCtes mirrors the multi-token form")
     val kTok = toks.length
     // slop 0: exact per-anchor conjunction; slop > 0: the independent-
-    // window sloppy rule of Engine.phraseScores — word j anywhere in
+    // window sloppy rule of Engine.phraseMatches — word j anywhere in
     // [i+j-slop, i+j+slop] (list bounds clamp; anchors span every position
     // of the first word)
     val conds =

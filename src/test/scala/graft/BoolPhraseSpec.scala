@@ -151,6 +151,11 @@ class BoolPhraseSpec extends SparkSpec {
     assert(got == truth, "phrase match set must be exact (no collision FPs, no misses)")
   }
 
+  /** Every (doc_id, score_q) match of a phrase through [[Engine.searchPhrase]]. */
+  private def phraseAll(phrase: String, slop: Int = 0): Seq[(Long, Long)] =
+    engine.searchPhrase(corpus, phrase, rows = docs.size, slop = slop)
+      .as[(Long, Long, Long)].collect().map(r => (r._2, r._3)).sortBy(_._1).toSeq
+
   test("positional route is on and is score-identical to the stored-field twin") {
     for (phrase <- Seq(SparkEntry.PhraseBigram, SparkEntry.PhraseTrigram, "batch batch")) {
       val toks = Tokenizer.tokenizeScala(phrase)
@@ -158,8 +163,7 @@ class BoolPhraseSpec extends SparkSpec {
       val dfs = engine.index.dfOf(words.distinct)
       val (n, avgdl) = engine.index.stats
       val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
-      val pos = engine.phraseScores(toks, 1.0)
-        .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
+      val pos = phraseAll(phrase)
       val stored = engine.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
       assert(pos == stored, s"'$phrase': positional vs stored verify diverge")
@@ -168,7 +172,7 @@ class BoolPhraseSpec extends SparkSpec {
   }
 
   /** Brute sloppy pf under the independent-window rule of
-    * [[Engine.phraseScores]]: anchor i of word0 matches when every word j
+    * [[Engine.phraseMatches]]: anchor i of word0 matches when every word j
     * has an occurrence in [i+j-slop, i+j+slop].
     */
   private def bruteSloppyPf(ts: Array[String], toks: Array[String], slop: Int): Int =
@@ -229,8 +233,7 @@ class BoolPhraseSpec extends SparkSpec {
     val (n, avgdl) = engine.index.stats
     val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
     for (slop <- Seq(1, 2)) {
-      val pos = engine.phraseScores(toks, 1.0, slop)
-        .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
+      val pos = phraseAll(SparkEntry.PhraseBigram, slop)
       val stored = engine.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl, slop)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
       assert(pos == stored, s"slop $slop: positional vs stored verify diverge")
@@ -268,6 +271,30 @@ class BoolPhraseSpec extends SparkSpec {
     val direct = engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60, slop = 2)
       .collect().map(_.toSeq).toSeq
     assert(viaParser == direct)
+  }
+
+  test("a negative slop is rejected, for a one-word phrase too") {
+    for (phrase <- Seq("window", SparkEntry.PhraseBigram)) {
+      val e = intercept[IllegalArgumentException](
+        engine.searchPhrase(corpus, phrase, rows = 10, slop = -1))
+      assert(e.getMessage.contains("negative slop"), s"'$phrase': ${e.getMessage}")
+    }
+  }
+
+  test("phrase and parsed-with-phrase queries run one Spark job per call") {
+    val calls: Seq[(String, () => Unit)] = Seq(
+      "exact phrase" -> (() => engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60)),
+      "slop-2 phrase" -> (() => engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60,
+        slop = 2)),
+      "parsed mixed" -> (() => engine.searchParsed(corpus, SparkEntry.ParsedMixedQuery, rows = 60)),
+      "parsed mixed req" -> (() =>
+        engine.searchParsed(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60)))
+    // first calls load the index's lazy state (manifest, stats, vocabulary)
+    calls.foreach(_._2())
+    calls.foreach { case (name, call) =>
+      val (_, n) = jobsOf(call())
+      assert(n == 1, s"$name ran $n jobs")
+    }
   }
 
   test("conjunctive candidate generator equals the brute AND of term doc sets") {

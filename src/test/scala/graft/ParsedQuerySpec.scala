@@ -337,11 +337,11 @@ class ParsedQuerySpec extends SparkSpec {
         Some((id, math.round(total * Bm25.Quant)))
       }
     }.sortBy { case (id, sq) => (-sq, id) }.take(60)
-    assert(exp.nonEmpty, "gate precondition: the folded query matches docs")
+    assert(exp.nonEmpty, "gate precondition: the required-term query matches docs")
     val got = engine.searchParsed(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60)
       .as[(Long, Long, Long)].collect().toSeq
-    assert(got.map(_._2) == exp.map(_._1), "doc order (folded route)")
-    assert(got.map(_._3) == exp.map(_._2), "scores (folded route)")
+    assert(got.map(_._2) == exp.map(_._1), "doc order (required term)")
+    assert(got.map(_._3) == exp.map(_._2), "scores (required term)")
     // the required term must BIND: strictly fewer (or equal) docs than the
     // unrequired gate twin, and every result doc holds it
     got.foreach { case (_, id, _) =>
@@ -383,13 +383,13 @@ class ParsedQuerySpec extends SparkSpec {
     val exp = brute(grpExp)
     assert(exp.nonEmpty && exp.size < nonEmpty.size,
       "group must bind: some docs filtered, some kept")
-    // phrase-free route (searchBool bitmap algebra)
+    // the in-segment bitmap algebra
     val got = engine.searchParsed(corpus, "+w:s*^0.5 w:hash -w:stream", rows = 60)
       .as[(Long, Long, Long)].collect().toSeq
-    assert(got.map(_._2) == exp.map(_._1), "doc order (bitmap route)")
-    assert(got.map(_._3) == exp.map(_._2), "scores (bitmap route)")
-    // phrase-mixed route (membership semi-join): same group + a SHOULD
-    // phrase contributes score but must not affect the required set
+    assert(got.map(_._2) == exp.map(_._1), "doc order")
+    assert(got.map(_._3) == exp.map(_._2), "scores")
+    // with a phrase: same group + a SHOULD phrase that matches nothing
+    // adds no score and must not affect the required set
     val gotP = engine.searchParsed(corpus, "+w:s*^0.5 w:hash -w:stream \"zzz nosuchphrase\"",
       rows = 60).as[(Long, Long, Long)].collect().toSeq
     assert(gotP == got, "a non-matching SHOULD phrase changes nothing")
@@ -405,5 +405,112 @@ class ParsedQuerySpec extends SparkSpec {
       rows = 60).as[(Long, Long, Long)].collect().toSeq
     assert(gotR.map(_._2) == expR.map(_._1), "doc order (range group)")
     assert(gotR.map(_._3) == expR.map(_._2), "scores (range group)")
+  }
+
+  // ------------------------------------------------------------------
+  // phrases in the one segment pass: shapes that share it
+  // ------------------------------------------------------------------
+
+  /** Brute parsed query over the tiny corpus: `terms` are the scoring
+    * (SHOULD and MUST) terms with boosts, `must`/`mustNot` the term
+    * membership, `phrases` exact phrases (words, boost, occur). A doc
+    * matches when it meets every required and prohibited clause and some
+    * scoring clause; score = Σ term parts + Σ phrase parts, a phrase
+    * weighing boost · Σ idf over its words with tf = phrase frequency.
+    */
+  private def bruteParsed(terms: Seq[(String, Double)], must: Seq[String],
+      mustNot: Seq[String], phrases: Seq[(Seq[String], Double, Occur)],
+      k: Int): Seq[(Long, Long)] = {
+    val nonEmpty = docs.filter(d => Tokenizer.tokenCountScala(d._2) > 0)
+    val n = nonEmpty.size.toDouble
+    val dls = nonEmpty.map { case (id, c) =>
+      id -> math.min(Tokenizer.dlOf(Tokenizer.tokenCountScala(c)), IndexBuild.MaxDl).toDouble
+    }.toMap
+    val avgdl = dls.values.sum / n
+    def idf(t: String): Double = Bm25.idf(dfMap(t).toDouble, n)
+    def pf(ts: Array[String], ws: Seq[String]): Int =
+      (0 to ts.length - ws.length).count(i => ws.indices.forall(j => ts(i + j) == ws(j)))
+    nonEmpty.flatMap { case (id, c) =>
+      val ts = Tokenizer.tokenizeScala(c)
+      val pfs = phrases.map { case (ws, b, occ) => (ws, b, occ, pf(ts, ws)) }
+      val member = must.forall(termSets(id)) && !mustNot.exists(termSets(id)) &&
+        pfs.forall {
+          case (_, _, Occur.Must, p) => p > 0
+          case (_, _, Occur.MustNot, p) => p == 0
+          case _ => true
+        }
+      val tc = Tokenizer.termsScala(c).groupBy(identity).view
+        .mapValues(x => math.min(x.length, IndexBuild.MaxTf)).toMap
+      val parts = terms.flatMap { case (t, b) =>
+        tc.get(t).map(tf => b * idf(t) * Bm25.tfNorm(tf.toDouble, dls(id), avgdl))
+      } ++ pfs.collect { case (ws, b, occ, p) if occ != Occur.MustNot && p > 0 =>
+        b * ws.map(w => idf("w:" + w)).sum * Bm25.tfNorm(p.toDouble, dls(id), avgdl)
+      }
+      if (member && parts.nonEmpty) Some((id, math.round(parts.sum * Bm25.Quant))) else None
+    }.sortBy { case (id, sq) => (-sq, id) }.take(k)
+  }
+
+  private def parsed(e: Engine, q: String, rows: Int = 60): Seq[(Long, Long)] =
+    e.searchParsed(corpus, q, rows = rows).as[(Long, Long, Long)].collect()
+      .map(r => (r._2, r._3)).toSeq
+
+  private val HashJoin = Seq("hash", "join")
+
+  test("64 required terms plus a SHOULD phrase == brute composition") {
+    // the terms of one "hash join" doc, most frequent first: several docs
+    // hold all 64, and the phrase scores on some of them
+    val doc = bruteParsed(Nil, Nil, Nil, Seq((HashJoin, 1.0, Occur.Must)), docs.size)
+      .map(_._1).maxBy(id => (termSets(id).size, -id))
+    val req = termSets(doc).toSeq.sortBy(t => (-dfMap(t), t)).take(64)
+    assert(req.size == 64, s"precondition: doc $doc holds ${req.size} distinct terms")
+    val got = parsed(engine, req.map("+" + _).mkString(" ") + " \"hash join\"")
+    val exp = bruteParsed(req.map(_ -> 1.0), req, Nil, Seq((HashJoin, 1.0, Occur.Should)), 60)
+    assert(exp.map(_._1).contains(doc), "the source doc must match")
+    assert(got == exp)
+  }
+
+  test("a MUST and a MUST_NOT phrase in one query == brute composition") {
+    val got = parsed(engine, "+\"hash join\" -\"line hash\" w:window", rows = 500)
+    val exp = bruteParsed(Seq("w:window" -> 1.0), Nil, Nil,
+      Seq((HashJoin, 1.0, Occur.Must), (Seq("line", "hash"), 1.0, Occur.MustNot)), 500)
+    val withoutNot = bruteParsed(Seq("w:window" -> 1.0), Nil, Nil,
+      Seq((HashJoin, 1.0, Occur.Must)), 500)
+    assert(exp.nonEmpty && exp.size < withoutNot.size, "the MUST_NOT phrase must bind")
+    assert(got == exp)
+  }
+
+  test("the same phrase twice with two boosts sums both clauses") {
+    val got = parsed(engine, "\"hash join\"^2 \"hash join\"^0.5 w:window")
+    val exp = bruteParsed(Seq("w:window" -> 1.0), Nil, Nil,
+      Seq((HashJoin, 2.0, Occur.Should), (HashJoin, 0.5, Occur.Should)), 60)
+    assert(got == exp)
+  }
+
+  test("a SHOULD phrase alone matches a doc when no clause is required") {
+    val got = parsed(engine, "\"hash join\" w:window", rows = 500)
+    val exp = bruteParsed(Seq("w:window" -> 1.0), Nil, Nil,
+      Seq((HashJoin, 1.0, Occur.Should)), 500)
+    val phraseOnly = exp.map(_._1).filterNot(id => termSets(id)("w:window"))
+    assert(phraseOnly.nonEmpty, "precondition: a doc holds the phrase and not w:window")
+    assert(got == exp)
+  }
+
+  test("parsed phrase query on a segShift = 23 index == the default geometry") {
+    import graft.index.IndexConfig
+    val dir = tempDir("graft-parsed-wide")
+    IndexBuild.build(spark, Corpus.fromDocuments(spark, sfTiny), dir,
+      IndexConfig(segShift = 23, rangeSegsShift = 1))
+    val wide = new Engine(new Index(spark, dir))
+    val hot = engine.index.dictionary.orderBy($"df".desc, $"term".asc).limit(3)
+      .select($"term").as[String].collect().toSeq
+    assert(wide.routesDense(hot.map(_ -> 1.0)), "precondition: the terms route dense")
+    for (q <- Seq(hot.mkString(" ") + " \"hash join\"",
+        hot.map("+" + _).mkString(" ") + " \"hash join\"~2 -\"line hash\"")) {
+      val got = parsed(wide, q)
+      assert(got.nonEmpty, s"'$q' must match")
+      assert(got == parsed(engine, q), s"'$q': geometries diverge")
+    }
+    val exp = bruteParsed(hot.map(_ -> 1.0), Nil, Nil, Seq((HashJoin, 1.0, Occur.Should)), 60)
+    assert(parsed(wide, hot.mkString(" ") + " \"hash join\"") == exp)
   }
 }

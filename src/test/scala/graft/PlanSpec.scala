@@ -300,46 +300,17 @@ class PlanSpec extends SparkSpec {
     assert(got == fused, "fallback route must equal the fused probe route")
   }
 
-  test("phrase fail-open graft join exchanges only doc-keyed aggregates, never content") {
-    // force the non-broadcast (fail-open) phrase graft at test scale: the
-    // r04 scale-killer was this shape silently shuffling CONTENT — the pin
-    // asserts the fail-open plan exchanges only (doc_id, score)-class
-    // aggregate rows so a refactor can't reintroduce it (VERDICT r05 #9)
-    val e2 = new graft.query.Engine(new graft.query.Index(spark, engine.index.indexDir))
-    e2.phraseBroadcastMax = -1L
-    val corpus = Corpus.fromDocuments(spark, sfTiny)
-    // tiny test sides auto-broadcast, hiding the at-scale join strategy:
-    // disable auto-broadcast (plain + AQE threshold) so the plan shows
-    // the shuffle join a corpus-hot phrase takes at 100x
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val p = plan(e2.parsedPass(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60).toDF())
-      val df = e2.searchParsed(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60)
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"expected a fail-open shuffle join:\n$p")
-      val exchanges = "(?s)\\(\\d+\\) Exchange\\s*\\nInput \\[\\d+\\]: \\[([^\\]]*)\\]".r
-        .findAllMatchIn(p).map(_.group(1)).toSeq
-      assert(exchanges.nonEmpty, s"no Exchange inputs parsed from:\n$p")
-      exchanges.foreach { cols =>
-        assert(!cols.contains("content"), s"content crosses an exchange: [$cols]\n$p")
-      }
-      // and the fail-open result is identical to the broadcast route's
-      val a = df.collect().toSeq
-      val b = engine.searchParsed(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60)
-        .collect().toSeq
-      assert(a == b, "fail-open route must be result-identical to the broadcast route")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-        case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
-      prevAqe match {
-        case Some(v) => spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
+  test("parsed pass with phrases: no join, no exchange, no content") {
+    // phrases score inside the segment task as virtual posting lists, so
+    // a parsed query with MUST/SHOULD/MUST_NOT phrases and terms is one
+    // scan-task stage: no membership join, no doc-keyed shuffle, and no
+    // stored field of any kind (the r04 scale-killer read content)
+    for (q <- Seq(SparkEntry.ParsedMixedQuery, SparkEntry.ParsedMixedReqQuery,
+        "\"hash join\" -\"line hash\"~1 w:window")) {
+      val p = plan(engine.parsedPass(q, rows = 60))
+      assert(!p.contains("Join"), s"'$q' joins:\n$p")
+      assert(!p.contains("Exchange"), s"'$q' exchanges:\n$p")
+      assert(!p.contains("content"), s"'$q' reads stored content:\n$p")
     }
   }
 
@@ -378,13 +349,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("positional phrase plan never touches the corpus: one segments scan, no content, no join") {
-    val df = engine.phraseScores(
-      SparkEntry.PhraseBigram.split(" "), 1.0) // gate phrase: present at sfTiny
-    val p = plan(df.toDF())
+    val words = SparkEntry.PhraseBigram.split(" ").toSeq.map("w:" + _) // gate phrase: present at sfTiny
+    val p = plan(engine.phrasePass(Engine.Phrase(words, 0)))
     // the sloppy route shares the pin: slop only changes the in-task
-    // position arithmetic, never the plan shape
-    val pSloppy = plan(engine.phraseScores(
-      SparkEntry.PhraseBigram.split(" "), 1.0, slop = 2).toDF())
+    // position arithmetic (and the phrase's key), never the plan shape
+    val pSloppy = plan(engine.phrasePass(Engine.Phrase(words, 2)))
     def canon(s: String) = s.replaceAll("#\\d+L?", "#")
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+", "Lambda")
       .replaceAll("plan_id=\\d+", "plan_id=")
@@ -398,23 +367,37 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("docmeta"), s"phrase plan scans docmeta:\n$p")
     assert(!p.contains("Join"), s"phrase plan joins (expected postings-only cogroup):\n$p")
     assert(p.contains("segments"), s"phrase plan missing the segments scan:\n$p")
+    assert(segmentScans(engine.phrasePass(Engine.Phrase(words, 0)), engine.index.indexDir) == 1,
+      s"phrase plan scans the segments more than once:\n$p")
     // and the term_id filter reaches parquet so hot segments row-group-prune
     assert(p.contains("PushedFilters: [In(term_id"), s"no term_id pushdown:\n$p")
   }
 
-  test("folded parsed plan: membership rides the scoring scan — no semi/anti joins, no extra postings pass") {
-    val corpus = Corpus.fromDocuments(spark, sfTiny)
-    // required term + SHOULD phrase + prohibited term: the scanScoreMembership
-    // route. Membership joins are gone (bitmask in the scan aggregation);
-    // the only join is the phrase-contribution left_outer graft.
-    val p = plan(engine.parsedPass(corpus, "+w:the \"hash join\" -w:stream", rows = 60).toDF())
-    assert(!p.contains("LeftSemi"), s"membership semi-join survived the fold:\n$p")
-    assert(!p.contains("LeftAnti"), s"prohibited-term anti-join survived the fold:\n$p")
-    // exactly TWO postings scans: the flagged scoring scan and the phrase
-    // leapfrog — conjunctiveDocs/matchSet would each have added another
+  test("only a pass with a phrase reads the positions column") {
+    def readSchema(p: String): String =
+      "ReadSchema: struct<[^>]*>".r.findFirstIn(p).getOrElse(fail(s"no ReadSchema:\n$p"))
+    // term-only passes (single, bool, batch) read the SegHit columns only
+    for (pass <- Seq(engine.termsPass(SparkEntry.FlagshipTerms, rows = 30),
+        engine.boolPass(SparkEntry.FlagshipTerms, Seq("w:window" -> 1.0), Seq("w:stream")),
+        engine.parsedPass("w:hash^2 +w:window -w:stream"),
+        engine.manyPass(Seq(1L -> SparkEntry.FlagshipTerms, 2L -> Seq("w:window" -> 1.0))))) {
+      val p = plan(pass)
+      assert(readSchema(p) == "ReadSchema: struct<seg_id:bigint,term_id:bigint,term:string," +
+        "df:int,max_tf:int,min_dl:int,postings:binary>", s"term-only pass columns:\n$p")
+    }
+    val p = plan(engine.parsedPass(SparkEntry.ParsedMixedQuery))
+    assert(readSchema(p).contains("positions:binary"), s"phrase pass reads no positions:\n$p")
+  }
+
+  test("parsed plan with a phrase: one segments scan, no semi/anti joins") {
+    // required term + SHOULD phrase + prohibited term: membership is the
+    // in-segment allow bitmap and the phrase words ride the same scan
+    val p = plan(engine.parsedPass("+w:the \"hash join\" -w:stream", rows = 60))
+    assert(!p.contains("LeftSemi"), s"membership semi-join:\n$p")
+    assert(!p.contains("LeftAnti"), s"prohibited-term anti-join:\n$p")
     val nSegScans = "In\\(term_id".r.findAllIn(p).size
-    assert(nSegScans == 2, s"expected 2 segments scans, got $nSegScans:\n$p")
-    assert(!p.contains("content"), s"folded parsed plan reads stored content:\n$p")
+    assert(nSegScans == 1, s"expected 1 segments scan, got $nSegScans:\n$p")
+    assert(!p.contains("content"), s"parsed plan reads stored content:\n$p")
   }
 
   test("stored-verify fallback twin still broadcasts candidates; corpus never shuffles") {

@@ -121,33 +121,38 @@ class UpsertSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("folded membership scan excludes dead docs (== join composition under tombstones)") {
+  test("parsed phrase query on a tombstoned index == brute over live docs") {
+    import graft.analyze.Tokenizer
     import graft.query.Bm25
-    val (n, avgdl) = eng.index.stats
-    val terms = Seq("w:the" -> 1.0, "w:hash" -> 1.0, "w:join" -> 1.0)
-    val dfs = eng.index.dfOf(terms.map(_._1))
-    val weights = terms.map { case (t, b) =>
-      t -> b * Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    val folded = eng.scanScoreMembership(weights, avgdl,
-      must = Seq("w:the"), groups = Nil, mustNot = Seq("w:stream"))
-      .orderBy(col("doc_id")).collect().toSeq.map(_.toSeq)
-    // union shape on the same tombstoned engine: kill-excluded score scan,
-    // then the membership joins the fold replaced (a single term's
-    // conjunctiveDocs IS its match set)
-    val joined = eng.scanScoreAll(weights, avgdl)
-      .join(eng.conjunctiveDocs(Seq("w:the")).toDF("doc_id"), Seq("doc_id"), "left_semi")
-      .join(eng.conjunctiveDocs(Seq("w:stream")).toDF("doc_id"), Seq("doc_id"), "left_anti")
-      .orderBy(col("doc_id")).collect().toSeq.map(_.toSeq)
-    assert(folded.nonEmpty, "pin needs a non-empty match set")
-    assert(folded == joined, "folded route diverges from the join shape under tombstones")
-    folded.foreach(r => assert(!dead.contains(r.head.asInstanceOf[Long]),
-      s"dead doc in folded results: $r"))
-    // and THROUGH the parser (phrase + required + prohibited on the
-    // tombstoned index): no dead doc can occupy a result slot
-    val parsed = eng.searchParsed(base, "+w:the \"hash join\" -w:stream", rows = 60)
-      .collect().toSeq.map(_.toSeq)
-    parsed.foreach(r => assert(!dead.contains(r(1).asInstanceOf[Long]),
-      s"dead doc in parsed results: $r"))
+    // stats stay stale over every version the index holds (N, avgdl, df);
+    // results come from the live docs only
+    val all = base.select("doc_id", "content").unionByName(updates.select("doc_id", "content"))
+      .as[(Long, String)].collect().toSeq
+    val nonEmpty = all.filter(d => Tokenizer.tokenCountScala(d._2) > 0)
+    val n = nonEmpty.size.toDouble
+    val dls = nonEmpty.map { case (id, c) =>
+      id -> math.min(Tokenizer.dlOf(Tokenizer.tokenCountScala(c)), IndexBuild.MaxDl).toDouble
+    }.toMap
+    val avgdl = dls.values.sum / n
+    val terms = nonEmpty.map { case (id, c) => id -> Tokenizer.termsScala(c) }.toMap
+    def idf(t: String): Double = Bm25.idf(terms.values.count(_.contains(t)).toDouble, n)
+    val phraseIdf = idf("w:hash") + idf("w:join")
+    // +w:the "hash join" -w:stream: the SHOULD phrase adds its score
+    def matches(id: Long): Boolean = terms(id).contains("w:the") && !terms(id).contains("w:stream")
+    val exp = nonEmpty.collect { case (id, c) if !dead(id) && matches(id) =>
+      val tf = math.min(terms(id).count(_ == "w:the"), IndexBuild.MaxTf)
+      val ts = Tokenizer.tokenizeScala(c)
+      val pf = (0 until ts.length - 1).count(i => ts(i) == "hash" && ts(i + 1) == "join")
+      val s = idf("w:the") * Bm25.tfNorm(tf.toDouble, dls(id), avgdl) +
+        (if (pf > 0) phraseIdf * Bm25.tfNorm(pf.toDouble, dls(id), avgdl) else 0.0)
+      (id, math.round(s * Bm25.Quant))
+    }.sortBy { case (id, sq) => (-sq, id) }.take(60)
+    assert(nonEmpty.exists { case (id, _) => dead(id) && matches(id) },
+      "pin needs a dead doc that would match")
+    val got = eng.searchParsed(base, "+w:the \"hash join\" -w:stream", rows = 60)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(exp.nonEmpty, "pin needs a non-empty match set")
+    assert(got.map(r => (r._2, r._3)) == exp, "parsed results diverge from the live-doc brute")
   }
 
   test("predicate route excludes via the tombstone-filtered docmeta") {
