@@ -227,11 +227,11 @@ object Bench {
       "w:mergefactory" -> 1.0, "w:scanptr" -> 1.0, "w:sortz" -> 1.0)
     val allHot = Seq("w:license" -> 1.0, "w:copyright" -> 1.0, "w:version" -> 1.0)
 
-    // shift>22 guard fallback (VERDICT r04 next #9): a second index over a
-    // corpus slice at segShift 23 — wider than DenseArraySegShiftMax, so a
-    // dense query takes the columnar scan-score route instead of the
-    // per-segment dense array. Built untimed; the route precondition is
-    // asserted so the section can't silently measure the wrong path.
+    // wide-segment geometry (VERDICT r04 next #9): a second index over a
+    // corpus slice at segShift 23 — wider than DenseArraySegShiftMax, the
+    // dense-array window width, so a dense query runs the windowed dense
+    // kernel. Built untimed; the preconditions are asserted so the section
+    // can't silently measure a narrow-segment index or the DAAT route.
     val wideEngine = {
       val wideIdx = graft.util.Tmp.dir("graft-bench-wideseg-")
       IndexBuild.build(spark,
@@ -239,9 +239,9 @@ object Bench {
         wideIdx, IndexConfig(segShift = 23, rangeSegsShift = 1))
       val e = new Engine(new Index(spark, wideIdx))
       require(e.index.cfg.segShift > e.DenseArraySegShiftMax,
-        "wide-segment bench index must exceed the dense-array shift guard")
+        "wide-segment bench index must exceed the dense-array window width")
       require(e.routesDense(allHot, rows = 60),
-        "wide-segment section query must route dense (scan fallback)")
+        "wide-segment section query must route dense (windowed dense kernel)")
       e
     }
     // over-cap twin of the query engine (driver dictionary cap forced
@@ -276,9 +276,9 @@ object Bench {
       "wand_pruned" -> (() => engine.searchByTerms(hotRare, rows = 60,
         accuracy = 0.5, candidates = 1000).count()),
       "wand_all_hot" -> (() => engine.searchByTerms(allHot, rows = 60).count()),
-      // the shift>22 columnar fallback, on the wide-segment index (131072
-      // docs, ONE segment) — records the guard path before a 100× segment
-      // geometry forces it
+      // the windowed dense kernel on the wide-segment index (131072 docs,
+      // ONE segment, one window) — records the shift>22 path before a 100×
+      // segment geometry spreads a segment over several windows
       "all_hot_wideseg_fallback" -> (() =>
         wideEngine.searchByTerms(allHot, rows = 60).count()),
       // trigram-store q-gram-pruned fuzzy expansion + the 8-term OR search
@@ -341,16 +341,16 @@ object Bench {
       // membership rule, not the cheap expansion, decides the group
       "range_search" -> (() => engine.searchRange(Some("w:sa"), Some("w:sp"),
         incLo = true, incHi = false, rows = 60, maxExpansions = 8).count()),
-      "parsed_mixed" -> (() => engine.searchParsed(corpus,
+      "parsed_mixed" -> (() => engine.searchParsed(
         "+w:license \"get geter\" w:scanptr^2 -w:stream w:merge*^0.5 w:hach~1",
         rows = 60).count()),
       // positional phrase family head-to-head: the same bigram exact and
       // at slop 2 — the slop window rides the SAME leapfrog pass, so the
       // two records should sit within noise of each other (the plan is
       // pinned identical in PlanSpec)
-      "phrase_exact" -> (() => engine.searchPhrase(corpus, "get geter",
+      "phrase_exact" -> (() => engine.searchPhrase("get geter",
         rows = 60).count()),
-      "phrase_slop" -> (() => engine.searchPhrase(corpus, "get geter",
+      "phrase_slop" -> (() => engine.searchPhrase("get geter",
         rows = 60, slop = 2).count()),
       "gopher_rules" -> (() => graft.ml.TextStats.gopherRules(corpus)
         .agg(org.apache.spark.sql.functions.sum("keep"),

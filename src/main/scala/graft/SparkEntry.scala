@@ -686,40 +686,35 @@ object SparkEntry {
     // boosted term + MUST_NOT + prefix rewrite + fuzzy rewrite, scores
     // composed the way BooleanQuery sums subscorers
     "q_parsed_mixed" -> ((s, dir) =>
-      Engine.forDir(s, dir).searchParsed(Corpus.fromDocuments(s, dir),
-        ParsedMixedQuery, rows = 60)),
+      Engine.forDir(s, dir).searchParsed(ParsedMixedQuery, rows = 60)),
     // required-term variant: MUST/NOT membership is the per-segment
     // allow bitmap of the one scoring pass, phrase included
     "q_parsed_mixed_req" -> ((s, dir) =>
-      Engine.forDir(s, dir).searchParsed(Corpus.fromDocuments(s, dir),
-        ParsedMixedReqQuery, rows = 60)),
+      Engine.forDir(s, dir).searchParsed(ParsedMixedReqQuery, rows = 60)),
     // Solr /export: full sorted match set, exact scores, global ranks —
     // range-partitioned sort + zipWithIndex, no single-partition window
     "q_export" -> ((s, dir) => Engine.forDir(s, dir).exportMatches(ExportTerms)),
     // MUST multi-term rewrite = OR-required group: doc must hold >=1 of
     // the prefix expansion; all matching expansions score at the boost
     "q_parsed_group" -> ((s, dir) =>
-      Engine.forDir(s, dir).searchParsed(Corpus.fromDocuments(s, dir),
-        ParsedGroupQuery, rows = 60, maxExpansions = ParsedGroupMaxExpansions)),
+      Engine.forDir(s, dir).searchParsed(ParsedGroupQuery, rows = 60,
+        maxExpansions = ParsedGroupMaxExpansions)),
     // Lucene PhraseQuery from positional postings: a per-segment leapfrog
     // over the words with position intersection, scored as one more
     // posting list; tf = phrase frequency, weight = Σ idf
     "q_phrase" -> ((s, dir) =>
-      Engine.forDir(s, dir).searchPhrase(Corpus.fromDocuments(s, dir),
-        PhraseBigram, rows = 60)),
+      Engine.forDir(s, dir).searchPhrase(PhraseBigram, rows = 60)),
     // trigram phrase: two shingle terms + three word terms intersected
     "q_phrase3" -> ((s, dir) =>
-      Engine.forDir(s, dir).searchPhrase(Corpus.fromDocuments(s, dir),
-        PhraseTrigram, rows = 60)),
+      Engine.forDir(s, dir).searchPhrase(PhraseTrigram, rows = 60)),
     // sloppy PhraseQuery ("hash join"~1): positions within ±slop of the
     // expected slot — strictly wider than q_phrase at every SF
     "q_phrase_slop" -> ((s, dir) =>
-      Engine.forDir(s, dir).searchPhrase(Corpus.fromDocuments(s, dir),
-        PhraseBigram, rows = 60, slop = PhraseSlop1)),
+      Engine.forDir(s, dir).searchPhrase(PhraseBigram, rows = 60, slop = PhraseSlop1)),
     // slop 2 admits the REVERSED adjacent bigram (Lucene's transposition
     // distance), exercised through the full parser (`"hash join"~2`)
     "q_phrase_slop2" -> ((s, dir) =>
-      Engine.forDir(s, dir).searchParsed(Corpus.fromDocuments(s, dir),
+      Engine.forDir(s, dir).searchParsed(
         "\"" + PhraseBigram + "\"~" + PhraseSlop2, rows = 60)),
     // benchmark-contamination screen: dup-injected corpus vs a benchmark
     // table (every 13th base doc), flagged on any shared 13-token shingle

@@ -327,8 +327,8 @@ final class Engine(val index: Index) {
     * "license"), WAND upper bounds never prune, and the scalar DAAT loop
     * degenerates to an exhaustive per-posting walk with insertion sorts.
     * The dense-array kernel ([[Wand.scoreSegmentDense]]) wins there: one
-    * primitive score array per segment, no per-doc list handling
-    * ([[specOf]] picks it, or the columnar plan on wide segments).
+    * primitive score array per segment window, no per-doc list handling
+    * ([[specOf]] picks it).
     *
     * "Dominant" matters (round-2 regression, VERDICT r02 "What's wrong"
     * #1): a hot+rare mix (selective identifier + ubiquitous header terms —
@@ -348,8 +348,7 @@ final class Engine(val index: Index) {
 
   /** Global doc id from exploded-posting (seg_id, local) columns — the ONE
     * definition of the packing (IndexConfig.globalOf as a Column); every
-    * exploded-postings plan ([[scanScoreAll]], [[columnarPass]]) must
-    * use it.
+    * exploded-postings plan ([[scanScoreAll]], [[matchSet]]) must use it.
     */
   private def packedDocId(seg: Column, local: Column): Column =
     shiftleft(seg, index.cfg.segShift).bitwiseOR(local.cast("long"))
@@ -380,25 +379,19 @@ final class Engine(val index: Index) {
                                  candidates: Int = 10000): Boolean =
     termSpec(terms, rows, accuracy, candidates).exists(_.route != Engine.Route.Daat)
 
-  /** Above this segment shift the dense-array scorer's per-task score
-    * array (2^shift doubles, 32 MB at 22) stops being free — wider
-    * geometries fall back to the columnar scan-score plan.
+  /** The dense-array kernels' window width, as a shift
+    * ([[Wand.DenseArraySegShiftMax]]): a segment wider than this scores
+    * window by window, a narrower one in a single window.
     */
-  val DenseArraySegShiftMax = 22
-
-  /** Whether this index's segments are narrow enough for a segment-local
-    * score array ([[DenseArraySegShiftMax]]) — the ONE place the shift
-    * guard is written.
-    */
-  private def denseArrayFits: Boolean = index.cfg.segShift <= DenseArraySegShiftMax
+  val DenseArraySegShiftMax: Int = Wand.DenseArraySegShiftMax
 
   /** One query's [[Engine.QuerySpec]] from its kept (term, boost, df)
     * triples, with THE route rule — one definition, so single and batched
     * routing can never diverge (the round-2 regression came from a routing
     * rule applied to the wrong term set). A dense query
     * ([[HotScanFraction]], and `candidates` not below `rows`) scores on
-    * the dense-array kernel while [[denseArrayFits]], on the columnar plan
-    * above it; every other query takes per-segment DAAT.
+    * the dense-array kernel at any segment width; every other query takes
+    * per-segment DAAT.
     */
   private def specOf(qid: Long, kept: Seq[(String, Double, Long)], n: Long,
                      rows: Int, candidates: Int, useWand: Boolean): Engine.QuerySpec = {
@@ -412,9 +405,7 @@ final class Engine(val index: Index) {
       domDf.toDouble / n.toDouble >= HotScanFraction
     }
     Engine.QuerySpec(qid, weights,
-      if (!dense) Engine.Route.Daat
-      else if (denseArrayFits) Engine.Route.DenseArray
-      else Engine.Route.Columnar, useWand)
+      if (dense) Engine.Route.DenseArray else Engine.Route.Daat, useWand)
   }
 
   /** The spec [[searchByTerms]] scores (None: no corpus-present term). */
@@ -571,7 +562,7 @@ final class Engine(val index: Index) {
     * A batch of one through [[scorePass]] on its [[specOf]] route:
     * rare/mixed terms -> per-segment DAAT (block-max WAND when `accuracy`
     * < 0.9); dense queries -> the segment-local dense-array scorer
-    * (columnar fallback above [[DenseArraySegShiftMax]]). All routes are
+    * (window by window above [[DenseArraySegShiftMax]]). All routes are
     * exact; rank-identity across the switch is pinned in IndexSpec
     * (including the hot+rare mix, which must stay on WAND).
     */
@@ -638,11 +629,10 @@ final class Engine(val index: Index) {
   }
 
   /** Lucene PhraseQuery over the word-term field (the Solr host's
-    * `"exact phrase"` query form), answered from positional postings alone;
-    * `corpus` is not read. A batch of one through [[scorePass]]: the
-    * phrase is one SHOULD phrase clause of a [[boolPass]] spec, so its
-    * matches score in the segment task as one more posting list
-    * ([[Engine.Phrase]]).
+    * `"exact phrase"` query form), answered from positional postings alone.
+    * A batch of one through [[scorePass]]: the phrase is one SHOULD phrase
+    * clause of a [[boolPass]] spec, so its matches score in the segment
+    * task as one more posting list ([[Engine.Phrase]]).
     *
     * Scoring is Lucene's PhraseQuery under BM25: tf = phrase frequency,
     * weight = Σ idf(term_i) over phrase POSITIONS (duplicates counted, as
@@ -651,7 +641,7 @@ final class Engine(val index: Index) {
     * the postings' inlined dl. `slop > 0` is the sloppy PhraseQuery
     * ([[Engine.phraseMatches]]); a negative slop is rejected.
     */
-  def searchPhrase(corpus: DataFrame, phrase: String, rows: Int = 60,
+  def searchPhrase(phrase: String, rows: Int = 60,
                    slop: Int = 0): DataFrame = {
     val toks = graft.analyze.Tokenizer.tokenizeScala(phrase)
     require(toks.nonEmpty, "empty phrase")
@@ -981,7 +971,7 @@ final class Engine(val index: Index) {
     * the matching SHOULD and MUST clauses, a phrase's tf being its phrase
     * frequency. Without a doc filter the query is one Spark job.
     */
-  def searchParsed(corpus: DataFrame, q: String, rows: Int = 60,
+  def searchParsed(q: String, rows: Int = 60,
                    maxExpansions: Int = 50): DataFrame =
     Wand.topK(parsedPass(q, rows, maxExpansions), rows)(_._2)
 
@@ -1079,10 +1069,7 @@ final class Engine(val index: Index) {
     * accuracy budget likewise only thins its OR-of-hash-terms list,
     * LireRequestHandler.java:697-740). A MUST term with df=0 empties the
     * result, as in Lucene. A batch of one through [[scorePass]], like
-    * [[searchByTerms]]; dense routing applies unchanged, but a query the
-    * columnar plan would take (dense on wide segments) takes exhaustive
-    * DAAT instead (the boolean bitmaps live in the segment-local pass —
-    * rare geometry, documented trade).
+    * [[searchByTerms]], with the same dense routing.
     */
   def searchBool(should: Seq[(String, Double)],
                  must: Seq[(String, Double)] = Nil,
@@ -1153,16 +1140,11 @@ final class Engine(val index: Index) {
     val kept = shouldKept ++ mustKept ++ groupsKept.flatten
     if (kept.isEmpty && phraseWeights.isEmpty) return noMatch
     val (bitmapFq, pred) = fqSplit(docPred, docFilter)
-    // the route comes from the term clauses; the columnar plan cannot
-    // hold the boolean bitmaps or phrase lists, so it becomes DAAT
+    // the route comes from the term clauses
     val routed =
       if (kept.isEmpty) Engine.QuerySpec(0L, Map.empty, Engine.Route.Daat, useWand = accuracy < 0.9)
       else specOf(0L, kept, n, rows, candidates, useWand = accuracy < 0.9)
-    val local =
-      if (routed.route == Engine.Route.Columnar)
-        routed.copy(route = Engine.Route.Daat, useWand = false)
-      else routed
-    val spec = local.copy(weights = local.weights ++ phraseWeights,
+    val spec = routed.copy(weights = routed.weights ++ phraseWeights,
       must = must.map(_._1).toSet ++ phraseKeys(Occur.Must),
       mustNot = mustNot.toSet ++ phrasesKept.collect { case (p, _, Occur.MustNot) => p.key },
       mustGroups = groupsKept.map(_.iterator.map(_._1).toSet),
@@ -1173,37 +1155,30 @@ final class Engine(val index: Index) {
   /** THE scoring pass of 1..N term queries — [[searchByTerms]] (so
     * [[searchAfter]], [[searchPage]]), [[searchBool]] and
     * [[searchManyByTerms]] only build [[Engine.QuerySpec]]s and call it.
-    * Segment-local specs share ONE [[segmentPass]], columnar specs ONE
-    * [[columnarPass]]; the caller's merge ([[Wand.topK]],
-    * [[Wand.topKPerQuery]]) folds their (query id, candidate) rows into
-    * one heap per query per task and merges the tasks' heaps on the
-    * driver. The doc filter is one per pass: a covered `bitmapFq` takes
-    * its result-identical predicate form on the columnar side.
+    * Every spec, on either route, scores in ONE [[segmentPass]]; the
+    * caller's merge ([[Wand.topK]], [[Wand.topKPerQuery]]) folds their
+    * (query id, candidate) rows into one heap per query per task and
+    * merges the tasks' heaps on the driver.
     */
   private[graft] def scorePass(specs: Seq[Engine.QuerySpec], rows: Int, candidates: Int,
       bitmapFq: Option[(String, String)],
       docPred: Option[Column]): Dataset[(Long, Scored)] = {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
     if (specs.isEmpty) return spark.emptyDataset[(Long, Scored)]
-    val (_, avgdl) = index.stats
-    val (columnar, local) = specs.partition(_.route == Engine.Route.Columnar)
-    val heapSize = math.min(candidates, rows)
-    val scanPred = bitmapFq.map { case (c, v) => col(c) === lit(v) }.orElse(docPred)
-    (Option.when(local.nonEmpty)(segmentPass(local, heapSize, avgdl, bitmapFq, docPred)) ++
-      Option.when(columnar.nonEmpty)(columnarPass(columnar, avgdl, scanPred))).reduce(_ unionAll _)
+    segmentPass(specs, math.min(candidates, rows), index.stats._2, bitmapFq, docPred)
   }
 
-  /** The segment-local side of [[scorePass]]: ONE scan of the specs'
-    * terms, their MUST_NOT terms and their phrase words (with positions,
-    * read only when some spec has a phrase), scored in the scan task by
-    * [[perSegment]] — fq, predicate and tombstones resolve to the allow
-    * bitmap BEFORE any heap (a covered fq joins the persisted per-segment
-    * bitmaps, no docmeta scan). Each segment's rows materialize once and
-    * every spec scores them ([[Engine.QuerySpec.scoreSegment]]) into a
-    * `heapSize` heap: the exact top-`rows` needs per-segment top-`rows`;
-    * a smaller `candidates` is the reference's approximate phase-1
-    * budget. Without side inputs the pass has no exchange: the scan, the
-    * kernels and the task's heaps are one stage.
+  /** The body of [[scorePass]]: ONE scan of the specs' terms, their
+    * MUST_NOT terms and their phrase words (with positions, read only when
+    * some spec has a phrase), scored in the scan task by [[perSegment]] —
+    * fq, predicate and tombstones resolve to the allow bitmap BEFORE any
+    * heap (a covered fq joins the persisted per-segment bitmaps, no
+    * docmeta scan). Each segment's rows materialize once and every spec
+    * scores them ([[Engine.QuerySpec.scoreSegment]]) into a `heapSize`
+    * heap: the exact top-`rows` needs per-segment top-`rows`; a smaller
+    * `candidates` is the reference's approximate phase-1 budget. Without
+    * side inputs the pass has no exchange: the scan, the kernels and the
+    * task's heaps are one stage, at any segment width.
     */
   private def segmentPass(specs: Seq[Engine.QuerySpec], heapSize: Int, avgdl: Double,
       bitmapFq: Option[(String, String)],
@@ -1225,8 +1200,12 @@ final class Engine(val index: Index) {
   /** All matching docs with exact raw scores — no top-k, no quantization:
     * (doc_id, score). The exploded-postings hash-agg plan (term_id+term
     * collision guard, broadcast weight join, map-side partial sums per
-    * segment file), tombstones excluded before anything downstream
-    * ([[liveScores]]).
+    * segment file) behind [[exportMatches]] and the docmeta fallbacks of
+    * grouping and block join. Tombstones are excluded before anything
+    * downstream: a docmeta predicate semi-joins the posting rows
+    * ([[Index.docmeta]] excludes tombstoned docs, so it is also the kill
+    * filter); otherwise tombstones anti-join the aggregate (no join when
+    * none exist; no strategy hint — AQE sizes the kill set at runtime).
     */
   private[graft] def scanScoreAll(
       weights: Map[String, Double], avgdl: Double,
@@ -1238,49 +1217,15 @@ final class Engine(val index: Index) {
       .select(packedDocId(col("seg_id"), col("p.local")).as("doc_id"),
         (col("w") * Bm25.tfNormCol(col("p.tf").cast("double"),
           col("p.dl").cast("double"), lit(avgdl))).as("part"))
-    liveScores(exploded, docPred)(_.groupBy(col("doc_id")).agg(sum(col("part")).as("score")))
-  }
-
-  /** THE live-doc rule of the exploded-postings plans ([[scanScoreAll]],
-    * [[columnarPass]]); `agg` folds posting rows into per-doc scores. A
-    * docmeta predicate semi-joins the posting rows ([[Index.docmeta]]
-    * excludes tombstoned docs, so it is also the kill filter); otherwise
-    * tombstones anti-join the aggregate before any top-k (no join when
-    * none exist; no strategy hint — AQE sizes the kill set at runtime).
-    */
-  private def liveScores(exploded: DataFrame, docPred: Option[Column])(
-      agg: DataFrame => DataFrame): DataFrame = docPred match {
-    case Some(pred) =>
-      agg(exploded.join(index.docmeta.where(pred).select("doc_id"), Seq("doc_id"), "left_semi"))
-    case None if index.hasTombstones =>
-      agg(exploded).join(index.killedDocIds, Seq("doc_id"), "left_anti")
-    case None => agg(exploded)
-  }
-
-  /** The columnar side of [[scorePass]] (dense queries on segments wider
-    * than [[DenseArraySegShiftMax]]): the postings of the specs' terms
-    * decode ONCE (explode before the join), the broadcast (query_id,
-    * term, w) table fans each posting out to its queries, a codegen'd
-    * hash agg sums per (query_id, doc_id) with map-side partials, then
-    * [[liveScores]] and each spec's cursor ([[Wand.cursorAccepts]]).
-    */
-  private def columnarPass(specs: Seq[Engine.QuerySpec], avgdl: Double,
-      docPred: Option[Column]): Dataset[(Long, Scored)] = {
-    val wRows = specs.flatMap(s => s.weights.map { case (t, w) => (s.qid, t, w) })
-    val cursors = specs.iterator.map(s => s.qid -> s.after).toMap
-    val exploded = index.termRows(wRows.map(_._2).distinct)(col("seg_id"), col("term"),
-        explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"))
-      .join(broadcast(wRows.toDF("query_id", "term", "w")), Seq("term"))
-      .select(col("query_id"),
-        packedDocId(col("seg_id"), col("p.local")).as("doc_id"),
-        (col("w") * Bm25.tfNormCol(col("p.tf").cast("double"),
-          col("p.dl").cast("double"), lit(avgdl))).as("part"))
-    liveScores(exploded, docPred)(
-      _.groupBy(col("query_id"), col("doc_id")).agg(sum(col("part")).as("score")))
-      .select(col("query_id"), col("doc_id"), col("score"))
-      .as[(Long, Long, Double)]
-      .map { case (q, d, sc) => (q, Scored(d, sc)) }
-      .filter { case (q, s) => Wand.cursorAccepts(cursors(q)._1, cursors(q)._2, s.docId, s.score) }
+    def agg(rows: DataFrame): DataFrame =
+      rows.groupBy(col("doc_id")).agg(sum(col("part")).as("score"))
+    docPred match {
+      case Some(pred) =>
+        agg(exploded.join(index.docmeta.where(pred).select("doc_id"), Seq("doc_id"), "left_semi"))
+      case None if index.hasTombstones =>
+        agg(exploded).join(index.killedDocIds, Seq("doc_id"), "left_anti")
+      case None => agg(exploded)
+    }
   }
 
   /** Two-phase retrieve-then-re-rank by a SECOND exact metric — the
@@ -1808,7 +1753,7 @@ final class Engine(val index: Index) {
         .toDF("rank", "parent", "score_q", "n_children")
     val (n, avgdl) = index.stats
     val weights = weightsOf(kept, n)
-    // Covered parent key + narrow segments: segment-local per-value fold
+    // Covered parent key: segment-local per-value fold
     // ([[Wand.scoreSegmentValueAgg]]) — postings fold into the dense
     // score array once, children quantize per doc, and each repo bitmap
     // sweeps its intersection into (parent, Σq, max q, n); ONE row per
@@ -1818,10 +1763,8 @@ final class Engine(val index: Index) {
     // vs 1 tiny value-row exchange here (measured 2.2 s → 0.7 s at the
     // 600k-doc bench corpus). Integer Σ/max per parent are partition-
     // order invariant, so output is identical to the join route (the
-    // fallback below, kept for uncovered keys / wide segments and pinned
-    // equal in PlanSpec).
-    val viaBitmap = index.hasFilters && index.filterColsComplete.contains("repo") &&
-      denseArrayFits
+    // fallback below, kept for uncovered keys and pinned equal in PlanSpec).
+    val viaBitmap = index.hasFilters && index.filterColsComplete.contains("repo")
     val agg: DataFrame =
       if (viaBitmap) {
         val wB = spark.sparkContext.broadcast(weights)
@@ -1871,59 +1814,34 @@ final class Engine(val index: Index) {
     * rank, doc_id, score_q); `rank` is group-relative (1..groupLimit);
     * docs with no value in the field form the null group, as in Solr.
     *
-    * Plan: covered field + narrow segments -> segment-local grouped
-    * scorer ([[Wand.scoreSegmentGrouped]]): postings fold into the dense
-    * score array ONCE, each group-value bitmap sweeps its intersection
-    * into a bounded heap of `groupLimit`, and only (value, top-doc) rows
-    * — bounded by values-in-segment × groupLimit — leave the segment
-    * task. The global merge is a keyed bounded heap (map-side partials),
-    * and groups then rank through the SAME TopKAgg over each group's
-    * best doc — no unpartitioned window, no driver-side loop anywhere.
-    * Uncovered fields score-all + join docmeta for the value (one
-    * shuffle of the match set — the facetScan analog, documented cost);
-    * an arbitrary `docPred` (Solr q+fq+group) takes the same fallback,
-    * with the predicate applied as [[scanScoreAll]]'s docmeta semi-join.
+    * Plan: covered field -> segment-local grouped scorer
+    * ([[Wand.scoreSegmentGrouped]]): postings fold into the dense score
+    * array ONCE per window, each group-value bitmap sweeps its
+    * intersection into a bounded heap of `groupLimit`, and only (value,
+    * top-doc) rows — bounded by values-in-segment × groupLimit per window
+    * — leave the segment task. The global merge is a keyed bounded heap
+    * (map-side partials), and groups then rank through the SAME TopKAgg
+    * over each group's best doc — no unpartitioned window, no driver-side
+    * loop anywhere. Uncovered fields score-all + join docmeta for the
+    * value (one shuffle of the match set — the facetScan analog,
+    * documented cost); an arbitrary `docPred` (Solr q+fq+group) takes the
+    * same fallback, with the predicate applied as [[scanScoreAll]]'s
+    * docmeta semi-join.
     *
     * EAGER: unlike every other Engine API, this runs the full scoring
     * jobs at call time — the tiny merged group table is localCheckpoint'd
-    * so the group-rank self-join can't recompute the heavy lineage twice
-    * (see [[searchGroupedVia]]). The checkpointed blocks are not fault
-    * tolerant: an executor loss after return fails downstream actions of
-    * the RETURNED DataFrame instead of recomputing (re-call to recover);
-    * acceptable because the checkpointed table is ≤ field-cardinality
-    * rows and the window between call and consumption is one query.
+    * so the group-rank self-join can't recompute the heavy lineage twice.
+    * The checkpointed blocks are not fault tolerant: an executor loss
+    * after return fails downstream actions of the RETURNED DataFrame
+    * instead of recomputing (re-call to recover); acceptable because the
+    * checkpointed table is ≤ field-cardinality rows and the window
+    * between call and consumption is one query.
     */
   def searchGrouped(terms: Seq[(String, Double)], field: String,
                     groupLimit: Int = 10, groups: Int = 10,
                     accuracy: Double = 1.0,
                     docPred: Option[Column] = None,
-                    docFilter: Option[(String, String)] = None): DataFrame =
-    searchGroupedVia(terms, field, groupLimit, groups, accuracy,
-      forceScan = false, docPred, docFilter)
-
-  /** Solr CollapsingQParserPlugin (`fq={!collapse field=f}`): the normal
-    * FLAT ranked result list, but at most one doc — each value's best by
-    * (score_q DESC, doc_id ASC) — per field value; docs with no value
-    * collapse into the null group, as the plugin's nullPolicy=collapse.
-    * Exactly [[searchGrouped]] at `groupLimit = 1` reshaped flat, so it
-    * inherits the segment-local grouped scorer, its plan pins AND its
-    * eager-evaluation/checkpoint caveat (see [[searchGrouped]]); output
-    * (rank, value, doc_id, score_q).
-    */
-  def searchCollapsed(terms: Seq[(String, Double)], field: String,
-                      rows: Int = 60, accuracy: Double = 1.0,
-                      docPred: Option[Column] = None,
-                      docFilter: Option[(String, String)] = None): DataFrame =
-    searchGrouped(terms, field, groupLimit = 1, groups = rows, accuracy,
-      docPred, docFilter)
-      .select(col("group_rank").as("rank"), col("value"),
-        col("doc_id"), col("score_q"))
-
-  private[graft] def searchGroupedVia(
-      terms: Seq[(String, Double)], field: String, groupLimit: Int,
-      groups: Int, accuracy: Double, forceScan: Boolean,
-      docPred: Option[Column] = None,
-      docFilter: Option[(String, String)] = None): DataFrame = {
+                    docFilter: Option[(String, String)] = None): DataFrame = {
     import spark.implicits._
     val kept = keptTerms(terms, accuracy)
     if (kept.isEmpty)
@@ -1938,9 +1856,8 @@ final class Engine(val index: Index) {
     // q+fq+group), a combined pred+fq, or an uncovered column — becomes a
     // predicate on the scan fallback (silently ignoring it would be the
     // P2 bug class all over again)
-    val (bitmapFq, pred0) = fqSplit(docPred, docFilter)
-    val viaBitmap = !forceScan && pred0.isEmpty && index.hasFilters &&
-      index.filterColsComplete.contains(field) && denseArrayFits
+    val (bitmapFq, pred) = fqSplit(docPred, docFilter)
+    val viaBitmap = pred.isEmpty && index.hasFilters && index.filterColsComplete.contains(field)
     val perVal: org.apache.spark.sql.Dataset[(String, Scored)] =
       if (viaBitmap) {
         // a sole covered equality fq rides the same side join as the value
@@ -1953,13 +1870,9 @@ final class Engine(val index: Index) {
           Wand.scoreSegmentGrouped(seg, it, values(0), allow, wB.value, avgdl, gl, cfg)
         }
       } else
-        scanScoreAll(weights, avgdl,
-          bitmapFq match {
-            // scan fallback with a covered fq (forceScan / wide segments):
-            // the result-identical predicate form
-            case Some((c, v)) => Some(col(c) === lit(v))
-            case None => pred0
-          })
+        // uncovered field: a covered fq takes its result-identical
+        // predicate form
+        scanScoreAll(weights, avgdl, bitmapFq.map { case (c, v) => col(c) === lit(v) }.orElse(pred))
           .join(index.docmeta.select(col("doc_id"),
             col(field).cast("string").as("gval")), Seq("doc_id"))
           .select(col("gval"), col("doc_id"), col("score"))
@@ -1991,6 +1904,24 @@ final class Engine(val index: Index) {
         col("score_q"))
       .orderBy(col("group_rank"), col("rank"))
   }
+
+  /** Solr CollapsingQParserPlugin (`fq={!collapse field=f}`): the normal
+    * FLAT ranked result list, but at most one doc — each value's best by
+    * (score_q DESC, doc_id ASC) — per field value; docs with no value
+    * collapse into the null group, as the plugin's nullPolicy=collapse.
+    * Exactly [[searchGrouped]] at `groupLimit = 1` reshaped flat, so it
+    * inherits the segment-local grouped scorer, its plan pins AND its
+    * eager-evaluation/checkpoint caveat (see [[searchGrouped]]); output
+    * (rank, value, doc_id, score_q).
+    */
+  def searchCollapsed(terms: Seq[(String, Double)], field: String,
+                      rows: Int = 60, accuracy: Double = 1.0,
+                      docPred: Option[Column] = None,
+                      docFilter: Option[(String, String)] = None): DataFrame =
+    searchGrouped(terms, field, groupLimit = 1, groups = rows, accuracy,
+      docPred, docFilter)
+      .select(col("group_rank").as("rank"), col("value"),
+        col("doc_id"), col("score_q"))
 
   /** Textual query front-end: parse the reference's `hashes`-verb string
     * form and search. Grammar (the WhitespaceAnalyzer + QueryParser surface
@@ -2059,14 +1990,12 @@ object Engine {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Engine]()
 
   /** Where a query's scoring runs, as the engine's `specOf` picks it:
-    * per-segment DAAT, the segment-local dense-array kernel, or the
-    * columnar exploded-postings plan.
+    * per-segment DAAT or the segment-local dense-array kernel.
     */
   private[graft] sealed trait Route
   private[graft] object Route {
     case object Daat extends Route
     case object DenseArray extends Route
-    case object Columnar extends Route
   }
 
   /** One query of the engine's scoring pass: `weights` (boost·idf) and

@@ -313,36 +313,55 @@ object Wand {
     heap.sortedBestFirst.iterator
   }
 
-  /** The dense fill shared by the dense-array kernels: every posting of
-    * every weighted list folds into ONE primitive score array indexed by
-    * segment-local id (width = 2^segShift — the caller guards the shift),
-    * touched ids tracked in a bitmap, then intersected with `allow`
-    * (null = every doc). None when no query list has postings here.
+  /** Width of the dense fill's score window, as a shift: the dense-array
+    * kernels hold 2^min(segShift, this) doubles (32 MB at 22) whatever
+    * the segment width, and score a wider segment window by window.
+    */
+  val DenseArraySegShiftMax = 22
+
+  /** The dense fill shared by the dense-array kernels (Lucene's
+    * BooleanScorer bucket window): every posting of every weighted list
+    * folds into ONE primitive score array indexed by local id − `base`,
+    * over windows of 2^min(segShift, [[DenseArraySegShiftMax]]) local ids.
+    * Each list's iterator lives across windows and adds its postings below
+    * the window's end; then `sweep(base, scores, docs)` gets the window's
+    * touched ids ∩ `allow` (null = every doc) as local ids, if any, and the
+    * touched entries are zeroed for the next window. The next window is the
+    * one holding the smallest unread local id, so empty windows cost
+    * nothing; a segment of shift ≤ 22 is exactly one window. A doc's
+    * partial scores add in list order in every geometry.
     */
   private def denseFill(hits: Iterator[SegHit], weights: Map[String, Double],
-      avgdl: Double, cfg: IndexConfig,
-      allow: RoaringBitmap): Option[(Array[Double], RoaringBitmap)] = {
-    var scores: Array[Double] = null // allocated on the first matching list
+      avgdl: Double, cfg: IndexConfig, allow: RoaringBitmap)(
+      sweep: (Int, Array[Double], RoaringBitmap) => Unit): Unit = {
+    val lists = hits.flatMap(h => weights.get(h.term).map(w => (new Codec.Iter(h.postings), w)))
+      .filterNot(_._1.exhausted).toArray
+    if (lists.isEmpty) return
+    val wShift = math.min(cfg.segShift, DenseArraySegShiftMax)
+    val scores = new Array[Double](1 << wShift)
     val touched = new RoaringBitmap()
-    hits.foreach { h =>
-      weights.get(h.term).foreach { w =>
-        val it = new Codec.Iter(h.postings)
-        if (!it.exhausted) {
-          if (scores == null) scores = new Array[Double](1 << cfg.segShift)
-          var more = true
-          while (more) {
-            val local = it.curLocal
-            scores(local) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
-            touched.add(local)
-            more = it.next()
-          }
+    var next = lists.iterator.map(_._1.curLocal).min
+    while (next >= 0) {
+      val base = next >>> wShift << wShift
+      val end = base + (1 << wShift)
+      next = -1
+      lists.foreach { case (it, w) =>
+        var more = !it.exhausted
+        while (more && it.curLocal < end) {
+          val local = it.curLocal
+          scores(local - base) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
+          touched.add(local)
+          more = it.next()
         }
+        if (more && (next < 0 || it.curLocal < next)) next = it.curLocal
       }
-    }
-    if (scores == null) None
-    else {
-      if (allow != null) touched.and(allow)
-      Some((scores, touched))
+      val docs = if (allow == null) touched else RoaringBitmap.and(touched, allow)
+      if (!docs.isEmpty) sweep(base, scores, docs)
+      if (next >= 0) {
+        val ti = touched.getIntIterator
+        while (ti.hasNext) scores(ti.next() - base) = 0.0
+        touched.clear()
+      }
     }
   }
 
@@ -364,14 +383,13 @@ object Wand {
     out.result()
   }
 
-  /** Dense-query segment scorer: the [[denseFill]], then one sweep offers
-    * (doc, score) to the bounded heap. For a corpus-blanketing query this
-    * is O(postings + touched) with NO per-doc list sorting (the scalar
-    * DAAT loop's cost) and NO doc-keyed shuffle (the columnar hash-agg
-    * plan's cost) — scores never leave the segment task. Exact: same
-    * tfNorm terms, quantized tie rule at the heap; `allowed` (fq/kill)
-    * intersects the touched set BEFORE the sweep; cursor semantics as in
-    * [[scoreSegment]].
+  /** Dense-query segment scorer: the [[denseFill]], then each window's
+    * sweep offers (doc, score) to ONE bounded heap. For a corpus-blanketing
+    * query this is O(postings + touched) with NO per-doc list sorting (the
+    * scalar DAAT loop's cost) and NO doc-keyed shuffle — scores never leave
+    * the segment task, at any segment width. Exact: same tfNorm terms,
+    * quantized tie rule at the heap; `allowed` (fq/kill) intersects the
+    * touched set BEFORE the sweep; cursor semantics as in [[scoreSegment]].
     */
   def scoreSegmentDense(
       segId: Long,
@@ -382,27 +400,27 @@ object Wand {
       cfg: IndexConfig,
       allowed: RoaringBitmap,
       afterScoreQ: Long = Long.MaxValue,
-      afterDocId: Long = Long.MinValue): Iterator[Scored] =
-    denseFill(hits, weights, avgdl, cfg, allowed) match {
-      case None => Iterator.empty
-      case Some((scores, touched)) =>
-        val heap = new BoundedTopK(candidates)
-        val bi = touched.getIntIterator
-        while (bi.hasNext) {
-          val local = bi.next()
-          val gid = cfg.globalOf(segId, local)
-          val s = scores(local)
-          if (cursorAccepts(afterScoreQ, afterDocId, gid, s)) heap.offer(gid, s)
-        }
-        heap.sortedBestFirst.iterator
+      afterDocId: Long = Long.MinValue): Iterator[Scored] = {
+    val heap = new BoundedTopK(candidates)
+    denseFill(hits, weights, avgdl, cfg, allowed) { (base, scores, docs) =>
+      val bi = docs.getIntIterator
+      while (bi.hasNext) {
+        val local = bi.next()
+        val gid = cfg.globalOf(segId, local)
+        val s = scores(local - base)
+        if (cursorAccepts(afterScoreQ, afterDocId, gid, s)) heap.offer(gid, s)
+      }
     }
+    heap.sortedBestFirst.iterator
+  }
 
   /** Segment-local grouped top-k (Solr result grouping): the
     * [[denseFill]] under `allow` (fq/kill, null = every doc), then each
-    * [[valueSlices]] slice sweeps into a bounded heap of `groupLimit` —
-    * only (value, top-doc) rows, bounded by values-in-segment ×
-    * groupLimit, ever leave the segment task. The null slice is Solr's
-    * missing-value group.
+    * window's [[valueSlices]] slices sweep into bounded heaps of
+    * `groupLimit` — only (value, top-doc) rows, bounded by windows ×
+    * values-in-segment × groupLimit, ever leave the segment task (the
+    * caller's per-value merge takes a window's rows like a segment's).
+    * The null slice is Solr's missing-value group.
     */
   def scoreSegmentGrouped(
       segId: Long,
@@ -412,25 +430,26 @@ object Wand {
       weights: Map[String, Double],
       avgdl: Double,
       groupLimit: Int,
-      cfg: IndexConfig): Iterator[(String, Scored)] =
-    denseFill(hits, weights, avgdl, cfg, allow) match {
-      case None => Iterator.empty
-      case Some((scores, touched)) =>
-        valueSlices(touched, valueBms).iterator.flatMap { case (value, slice) =>
-          val h = new BoundedTopK(groupLimit)
-          val bi = slice.getIntIterator
-          while (bi.hasNext) { val l = bi.next(); h.offer(cfg.globalOf(segId, l), scores(l)) }
-          h.sortedBestFirst.iterator.map(s => (value, s))
-        }
+      cfg: IndexConfig): Iterator[(String, Scored)] = {
+    val out = Array.newBuilder[(String, Scored)]
+    denseFill(hits, weights, avgdl, cfg, allow) { (base, scores, docs) =>
+      valueSlices(docs, valueBms).foreach { case (value, slice) =>
+        val h = new BoundedTopK(groupLimit)
+        val bi = slice.getIntIterator
+        while (bi.hasNext) { val l = bi.next(); h.offer(cfg.globalOf(segId, l), scores(l - base)) }
+        out ++= h.sortedBestFirst.iterator.map(s => (value, s))
+      }
     }
+    out.result().iterator
+  }
 
   /** Segment-local per-value score aggregation (the block-join to-parent
     * fold): the [[denseFill]] under `allow`, quantized per doc (children
     * quantize BEFORE aggregation — integer Σ/max are partition-order
-    * invariant), then each [[valueSlices]] slice folds into (value,
-    * Σ score_q, max score_q, n docs) — ONE row per value per segment
-    * ever leaves the task, vs a full match-set shuffle through a docmeta
-    * join. The null slice is the docmeta route's null parent group.
+    * invariant), then each window's [[valueSlices]] slice folds into
+    * (value, Σ score_q, max score_q, n docs) — ONE row per value per
+    * window ever leaves the task, vs a full match-set shuffle through a
+    * docmeta join. The null slice is the docmeta route's null parent group.
     */
   def scoreSegmentValueAgg(
       segId: Long,
@@ -439,22 +458,23 @@ object Wand {
       allow: RoaringBitmap,
       weights: Map[String, Double],
       avgdl: Double,
-      cfg: IndexConfig): Iterator[(String, Long, Long, Long)] =
-    denseFill(hits, weights, avgdl, cfg, allow) match {
-      case None => Iterator.empty
-      case Some((scores, touched)) =>
-        valueSlices(touched, valueBms).iterator.map { case (value, slice) =>
-          var sum = 0L
-          var max = Long.MinValue
-          val bi = slice.getIntIterator
-          while (bi.hasNext) {
-            val q = math.round(scores(bi.next()) * Bm25.Quant)
-            sum += q
-            if (q > max) max = q
-          }
-          (value, sum, max, slice.getLongCardinality)
+      cfg: IndexConfig): Iterator[(String, Long, Long, Long)] = {
+    val out = Array.newBuilder[(String, Long, Long, Long)]
+    denseFill(hits, weights, avgdl, cfg, allow) { (base, scores, docs) =>
+      valueSlices(docs, valueBms).foreach { case (value, slice) =>
+        var sum = 0L
+        var max = Long.MinValue
+        val bi = slice.getIntIterator
+        while (bi.hasNext) {
+          val q = math.round(scores(bi.next() - base) * Bm25.Quant)
+          sum += q
+          if (q > max) max = q
         }
+        out += ((value, sum, max, slice.getLongCardinality))
+      }
     }
+    out.result().iterator
+  }
 
   /** The merge of a single query's candidates: (rank, doc_id, score_q)
     * over [[topKPerQuery]]'s heaps, with `scoredOf` projecting a row to

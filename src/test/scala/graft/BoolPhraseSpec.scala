@@ -127,7 +127,7 @@ class BoolPhraseSpec extends SparkSpec {
   }
 
   private def checkPhrase(phrase: String, k: Int): Unit = {
-    val got = engine.searchPhrase(corpus, phrase, rows = k)
+    val got = engine.searchPhrase(phrase, rows = k)
       .as[(Long, Long, Long)].collect().toSeq
     val exp = brutePhrase(phrase, k)
     assert(got.map(_._2) == exp.map(_.docId), s"'$phrase' doc order")
@@ -142,7 +142,7 @@ class BoolPhraseSpec extends SparkSpec {
 
   test("phrase verify removes every shingle-collision false positive") {
     val toks = Tokenizer.tokenizeScala(SparkEntry.PhraseBigram)
-    val got = engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 10000)
+    val got = engine.searchPhrase(SparkEntry.PhraseBigram, rows = 10000)
       .select($"doc_id").as[Long].collect().toSet
     val truth = docs.filter { case (_, c) =>
       val ts = Tokenizer.tokenizeScala(c)
@@ -153,7 +153,7 @@ class BoolPhraseSpec extends SparkSpec {
 
   /** Every (doc_id, score_q) match of a phrase through [[Engine.searchPhrase]]. */
   private def phraseAll(phrase: String, slop: Int = 0): Seq[(Long, Long)] =
-    engine.searchPhrase(corpus, phrase, rows = docs.size, slop = slop)
+    engine.searchPhrase(phrase, rows = docs.size, slop = slop)
       .as[(Long, Long, Long)].collect().map(r => (r._2, r._3)).sortBy(_._1).toSeq
 
   test("positional route is on and is score-identical to the stored-field twin") {
@@ -206,7 +206,7 @@ class BoolPhraseSpec extends SparkSpec {
 
   test("sloppy phrase rank-identical to the brute window scorer; slop 0 = exact") {
     for (slop <- Seq(1, 2, 3)) {
-      val got = engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 10000, slop = slop)
+      val got = engine.searchPhrase(SparkEntry.PhraseBigram, rows = 10000, slop = slop)
         .as[(Long, Long, Long)].collect().toSeq
       val exp = bruteSloppy(SparkEntry.PhraseBigram, slop, 10000)
       assert(exp.nonEmpty, s"slop $slop pin must be non-vacuous")
@@ -214,13 +214,13 @@ class BoolPhraseSpec extends SparkSpec {
       assert(got.map(_._3) == exp.map(_.scoreQ), s"slop $slop scores")
     }
     // slop 0 through the slop parameter IS the exact route
-    val exact = engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60)
+    val exact = engine.searchPhrase(SparkEntry.PhraseBigram, rows = 60)
       .collect().map(_.toSeq).toSeq
-    val slop0 = engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60, slop = 0)
+    val slop0 = engine.searchPhrase(SparkEntry.PhraseBigram, rows = 60, slop = 0)
       .collect().map(_.toSeq).toSeq
     assert(exact == slop0)
     // trigram: the ≥3-word independent-window rule
-    val got3 = engine.searchPhrase(corpus, SparkEntry.PhraseTrigram, rows = 10000, slop = 2)
+    val got3 = engine.searchPhrase(SparkEntry.PhraseTrigram, rows = 10000, slop = 2)
       .as[(Long, Long, Long)].collect().toSeq
     val exp3 = bruteSloppy(SparkEntry.PhraseTrigram, 2, 10000)
     assert(got3.map(_._2) == exp3.map(_.docId) && got3.map(_._3) == exp3.map(_.scoreQ))
@@ -244,7 +244,7 @@ class BoolPhraseSpec extends SparkSpec {
   test("slop widens monotonically and slop 2 admits the reversed adjacent bigram") {
     val toks = Tokenizer.tokenizeScala(SparkEntry.PhraseBigram)
     def matchSet(slop: Int): Set[Long] =
-      engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 10000, slop = slop)
+      engine.searchPhrase(SparkEntry.PhraseBigram, rows = 10000, slop = slop)
         .select($"doc_id").as[Long].collect().toSet
     val s0 = matchSet(0); val s1 = matchSet(1); val s2 = matchSet(2)
     assert(s0.subsetOf(s1) && s1.subsetOf(s2), "sloppy match sets must nest")
@@ -266,9 +266,9 @@ class BoolPhraseSpec extends SparkSpec {
   }
 
   test("parsed `\"…\"~N` routes through the sloppy scorer (gate twin)") {
-    val viaParser = engine.searchParsed(corpus,
+    val viaParser = engine.searchParsed(
       "\"" + SparkEntry.PhraseBigram + "\"~2", rows = 60).collect().map(_.toSeq).toSeq
-    val direct = engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60, slop = 2)
+    val direct = engine.searchPhrase(SparkEntry.PhraseBigram, rows = 60, slop = 2)
       .collect().map(_.toSeq).toSeq
     assert(viaParser == direct)
   }
@@ -276,19 +276,19 @@ class BoolPhraseSpec extends SparkSpec {
   test("a negative slop is rejected, for a one-word phrase too") {
     for (phrase <- Seq("window", SparkEntry.PhraseBigram)) {
       val e = intercept[IllegalArgumentException](
-        engine.searchPhrase(corpus, phrase, rows = 10, slop = -1))
+        engine.searchPhrase(phrase, rows = 10, slop = -1))
       assert(e.getMessage.contains("negative slop"), s"'$phrase': ${e.getMessage}")
     }
   }
 
   test("phrase and parsed-with-phrase queries run one Spark job per call") {
     val calls: Seq[(String, () => Unit)] = Seq(
-      "exact phrase" -> (() => engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60)),
-      "slop-2 phrase" -> (() => engine.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 60,
+      "exact phrase" -> (() => engine.searchPhrase(SparkEntry.PhraseBigram, rows = 60)),
+      "slop-2 phrase" -> (() => engine.searchPhrase(SparkEntry.PhraseBigram, rows = 60,
         slop = 2)),
-      "parsed mixed" -> (() => engine.searchParsed(corpus, SparkEntry.ParsedMixedQuery, rows = 60)),
+      "parsed mixed" -> (() => engine.searchParsed(SparkEntry.ParsedMixedQuery, rows = 60)),
       "parsed mixed req" -> (() =>
-        engine.searchParsed(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60)))
+        engine.searchParsed(SparkEntry.ParsedMixedReqQuery, rows = 60)))
     // first calls load the index's lazy state (manifest, stats, vocabulary)
     calls.foreach(_._2())
     calls.foreach { case (name, call) =>
@@ -307,15 +307,15 @@ class BoolPhraseSpec extends SparkSpec {
   }
 
   test("one-word phrase degrades to the TermQuery it is in Lucene") {
-    val a = engine.searchPhrase(corpus, "window", rows = 30).collect().map(_.toSeq).toSeq
+    val a = engine.searchPhrase("window", rows = 30).collect().map(_.toSeq).toSeq
     val b = engine.searchByTerms(Seq("w:window" -> 1.0), rows = 30).collect().map(_.toSeq).toSeq
     assert(a == b)
   }
 
   test("phrase absent from the corpus returns empty (df=0 word / never-adjacent pair)") {
-    assert(engine.searchPhrase(corpus, "zzznosuch join", rows = 10).count() == 0)
+    assert(engine.searchPhrase("zzznosuch join", rows = 10).count() == 0)
     // both words exist; the exact adjacency does not have to
-    val never = engine.searchPhrase(corpus, "the the the the the the the the", rows = 10)
+    val never = engine.searchPhrase("the the the the the the the the", rows = 10)
     val toks = Array.fill(8)("the")
     val truth = docs.count { case (_, c) =>
       val ts = Tokenizer.tokenizeScala(c)

@@ -23,6 +23,14 @@ class IndexSpec extends SparkSpec {
     d
   }
   lazy val engine = new Engine(new Index(spark, indexDir))
+  /** The same docs and geometry with no filter store: grouping and block
+    * join take their docmeta fallbacks.
+    */
+  lazy val scanEngine: Engine = {
+    val d = tmpDir("idx-nofilters")
+    IndexBuild.build(spark, corpus, d, cfg.copy(filterColumns = Nil))
+    new Engine(new Index(spark, d))
+  }
 
   private def checkQuery(terms: Seq[(String, Double)], k: Int): Unit = {
     val got = engine.searchByTerms(terms, rows = k)
@@ -198,7 +206,7 @@ class IndexSpec extends SparkSpec {
     for ((name, dfOf) <- Seq[(String, Engine => org.apache.spark.sql.DataFrame)](
         "wand" -> (_.searchByTerms(SparkEntry.FlagshipTerms, rows = 30)),
         "pruned" -> (_.searchByTerms(SparkEntry.FlagshipTerms, rows = 30, accuracy = 0.5)),
-        "phrase" -> (e => e.searchPhrase(corpus, SparkEntry.PhraseBigram, rows = 30)),
+        "phrase" -> (e => e.searchPhrase(SparkEntry.PhraseBigram, rows = 30)),
         "prefix" -> (_.searchPrefix("w:s", rows = 30)),
         "fuzzy" -> (_.searchFuzzy(SparkEntry.FuzzyLongQ,
           maxEdits = SparkEntry.FuzzyMaxEdits, rows = 30,
@@ -332,8 +340,8 @@ class IndexSpec extends SparkSpec {
     assert(eng2.index.stats == engine.index.stats)
     // every unit of the split build carries the current layout
     assertCurrentLayout(d)
-    val p1 = eng2.searchPhrase(corpus.toDF(), "big order", rows = 20).collect().map(_.toSeq)
-    val p2 = engine.searchPhrase(corpus.toDF(), "big order", rows = 20).collect().map(_.toSeq)
+    val p1 = eng2.searchPhrase("big order", rows = 20).collect().map(_.toSeq)
+    val p2 = engine.searchPhrase("big order", rows = 20).collect().map(_.toSeq)
     assert(p1.toSeq == p2.toSeq)
   }
 
@@ -381,7 +389,7 @@ class IndexSpec extends SparkSpec {
     }
   }
 
-  test("batched dense queries on wide segments: columnar pass, rank-identical") {
+  test("batched dense queries on wide segments: one segment pass, rank-identical") {
     val d = tmpDir("wideseg")
     IndexBuild.build(spark, corpus, d, IndexConfig(segShift = 23, rangeSegsShift = 1))
     val wide = new Engine(new Index(spark, d))
@@ -391,15 +399,14 @@ class IndexSpec extends SparkSpec {
       .select($"term").as[String].collect().toSeq.map(_ -> 1.0)
     assert(wide.routesDense(hotTerms, rows = 20), "precondition: query 1 routes dense")
     val mixed: Seq[(Long, Seq[(String, Double)])] = Seq(
-      1L -> hotTerms, // dense on wide segments: scanScoreMany
-      4L -> hotTerms.take(2), // a second dense query in the same columnar pass
+      1L -> hotTerms, // dense on wide segments: the windowed dense kernel
+      4L -> hotTerms.take(2), // a second dense query in the same pass
       2L -> SparkEntry.FlagshipTerms, // sparse: batched WAND
       3L -> (hotTerms.take(2) ++ Seq("w:dup" -> 1.0))) // hot+rare: stays WAND
-    val p = wide.manyPass(mixed, rows = 20).queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(p.contains("graft_postings"), s"dense batch not on the columnar pass:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"weight table not broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"posting rows shuffled for the join:\n$p")
+    val pass = wide.manyPass(mixed, rows = 20).toDF()
+    val p = pass.queryExecution.executedPlan.toString
+    assert(!p.contains("graft_postings"), s"dense batch decodes postings in the plan:\n$p")
+    assert(segmentScans(pass, d) == 1, s"the batch must scan the segments once:\n$p")
     val df = wide.searchManyByTerms(mixed, rows = 20)
     val batch = df.as[(Long, Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toSeq).toMap
@@ -472,30 +479,32 @@ class IndexSpec extends SparkSpec {
     val exp = BruteScorer.topK(docs, hotTerms, 30)
     assert(got.map(_._2) == exp.map(_.docId))
     assert(got.map(_._3) == exp.map(_.scoreQ))
-    // rank identity across ALL routes, forced, with and w/o fq
+    // rank identity across ALL routes, forced, with and w/o fq: the
+    // brute top-25 over the docs passing the filter
     val dfs = engine.index.dfOf(hotTerms.map(_._1))
     val (n, _) = engine.index.stats
     val w = hotTerms.map { case (t, b) =>
       t -> b * Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    for (p <- Seq(None, Some(col("lang") === "en"))) {
-      val s = specTopK(engine, Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
-        docPred = p).collect().map(_.toSeq).toSeq
+    val langOf = corpus.select($"doc_id", $"lang").as[(Long, String)].collect().toMap
+    def bruteRows(keep: Long => Boolean): Seq[Seq[Any]] =
+      BruteScorer.topK(docs, hotTerms, docs.size).filter(x => keep(x.docId)).take(25)
+        .zipWithIndex.map { case (x, i) => Seq((i + 1).toLong, x.docId, x.scoreQ) }
+    val enOnly = bruteRows(id => langOf(id) == "en")
+    for ((p, s) <- Seq(None -> bruteRows(_ => true), Some(col("lang") === "en") -> enOnly)) {
       val d1 = specTopK(engine, Some(QuerySpec(0L, w, Route.Daat, useWand = true)), 25, 25,
         docPred = p).collect().map(_.toSeq).toSeq
       val d2 = specTopK(engine, Some(QuerySpec(0L, w, Route.Daat, useWand = false)), 25, 25,
         docPred = p).collect().map(_.toSeq).toSeq
       val d3 = specTopK(engine, Some(QuerySpec(0L, w, Route.DenseArray, useWand = false)), 25, 25,
         docPred = p).collect().map(_.toSeq).toSeq
-      assert(s == d1, s"scan vs wand (pred=$p)")
-      assert(s == d2, s"scan vs exhaustive (pred=$p)")
-      assert(s == d3, s"scan vs dense-array (pred=$p)")
+      assert(s == d1, s"brute vs wand (pred=$p)")
+      assert(s == d2, s"brute vs exhaustive (pred=$p)")
+      assert(s == d3, s"brute vs dense-array (pred=$p)")
     }
     // dense-array under a BITMAP fq too (the route keeps the side-index)
     val fqApi = engine.searchByTerms(hotTerms, rows = 25, docFilter = Some(("lang", "en")))
       .collect().map(_.toSeq).toSeq
-    val fqScan = specTopK(engine, Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 25, 25,
-        docPred = Some(col("lang") === "en")).collect().map(_.toSeq).toSeq
-    assert(fqApi == fqScan, "dense-array bitmap fq diverges from the scan+pred form")
+    assert(fqApi == enOnly, "dense-array bitmap fq diverges from the brute")
     // a rare query must keep the DAAT plan
     assert(!engine.routesDense(Seq("w:dup" -> 1.0), rows = 10))
   }
@@ -512,7 +521,7 @@ class IndexSpec extends SparkSpec {
     assert(!engine.routesDense(mix, rows = 30),
       "hot+rare mix must stay on the DAAT/WAND route")
     val api = engine.searchByTerms(mix, rows = 30)
-    // rank identity: API result == brute == forced columnar scan
+    // rank identity: API result == brute == forced dense-array kernel
     val got = api.as[(Long, Long, Long)].collect().toSeq
     val exp = BruteScorer.topK(docs, mix, 30)
     assert(got.map(_._2) == exp.map(_.docId))
@@ -520,9 +529,10 @@ class IndexSpec extends SparkSpec {
     val dfs = engine.index.dfOf(mix.map(_._1))
     val (n, _) = engine.index.stats
     val w = mix.map { case (t, b) => t -> b * Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    val s = specTopK(engine, Some(QuerySpec(0L, w, Route.Columnar, useWand = false)), 30, 30)
+    val s = specTopK(engine, Some(QuerySpec(0L, w, Route.DenseArray, useWand = false)), 30, 30)
       .collect().map(_.toSeq).toSeq
-    assert(s == got.map(r => Seq(r._1, r._2, r._3)), "scan route must agree on the mix")
+    assert(s == exp.zipWithIndex.map { case (x, i) => Seq((i + 1).toLong, x.docId, x.scoreQ) },
+      "dense-array route must agree with the brute on the mix")
     // a boosted hot term that dominates the weights SHOULD route dense:
     // nothing prunable remains when the dense term drives the threshold
     val boostedHot = Seq(hotTerms.head._1 -> 1000.0, "w:dup" -> 1.0)
@@ -709,15 +719,16 @@ class IndexSpec extends SparkSpec {
       "partial-coverage fq diverged from the predicate ground truth")
     // grouped search on the partially-covered field must take the scan
     // fallback too (the bitmap path would silently drop the truncated
-    // unit's docs into no group at all)
+    // unit's docs into no group at all): == the fully covered index's
+    // bitmap path over the same docs
     val g1 = e.searchGrouped(SparkEntry.FlagshipTerms, "lang",
       groupLimit = 2, groups = 4)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
-    val g2 = e.searchGroupedVia(SparkEntry.FlagshipTerms, "lang",
-      groupLimit = 2, groups = 4, accuracy = 1.0, forceScan = true)
+    val g2 = engine.searchGrouped(SparkEntry.FlagshipTerms, "lang",
+      groupLimit = 2, groups = 4)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(g1 == g2 && g1.nonEmpty,
-      "partial-coverage grouped search diverged from the scan ground truth")
+      "partial-coverage grouped search diverged from the covered index")
   }
 
   test("facet composes with fq: bitmap path == scan path, fq constrains") {
@@ -762,8 +773,9 @@ class IndexSpec extends SparkSpec {
       groupLimit = 3, groups = 8)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(got == expected, s"grouped diverged from brute:\n$got\nvs\n$expected")
-    val scan = engine.searchGroupedVia(SparkEntry.FlagshipTerms, "repo",
-      groupLimit = 3, groups = 8, accuracy = 1.0, forceScan = true)
+    // the scan fallback: the same docs through an index with no filter store
+    val scan = scanEngine.searchGrouped(SparkEntry.FlagshipTerms, "repo",
+      groupLimit = 3, groups = 8)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(scan == expected, "scan-path grouping diverged from brute")
     // q+fq+group: the fq bitmap intersects in-segment; brute = the same
@@ -784,9 +796,9 @@ class IndexSpec extends SparkSpec {
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(gotFq == expectedFq && gotFq.nonEmpty,
       s"fq-grouped diverged from brute:\n$gotFq\nvs\n$expectedFq")
-    val scanFq = engine.searchGroupedVia(SparkEntry.FlagshipTerms, "repo",
-      groupLimit = 3, groups = 8, accuracy = 1.0, forceScan = true,
-      docFilter = Some(("lang", "en")))
+    // the fq's docPred form takes the scan fallback
+    val scanFq = engine.searchGrouped(SparkEntry.FlagshipTerms, "repo",
+      groupLimit = 3, groups = 8, docPred = Some(col("lang") === "en"))
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(scanFq == expectedFq, "fq-grouped scan fallback diverged from brute")
   }
@@ -895,7 +907,7 @@ class IndexSpec extends SparkSpec {
     assertCursorWalk(engine, hot)
   }
 
-  test("cursor paging on the columnar pass (wide segments) reproduces the full ranking") {
+  test("cursor paging on wide segments reproduces the full ranking") {
     val d = tmpDir("widecursor")
     IndexBuild.build(spark, corpus, d, IndexConfig(segShift = 23, rangeSegsShift = 1))
     val wide = new Engine(new Index(spark, d))
@@ -904,6 +916,57 @@ class IndexSpec extends SparkSpec {
     assert(wide.routesDense(hot, rows = 25) && wide.routesDense(hot, rows = 100),
       "precondition: the query routes dense")
     assertCursorWalk(wide, hot)
+  }
+
+  test("wide segments over several dense windows: == brute, batch, cursor walk, scan routes") {
+    // doc_id · 2^20 at segShift 23: each segment holds 8 docs at local ids
+    // (doc_id mod 8) · 2^20, on both sides of the 2^22 window boundary
+    val spread = 1L << 20
+    val c = IndexConfig(segShift = 23, rangeSegsShift = 4)
+    val spreadCorpus = corpus.withColumn("doc_id", $"doc_id" * spread)
+    val d = tmpDir("multiwindow")
+    IndexBuild.build(spark, spreadCorpus, d, c)
+    val dScan = tmpDir("multiwindow-nofilters")
+    IndexBuild.build(spark, spreadCorpus, dScan, c.copy(filterColumns = Nil))
+    val wide = new Engine(new Index(spark, d))
+    val wideScan = new Engine(new Index(spark, dScan))
+    val wShift = wide.DenseArraySegShiftMax
+    assert(c.segShift > wShift)
+    val wideDocs = docs.map { case (id, t) => (id * spread, t) }
+    assert(wideDocs.groupBy(x => c.segOf(x._1)).values
+      .exists(_.map(x => c.localOf(x._1) >> wShift).distinct.size > 1),
+      "precondition: a segment holds docs in two windows")
+    val hot = hot3(wide)
+    assert(wide.routesDense(hot, rows = 30), "precondition: the query routes dense")
+    val langOf = corpus.select($"doc_id", $"lang").as[(Long, String)].collect()
+      .map { case (id, l) => (id * spread, l) }.toMap
+    def brute(keep: Long => Boolean): Seq[(Long, Long)] =
+      BruteScorer.topK(wideDocs, hot, wideDocs.size).filter(x => keep(x.docId)).take(30)
+        .map(x => (x.docId, x.scoreQ))
+    def top(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.as[(Long, Long, Long)].collect().toSeq.map(r => (r._2, r._3))
+    val all = top(wide.searchByTerms(hot, rows = 30))
+    assert(all == brute(_ => true))
+    assert(all.exists(x => c.localOf(x._1) >> wShift > 0) &&
+      all.exists(x => c.localOf(x._1) >> wShift == 0), "precondition: hits in both windows")
+    assert(top(wide.searchByTerms(hot, rows = 30, docFilter = Some(("lang", "en")))) ==
+      brute(id => langOf(id) == "en"))
+    val batch = Seq(1L -> hot, 2L -> hot.take(2), 3L -> SparkEntry.FlagshipTerms)
+    val many = wide.searchManyByTerms(batch, rows = 30).as[(Long, Long, Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toSeq).toMap
+    batch.foreach { case (qid, q) =>
+      assert(many.getOrElse(qid, Nil) == top(wide.searchByTerms(q, rows = 30)), s"query $qid")
+    }
+    assertCursorWalk(wide, hot)
+    def same(what: String)(f: Engine => org.apache.spark.sql.DataFrame): Unit = {
+      val a = f(wide).collect().toSeq
+      assert(a.nonEmpty && a == f(wideScan).collect().toSeq, what)
+    }
+    same("grouped")(_.searchGrouped(hot, "repo", groupLimit = 3, groups = 8))
+    same("grouped fq")(_.searchGrouped(hot, "repo", groupLimit = 3, groups = 8,
+      docFilter = Some(("lang", "en"))))
+    for (mode <- Seq("max", "total", "avg"))
+      same(s"block join $mode")(_.blockJoinParents(hot, mode, rows = 1000))
   }
 
   test("dictionary store: per-unit artifact equals segment-derived dfs, survives compaction") {

@@ -95,7 +95,7 @@ class ParsedQuerySpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(got == or)
     // parsed dispatch: a wildcard SHOULD clause routes through the rewrite
-    val parsed = engine.searchParsed(corpus, SparkEntry.WildcardQ, rows = 60,
+    val parsed = engine.searchParsed(SparkEntry.WildcardQ, rows = 60,
       maxExpansions = SparkEntry.WildcardMaxExpansions).collect().map(_.toSeq).toSeq
     assert(parsed == or)
     assert(engine.searchWildcard("w:zz?zz*", rows = 10).count() == 0)
@@ -206,7 +206,7 @@ class ParsedQuerySpec extends SparkSpec {
     // a parsed query carrying a range clause == searchBool of the expansion
     val expanded = engine.rangeExpansions(Some(SparkEntry.RangeLo),
       Some(SparkEntry.RangeHi), incLo = true, incHi = false, 4)
-    val viaParsed = engine.searchParsed(corpus,
+    val viaParsed = engine.searchParsed(
       s"[${SparkEntry.RangeLo} TO ${SparkEntry.RangeHi}} w:license", rows = 60,
       maxExpansions = 4).collect().map(_.toSeq).toSeq
     val viaBool = engine.searchBool(expanded.map(_ -> 1.0) :+ ("w:license" -> 1.0),
@@ -235,22 +235,22 @@ class ParsedQuerySpec extends SparkSpec {
 
   test("phrase-free parsed query == searchBool of the same clauses") {
     val q = "w:hash^2 +w:window -w:stream w:join"
-    val parsed = engine.searchParsed(corpus, q, rows = 60).collect().map(_.toSeq).toSeq
+    val parsed = engine.searchParsed(q, rows = 60).collect().map(_.toSeq).toSeq
     val bool = engine.searchBool(Seq("w:hash" -> 2.0, "w:join" -> 1.0),
       Seq("w:window" -> 1.0), Seq("w:stream"), rows = 60).collect().map(_.toSeq).toSeq
     assert(parsed == bool)
   }
 
   test("one-word phrase in a parsed query is the TermQuery it is in Lucene") {
-    val a = engine.searchParsed(corpus, "\"window\"", rows = 30).collect().map(_.toSeq).toSeq
+    val a = engine.searchParsed("\"window\"", rows = 30).collect().map(_.toSeq).toSeq
     val b = engine.searchByTerms(Seq("w:window" -> 1.0), rows = 30).collect().map(_.toSeq).toSeq
     assert(a == b)
   }
 
   test("unsatisfiable and purely-negative parsed queries match nothing") {
-    assert(engine.searchParsed(corpus, "+w:hash -w:hash", rows = 10).count() == 0)
-    assert(engine.searchParsed(corpus, "-w:hash -w:join", rows = 10).count() == 0)
-    assert(engine.searchParsed(corpus, "\"hash join\" +w:zzznosuch", rows = 10).count() == 0)
+    assert(engine.searchParsed("+w:hash -w:hash", rows = 10).count() == 0)
+    assert(engine.searchParsed("-w:hash -w:join", rows = 10).count() == 0)
+    assert(engine.searchParsed("\"hash join\" +w:zzznosuch", rows = 10).count() == 0)
   }
 
   test("mixed parsed query (MUST phrase + terms + rewrites + NOT) == brute composition") {
@@ -292,7 +292,7 @@ class ParsedQuerySpec extends SparkSpec {
         Some((id, math.round(total * Bm25.Quant)))
       }
     }.sortBy { case (id, sq) => (-sq, id) }.take(60)
-    val got = engine.searchParsed(corpus, SparkEntry.ParsedMixedQuery, rows = 60)
+    val got = engine.searchParsed(SparkEntry.ParsedMixedQuery, rows = 60)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got.map(_._2) == exp.map(_._1), "doc order")
     assert(got.map(_._3) == exp.map(_._2), "scores")
@@ -338,7 +338,7 @@ class ParsedQuerySpec extends SparkSpec {
       }
     }.sortBy { case (id, sq) => (-sq, id) }.take(60)
     assert(exp.nonEmpty, "gate precondition: the required-term query matches docs")
-    val got = engine.searchParsed(corpus, SparkEntry.ParsedMixedReqQuery, rows = 60)
+    val got = engine.searchParsed(SparkEntry.ParsedMixedReqQuery, rows = 60)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got.map(_._2) == exp.map(_._1), "doc order (required term)")
     assert(got.map(_._3) == exp.map(_._2), "scores (required term)")
@@ -384,24 +384,24 @@ class ParsedQuerySpec extends SparkSpec {
     assert(exp.nonEmpty && exp.size < nonEmpty.size,
       "group must bind: some docs filtered, some kept")
     // the in-segment bitmap algebra
-    val got = engine.searchParsed(corpus, "+w:s*^0.5 w:hash -w:stream", rows = 60)
+    val got = engine.searchParsed("+w:s*^0.5 w:hash -w:stream", rows = 60)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got.map(_._2) == exp.map(_._1), "doc order")
     assert(got.map(_._3) == exp.map(_._2), "scores")
     // with a phrase: same group + a SHOULD phrase that matches nothing
     // adds no score and must not affect the required set
-    val gotP = engine.searchParsed(corpus, "+w:s*^0.5 w:hash -w:stream \"zzz nosuchphrase\"",
+    val gotP = engine.searchParsed("+w:s*^0.5 w:hash -w:stream \"zzz nosuchphrase\"",
       rows = 60).as[(Long, Long, Long)].collect().toSeq
     assert(gotP == got, "a non-matching SHOULD phrase changes nothing")
     // required group with no corpus-present expansion -> empty, as df=0 MUST
-    assert(engine.searchParsed(corpus, "+w:zzznosuch* w:hash", rows = 10).count() == 0)
-    assert(engine.searchParsed(corpus,
+    assert(engine.searchParsed("+w:zzznosuch* w:hash", rows = 10).count() == 0)
+    assert(engine.searchParsed(
       "+w:zzznosuch* w:hash \"hash join\"", rows = 10).count() == 0)
     // a required range group composes too (same algebra, range expansion)
     val rngExp = dfMap.iterator.filter { case (t, _) => t >= "w:sa" && t < "w:sp" }
       .toSeq.sortBy { case (t, df) => (-df, t) }.take(50).map(_._1)
     val expR = brute(rngExp)
-    val gotR = engine.searchParsed(corpus, "+[w:sa TO w:sp}^0.5 w:hash -w:stream",
+    val gotR = engine.searchParsed("+[w:sa TO w:sp}^0.5 w:hash -w:stream",
       rows = 60).as[(Long, Long, Long)].collect().toSeq
     assert(gotR.map(_._2) == expR.map(_._1), "doc order (range group)")
     assert(gotR.map(_._3) == expR.map(_._2), "scores (range group)")
@@ -451,7 +451,7 @@ class ParsedQuerySpec extends SparkSpec {
   }
 
   private def parsed(e: Engine, q: String, rows: Int = 60): Seq[(Long, Long)] =
-    e.searchParsed(corpus, q, rows = rows).as[(Long, Long, Long)].collect()
+    e.searchParsed(q, rows = rows).as[(Long, Long, Long)].collect()
       .map(r => (r._2, r._3)).toSeq
 
   private val HashJoin = Seq("hash", "join")

@@ -93,16 +93,15 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"exchange in the segment-local pass:\n$p")
     val merged = plan(engine.searchByTerms(hotTerms, rows = 30))
     assert(merged.contains("LocalTableScan"), s"merged top-k is not local rows:\n$merged")
-    // the ultra-wide-segment FALLBACK keeps its codegen'd columnar shape
-    val dfs = engine.index.dfOf(hotTerms.map(_._1))
-    val (n, _) = engine.index.stats
-    val w = hotTerms.map { case (t, b) =>
-      t -> b * graft.query.Bm25.idf(dfs(t).toDouble, n.toDouble) }.toMap
-    val ps = plan(engine.scorePass(Seq(Engine.QuerySpec(0L, w, Engine.Route.Columnar,
-      useWand = false)), 30, 30, None, None))
-    assert(ps.contains("graft_postings"), s"not the scan plan:\n$ps")
-    assert(ps.contains("HashAggregate"), s"no hash aggregation:\n$ps")
-    assert(ps.contains("partial_sum") || ps.contains("Partial"), s"no partial agg:\n$ps")
+    // segments wider than the dense window take the same one-stage pass
+    val dir = tempDir("graft-plan-wide-")
+    graft.index.IndexBuild.build(spark, Corpus.fromDocuments(spark, sfTiny), dir,
+      graft.index.IndexConfig(segShift = 23, rangeSegsShift = 1))
+    val wide = new Engine(new graft.query.Index(spark, dir))
+    assert(wide.index.cfg.segShift > wide.DenseArraySegShiftMax && wide.routesDense(hotTerms))
+    val pw = plan(wide.termsPass(hotTerms, rows = 30))
+    assert(!pw.contains("graft_postings"), s"wide-segment pass decodes postings:\n$pw")
+    assert(!pw.contains("Exchange"), s"exchange in the wide-segment pass:\n$pw")
   }
 
   test("bitmap-filtered search cogroups the filter side-index, never docmeta") {

@@ -99,12 +99,20 @@ class SegmentPassSpec extends SparkSpec {
     val terms = queries(2)
     val batch = queries.zipWithIndex.map { case (q, i) => i.toLong -> q }
     val fq = Some("lang" -> "java")
+    // the same corpus at segShift 23: one segment wider than the dense
+    // window, so the hot query runs the windowed dense kernel
+    val wideDir = tempDir("graft-segpass-wide")
+    IndexBuild.build(spark, synth(spark), wideDir, IndexConfig(segShift = 23, rangeSegsShift = 1))
+    val wide = new Engine(new Index(spark, wideDir))
+    assert(wide.index.cfg.segShift > wide.DenseArraySegShiftMax && wide.routesDense(queries(0)),
+      "precondition: the hot query routes dense on wide segments")
     // first calls load the index's lazy state (manifest, stats, vocabulary)
     engine.searchByTerms(terms, rows = 30, docFilter = fq)
     engine.searchManyByTerms(batch, rows = 30)
-    queries.foreach { q =>
-      val (_, n) = jobsOf(engine.searchByTerms(q, rows = 30))
-      assert(n == 1, s"$q ran $n jobs")
+    wide.searchByTerms(terms, rows = 30)
+    for (e <- Seq(engine, wide); q <- queries) {
+      val (_, n) = jobsOf(e.searchByTerms(q, rows = 30))
+      assert(n == 1, s"$q ran $n jobs at segShift ${e.index.cfg.segShift}")
     }
     assert(jobsOf(engine.searchManyByTerms(batch, rows = 30))._2 == 1)
     val (_, nFq) = jobsOf(engine.searchByTerms(terms, rows = 30, docFilter = fq))

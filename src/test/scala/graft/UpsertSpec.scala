@@ -149,7 +149,7 @@ class UpsertSpec extends SparkSpec {
     }.sortBy { case (id, sq) => (-sq, id) }.take(60)
     assert(nonEmpty.exists { case (id, _) => dead(id) && matches(id) },
       "pin needs a dead doc that would match")
-    val got = eng.searchParsed(base, "+w:the \"hash join\" -w:stream", rows = 60)
+    val got = eng.searchParsed("+w:the \"hash join\" -w:stream", rows = 60)
       .as[(Long, Long, Long)].collect().toSeq
     assert(exp.nonEmpty, "pin needs a non-empty match set")
     assert(got.map(r => (r._2, r._3)) == exp, "parsed results diverge from the live-doc brute")
@@ -163,21 +163,30 @@ class UpsertSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("columnar scan route anti-joins the kill set (rank-identical to WAND route)") {
-    val kept = {
-      val dfs = eng.index.dfOf(SparkEntry.FlagshipTerms.map(_._1))
-      SparkEntry.FlagshipTerms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }
-        .filter(_._3 > 0)
-    }
-    val (n, _) = eng.index.stats
-    val weights = kept.map { case (t, b, df) =>
-      t -> b * graft.query.Bm25.idf(df.toDouble, n.toDouble)
-    }.toMap
-    val scan = rows(specTopK(eng, Some(graft.query.Engine.QuerySpec(0L, weights,
-        graft.query.Engine.Route.Columnar, useWand = false)), 60, 60)
-      .select("rank", "doc_id", "score_q"))
-    val wand = rows(eng.searchByTerms(SparkEntry.FlagshipTerms, rows = 60))
-    assert(scan == wand)
+  test("dense route on a tombstoned segShift-23 index == the WAND route") {
+    val dir = tempDir("graft-wide-kills")
+    IndexBuild.build(spark, base, dir, IndexConfig(segShift = 23, rangeSegsShift = 1))
+    IndexBuild.deleteByKeys(spark, deleteKeys, dir, keyCols = Seq("path"))
+    val wide = new Engine(new Index(spark, dir))
+    assert(wide.index.hasTombstones && wide.index.cfg.segShift > wide.DenseArraySegShiftMax)
+    val hot = wide.index.dictionary
+      .orderBy($"df".desc, $"term".asc).limit(3)
+      .select($"term").as[String].collect().toSeq
+    val dfs = wide.index.dfOf(hot)
+    val (n, _) = wide.index.stats
+    val weights = hot.map(t => t -> graft.query.Bm25.idf(dfs(t).toDouble, n.toDouble)).toMap
+    assert(wide.routesDense(hot.map(_ -> 1.0), rows = 1000), "precondition: the query routes dense")
+    // rows cover every match, so each killed doc that holds a hot term
+    // would show up
+    val dense = rows(wide.searchByTerms(hot.map(_ -> 1.0), rows = 1000))
+    val wand = rows(specTopK(wide, Some(graft.query.Engine.QuerySpec(0L, weights,
+      graft.query.Engine.Route.Daat, useWand = true)), 1000, 1000))
+    val killed = deleteKeys.join(base, Seq("path")).select("doc_id", "content")
+      .as[(Long, String)].collect().toMap
+    assert(killed.values.exists(c => graft.analyze.Tokenizer.termsScala(c).exists(hot.toSet)),
+      "precondition: a killed doc holds a query term")
+    assert(dense.nonEmpty && dense == wand)
+    assert(!dense.exists(r => killed.contains(r(1).asInstanceOf[Long])), "a killed doc was scored")
   }
 
   test("batched search and docmeta consumers exclude dead docs") {
@@ -433,9 +442,8 @@ class UpsertSpec extends SparkSpec {
     val gotGrouped = e0.searchGrouped(SparkEntry.FlagshipTerms, "repo",
       groupLimit = 3, groups = 8)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
-    val wantGrouped = engAllV.searchGroupedVia(SparkEntry.FlagshipTerms, "repo",
-      groupLimit = 3, groups = 8, accuracy = 1.0, forceScan = true,
-      docPred = Some(notDeadPred))
+    val wantGrouped = engAllV.searchGrouped(SparkEntry.FlagshipTerms, "repo",
+      groupLimit = 3, groups = 8, docPred = Some(notDeadPred))
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(gotGrouped == wantGrouped && gotGrouped.nonEmpty,
       s"grouped kill exclusion diverged:\n$gotGrouped\nvs\n$wantGrouped")
@@ -461,7 +469,7 @@ class UpsertSpec extends SparkSpec {
     // rows cover the whole match set, so ranks drop out: the tombstoned
     // result must be exactly the all-versions result with the dead removed
     def matches(e: Engine): Set[(Long, Long)] =
-      e.searchPhrase(base, SparkEntry.PhraseBigram, rows = 100000)
+      e.searchPhrase(SparkEntry.PhraseBigram, rows = 100000)
         .select("doc_id", "score_q").as[(Long, Long)].collect().toSet
     val all = matches(engAllV)
     val got = matches(eng)
@@ -490,9 +498,8 @@ class UpsertSpec extends SparkSpec {
     val got = eng.searchGrouped(SparkEntry.FlagshipTerms, "repo",
       groupLimit = 3, groups = 8, docFilter = Some(("lang", "en")))
       .as[(Long, String, Long, Long, Long)].collect().toSeq
-    val want = engAllV.searchGroupedVia(SparkEntry.FlagshipTerms, "repo",
-      groupLimit = 3, groups = 8, accuracy = 1.0, forceScan = true,
-      docPred = Some(notDeadPred && col("lang") === "en"))
+    val want = engAllV.searchGrouped(SparkEntry.FlagshipTerms, "repo",
+      groupLimit = 3, groups = 8, docPred = Some(notDeadPred && col("lang") === "en"))
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(got == want && got.nonEmpty, s"grouped fq+kill diverged:\n$got\nvs\n$want")
   }
