@@ -195,7 +195,7 @@ object SparkEntry {
   private def deleteQuerySetup(s: SparkSession, dir: String): String = {
     import graft.index.{IndexBuild, IndexConfig}
     val key = dir.replaceAll("[^a-zA-Z0-9.]+", "_")
-    val d = s"${Engine.indexRoot}/v4-delq-$key"
+    val d = s"${Engine.indexRoot}/v5-delq-$key"
     val cfg = IndexConfig(segShift = 5, rangeSegsShift = 1)
     IndexBuild.build(s, Corpus.fromDocuments(s, dir), d, cfg)
     IndexBuild.deleteByQuery(s, d,
@@ -206,7 +206,7 @@ object SparkEntry {
   private def upsertSetup(s: SparkSession, dir: String, compacted: Boolean): String = {
     import graft.index.{IndexBuild, IndexConfig}
     val key = dir.replaceAll("[^a-zA-Z0-9.]+", "_")
-    val d = s"${Engine.indexRoot}/v4-upsert${if (compacted) "c" else ""}-$key"
+    val d = s"${Engine.indexRoot}/v5-upsert${if (compacted) "c" else ""}-$key"
     val cfg = IndexConfig(segShift = 5, rangeSegsShift = 1)
     val base = Corpus.fromDocuments(s, dir)
     IndexBuild.build(s, base, d, cfg)
@@ -329,8 +329,8 @@ object SparkEntry {
       Engine.forDir(s, dir).blockJoinParents(FlagshipTerms, scoreMode = "max", rows = 10)),
     "q_block_join_total" -> ((s, dir) =>
       Engine.forDir(s, dir).blockJoinParents(FlagshipTerms, scoreMode = "total", rows = 10)),
-    // Solr q+fq+group: the fq bitmap intersects the dense score array's
-    // touched set inside the segment (same side join)
+    // Solr q+fq+group: the fq key's docs narrow the dense score array's
+    // touched set inside the segment (same segments scan)
     "q_grouped_filtered" -> ((s, dir) =>
       Engine.forDir(s, dir).searchGrouped(FlagshipTerms, "repo",
         groupLimit = 3, groups = 8, docFilter = Some(("lang", "en")))),
@@ -365,8 +365,8 @@ object SparkEntry {
     "q_highlight" -> ((s, dir) =>
       Engine.forDir(s, dir).highlight(Corpus.fromDocuments(s, dir),
         FlagshipTerms, rows = 20, width = 80)),
-    // fq via the PERSISTED per-segment bitmap side-index (built at index
-    // time; no docmeta scan per query)
+    // fq via its filter key, one more posting list of the segments scan
+    // (indexed at build time; no docmeta scan per query)
     "q_wand_filtered" -> ((s, dir) =>
       Engine.forDir(s, dir).searchByTerms(FlagshipTerms, rows = 60,
         docFilter = Some(("lang", "en")))),
@@ -390,9 +390,11 @@ object SparkEntry {
     // §2.11 MoreLikeThis: query = doc 42's own terms
     "q_mlt" -> ((s, dir) =>
       Engine.forDir(s, dir).searchById(Corpus.fromDocuments(s, dir), 42L, rows = 30)),
-    // A1 from the built index: global df = sum of per-segment dfs
+    // A1 from the built index: global df = sum of per-segment dfs (the
+    // reserved filter keys are postings, not terms)
     "q_dictionary_idx" -> ((s, dir) =>
       Engine.forDir(s, dir).index.segments
+        .where(graft.index.IndexBuild.notFilterKey)
         .groupBy(col("term"))
         .agg(sum(col("df")).cast("long").as("df"))),
     // lineage/stats: N and sum(dl) from the per-range manifest alone
@@ -408,7 +410,7 @@ object SparkEntry {
       import graft.index.{IndexBuild, IndexConfig}
       import graft.query.Index
       val key = dir.replaceAll("[^a-zA-Z0-9.]+", "_")
-      val d = s"${Engine.indexRoot}/v4-compacted-$key"
+      val d = s"${Engine.indexRoot}/v5-compacted-$key"
       IndexBuild.build(s, Corpus.fromDocuments(s, dir), d,
         IndexConfig(segShift = 5, rangeSegsShift = 1))
       IndexBuild.compact(s, d)

@@ -9,13 +9,20 @@ import graft.analyze.{TokenScanner, TokenTable, Tokenizer}
   * the term string. Collisions are tolerated: group/merge keys always use
   * the term STRING; term_id exists only to give parquet row-group pruning a
   * cheap fixed-width column (SURVEY.md §7.4 / O11).
+  *
+  * A reserved filter key `<fcol>=<value>` ([[IndexBuild.partialPostings]])
+  * hashes as its `<fcol>=` prefix: every key of a column shares one
+  * term_id, so one pushdown reads all of a column's value rows, and the
+  * term string still tells the keys apart.
   */
 object TermHash {
   def hash(term: String): Long = {
     var h = 0xcbf29ce484222325L
     val bytes = term.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val eq = bytes.indexOf('='.toByte) // UTF-8 never uses 0x3d inside another char
+    val n = if (eq >= 0) eq + 1 else bytes.length
     var i = 0
-    while (i < bytes.length) {
+    while (i < n) {
       h ^= (bytes(i) & 0xffL)
       h *= 0x100000001b3L
       i += 1
@@ -46,12 +53,12 @@ final case class IndexConfig(
     /** ranges built concurrently (driver-side job overlap; each range is
       * still an independent, idempotent checkpoint unit). */
     concurrentRanges: Int = 4,
-    /** docmeta columns that get a persisted per-segment filter bitmap at
-      * build time (the fq-filter side-index: one RoaringBitmap of local
-      * doc ids per (segment, column, value) — the reference's fq
-      * intersection without re-scanning doc metadata per query). Only
-      * low-cardinality columns belong here; facet counts are also served
-      * from these bitmaps when the field is covered in every unit. */
+    /** docmeta columns indexed as reserved filter keys: each doc with
+      * tokens gets one posting under `<column>=<value>` per non-null value
+      * (Lucene's keyword-field term), so an fq is one more posting list of
+      * the query's segment scan. Only low-cardinality columns belong here;
+      * facets, pivots, grouping and block join read the same keys when
+      * the column is covered in every unit. A name must not contain `=`. */
     filterColumns: Seq[String] = Seq("lang", "repo"),
     /** Bounded await on the async per-range segments write: a hung write
       * job otherwise blocks a range slot of the driver pool forever. On
@@ -61,6 +68,8 @@ final case class IndexConfig(
       * expected range. */
     segmentsWriteTimeoutSec: Long = 21600L) {
   require(segShift <= 27, "segShift > 27 breaks packed-long sign ordering")
+  filterColumns.foreach(c =>
+    require(!c.contains('='), s"filter column '$c' contains '=', the filter key separator"))
   def rangeShift: Int = segShift + rangeSegsShift
   def segOf(docId: Long): Long = docId >>> segShift
   def rangeOf(docId: Long): Long = docId >>> rangeShift
@@ -94,17 +103,18 @@ final case class CompactReport(
   * Layout under `indexDir` (one `range=<unit>` dir per store and unit —
   * [[IndexBuild.unitStoreDirs]]):
   *   segments/    (seg_id, term_id, term, df, max_tf, min_dl, postings,
-  *                 positions)
+  *                 positions) — terms plus the reserved filter keys
+  *                 `<fcol>=<value>`
   *   docmeta/     (doc_id, repo, path, commit, lang, sha, dl)
   *   dictionary/  (term, term_id, df)
   *   rdictionary/ (rterm, term, df)
   *   ngrams/      (gram, term)
-  *   filters/     (seg_id, fcol, value, bitmap) — only when filterColumns
-  *                is non-empty
   *   tombstones/  (seg_id, bitmap) — only on units that carry kills
   *   manifest/    (range_id, n_docs, sum_dl, n_rows, checksum, seg_shift,
   *                 range_segs_shift, build_ms, doc_ranges, retires,
-  *                 codec_ver) — written last
+  *                 codec_ver, filter_cols) — written last
+  * The dictionary, rdictionary and ngrams stores list terms only, never a
+  * filter key.
   *
   * Scale notes (the design constraints, not local behavior):
   *  - phase-1 group key is (term, seg): a hot term ("license") splits into
@@ -124,28 +134,42 @@ final case class CompactReport(
 object IndexBuild {
 
   /** Index layout version recorded in every unit manifest: word terms
-    * carry the positional side-blob and every unit carries the dictionary,
-    * rdictionary and ngrams stores. The only layout the read side accepts
-    * ([[graft.query.Index.stats]] rejects any other).
+    * carry the positional side-blob, every unit carries the dictionary,
+    * rdictionary and ngrams stores, filter columns are reserved-key
+    * postings and the manifest lists them in `filter_cols`. The only
+    * layout the read side accepts ([[graft.query.Index.stats]] rejects any
+    * other).
     */
-  val CodecVer = 2
+  val CodecVer = 3
 
   def segmentsDir(indexDir: String) = s"$indexDir/segments"
   def docmetaDir(indexDir: String) = s"$indexDir/docmeta"
   def manifestDir(indexDir: String) = s"$indexDir/manifest"
-  def filtersDir(indexDir: String) = s"$indexDir/filters"
   def tombstonesDir(indexDir: String) = s"$indexDir/tombstones"
   def dictionaryDir(indexDir: String) = s"$indexDir/dictionary"
   def rdictionaryDir(indexDir: String) = s"$indexDir/rdictionary"
   def ngramsDir(indexDir: String) = s"$indexDir/ngrams"
+
+  /** The reserved term of docs whose filter column `fcol` holds `value`:
+    * `=` is outside the term alphabet [a-z0-9:], so no word or shingle
+    * term can take it.
+    */
+  def filterKey(fcol: String, value: String): String = s"$fcol=$value"
+
+  /** Is `term` a reserved filter key ([[filterKey]])? */
+  def isFilterKey(term: String): Boolean = term.indexOf('=') >= 0
+
+  /** Rows whose `term` column is not a filter key: [[isFilterKey]] as a
+    * predicate. */
+  def notFilterKey: org.apache.spark.sql.Column = !col("term").contains("=")
 
   /** Every per-unit store, manifest LAST: deleting a unit in this order
     * keeps it committed (and so re-sweepable) until its data dirs are gone.
     */
   def unitStoreDirs(indexDir: String): Seq[String] = Seq(
     segmentsDir(indexDir), docmetaDir(indexDir), dictionaryDir(indexDir),
-    rdictionaryDir(indexDir), ngramsDir(indexDir), filtersDir(indexDir),
-    tombstonesDir(indexDir), manifestDir(indexDir))
+    rdictionaryDir(indexDir), ngramsDir(indexDir), tombstonesDir(indexDir),
+    manifestDir(indexDir))
 
   /** Unit ids with a `range=<id>` dir under `storeDir` — ONE globStatus
     * listing, never a per-unit exists probe.
@@ -167,7 +191,8 @@ object IndexBuild {
     * parquet column pruning never touches the postings bytes. Rows are
     * term_id-sorted so dfOf's fallback (driver map too big) serves misses
     * via row-group pruning. Written BEFORE the manifest, so the unit's
-    * commit gate covers it.
+    * commit gate covers it. Filter keys are left out of all three stores,
+    * so no multi-term rewrite, spellcheck or terms listing ever sees one.
     */
   private def writeDictionary(spark: SparkSession, indexDir: String, unit: Long,
       timeoutSec: Long = 21600L): Unit = {
@@ -180,6 +205,7 @@ object IndexBuild {
     // 2->8-core scaling ratio at bench scale (ADVICE/VERDICT r04 scaling
     // record; 10 units x 3 sequential writes is pure Amdahl-S).
     val dict = spark.read.parquet(s"${segmentsDir(indexDir)}/range=$unit")
+      .where(notFilterKey)
       .groupBy(col("term"), col("term_id"))
       .agg(sum(col("df")).cast("long").as("df"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -310,11 +336,20 @@ object IndexBuild {
     * count position varints: first absolute, rest gaps). Shingle terms
     * ship an empty blob — no query reads hash-term positions, so their
     * bytes are never paid for.
+    *
+    * Each doc with tokens also gets one posting (tf 1, the doc's dl) under
+    * the filter key ([[filterKey]]) of each non-null value of the
+    * corpus's [[filterColumns]]; dl counts the doc's tokens only.
     */
   def partialPostings(spark: SparkSession, corpus: DataFrame,
                       cfg: IndexConfig): Dataset[(String, Long, Array[Long], Array[Byte])] = {
     import spark.implicits._
-    corpus.select(col("doc_id"), col("content")).as[(Long, String)]
+    val fcols = filterColumns(corpus, cfg)
+    val values =
+      if (fcols.isEmpty) typedLit(Seq.empty[String])
+      else array(fcols.map(c => col(c).cast("string")): _*)
+    val prefixes = fcols.map(filterKey(_, "")).toArray
+    corpus.select(col("doc_id"), col("content"), values).as[(Long, String, Seq[String])]
       .mapPartitions { docs =>
         val acc = new java.util.HashMap[String, java.util.HashMap[Long, PartialBuf]]()
         // one TokenScanner + token table per task (FastDocTokens): no String
@@ -329,7 +364,7 @@ object IndexBuild {
           acc.computeIfAbsent(term, _ => new java.util.HashMap[Long, PartialBuf]())
             .computeIfAbsent(segId, _ => new PartialBuf)
 
-        docs.foreach { case (docId, content) =>
+        docs.foreach { case (docId, content, vals) =>
           doc.process(content)
           if (doc.nTokens > 0) {
             val segId = cfg.segOf(docId)
@@ -353,6 +388,12 @@ object IndexBuild {
               }
             }
             doc.drainShingles((term, c) => partial(term, segId).packed.add(pack(local, c, dl)))
+            var k = 0
+            while (k < prefixes.length) {
+              val v = vals(k)
+              if (v != null) partial(prefixes(k) + v, segId).packed.add(pack(local, 1, dl))
+              k += 1
+            }
           }
         }
         val out = Iterator.newBuilder[(String, Long, Array[Long], Array[Byte])]
@@ -369,6 +410,12 @@ object IndexBuild {
         out.result()
       }
   }
+
+  /** The corpus's columns among `cfg.filterColumns`: the filter columns
+    * a build of it covers, recorded in its manifest row's `filter_cols`.
+    */
+  def filterColumns(corpus: DataFrame, cfg: IndexConfig): Seq[String] =
+    cfg.filterColumns.filter(corpus.columns.contains)
 
   /** Phase 1: salted groupByKey((term, seg)) over the map-side partials ->
     * merged, sorted, block-compressed sub-list per (term, segment); word
@@ -515,7 +562,7 @@ object IndexBuild {
     * markers (not a listStatus + per-range exists probe — at many-range
     * scale the metadata round trips per query/build would dominate;
     * VERDICT r02 next #9). A "unit" is one committed directory set
-    * (segments/docmeta/filters/manifest under range=<id>): build units
+    * (segments/docmeta/…/manifest under range=<id>): build units
     * carry their doc-range id (≥0), compacted units a negative id.
     */
   def committedUnits(spark: SparkSession, indexDir: String): Seq[Long] = {
@@ -534,19 +581,21 @@ object IndexBuild {
       .parquet(units.map(u => s"${manifestDir(indexDir)}/range=$u"): _*)
   }
 
-  /** Commit `unit`: its one manifest row, stamped with [[CodecVer]] —
-    * written LAST, after every other store of the unit (the `_SUCCESS`
-    * marker is the commit gate).
+  /** Commit `unit`: its one manifest row, stamped with [[CodecVer]] and
+    * the filter columns whose keys every doc of the unit carries
+    * (`filter_cols`) — written LAST, after every other store of the unit
+    * (the `_SUCCESS` marker is the commit gate).
     */
   private def writeManifest(spark: SparkSession, indexDir: String, unit: Long,
       nDocs: Long, sumDl: Long, nRows: Long, checksum: Long, cfg: IndexConfig,
-      buildMs: Long, docRanges: Seq[DocRangeStat], retires: Seq[Long]): Unit = {
+      buildMs: Long, docRanges: Seq[DocRangeStat], retires: Seq[Long],
+      coveredCols: Seq[String]): Unit = {
     import spark.implicits._
     Seq((unit, nDocs, sumDl, nRows, checksum, cfg.segShift, cfg.rangeSegsShift,
-      buildMs, docRanges, retires, CodecVer))
+      buildMs, docRanges, retires, CodecVer, coveredCols))
       .toDF("range_id", "n_docs", "sum_dl", "n_rows", "checksum",
         "seg_shift", "range_segs_shift", "build_ms", "doc_ranges", "retires",
-        "codec_ver")
+        "codec_ver", "filter_cols")
       .coalesce(1).write.mode("overwrite").parquet(s"${manifestDir(indexDir)}/range=$unit")
   }
 
@@ -607,7 +656,7 @@ object IndexBuild {
     */
   final case class UnitRow(id: Long, nDocs: Long, sumDl: Long,
       nRows: Long, checksum: Long, segShift: Int, rangeSegsShift: Int,
-      docRanges: Seq[DocRangeStat])
+      docRanges: Seq[DocRangeStat], coveredCols: Seq[String])
 
   /** Compact committed units: merge groups of small units into single
     * units so `Index` metadata and per-query file listings stay bounded on
@@ -709,7 +758,7 @@ object IndexBuild {
         col("sum_dl").cast("long").as("sumDl"), col("n_rows").cast("long").as("nRows"),
         col("checksum"), col("seg_shift").cast("int").as("segShift"),
         col("range_segs_shift").cast("int").as("rangeSegsShift"),
-        col("doc_ranges").as("docRanges"))
+        col("doc_ranges").as("docRanges"), col("filter_cols").as("coveredCols"))
       .as[UnitRow].collect().sortBy(_.id)
     require(rows.map(r => (r.segShift, r.rangeSegsShift)).distinct.length == 1,
       "compact requires a uniform segment geometry across units")
@@ -724,7 +773,6 @@ object IndexBuild {
       cur :+= r; curDocs += r.nDocs
     }
     if (cur.nonEmpty) batches += cur
-    val filterUnits = unitsIn(spark, filtersDir(indexDir))
     // ids assigned by batch order before the (parallel) merges; a crashed
     // run's uncommitted partials are reclaimed by the dead-partial sweep
     // above, so rerun correctness does not depend on id reuse
@@ -757,7 +805,6 @@ object IndexBuild {
       val futures = toMerge.map { case (batch, newId) =>
         scala.concurrent.Future {
           mergeUnits(spark, indexDir, batch, newId,
-            withFilters = batch.forall(u => filterUnits.contains(u.id)),
             tombUnits = tombUnits, rangeOwner = rangeOwner)
           batch
         }
@@ -787,19 +834,19 @@ object IndexBuild {
     * Reclaim (Lucene merge semantics): when kill bitmaps target this
     * batch's doc ranges, the rewrite drops killed docs physically —
     * postings decoded, filtered, re-encoded (df/max_tf/min_dl refreshed,
-    * empty terms dropped), docmeta rows removed, filter bitmaps andNot'ed —
-    * and the new manifest's stats reflect LIVE docs only, so (N, avgdl,
+    * empty terms dropped — filter keys too), docmeta rows removed — and
+    * the new manifest's stats reflect LIVE docs only, so (N, avgdl,
     * df) refresh at merge exactly as Lucene's do. Attestation algebra:
     * checksums are order-independent XORs, so removing the killed rows'
     * hashes from the constituents' combined checksum gives the exact
     * expected live checksum — the Observation on the rewritten docmeta
     * must reproduce it (end-to-end copy attestation preserved under
     * reclaim). `doc_ranges` INGEST attestations stay verbatim: they gate
-    * streamed replays, which re-offer the original batch content.
+    * streamed replays, which re-offer the original batch content. The new
+    * unit covers the filter columns every doc-holding member covers.
     */
   private def mergeUnits(spark: SparkSession, indexDir: String,
                          batch: Seq[UnitRow], newId: Long,
-                         withFilters: Boolean,
                          tombUnits: Seq[Long] = Seq.empty,
                          rangeOwner: Map[Long, Long] = Map.empty): Unit = {
     import spark.implicits._
@@ -944,25 +991,6 @@ object IndexBuild {
     require(om("n_rows") == expN && om("checksum") == expCk,
       s"compaction re-attestation failed for unit $newId: wrote " +
         s"(${om("n_rows")}, ${om("checksum")}), manifests say ($expN, $expCk)")
-    if (withFilters) {
-      val fSrc = spark.read.parquet(paths(filtersDir(indexDir)): _*)
-      val fOut = kills match {
-        case None => fSrc
-        case Some(kb) =>
-          fSrc.join(kb, Seq("seg_id"), "left")
-            .select(col("seg_id"), col("fcol"), col("value"), col("bitmap"), col("kill"))
-            .as[(Long, String, String, Array[Byte], Array[Byte])]
-            .map { case (seg, fc, v, bm, killBytes) =>
-              if (killBytes == null) (seg, fc, v, bm)
-              else {
-                val b = Bitmaps.deserialize(bm)
-                b.andNot(Bitmaps.deserialize(killBytes))
-                (seg, fc, v, Bitmaps.serialize(b))
-              }
-            }.toDF("seg_id", "fcol", "value", "bitmap")
-      }
-      fOut.write.mode("overwrite").parquet(s"${filtersDir(indexDir)}/range=$newId")
-    }
     // Carry forward kills CREATED by this batch's units that target doc
     // ranges OUTSIDE this batch. Deliberately pessimistic per batch (a
     // sibling batch that would apply a kill may fail after we commit, so
@@ -1010,7 +1038,8 @@ object IndexBuild {
     kills.foreach(_.unpersist(blocking = false))
     writeManifest(spark, indexDir, newId, batch.map(_.nDocs).sum - killedDocs,
       batch.map(_.sumDl).sum - killedSumDl, expN, expCk, cfg0,
-      (System.nanoTime() - t0) / 1000000L, batch.flatMap(_.docRanges), ids)
+      (System.nanoTime() - t0) / 1000000L, batch.flatMap(_.docRanges), ids,
+      batch.filter(_.nDocs > 0).map(_.coveredCols).reduceOption(_ intersect _).getOrElse(Nil))
   }
 
   /** Build (or resume) the index for `corpus`; returns a report. */
@@ -1267,8 +1296,8 @@ object IndexBuild {
   }
 
   /** Commit a kill set as a tombstone-only unit — kill bitmaps + an empty
-    * copy of every other store the template unit holds (so every
-    * side-index stays complete) under a fresh negative id, manifest
+    * copy of every other store (so every per-unit read finds its path)
+    * under a fresh negative id, covering no filter column, manifest
     * written last (same atomic gate; a crashed run's partials are
     * invisible and swept by the next compaction). Returns the number of
     * docs deleted (0 = no-op, nothing written).
@@ -1287,16 +1316,13 @@ object IndexBuild {
       val unit = math.min(-1L, committed.min - 1)
       writeTombstones(spark, indexDir, unit, kills, cfg)
       // schema-correct empty stores so every reader's per-unit path exists
-      // (filters only where the template has them: filterColumns = Nil)
       val tmpl = live.head
-      val fs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
       unitStoreDirs(indexDir)
         .filterNot(Set(tombstonesDir(indexDir), manifestDir(indexDir)))
-        .filter(d => fs.exists(new Path(s"$d/range=$tmpl")))
         .foreach(d => spark.read.parquet(s"$d/range=$tmpl").limit(0)
           .write.mode("overwrite").parquet(s"$d/range=$unit"))
       writeManifest(spark, indexDir, unit, 0L, 0L, 0L, 0L, cfg, 0L,
-        Seq.empty, Seq.empty)
+        Seq.empty, Seq.empty, Seq.empty)
       n
     } finally kills.unpersist(blocking = false)
   }
@@ -1411,33 +1437,6 @@ object IndexBuild {
         count(lit(1)).as("n_rows"),
         coalesce(expr("bit_xor(xxhash64(concat_ws('|', doc_id, sha)))"), lit(0L)).as("checksum"))
         .write.mode("overwrite").parquet(s"${docmetaDir(indexDir)}/range=$r")
-      // fq filter side-index: one bitmap of segment-local doc ids per
-      // (seg_id, column, value), from the WRITTEN docmeta (attested data).
-      // Written before the manifest so _SUCCESS covers it. Tiny: total
-      // payload per column value = n_docs bits, segment-partitioned, so
-      // query-time fq is an equi-join on seg_id instead of a full docmeta
-      // scan + shuffle per query.
-      // fail the range as early as possible if the async segments job
-      // already died — no point spending the filters write first (the
-      // manifest-last commit protocol itself is unchanged)
-      segF.value.collect { case scala.util.Failure(e) => throw e }
-      val fcols = cfg.filterColumns.filter(meta.columns.contains)
-      if (fcols.nonEmpty) {
-        val metaOnDisk = spark.read.parquet(s"${docmetaDir(indexDir)}/range=$r")
-        val pairs = fcols.map(c =>
-          metaOnDisk.select(col("doc_id"), lit(c).as("fcol"), col(c).cast("string").as("value")))
-          .reduce(_ unionAll _)
-          .as[(Long, String, String)]
-        pairs
-          .groupByKey(x => (cfg.segOf(x._1), x._2, x._3))
-          .mapGroups { (key: (Long, String, String), it: Iterator[(Long, String, String)]) =>
-            val bm = new org.roaringbitmap.RoaringBitmap()
-            it.foreach(x => bm.add(cfg.localOf(x._1)))
-            (key._1, key._2, key._3, Bitmaps.serialize(bm))
-          }
-          .toDF("seg_id", "fcol", "value", "bitmap")
-          .write.mode("overwrite").parquet(s"${filtersDir(indexDir)}/range=$r")
-      }
       // manifest last: _SUCCESS == range committed (segments write must be
       // done before the manifest row lands — await the async job here).
       // BOUNDED await: a hung segments job would otherwise pin this range's
@@ -1455,14 +1454,16 @@ object IndexBuild {
           om("n_rows").asInstanceOf[Long], om("checksum").asInstanceOf[Long])
       writeManifest(spark, indexDir, r, nd, sdl, nRows, checksum, cfg,
         (System.nanoTime() - rt0) / 1000000L, Seq(DocRangeStat(r, nRows, checksum)),
-        Seq.empty)
+        Seq.empty, filterColumns(slice, cfg))
       (nd, sdl)
       } finally slice.unpersist(blocking = false)
     }
   }
 }
 
-/** RoaringBitmap <-> bytes for the persisted filter side-index. */
+/** RoaringBitmap <-> bytes for the kill bitmaps and the per-segment
+  * matches of a docmeta predicate.
+  */
 object Bitmaps {
   def serialize(bm: org.roaringbitmap.RoaringBitmap): Array[Byte] = {
     bm.runOptimize()

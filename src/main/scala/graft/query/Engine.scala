@@ -78,50 +78,24 @@ final class Index(val spark: SparkSession, val indexDir: String,
     .option("basePath", IndexBuild.segmentsDir(indexDir))
     .load(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
 
-  /** Persisted per-segment fq bitmaps (seg_id, fcol, value, bitmap) in
-    * every live unit? Absent when the index was built with
-    * `filterColumns = Nil`. ONE globStatus listing, not a per-range probe.
+  /** Filter columns covered in EVERY live unit that holds docs: the
+    * intersection of the doc-holding units' manifest `filter_cols`. Only
+    * these columns' reserved keys ([[IndexBuild.filterKey]]) may serve an
+    * fq, a facet, a pivot, grouping or block join ALONE. A column added to
+    * `filterColumns` after some units were built is missing here: its keys
+    * would silently drop the uncovered units' docs (a segment with no key
+    * row matches nothing), so such columns route through the docmeta
+    * predicate/scan paths instead. Doc-free units (delete markers) are
+    * exempt. Read after the [[stats]] layout check, from the manifest alone.
     */
-  lazy val hasFilters: Boolean = {
-    val present = IndexBuild.unitsIn(spark, IndexBuild.filtersDir(indexDir))
-    ranges.nonEmpty && ranges.forall(present.contains)
+  lazy val filterColsComplete: Set[String] = {
+    stats
+    manifest.where(col("n_docs") > 0).select(col("filter_cols")).as[Seq[String]].collect()
+      .map(_.toSet).reduceOption(_ intersect _).getOrElse(Set.empty)
   }
 
-  lazy val filters: DataFrame = spark.read
-    .option("basePath", IndexBuild.filtersDir(indexDir))
-    .parquet(ranges.map(r => s"${IndexBuild.filtersDir(indexDir)}/range=$r"): _*)
-
-  /** Columns covered by the filter side-index. */
-  lazy val filterCols: Set[String] =
-    if (!hasFilters) Set.empty
-    else filters.select(col("fcol")).distinct().as[String].collect().toSet
-
-  /** Filter columns covered in EVERY live unit that holds docs — the set
-    * fq and facet may be served from bitmaps ALONE. A column added to
-    * `filterColumns` after some units were built is in [[filterCols]] but
-    * NOT here: serving fq or facet counts for it from bitmaps would
-    * silently drop/zero the uncovered units' docs (a segment with no
-    * bitmap row contributes nothing), so such columns route through the
-    * docmeta predicate/scan paths instead. Doc-free units (delete
-    * markers) are exempt.
-    */
-  lazy val filterColsComplete: Set[String] =
-    if (!hasFilters) Set.empty
-    else {
-      val docUnits = manifest.where(col("n_docs") > 0)
-        .select(col("range_id").cast("long")).as[Long].collect().toSet
-      if (docUnits.isEmpty) filterCols
-      else {
-        val byCol = filters
-          .select(col("fcol"), col("range").cast("long")).distinct()
-          .as[(String, Long)].collect()
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        filterCols.filter(c => docUnits.subsetOf(byCol.getOrElse(c, Set.empty)))
-      }
-    }
-
   /** Live units carrying a tombstone side-file (Solr-update kills) — ONE
-    * globStatus listing, same contract as [[hasFilters]].
+    * globStatus listing, not a per-range probe.
     */
   lazy val tombstoneRanges: Seq[Long] =
     ranges.filter(IndexBuild.tombstoneUnits(spark, indexDir).contains)
@@ -240,11 +214,20 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * new query compiled its own stage (~40 ms a query at perfbench
     * scale); an `InSet` reads its values as a reference, so queries with
     * the same term count share one compiled stage.
+    *
+    * A caller's term never reads a reserved filter key: one in `terms` is
+    * dropped (it matched nothing before keys were indexed). The engine's
+    * own key reads go through `keys` (exact keys) and `keyCols` (every key
+    * of each column: the column's one term_id, [[TermHash]]).
     */
-  private[graft] def termRows(terms: Seq[String], from: DataFrame = segments)(
-      cols: Column*): DataFrame =
-    from.where(Index.inSet("term_id", terms.map(TermHash.hash)) && Index.termIn(terms))
+  private[graft] def termRows(terms: Seq[String], from: DataFrame = segments,
+      keys: Seq[String] = Nil, keyCols: Seq[String] = Nil)(cols: Column*): DataFrame = {
+    val exact = terms.filterNot(IndexBuild.isFilterKey) ++ keys
+    val prefixes = keyCols.map(IndexBuild.filterKey(_, ""))
+    from.where(Index.inSet("term_id", (exact ++ prefixes).map(TermHash.hash)) &&
+        prefixes.foldLeft(Index.termIn(exact))((c, p) => c || col("term").startsWith(p)))
       .select(cols: _*)
+  }
 
   /** Global df per query term (term string checked: hash-collision guard). */
   def dfOf(terms: Seq[String]): Map[String, Long] = dictMap match {
@@ -269,14 +252,13 @@ object Index {
     inSet("term", terms.map(UTF8String.fromString))
 }
 
-/** One side partition's bitmap rows of one segment ([[Engine]]'s
-  * per-segment filter path): parallel arrays of tag (0 = allow, 1 = kill,
-  * 2 + i = the i-th value field), value and serialized bitmap. `part` is
-  * the side partition, so a task that meets the same segment's side rows
-  * once per hit keeps each partition's rows once.
+/** One side partition's serialized bitmaps of one segment ([[Engine]]'s
+  * per-segment filter path): a pass's side is either kill bitmaps or a
+  * docmeta predicate's matches. `part` is the side partition, so a task
+  * that meets the same segment's side rows once per hit keeps each
+  * partition's rows once.
   */
-private[query] final case class SegSide(seg_id: Long, part: Int, tags: Array[Int],
-                                        values: Array[String], bitmaps: Array[Array[Byte]])
+private[query] final case class SegSide(seg_id: Long, part: Int, bitmaps: Array[Array[Byte]])
 
 /** One row of the scoring pass's segments scan: a [[SegHit]] plus the
   * term's positions blob, read only for phrase words (null otherwise).
@@ -300,8 +282,8 @@ final class Engine(val index: Index) {
   private implicit val keyedEnc: Encoder[(Long, Scored)] = Encoders.product[(Long, Scored)]
   private implicit val segHitEnc: Encoder[SegHit] = Encoders.product[SegHit]
   private implicit val segRowEnc: Encoder[SegRow] = Encoders.product[SegRow]
-  private implicit val sideRowEnc: Encoder[(Long, Int, String, Array[Byte])] =
-    Encoders.product[(Long, Int, String, Array[Byte])]
+  private implicit val sideRowEnc: Encoder[(Long, Array[Byte])] =
+    Encoders.product[(Long, Array[Byte])]
   private implicit val segSideEnc: Encoder[SegSide] = Encoders.product[SegSide]
 
   /** T1/T2 pruning, mirrored 1:1 in the SQL oracle (Oracle.pruneSql):
@@ -361,7 +343,7 @@ final class Engine(val index: Index) {
     if (accuracy >= 0.9) { // degenerate plan: no pruning, exhaustive scoring
       val dfs = index.dfOf(terms.map(_._1).distinct)
       terms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }.filter(_._3 > 0)
-    } else prune(terms, accuracy)
+    } else prune(terms, accuracy).filterNot(t => IndexBuild.isFilterKey(t._1)) // df 0: scores nothing
 
   /** weight(term) = Σ boost·idf over duplicate query terms (OR-clause). */
   private def weightsOf(kept: Seq[(String, Double, Long)], n: Long): Map[String, Double] =
@@ -418,146 +400,144 @@ final class Engine(val index: Index) {
 
   private val segHitCols = Seq("seg_id", "term", "df", "max_tf", "min_dl", "postings")
 
-  /** Segment hit rows of `terms` in the [[SegHit]] projection. */
-  private def segHits(terms: Seq[String]): Dataset[SegHit] =
-    index.termRows(terms)(segHitCols.map(col): _*).as[SegHit]
-
-  /** The scoring pass's rows of `terms`: [[segHits]] plus the positions
-    * blob of the `phraseWords` rows. Without phrase words the column is a
-    * null literal, so the scan reads no positions at all.
+  /** Segment hit rows of `terms` and of the filter `keys` and `keyCols`
+    * ([[Index.termRows]]) in the [[SegHit]] projection.
     */
-  private def segRows(terms: Seq[String], phraseWords: Seq[String]): Dataset[SegRow] = {
+  private def segHits(terms: Seq[String], keys: Seq[String] = Nil,
+      keyCols: Seq[String] = Nil): Dataset[SegHit] =
+    index.termRows(terms, keys = keys, keyCols = keyCols)(segHitCols.map(col): _*).as[SegHit]
+
+  /** The scoring pass's rows of `terms` and filter `keys`: [[segHits]]
+    * plus the positions blob of the `phraseWords` rows. Without phrase
+    * words the column is a null literal, so the scan reads no positions.
+    */
+  private def segRows(terms: Seq[String], keys: Seq[String],
+      phraseWords: Seq[String]): Dataset[SegRow] = {
     val positions =
       if (phraseWords.isEmpty) lit(null).cast("binary")
       else when(Index.termIn(phraseWords), col("positions"))
-    index.termRows(terms)(segHitCols.map(col) :+ positions.as("positions"): _*).as[SegRow]
+    index.termRows(terms, keys = keys)(segHitCols.map(col) :+ positions.as("positions"): _*)
+      .as[SegRow]
   }
 
   /** THE per-segment filter path — liresolr's collector-side filtering
-    * (each fq an accepted-docs set intersecting every scorer, deleted docs
-    * liveDocs tombstones applied the same way; SURVEY P2). Every segment
-    * that has hits reaches `kernel` as `(seg, hits, allow, values)`:
-    *   - `allow`: the ONE resolved local-id bitmap, null = every doc.
-    *     allow = OR(fq) ANDNOT OR(kill); with kills only, allow =
-    *     ¬OR(kill) over the segment's local-id capacity; with neither,
-    *     null. A docmeta predicate (`docPred`) resolves to the segment's
-    *     matching docs instead — kill-free by construction, as
-    *     [[Index.docmeta]] excludes tombstoned docs.
-    *   - `values`: per `valueFields` entry, the segment's (value, bitmap)
-    *     rows from the filter side-index.
-    * A segment drops when a covered fq has no bitmap row there (no doc
-    * carries the value), when its allow set is empty, and when it has no
-    * hits.
+    * (deleted docs are liveDocs tombstones applied to every scorer; SURVEY
+    * P2). Every segment that has hits reaches `kernel` as `(seg, hits,
+    * allow)`, `allow` being the ONE resolved local-id bitmap, null = every
+    * doc: ¬OR(kill) over the segment's local-id capacity, null without
+    * kills; a docmeta predicate (`docPred`) resolves to the segment's
+    * matching docs instead — kill-free by construction, as
+    * [[Index.docmeta]] excludes tombstoned docs. A segment drops when its
+    * allow set is empty and when it has no hits. A covered fq is not a
+    * side input: it is one more posting list of the hits, a reserved
+    * filter key the kernel reads ([[fqSplit]]).
     *
     * The kernel runs in the task that holds the hits: `hits` (a scan of
     * [[Index.segments]] with its `seg_id` column; `segOf` reads it back)
     * keeps every segment whole in one scan partition, and each task
     * groups its rows by segment — no exchange keyed on seg_id. Side rows
-    * (fq, kill and value bitmaps; the predicate's matching docs, packed
-    * per side partition into per-segment bitmaps) are packed into one
-    * [[SegSide]] per segment and side partition and join the hits on
-    * seg_id with no strategy hint: a small side broadcasts and the hits
-    * stay in their scan partitions; a large one makes Spark shuffle both
-    * sides by seg_id, which keeps whole segments per partition too (AQE's
+    * (kill bitmaps; the predicate's matching docs, packed per side
+    * partition into per-segment bitmaps) are packed into one [[SegSide]]
+    * per segment and side partition and join the hits on seg_id with no
+    * strategy hint: a small side broadcasts and the hits stay in their
+    * scan partitions; a large one makes Spark shuffle both sides by
+    * seg_id, which keeps whole segments per partition too (AQE's
     * skew-join split divides a partition by map task, and a segment's
-    * hits all come from the one scan task that read its file). The
-    * join pairs each hit with each of its segment's side rows; the
-    * grouping keeps one copy of each. A pass with no side input (no fq,
-    * predicate, kills or values) reads no side store at all. `fq` and
-    * `docPred` are alternatives ([[fqSplit]] never sets both).
+    * hits all come from the one scan task that read its file). The join
+    * pairs each hit with each of its segment's side rows; the grouping
+    * keeps one copy of each. A pass with neither a predicate nor kills
+    * reads no side store and joins nothing.
     */
-  private def perSegment[H, R: Encoder](hits: Dataset[H],
-      fq: Option[(String, String)] = None, docPred: Option[Column] = None,
-      valueFields: Seq[String] = Nil)(segOf: H => Long)(
-      kernel: (Long, Iterator[H], RoaringBitmap, Array[Array[(String, RoaringBitmap)]]) => Iterator[R]
-  ): Dataset[R] = {
-    require(docPred.isEmpty || (fq.isEmpty && valueFields.isEmpty),
-      "a docmeta predicate is a pass's only side input")
+  private def perSegment[H, R: Encoder](hits: Dataset[H], docPred: Option[Column] = None)(
+      segOf: H => Long)(kernel: (Long, Iterator[H], RoaringBitmap) => Iterator[R]): Dataset[R] = {
     val cfg = index.cfg
-    // side rows (seg_id, tag, value, bitmap): 0 = allow (fq bitmap or the
-    // predicate's matching docs), 1 = kill, 2 + i = valueFields(i)
-    def tagged(rows: DataFrame, tag: Int, value: Column): Dataset[(Long, Int, String, Array[Byte])] =
-      rows.select(col("seg_id"), lit(tag).as("tag"), value.as("value"), col("bitmap"))
-        .as[(Long, Int, String, Array[Byte])]
-    val noValue = lit(null).cast("string")
-    val sideRows =
-      fq.toSeq.map { case (c, v) =>
-        tagged(index.filters.where(col("fcol") === lit(c) && col("value") === lit(v)), 0, noValue)
-      } ++
-      docPred.toSeq.map { pred =>
-        index.docmeta.where(pred).select(col("doc_id")).as[Long].mapPartitions { ids =>
+    // side rows (seg_id, bitmap): the predicate's matching docs, or kills
+    val sideRows: Option[Dataset[(Long, Array[Byte])]] = docPred match {
+      case Some(pred) =>
+        Some(index.docmeta.where(pred).select(col("doc_id")).as[Long].mapPartitions { ids =>
           val bySeg = scala.collection.mutable.LongMap.empty[RoaringBitmap]
           ids.foreach(d => bySeg.getOrElseUpdate(cfg.segOf(d), new RoaringBitmap()).add(cfg.localOf(d)))
-          bySeg.iterator.map { case (seg, bm) => (seg, 0, null: String, Bitmaps.serialize(bm)) }
-        }
-      } ++
-      (if (docPred.isDefined) Nil
-       else index.killBitmapsOpt.toSeq.map(k => tagged(k.toDF("seg_id", "bitmap"), 1, noValue))) ++
-      valueFields.zipWithIndex.map { case (f, i) =>
-        tagged(index.filters.where(col("fcol") === lit(f)), 2 + i, col("value"))
-      }
-    val hasAllow = fq.isDefined || docPred.isDefined
-    val nFields = valueFields.length
+          bySeg.iterator.map { case (seg, bm) => (seg, Bitmaps.serialize(bm)) }
+        })
+      case None => index.killBitmapsOpt
+    }
+    val hasAllow = docPred.isDefined
     val segShift = cfg.segShift
     def scoreSegments(rows: Iterator[(H, SegSide)]): Iterator[R] =
       Engine.groupBySegment(rows, segOf).flatMap { case (seg, segHits, sides) =>
-        def rowsOf(tag: Int): Array[(String, Array[Byte])] = sides.flatMap { s =>
-          s.tags.indices.iterator.filter(s.tags(_) == tag).map(i => (s.values(i), s.bitmaps(i)))
-        }
-        val allowBs = rowsOf(0).map(_._2)
-        if (hasAllow && allowBs.isEmpty) Iterator.empty
-        else {
-          val killBs = rowsOf(1).map(_._2)
-          val allow =
-            if (allowBs.isEmpty) Engine.flipAllow(killBs.toSeq, segShift)
-            else {
-              val a = Engine.orAll(allowBs)
-              if (killBs.nonEmpty) a.andNot(Engine.orAll(killBs))
-              a
-            }
-          if (allow != null && allow.isEmpty) Iterator.empty
-          else kernel(seg, segHits.iterator, allow, Array.tabulate(nFields)(i =>
-            rowsOf(2 + i).map { case (v, b) => (v, Bitmaps.deserialize(b)) }))
-        }
+        val bitmaps = sides.toSeq.flatMap(_.bitmaps)
+        val allow =
+          if (!hasAllow) Engine.flipAllow(bitmaps, segShift)
+          else if (bitmaps.isEmpty) new RoaringBitmap()
+          else Engine.orAll(bitmaps)
+        if (allow != null && allow.isEmpty) Iterator.empty
+        else kernel(seg, segHits.iterator, allow)
       }
-    if (sideRows.isEmpty) hits.mapPartitions(it => scoreSegments(it.map(h => (h, null))))
-    else {
-      val side = sideRows.reduce(_ unionAll _).mapPartitions { rows =>
-        val part = org.apache.spark.TaskContext.getPartitionId()
-        rows.toArray.groupBy(_._1).iterator.map { case (seg, rs) =>
-          SegSide(seg, part, rs.map(_._2), rs.map(_._3), rs.map(_._4))
+    sideRows match {
+      case None => hits.mapPartitions(it => scoreSegments(it.map(h => (h, null))))
+      case Some(rows) =>
+        val side = rows.mapPartitions { rs =>
+          val part = org.apache.spark.TaskContext.getPartitionId()
+          rs.toArray.groupBy(_._1).iterator.map { case (seg, g) =>
+            SegSide(seg, part, g.map(_._2))
+          }
         }
-      }
-      hits.joinWith(side, hits("seg_id") === side("seg_id"), "left_outer")
-        .mapPartitions(scoreSegments)
+        hits.joinWith(side, hits("seg_id") === side("seg_id"), "left_outer")
+          .mapPartitions(scoreSegments)
     }
   }
 
-  /** Split the caller's doc filters into (bitmap-served fq, predicate).
-    * An equality fq on a filter-indexed column takes the persisted
-    * per-segment bitmap path (no docmeta scan) — but ONLY when it is the
+  /** Split the caller's doc filters into (filter key, predicate). An
+    * equality fq on a covered column is its reserved key
+    * ([[IndexBuild.filterKey]]): a MUST clause of no weight that the
+    * segments scan reads with the query's terms, so the query stays one
+    * job and never scans docmeta. It takes that path ONLY when it is the
     * sole filter (a docFilter combined with an arbitrary docPred routes
-    * through the predicate path with both conditions ANDed — the bitmap
-    * path would silently drop the predicate otherwise) and the column's
-    * bitmaps cover EVERY doc-holding unit (a partially-covered column —
-    * added to filterColumns after some units were built — would silently
-    * drop the uncovered units' matches: a segment with no fq bitmap row
-    * scores nothing).
+    * through the predicate path with both conditions ANDed — the key path
+    * would silently drop the predicate otherwise) and the column is
+    * covered in EVERY doc-holding unit ([[Index.filterColsComplete]]: a
+    * partially covered column would silently drop the uncovered units'
+    * matches, a segment with no key row scoring nothing).
     */
   private def fqSplit(docPred: Option[Column],
-      docFilter: Option[(String, String)]): (Option[(String, String)], Option[Column]) =
+      docFilter: Option[(String, String)]): (Option[String], Option[Column]) =
     docFilter match {
-      case Some((c, _)) if docPred.isEmpty && index.filterColsComplete.contains(c) =>
-        (docFilter, None)
+      case Some((c, v)) if docPred.isEmpty && index.filterColsComplete.contains(c) =>
+        (Some(IndexBuild.filterKey(c, v)), None)
       case Some((c, v)) =>
         (None, Some(docPred.map(_ && col(c) === lit(v)).getOrElse(col(c) === lit(v))))
       case None => (None, docPred)
     }
 
+  /** [[perSegment]] over the hits of `terms` and the filter keys of
+    * `fields` and of the fq `fqKey`, for the value kernels (facet, pivot,
+    * grouping, block join): `kernel` gets each segment's term hits, its
+    * allow bitmap narrowed to the fq key's docs, and per field the (value,
+    * docs) of the field's keys. A segment with no term hit or an empty
+    * allow set (no fq key row among them) drops.
+    */
+  private def valuePass[R: Encoder](terms: Seq[String], fqKey: Option[String], fields: Seq[String])(
+      kernel: (Long, Array[SegHit], RoaringBitmap, Array[Array[(String, RoaringBitmap)]]) => Iterator[R]
+  ): Dataset[R] = {
+    val segShift = index.cfg.segShift
+    val prefixes = fields.map(IndexBuild.filterKey(_, ""))
+    perSegment(segHits(terms, fqKey.toSeq, fields))(_.seg_id) { (seg, it, allow0) =>
+      val (keys, hits) = it.toArray.partition(r => IndexBuild.isFilterKey(r.term))
+      val allow =
+        if (fqKey.isEmpty) allow0 else Engine.boolAllow(keys, fqKey.toSet, Set.empty, allow0, segShift)
+      if (hits.isEmpty || (allow != null && allow.isEmpty)) Iterator.empty
+      else kernel(seg, hits, allow, prefixes.map { p =>
+        keys.collect { case r if r.term.startsWith(p) =>
+          (r.term.substring(p.length), Engine.matchBitmap(Iterator(r.postings), null))
+        }
+      }.toArray)
+    }
+  }
+
   /** Primary programmatic API (reference `hashes` verb, SURVEY.md §3.2).
     * Returns (rank, doc_id, score_q), k=`rows`, as local rows: the query
-    * runs at call time, one Spark job without a doc filter
-    * ([[Wand.topK]]).
+    * runs at call time, one Spark job ([[Wand.topK]]) — with a covered fq
+    * too, whose key the same segments scan reads ([[fqSplit]]).
     *
     * A batch of one through [[scorePass]] on its [[specOf]] route:
     * rare/mixed terms -> per-segment DAAT (block-max WAND when `accuracy`
@@ -587,10 +567,10 @@ final class Engine(val index: Index) {
       docPred: Option[Column] = None,
       docFilter: Option[(String, String)] = None,
       after: Option[(Long, Long)] = None): Dataset[(Long, Scored)] = {
-    val (bitmapFq, pred) = fqSplit(docPred, docFilter)
+    val (fqKey, pred) = fqSplit(docPred, docFilter)
     val spec = termSpec(terms, rows, accuracy, candidates)
-      .map(s => after.fold(s)(a => s.copy(after = a)))
-    scorePass(spec.toSeq, rows, candidates, bitmapFq, pred)
+      .map(s => after.fold(s)(a => s.copy(after = a)).copy(must = s.must ++ fqKey))
+    scorePass(spec.toSeq, rows, candidates, pred)
   }
 
   /** Search-after cursor paging (Solr cursorMark semantics — the deep-page
@@ -623,7 +603,7 @@ final class Engine(val index: Index) {
     val names = terms.distinct
     val cfg = index.cfg
     val nTerms = names.size
-    perSegment(segHits(names))(_.seg_id) { (seg, it, allow, _) =>
+    perSegment(segHits(names))(_.seg_id) { (seg, it, allow) =>
       Engine.conjunction(seg, it.toArray, nTerms, cfg, allow)
     }
   }
@@ -969,7 +949,7 @@ final class Engine(val index: Index) {
     * The required/prohibited algebra folds into the per-segment allow
     * bitmap ([[Engine.boolAllow]]); score(doc) = Σ boost·idf·tfNorm over
     * the matching SHOULD and MUST clauses, a phrase's tf being its phrase
-    * frequency. Without a doc filter the query is one Spark job.
+    * frequency. The query is one Spark job.
     */
   def searchParsed(q: String, rows: Int = 60,
                    maxExpansions: Int = 50): DataFrame =
@@ -1061,7 +1041,7 @@ final class Engine(val index: Index) {
     * runs inside the segment task as postings-derived bitmaps folded into
     * the SAME allow bitmap the fq/kill paths feed the scorer
     * ([[Engine.boolAllow]]) — doc ids never shuffle for it, and it composes
-    * with fq bitmaps, arbitrary predicates and upsert tombstones.
+    * with fq keys, arbitrary predicates and upsert tombstones.
     *
     * Accuracy pruning (T1/T2) applies to the SHOULD terms only — a
     * required or prohibited clause is never pruned away (pruning one would
@@ -1098,9 +1078,11 @@ final class Engine(val index: Index) {
                               phrases: Seq[(Engine.Phrase, Double, Engine.Occur)] = Nil)
       : Dataset[(Long, Scored)] = {
     import Engine.Occur
-    lazy val noMatch = scorePass(Nil, rows, candidates, None, None)
+    lazy val noMatch = scorePass(Nil, rows, candidates, None)
     def phraseKeys(occ: Occur): Seq[String] = phrases.collect { case (p, _, `occ`) => p.key }
-    val notSet = mustNot.toSet ++ phraseKeys(Occur.MustNot)
+    // a prohibited filter key excluded nothing before keys were indexed
+    val notTerms = mustNot.filterNot(IndexBuild.isFilterKey)
+    val notSet = notTerms.toSet ++ phraseKeys(Occur.MustNot)
     // +t -t is unsatisfiable (Lucene: required AND prohibited -> no doc)
     if ((must.map(_._1) ++ phraseKeys(Occur.Must)).exists(notSet)) return noMatch
     // a SHOULD clause that is also prohibited can never contribute (every
@@ -1139,17 +1121,17 @@ final class Engine(val index: Index) {
     }.groupMapReduce(_._1)(_._2)(_ + _)
     val kept = shouldKept ++ mustKept ++ groupsKept.flatten
     if (kept.isEmpty && phraseWeights.isEmpty) return noMatch
-    val (bitmapFq, pred) = fqSplit(docPred, docFilter)
+    val (fqKey, pred) = fqSplit(docPred, docFilter)
     // the route comes from the term clauses
     val routed =
       if (kept.isEmpty) Engine.QuerySpec(0L, Map.empty, Engine.Route.Daat, useWand = accuracy < 0.9)
       else specOf(0L, kept, n, rows, candidates, useWand = accuracy < 0.9)
     val spec = routed.copy(weights = routed.weights ++ phraseWeights,
-      must = must.map(_._1).toSet ++ phraseKeys(Occur.Must),
-      mustNot = mustNot.toSet ++ phrasesKept.collect { case (p, _, Occur.MustNot) => p.key },
+      must = must.map(_._1).toSet ++ phraseKeys(Occur.Must) ++ fqKey,
+      mustNot = notTerms.toSet ++ phrasesKept.collect { case (p, _, Occur.MustNot) => p.key },
       mustGroups = groupsKept.map(_.iterator.map(_._1).toSet),
       phrases = phrasesKept.map(_._1).distinct)
-    scorePass(Seq(spec), rows, candidates, bitmapFq, pred)
+    scorePass(Seq(spec), rows, candidates, pred)
   }
 
   /** THE scoring pass of 1..N term queries — [[searchByTerms]] (so
@@ -1161,33 +1143,33 @@ final class Engine(val index: Index) {
     * merges the tasks' heaps on the driver.
     */
   private[graft] def scorePass(specs: Seq[Engine.QuerySpec], rows: Int, candidates: Int,
-      bitmapFq: Option[(String, String)],
       docPred: Option[Column]): Dataset[(Long, Scored)] = {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
     if (specs.isEmpty) return spark.emptyDataset[(Long, Scored)]
-    segmentPass(specs, math.min(candidates, rows), index.stats._2, bitmapFq, docPred)
+    segmentPass(specs, math.min(candidates, rows), index.stats._2, docPred)
   }
 
-  /** The body of [[scorePass]]: ONE scan of the specs' terms, their
-    * MUST_NOT terms and their phrase words (with positions, read only when
-    * some spec has a phrase), scored in the scan task by [[perSegment]] —
-    * fq, predicate and tombstones resolve to the allow bitmap BEFORE any
-    * heap (a covered fq joins the persisted per-segment bitmaps, no
-    * docmeta scan). Each segment's rows materialize once and every spec
-    * scores them ([[Engine.QuerySpec.scoreSegment]]) into a `heapSize`
-    * heap: the exact top-`rows` needs per-segment top-`rows`; a smaller
-    * `candidates` is the reference's approximate phase-1 budget. Without
-    * side inputs the pass has no exchange: the scan, the kernels and the
-    * task's heaps are one stage, at any segment width.
+  /** The body of [[scorePass]]: ONE scan of the specs' terms, their MUST
+    * and MUST_NOT terms, their fq keys and their phrase words (with
+    * positions, read only when some spec has a phrase), scored in the scan
+    * task by [[perSegment]] — predicate and tombstones resolve to the
+    * allow bitmap, and each spec's MUST clauses (an fq key among them)
+    * narrow it, BEFORE any heap. Each segment's rows materialize once and
+    * every spec scores them ([[Engine.QuerySpec.scoreSegment]]) into a
+    * `heapSize` heap: the exact top-`rows` needs per-segment top-`rows`; a
+    * smaller `candidates` is the reference's approximate phase-1 budget.
+    * Without a predicate or kills the pass has no join and no exchange:
+    * the scan, the kernels and the task's heaps are one stage, at any
+    * segment width.
     */
   private def segmentPass(specs: Seq[Engine.QuerySpec], heapSize: Int, avgdl: Double,
-      bitmapFq: Option[(String, String)],
       docPred: Option[Column]): Dataset[(Long, Scored)] = {
     val phraseWords = specs.flatMap(_.phrases.flatMap(_.words)).distinct
     val names = (specs.flatMap(_.scanTerms) ++ phraseWords).distinct
+    val keys = specs.flatMap(_.must.filter(IndexBuild.isFilterKey)).distinct
     val cfg = index.cfg
     val specsB = spark.sparkContext.broadcast(specs.toArray)
-    perSegment(segRows(names, phraseWords), bitmapFq, docPred)(_.seg_id) { (seg, it, allow, _) =>
+    perSegment(segRows(names, keys, phraseWords), docPred)(_.seg_id) { (seg, it, allow) =>
       val rows = it.toArray
       val hits = rows.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
       val positions = rows.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
@@ -1363,7 +1345,7 @@ final class Engine(val index: Index) {
       val kept = ts.flatMap { case (t, b) => dfs.get(t).filter(_ > 0).map(df => (t, b, df)) }
       if (kept.isEmpty) None else Some(specOf(qid, kept, n, rows, candidates, useWand = true))
     }
-    scorePass(specs, rows, candidates, None, None)
+    scorePass(specs, rows, candidates, None)
   }
 
   /** Paged search — Solr's `start` offset (every Solr handler takes
@@ -1429,20 +1411,21 @@ final class Engine(val index: Index) {
     * query term — Boolean-OR match semantics, not the top-k window):
     * Solr's `facet=true&facet.field=<f>` on the same request.
     *
-    * Fast path (field covered by the persisted filter side-index): the
-    * match set never leaves its segment — per segment, the query terms'
-    * postings OR into one local bitmap, which meets the per-(value)
-    * filter bitmaps (and the kill bitmaps, through the same side join as
-    * P2's fq path) in the scan task; each facet count is a popcount of
-    * `match AND value [ANDNOT kill]`, and only (value, count) rows — a
-    * handful per segment — reach the final tiny aggregation. The slow
-    * path's per-query shuffle of EVERY matching doc_id (distinct +
-    * semi-join into docmeta) disappears; that path remains for uncovered
-    * fields and is pinned count-identical in IndexSpec/UpsertSpec.
+    * Fast path (field, and fq column if any, covered in every unit —
+    * [[Index.filterColsComplete]]): the match set never leaves its
+    * segment — the one segments scan reads the query terms with the
+    * field's filter keys and the fq key; per segment the terms' postings
+    * OR into one local bitmap, narrowed by the fq key's docs and the kill
+    * bitmaps (P2's side join), and each facet count is a popcount of
+    * `match AND value-key docs`; only (value, count) rows — a handful per
+    * segment — reach the final tiny aggregation. The slow path's
+    * per-query shuffle of EVERY matching doc_id (distinct + semi-join
+    * into docmeta) disappears; that path remains for uncovered fields and
+    * is pinned count-identical in IndexSpec/UpsertSpec.
     */
   def facet(terms: Seq[(String, Double)], field: String,
             docFilter: Option[(String, String)] = None): DataFrame =
-    if (index.hasFilters && index.filterColsComplete.contains(field) &&
+    if (index.filterColsComplete.contains(field) &&
         docFilter.forall(f => index.filterColsComplete.contains(f._1)))
       facetBitmap(terms, field, docFilter)
     else facetScan(terms, field, docFilter)
@@ -1464,14 +1447,12 @@ final class Engine(val index: Index) {
   private[graft] def facetBitmap(terms: Seq[(String, Double)], field: String,
                                  docFilter: Option[(String, String)] = None): DataFrame = {
     import spark.implicits._
-    val hits = index.termRows(terms.map(_._1).distinct)(col("seg_id"), col("postings"))
-      .as[(Long, Array[Byte])]
-    perSegment(hits, fq = docFilter, valueFields = Seq(field))(_._1) {
-      (_, it, allow, values) =>
-        // matching docs under NO value bitmap (a null `field`) count into
-        // the null group, as facetScan's docmeta grouping counts them
-        Wand.valueSlices(Engine.matchBitmap(it.map(_._2), allow), values(0))
-          .iterator.map { case (value, slice) => (value, slice.getLongCardinality) }
+    valuePass(terms.map(_._1).distinct, docFilter.map { case (c, v) => IndexBuild.filterKey(c, v) },
+        Seq(field)) { (_, hits, allow, values) =>
+      // matching docs under NO value key (a null `field`) count into the
+      // null group, as facetScan's docmeta grouping counts them
+      Wand.valueSlices(Engine.matchBitmap(hits.iterator.map(_.postings), allow), values(0))
+        .iterator.map { case (value, slice) => (value, slice.getLongCardinality) }
     }
       .toDF("value", "n0")
       .groupBy(col("value"))
@@ -1492,8 +1473,8 @@ final class Engine(val index: Index) {
 
   /** Uncovered-field facet: one match-set semi-join into docmeta, one
     * count per value. `value` is string-cast so both dispatch paths emit
-    * ONE schema (the filter store keys bitmaps by the string form); the
-    * fq compares the string form for the same reason.
+    * ONE schema (filter keys hold the string form); the fq compares the
+    * string form for the same reason.
     */
   private[graft] def facetScan(terms: Seq[(String, Double)], field: String,
                                docFilter: Option[(String, String)] = None): DataFrame = {
@@ -1650,10 +1631,10 @@ final class Engine(val index: Index) {
 
   /** Solr pivot faceting (`facet.pivot=<f1>,<f2>`): nested counts over
     * the full match set, flattened to (value, pivot, n) rows — value =
-    * f1's value, pivot = f2's. Fast path (BOTH columns covered by the
-    * filter side-index in every unit): per segment the match bitmap
-    * intersects each f1 value bitmap once, and each non-empty
-    * intersection popcounts against the f2 value bitmaps — emission is
+    * f1's value, pivot = f2's. Fast path (BOTH columns covered in every
+    * unit, read as filter keys by the one segments scan): per segment the
+    * match bitmap intersects each f1 value's docs once, and each non-empty
+    * intersection popcounts against the f2 values' docs — emission is
     * bounded by values-present(f1) × values-present(f2) per segment
     * (filter columns are low-cardinality by contract) and no doc id ever
     * leaves its segment. Docs missing either column count into that
@@ -1662,7 +1643,7 @@ final class Engine(val index: Index) {
     */
   def facetPivot(terms: Seq[(String, Double)], field: String,
                  pivotField: String): DataFrame =
-    if (index.hasFilters && index.filterColsComplete.contains(field) &&
+    if (index.filterColsComplete.contains(field) &&
         index.filterColsComplete.contains(pivotField))
       facetPivotBitmap(terms, field, pivotField)
     else facetPivotScan(terms, field, pivotField)
@@ -1679,17 +1660,14 @@ final class Engine(val index: Index) {
                                       field: String,
                                       pivotField: String): DataFrame = {
     import spark.implicits._
-    val hits = index.termRows(terms.map(_._1).distinct)(col("seg_id"), col("postings"))
-      .as[(Long, Array[Byte])]
-    perSegment(hits, valueFields = Seq(field, pivotField))(_._1) {
-      (_, it, allow, values) =>
-        // one f1 slice = the docs of one (value) cell; each slice then
-        // splits by the f2 bitmaps — both levels keep their null group
-        Wand.valueSlices(Engine.matchBitmap(it.map(_._2), allow), values(0))
-          .iterator.flatMap { case (v1, slice) =>
-            Wand.valueSlices(slice, values(1)).iterator
-              .map { case (v2, cell) => (v1, v2, cell.getLongCardinality) }
-          }
+    valuePass(terms.map(_._1).distinct, None, Seq(field, pivotField)) { (_, hits, allow, values) =>
+      // one f1 slice = the docs of one (value) cell; each slice then
+      // splits by the f2 values — both levels keep their null group
+      Wand.valueSlices(Engine.matchBitmap(hits.iterator.map(_.postings), allow), values(0))
+        .iterator.flatMap { case (v1, slice) =>
+          Wand.valueSlices(slice, values(1)).iterator
+            .map { case (v2, cell) => (v1, v2, cell.getLongCardinality) }
+        }
     }
       .toDF("value", "pivot", "n0")
       .groupBy(col("value"), col("pivot"))
@@ -1764,14 +1742,14 @@ final class Engine(val index: Index) {
     // 600k-doc bench corpus). Integer Σ/max per parent are partition-
     // order invariant, so output is identical to the join route (the
     // fallback below, kept for uncovered keys and pinned equal in PlanSpec).
-    val viaBitmap = index.hasFilters && index.filterColsComplete.contains("repo")
+    // The repo values are the `repo` filter keys, read by the same scan.
+    val viaBitmap = index.filterColsComplete.contains("repo")
     val agg: DataFrame =
       if (viaBitmap) {
         val wB = spark.sparkContext.broadcast(weights)
         val cfg = index.cfg
-        perSegment(segHits(weights.keys.toSeq), valueFields = Seq("repo"))(_.seg_id) {
-          (seg, it, allow, values) =>
-            Wand.scoreSegmentValueAgg(seg, it, values(0), allow, wB.value, avgdl, cfg)
+        valuePass(weights.keys.toSeq, None, Seq("repo")) { (seg, hits, allow, values) =>
+          Wand.scoreSegmentValueAgg(seg, hits.iterator, values(0), allow, wB.value, avgdl, cfg)
         }
           .toDF("parent", "sum_q", "max_q", "nc")
           .groupBy(col("parent"))
@@ -1815,8 +1793,9 @@ final class Engine(val index: Index) {
     * docs with no value in the field form the null group, as in Solr.
     *
     * Plan: covered field -> segment-local grouped scorer
-    * ([[Wand.scoreSegmentGrouped]]): postings fold into the dense score
-    * array ONCE per window, each group-value bitmap sweeps its
+    * ([[Wand.scoreSegmentGrouped]]) over the field's filter keys, read
+    * by the one segments scan: postings fold into the dense score
+    * array ONCE per window, each group value's docs sweep their
     * intersection into a bounded heap of `groupLimit`, and only (value,
     * top-doc) rows — bounded by values-in-segment × groupLimit per window
     * — leave the segment task. The global merge is a keyed bounded heap
@@ -1851,28 +1830,27 @@ final class Engine(val index: Index) {
     val weights = weightsOf(kept, n)
     val cfg = index.cfg
     // fq resolution is the ONE rule shared with searchByTerms/searchBool
-    // ([[fqSplit]]): a sole equality fq on a fully covered column rides
-    // the bitmap side join; anything else — an arbitrary docPred (Solr
-    // q+fq+group), a combined pred+fq, or an uncovered column — becomes a
-    // predicate on the scan fallback (silently ignoring it would be the
-    // P2 bug class all over again)
-    val (bitmapFq, pred) = fqSplit(docPred, docFilter)
-    val viaBitmap = pred.isEmpty && index.hasFilters && index.filterColsComplete.contains(field)
+    // ([[fqSplit]]): a sole equality fq on a fully covered column is its
+    // filter key; anything else — an arbitrary docPred (Solr q+fq+group),
+    // a combined pred+fq, or an uncovered column — becomes a predicate on
+    // the scan fallback (silently ignoring it would be the P2 bug class
+    // all over again)
+    val (fqKey, pred) = fqSplit(docPred, docFilter)
+    val viaBitmap = pred.isEmpty && index.filterColsComplete.contains(field)
     val perVal: org.apache.spark.sql.Dataset[(String, Scored)] =
       if (viaBitmap) {
-        // a sole covered equality fq rides the same side join as the value
-        // bitmaps (as in searchByTerms) and intersects the touched set
-        // inside the segment
+        // the fq key and the field's keys ride the same scan as the terms;
+        // the fq narrows the touched set inside the segment
         val wB = spark.sparkContext.broadcast(weights)
         val gl = groupLimit
-        perSegment(segHits(weights.keys.toSeq), fq = bitmapFq,
-          valueFields = Seq(field))(_.seg_id) { (seg, it, allow, values) =>
-          Wand.scoreSegmentGrouped(seg, it, values(0), allow, wB.value, avgdl, gl, cfg)
+        valuePass(weights.keys.toSeq, fqKey, Seq(field)) { (seg, hits, allow, values) =>
+          Wand.scoreSegmentGrouped(seg, hits.iterator, values(0), allow, wB.value, avgdl, gl, cfg)
         }
       } else
         // uncovered field: a covered fq takes its result-identical
         // predicate form
-        scanScoreAll(weights, avgdl, bitmapFq.map { case (c, v) => col(c) === lit(v) }.orElse(pred))
+        scanScoreAll(weights, avgdl,
+          if (fqKey.isDefined) docFilter.map { case (c, v) => col(c) === lit(v) } else pred)
           .join(index.docmeta.select(col("doc_id"),
             col(field).cast("string").as("gval")), Seq("doc_id"))
           .select(col("gval"), col("doc_id"), col("score"))
@@ -2011,24 +1989,27 @@ object Engine {
       must: Set[String] = Set.empty, mustNot: Set[String] = Set.empty,
       mustGroups: Seq[Set[String]] = Nil, phrases: Seq[Phrase] = Nil) {
 
-    /** The terms the segments scan reads for this query: weighted and
-      * prohibited terms (phrase keys stand for their words, which the
-      * scan adds with their positions).
+    /** The terms the segments scan reads for this query: weighted,
+      * required and prohibited terms, an fq's filter key among the
+      * required (phrase keys stand for their words, which the scan adds
+      * with their positions).
       */
     def scanTerms: Seq[String] = {
       val keys = phrases.iterator.map(_.key).toSet
-      (weights.keysIterator ++ mustNot.iterator).filterNot(keys).toSeq
+      (weights.keysIterator ++ must.iterator ++ mustNot.iterator).filterNot(keys).toSeq
     }
 
     /** This query's top-`heapSize` of one segment, after the cursor and
       * under `allow0` (fq/kill, null = every doc) narrowed by its clauses;
       * each phrase first joins `rows` as its virtual posting list, built
       * from its words' `positions` ([[Phrase.hit]]). The kernels skip
-      * rows of terms it does not weight.
+      * rows of terms it does not weight; a segment with no weighted row
+      * scores nothing, so its clauses are never decoded.
       */
     def scoreSegment(seg: Long, rows: Array[SegHit], positions: Map[String, Array[Byte]],
         allow0: RoaringBitmap, heapSize: Int, avgdl: Double, cfg: IndexConfig): Iterator[Scored] = {
       val all = if (phrases.isEmpty) rows else rows ++ phrases.flatMap(_.hit(seg, rows, positions))
+      if (!all.exists(r => weights.contains(r.term))) return Iterator.empty
       val allow =
         if (must.isEmpty && mustNot.isEmpty && mustGroups.isEmpty) allow0
         else boolAllow(all, must, mustNot, allow0, cfg.segShift, mustGroups)
@@ -2385,8 +2366,9 @@ object Engine {
 
   /** Fold Lucene BooleanQuery clauses into a segment's allow bitmap:
     * required = AND over the MUST terms' postings (a MUST term absent from
-    * the segment empties it — every doc there lacks the term), exclusion =
-    * OR over the MUST_NOT postings. Composes with the incoming fq/kill
+    * the segment empties it — every doc there lacks the term; an fq's
+    * filter key is one such term), exclusion = OR over the MUST_NOT
+    * postings. Composes with the incoming predicate/kill
     * `allow0` (null = unconstrained), which is NOT modified: every query
     * of a pass reads the same segment bitmap. Returns null only when
     * unconstrained.
@@ -2619,7 +2601,7 @@ object Engine {
 
   private def builtDir(spark: SparkSession, sfDir: String): String = {
     val key = sfDir.replaceAll("[^a-zA-Z0-9.]+", "_")
-    val dir = s"$indexRoot/v8-$key" // bump on index-format changes (v8: positional postings + trigram store)
+    val dir = s"$indexRoot/v9-$key" // bump on index-format changes (v9: filter keys in the segments)
     val cfg = IndexConfig(segShift = 7, rangeSegsShift = 2)
     val corpus = Corpus.fromDocuments(spark, sfDir)
     IndexBuild.build(spark, corpus, dir, cfg) // resumes/no-ops if committed

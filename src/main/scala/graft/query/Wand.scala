@@ -330,6 +330,12 @@ object Wand {
     * one holding the smallest unread local id, so empty windows cost
     * nothing; a segment of shift ≤ 22 is exactly one window. A doc's
     * partial scores add in list order in every geometry.
+    *
+    * The score array is the task thread's own, grown on demand (1 MB at
+    * the default segShift 17, 32 MB at the widest window) and reused
+    * across segments and queries: every window zeroes its touched entries
+    * when it ends, the last one and one a failed sweep left included, so
+    * the array is all zeros between fills.
     */
   private def denseFill(hits: Iterator[SegHit], weights: Map[String, Double],
       avgdl: Double, cfg: IndexConfig, allow: RoaringBitmap)(
@@ -338,32 +344,36 @@ object Wand {
       .filterNot(_._1.exhausted).toArray
     if (lists.isEmpty) return
     val wShift = math.min(cfg.segShift, DenseArraySegShiftMax)
-    val scores = new Array[Double](1 << wShift)
+    var scores = denseScores.get()
+    if (scores.length < (1 << wShift)) { scores = new Array[Double](1 << wShift); denseScores.set(scores) }
     val touched = new RoaringBitmap()
     var next = lists.iterator.map(_._1.curLocal).min
     while (next >= 0) {
       val base = next >>> wShift << wShift
       val end = base + (1 << wShift)
       next = -1
-      lists.foreach { case (it, w) =>
-        var more = !it.exhausted
-        while (more && it.curLocal < end) {
-          val local = it.curLocal
-          scores(local - base) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
-          touched.add(local)
-          more = it.next()
+      try {
+        lists.foreach { case (it, w) =>
+          var more = !it.exhausted
+          while (more && it.curLocal < end) {
+            val local = it.curLocal
+            scores(local - base) += w * Bm25.tfNorm(it.curTf.toDouble, it.curDl.toDouble, avgdl)
+            touched.add(local)
+            more = it.next()
+          }
+          if (more && (next < 0 || it.curLocal < next)) next = it.curLocal
         }
-        if (more && (next < 0 || it.curLocal < next)) next = it.curLocal
-      }
-      val docs = if (allow == null) touched else RoaringBitmap.and(touched, allow)
-      if (!docs.isEmpty) sweep(base, scores, docs)
-      if (next >= 0) {
+        val docs = if (allow == null) touched else RoaringBitmap.and(touched, allow)
+        if (!docs.isEmpty) sweep(base, scores, docs)
+      } finally {
         val ti = touched.getIntIterator
         while (ti.hasNext) scores(ti.next() - base) = 0.0
         touched.clear()
       }
     }
   }
+
+  private val denseScores = ThreadLocal.withInitial[Array[Double]](() => Array.emptyDoubleArray)
 
   /** The value sweep: `set` split by value bitmaps into (value, set ∩
     * bitmap) for each non-empty intersection, then (null, rest) for the

@@ -154,7 +154,7 @@ object Oracle {
   /** Facet counts over the full Boolean-OR match set of the terms,
     * optionally intersected with an equality fq (Solr: facet counts are
     * computed over q AND all fq's). The fq compares the STRING form of
-    * the column — the engine's filter bitmaps key values by string.
+    * the column — the engine's filter keys hold values as strings.
     */
   def facetSql(terms: Seq[(String, Double)], field: String,
                fq: Option[(String, String)] = None): String = {

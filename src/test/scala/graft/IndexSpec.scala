@@ -23,7 +23,7 @@ class IndexSpec extends SparkSpec {
     d
   }
   lazy val engine = new Engine(new Index(spark, indexDir))
-  /** The same docs and geometry with no filter store: grouping and block
+  /** The same docs and geometry with no filter keys: grouping and block
     * join take their docmeta fallbacks.
     */
   lazy val scanEngine: Engine = {
@@ -237,8 +237,16 @@ class IndexSpec extends SparkSpec {
       }
       .groupBy(_._1).view
       .mapValues(_.map(p => (p._2, p._3)).sortBy(_._1).toSeq).toMap
-    assert(decoded.keySet == post.keySet)
-    decoded.foreach { case (t, ps) => assert(ps == post(t), s"term $t") }
+    val (keys, terms) = decoded.partition(_._1.contains("="))
+    assert(terms.keySet == post.keySet)
+    terms.foreach { case (t, ps) => assert(ps == post(t), s"term $t") }
+    // the filter keys: tf 1 on every doc with tokens, per column value
+    val withTokens = post.valuesIterator.flatMap(_.map(_._1)).toSet
+    val expKeys = corpus.select($"doc_id", $"lang", $"repo").as[(Long, String, String)]
+      .collect().filter(r => withTokens(r._1))
+      .flatMap { case (d, lang, repo) => Seq(s"lang=$lang" -> d, s"repo=$repo" -> d) }
+      .groupBy(_._1).view.mapValues(_.map(x => (x._2, 1)).sortBy(_._1).toSeq).toMap
+    assert(keys == expKeys)
   }
 
   test("manifest stats equal corpus-derived stats") {
@@ -501,7 +509,7 @@ class IndexSpec extends SparkSpec {
       assert(s == d2, s"brute vs exhaustive (pred=$p)")
       assert(s == d3, s"brute vs dense-array (pred=$p)")
     }
-    // dense-array under a BITMAP fq too (the route keeps the side-index)
+    // dense-array under a covered fq too (the route reads the fq key)
     val fqApi = engine.searchByTerms(hotTerms, rows = 25, docFilter = Some(("lang", "en")))
       .collect().map(_.toSeq).toSeq
     assert(fqApi == enOnly, "dense-array bitmap fq diverges from the brute")
@@ -542,13 +550,13 @@ class IndexSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSeq
     val exp2 = BruteScorer.topK(docs, boostedHot, 30)
     assert(got2.map(_._2) == exp2.map(_.docId))
-    // dense + bitmap fq: the dense-array route keeps the bitmap side-index;
-    // results == the DAAT bitmap path
+    // dense + covered fq: the dense-array route reads the fq key too;
+    // results == the DAAT route under the same key
     val api3 = engine.searchByTerms(hotTerms, rows = 30, docFilter = Some(("lang", "en")))
     val viaDaat = specTopK(engine, Some(QuerySpec(0L,
       hotTerms.map { case (t, b) =>
         t -> b * Bm25.idf(engine.index.dfOf(Seq(t))(t).toDouble, n.toDouble) }.toMap,
-      Route.Daat, useWand = true)), 30, 30, bitmapFq = Some(("lang", "en")))
+      Route.Daat, useWand = true)), 30, 30, fq = Some(("lang", "en")))
       .collect().map(_.toSeq).toSeq
     assert(api3.collect().map(_.toSeq).toSeq == viaDaat,
       "dense+fq route must equal the DAAT bitmap route")
@@ -580,9 +588,7 @@ class IndexSpec extends SparkSpec {
   }
 
   test("persisted fq bitmaps: docFilter path == predicate path, no docmeta scan") {
-    val idx = engine.index
-    assert(idx.hasFilters, "filters side-index missing")
-    assert(idx.filterCols == Set("lang", "repo"))
+    assert(engine.index.filterColsComplete == Set("lang", "repo"))
     val viaBitmap = engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,
       docFilter = Some(("lang", "en")))
     val viaPred = engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,
@@ -590,7 +596,7 @@ class IndexSpec extends SparkSpec {
     assert(viaBitmap.collect().map(_.toSeq).toSeq == viaPred.collect().map(_.toSeq).toSeq)
     val plan = engine.termsPass(SparkEntry.FlagshipTerms, rows = 30,
       docFilter = Some(("lang", "en"))).queryExecution.executedPlan.toString
-    assert(plan.contains("filters") && !plan.contains("docmeta"), "bitmap path must not scan docmeta")
+    assert(!plan.contains("docmeta"), "filter key path must not scan docmeta")
     // a column without a persisted bitmap falls back to the predicate path
     val path = corpus.select($"path").as[String].head()
     val f = engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,
@@ -598,6 +604,32 @@ class IndexSpec extends SparkSpec {
     val g = engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,
       docPred = Some(col("path") === path)).collect().map(_.toSeq).toSeq
     assert(f == g)
+  }
+
+  test("a filter column whose name contains '=' is rejected") {
+    val e = intercept[IllegalArgumentException](cfg.copy(filterColumns = Seq("lang", "a=b")))
+    assert(e.getMessage.contains("a=b"), e.getMessage)
+  }
+
+  test("reserved filter keys stay out of every vocabulary surface") {
+    // scanEngine's index holds no filter key at all: the vocabulary and the
+    // results the verbs return before keys were indexed
+    for (dictMax <- Seq(Index.DictDriverMaxDefault, 16L)) { // driver map, then the stores
+      val withKeys = new Engine(new Index(spark, indexDir, dictMax))
+      val noKeys = new Engine(new Index(spark, scanEngine.index.indexDir, dictMax))
+      def same(name: String)(f: Engine => org.apache.spark.sql.DataFrame): Unit = {
+        val got = f(withKeys).collect().map(_.toSeq).toSeq
+        assert(!got.flatten.exists(_.toString.contains("=")), s"$name returned a filter key")
+        assert(got == f(noKeys).collect().map(_.toSeq).toSeq, s"$name: $dictMax")
+      }
+      same("termsEnum")(_.termsEnum("", limit = 1000000))
+      same("range")(_.searchRange(None, None, maxExpansions = 100000))
+      same("wildcard")(_.searchWildcard("*", maxExpansions = 100000))
+      same("fuzzy")(_.searchFuzzy("lang=ex"))
+      same("spellcheck")(_.spellcheck("lang=ex", limit = 100))
+      same("key as term")(_.searchByTerms(Seq("lang=en" -> 1.0)))
+      same("key as pruned term")(_.searchByTerms(Seq("lang=en" -> 1.0, "w:dup" -> 1.0), accuracy = 0.5))
+    }
   }
 
   test("oversized document: tf clamps at field max instead of failing the build") {
@@ -667,17 +699,10 @@ class IndexSpec extends SparkSpec {
     IndexBuild.committedUnits(spark, s"countfs:$d")
     assert(CountingFs.listCalls.get() == 1,
       s"committedUnits made ${CountingFs.listCalls.get()} listings for 8 units")
-    // filter side-index detection: one glob on the filters dir
-    val idx = new Index(spark, s"countfs:$d")
-    idx.ranges // resolve units first (its own listing + manifest read)
-    CountingFs.listCalls.set(0)
-    assert(idx.hasFilters)
-    assert(CountingFs.listCalls.get() == 1,
-      s"hasFilters made ${CountingFs.listCalls.get()} listings for 8 units")
   }
 
   test("facet bitmap fast path == docmeta-scan path (covered field)") {
-    assert(engine.index.filterCols.contains("lang"))
+    assert(engine.index.filterColsComplete.contains("lang"))
     def m(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
       df.as[(String, Long)].collect().toMap
     val fast = m(engine.facetBitmap(SparkEntry.FlagshipTerms, "lang"))
@@ -690,45 +715,44 @@ class IndexSpec extends SparkSpec {
   }
 
   test("facet falls back to the scan path when a doc-holding unit lacks the field's bitmaps") {
-    // simulate a column ADDED to filterColumns after some units were built:
-    // one live unit's filter store exists but carries no rows — serving
-    // facet from bitmaps would silently zero that unit's docs
+    // a column ADDED to filterColumns after some units were built: range 0
+    // carries no filter keys, range 1 does — serving fq, facet or grouping
+    // from keys alone would silently drop range 0's docs
     val d = tmpDir("facetmixed")
-    IndexBuild.build(spark, corpus, d, cfg)
-    val r0 = IndexBuild.liveUnits(spark, d).min
-    val fp = s"${IndexBuild.filtersDir(d)}/range=$r0"
-    val schema = spark.read.parquet(fp).schema
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode("overwrite").parquet(fp)
-    val e = new Engine(new Index(spark, d))
-    assert(e.index.filterCols.contains("lang"), "column still partially covered")
-    assert(!e.index.filterColsComplete.contains("lang"), "coverage gap undetected")
+    IndexBuild.build(spark, corpus, d, cfg.copy(filterColumns = Nil), rangeFilter = _ == 0L)
+    IndexBuild.build(spark, corpus, d, cfg, rangeFilter = _ == 1L)
+    def filterCols(): Map[Long, Set[String]] =
+      IndexBuild.manifests(spark, d, IndexBuild.liveUnits(spark, d))
+        .select($"range_id", $"filter_cols").as[(Long, Seq[String])].collect()
+        .map { case (u, cs) => u -> cs.toSet }.toMap
+    assert(filterCols() == Map(0L -> Set.empty[String], 1L -> Set("lang", "repo")))
     def m(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
       df.as[(String, Long)].collect().toMap
-    val api = m(e.facet(SparkEntry.FlagshipTerms, "lang"))
-    val slow = m(e.facetScan(SparkEntry.FlagshipTerms, "lang"))
-    assert(api == slow && api.nonEmpty, s"facet diverged on partial coverage: $api vs $slow")
-    // fq search on the partially-covered column must route to the
-    // predicate path (the bitmap path would silently drop the truncated
-    // unit's matches — a segment with no fq bitmap row scores nothing)
-    val viaFq = e.searchByTerms(SparkEntry.FlagshipTerms, rows = 60,
-      docFilter = Some(("lang", "en"))).as[(Long, Long, Long)].collect().toSeq
-    val viaPred = e.searchByTerms(SparkEntry.FlagshipTerms, rows = 60,
-      docPred = Some(col("lang") === lit("en"))).as[(Long, Long, Long)].collect().toSeq
-    assert(viaFq == viaPred && viaFq.nonEmpty,
-      "partial-coverage fq diverged from the predicate ground truth")
-    // grouped search on the partially-covered field must take the scan
-    // fallback too (the bitmap path would silently drop the truncated
-    // unit's docs into no group at all): == the fully covered index's
-    // bitmap path over the same docs
-    val g1 = e.searchGrouped(SparkEntry.FlagshipTerms, "lang",
-      groupLimit = 2, groups = 4)
-      .as[(Long, String, Long, Long, Long)].collect().toSeq
-    val g2 = engine.searchGrouped(SparkEntry.FlagshipTerms, "lang",
-      groupLimit = 2, groups = 4)
-      .as[(Long, String, Long, Long, Long)].collect().toSeq
-    assert(g1 == g2 && g1.nonEmpty,
-      "partial-coverage grouped search diverged from the covered index")
+    def check(step: String): Unit = {
+      val e = new Engine(new Index(spark, d))
+      assert(e.index.filterColsComplete.isEmpty, s"$step: coverage gap undetected")
+      // every verb takes its docmeta path and equals the fully covered index
+      assert(e.termsPass(SparkEntry.FlagshipTerms, rows = 60, docFilter = Some(("lang", "en")))
+        .queryExecution.executedPlan.toString.contains("docmeta"), s"$step: fq took the key path")
+      val facet = m(e.facet(SparkEntry.FlagshipTerms, "lang"))
+      assert(facet == m(engine.facet(SparkEntry.FlagshipTerms, "lang")) && facet.nonEmpty,
+        s"$step: facet diverged on partial coverage")
+      val viaFq = e.searchByTerms(SparkEntry.FlagshipTerms, rows = 60,
+        docFilter = Some(("lang", "en"))).as[(Long, Long, Long)].collect().toSeq
+      assert(viaFq == engine.searchByTerms(SparkEntry.FlagshipTerms, rows = 60,
+        docFilter = Some(("lang", "en"))).as[(Long, Long, Long)].collect().toSeq && viaFq.nonEmpty,
+        s"$step: partial-coverage fq diverged")
+      def grouped(x: Engine) = x.searchGrouped(SparkEntry.FlagshipTerms, "lang",
+        groupLimit = 2, groups = 4).as[(Long, String, Long, Long, Long)].collect().toSeq
+      val g = grouped(e)
+      assert(g == grouped(engine) && g.nonEmpty, s"$step: partial-coverage grouping diverged")
+    }
+    check("mixed units")
+    // the merged unit of a mixed pair covers the intersection: nothing
+    val rep = IndexBuild.compact(spark, d)
+    assert(rep.unitsCreated.size == 1)
+    assert(filterCols() == Map(rep.unitsCreated.head -> Set.empty[String]))
+    check("compacted")
   }
 
   test("facet composes with fq: bitmap path == scan path, fq constrains") {
@@ -773,7 +797,7 @@ class IndexSpec extends SparkSpec {
       groupLimit = 3, groups = 8)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
     assert(got == expected, s"grouped diverged from brute:\n$got\nvs\n$expected")
-    // the scan fallback: the same docs through an index with no filter store
+    // the scan fallback: the same docs through an index with no filter keys
     val scan = scanEngine.searchGrouped(SparkEntry.FlagshipTerms, "repo",
       groupLimit = 3, groups = 8)
       .as[(Long, String, Long, Long, Long)].collect().toSeq
@@ -972,7 +996,8 @@ class IndexSpec extends SparkSpec {
   test("dictionary store: per-unit artifact equals segment-derived dfs, survives compaction") {
     val idx = new Index(spark, indexDir)
     assertCurrentLayout(indexDir)
-    def segDfs(i: Index): Map[String, Long] = i.segments
+    // the filter keys are postings, not terms: the dictionary omits them
+    def segDfs(i: Index): Map[String, Long] = i.segments.where(!$"term".contains("="))
       .groupBy($"term").agg(sum($"df").cast("long")).as[(String, Long)].collect().toMap
     assert(idx.dictionary.select($"term", $"df").as[(String, Long)].collect().toMap
       == segDfs(idx))
@@ -1053,7 +1078,7 @@ class IndexSpec extends SparkSpec {
 }
 
 /** Local filesystem that counts directory listings — pins the one-listing
-  * metadata contract of committedUnits/hasFilters (IndexSpec).
+  * metadata contract of committedUnits (IndexSpec).
   */
 class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "countfs"

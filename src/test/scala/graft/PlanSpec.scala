@@ -104,13 +104,15 @@ class PlanSpec extends SparkSpec {
     assert(!pw.contains("Exchange"), s"exchange in the wide-segment pass:\n$pw")
   }
 
-  test("bitmap-filtered search cogroups the filter side-index, never docmeta") {
-    val p = plan(engine.termsPass(SparkEntry.FlagshipTerms, rows = 30,
-      docFilter = Some(("lang", "en"))))
-    assert(p.contains("filters"), s"filter side-index not scanned:\n$p")
+  test("covered-fq search is one segments scan: no join, no docmeta") {
+    assert(!engine.index.hasTombstones, "precondition: a tombstone-free index")
+    val pass = engine.termsPass(SparkEntry.FlagshipTerms, rows = 30,
+      docFilter = Some(("lang", "en")))
+    val p = plan(pass)
+    assert(segmentScans(pass, engine.index.indexDir) == 1, s"not one segments scan:\n$p")
+    assert(!p.contains("Join"), s"the fq joins:\n$p")
+    assert(!p.contains("Exchange"), s"the fq exchanges:\n$p")
     assert(!p.contains("docmeta"), s"docmeta scanned:\n$p")
-    assert(p.contains("PushedFilters: [IsNotNull(fcol)") || p.contains("EqualTo(fcol,lang)"),
-      s"fcol/value not pushed into the filters scan:\n$p")
   }
 
   test("OR-required groups ride the in-segment bitmap: plan identical to the plain bool query") {
@@ -317,14 +319,15 @@ class PlanSpec extends SparkSpec {
     import graft.index.{IndexBuild, IndexConfig}
     import graft.query.Index
     assert(engine.index.filterColsComplete.contains("repo"),
-      "precondition: default engine serves repo from the filter store")
-    // scan-route twin: same corpus, filter store disabled (and a different
+      "precondition: default engine serves repo from its filter keys")
+    // scan-route twin: same corpus, filter keys disabled (and a different
     // geometry, so the equality also re-checks geometry invariance)
     val dir = tempDir("graft-blockjoin-scan-")
     IndexBuild.build(spark, Corpus.fromDocuments(spark, sfTiny), dir,
       IndexConfig(segShift = 5, rangeSegsShift = 1, filterColumns = Nil))
     val scanEngine = new graft.query.Engine(new Index(spark, dir))
-    assert(!scanEngine.index.hasFilters, "precondition: twin must take the join route")
+    assert(!scanEngine.index.filterColsComplete.contains("repo"),
+      "precondition: twin must take the join route")
     for (mode <- Seq("max", "total", "avg")) {
       val a = engine.blockJoinParents(SparkEntry.FlagshipTerms, mode, rows = 10)
       val b = scanEngine.blockJoinParents(SparkEntry.FlagshipTerms, mode, rows = 10)

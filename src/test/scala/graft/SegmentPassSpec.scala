@@ -95,7 +95,7 @@ class SegmentPassSpec extends SparkSpec {
     assertOneFilePerSegment("compaction")
   }
 
-  test("one job per unfiltered query and per batch, at most two with a covered fq") {
+  test("one job per query, per batch and per covered-fq query") {
     val terms = queries(2)
     val batch = queries.zipWithIndex.map { case (q, i) => i.toLong -> q }
     val fq = Some("lang" -> "java")
@@ -116,7 +116,7 @@ class SegmentPassSpec extends SparkSpec {
     }
     assert(jobsOf(engine.searchManyByTerms(batch, rows = 30))._2 == 1)
     val (_, nFq) = jobsOf(engine.searchByTerms(terms, rows = 30, docFilter = fq))
-    assert(nFq <= 2, s"covered fq ran $nFq jobs")
+    assert(nFq == 1, s"covered fq ran $nFq jobs")
   }
 
   test("forced shuffle join: fq, kills, predicate, facets, grouping == the broadcast run") {

@@ -52,14 +52,17 @@ abstract class SparkSpec extends AnyFunSuite {
   /** One query spec's top-`rows` (rank, doc_id, score_q) through the
     * engine's scoring pass and merge, on the spec's own route: the route
     * pins force routes the engine's rule would not pick. None scores
-    * nothing.
+    * nothing. A covered `fq` joins the spec's MUST clauses as its filter
+    * key, as the engine's verbs add it.
     */
   def specTopK(engine: graft.query.Engine, spec: Option[graft.query.Engine.QuerySpec],
                rows: Int, candidates: Int,
-               bitmapFq: Option[(String, String)] = None,
-               docPred: Option[org.apache.spark.sql.Column] = None): org.apache.spark.sql.DataFrame =
-    graft.query.Wand.topK(engine.scorePass(spec.toSeq, rows, candidates, bitmapFq, docPred),
-      rows)(_._2)
+               fq: Option[(String, String)] = None,
+               docPred: Option[org.apache.spark.sql.Column] = None): org.apache.spark.sql.DataFrame = {
+    val key = fq.map { case (c, v) => graft.index.IndexBuild.filterKey(c, v) }
+    graft.query.Wand.topK(engine.scorePass(spec.map(s => s.copy(must = s.must ++ key)).toSeq,
+      rows, candidates, docPred), rows)(_._2)
+  }
 
   /** `body`'s result and the number of Spark jobs it started, counted by
     * a listener once the bus has delivered every event of the call.
@@ -81,22 +84,23 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   /** Every live unit of `indexDir` holds each always-written store and a
-    * manifest stamped with the current codec_ver. `filters` (only with
-    * filterColumns) and `tombstones` (only with kills) are optional.
+    * manifest stamped with the current codec_ver and its `filter_cols`.
+    * `tombstones` (only with kills) is optional.
     */
   def assertCurrentLayout(indexDir: String): Unit = {
     import graft.index.IndexBuild
     val live = IndexBuild.liveUnits(spark, indexDir)
     assert(live.nonEmpty, s"no live units under $indexDir")
-    val optional = Set(IndexBuild.filtersDir(indexDir), IndexBuild.tombstonesDir(indexDir))
+    val optional = Set(IndexBuild.tombstonesDir(indexDir))
     IndexBuild.unitStoreDirs(indexDir).filterNot(optional).foreach { d =>
       val missing = live.filterNot(IndexBuild.unitsIn(spark, d))
       assert(missing.isEmpty, s"$d lacks units $missing")
     }
-    val vers = IndexBuild.manifests(spark, indexDir, live)
-      .selectExpr("range_id", "codec_ver").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val rows = IndexBuild.manifests(spark, indexDir, live)
+      .selectExpr("range_id", "codec_ver", "filter_cols").collect()
+    val vers = rows.map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(vers == live.map(_ -> IndexBuild.CodecVer).toMap,
       s"codec_ver per unit: $vers")
+    assert(rows.forall(!_.isNullAt(2)), s"a manifest row lacks filter_cols: ${rows.toSeq}")
   }
 }

@@ -283,7 +283,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     val fqBefore = engBefore.searchByTerms(SparkEntry.FlagshipTerms, rows = 30,
       docFilter = Some(("lang", "en"))).collect().map(_.toSeq).toSeq
-    assert(engBefore.index.hasFilters)
+    assert(engBefore.index.filterColsComplete == Set("lang", "repo"))
 
     // compact to <=3 units (greedy 200-doc batches over 16x ~32-doc units)
     val rep = IndexBuild.compact(spark, idxDir, maxUnitDocs = 200)
@@ -296,7 +296,8 @@ class StreamingSpec extends SparkSpec {
 
     val engAfter = new Engine(new Index(spark, idxDir))
     assert(engAfter.index.ranges == rep.unitsAfter)
-    assert(engAfter.index.hasFilters, "filter side-index must survive compaction")
+    assert(engAfter.index.filterColsComplete == Set("lang", "repo"),
+      "filter keys must survive compaction")
     val topkAfter = engAfter.searchByTerms(SparkEntry.FlagshipTerms, rows = 60)
       .collect().map(_.toSeq).toSeq
     assert(topkAfter == topkBefore, "q_wand_topk must be hash-identical after compaction")
@@ -403,6 +404,7 @@ class StreamingSpec extends SparkSpec {
       spark.sparkContext.parallelize(cur.collect().toSeq, 1), cur.schema)
     for ((layout, m) <- Seq(
         "codec_ver = 1" -> orig.withColumn("codec_ver", lit(1)),
+        "codec_ver = 2" -> orig.withColumn("codec_ver", lit(2)),
         "no codec_ver column" -> orig.drop("codec_ver"))) {
       m.coalesce(1).write.mode("overwrite").parquet(mdir)
       val e = intercept[IllegalStateException](new Index(spark, idxDir).stats)
