@@ -1,13 +1,17 @@
 package graft.query
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.classic.GraftBridge
+import org.apache.spark.sql.execution.{FileSourceScanExec, SQLExecutionRDD}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.RoaringBitmap
 import graft.index.{Bitmaps, Codec, IndexBuild, IndexConfig, TermHash, WholeFileParquet}
 import graft.corpus.Corpus
+import scala.jdk.CollectionConverters._
 
 /** Read-side view of a built index (segments + docmeta + manifest). Only
   * manifest-committed ranges are visible — a crashed build's partial range
@@ -73,9 +77,20 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * partition, so each scan task holds whole segments and the query pass
     * scores them in place (no exchange keyed on seg_id).
     */
-  lazy val segments: DataFrame = spark.read
+  lazy val segments: DataFrame = readSegments(Map.empty)
+
+  /** [[segments]] through a relation that takes per-job term bindings
+    * under `key` ([[WholeFileParquet]]): the scan an [[Engine]] plans once
+    * for its segment passes. Every other read of the store goes through
+    * [[segments]], which no binding ever narrows.
+    */
+  private[graft] def boundSegments(key: String): DataFrame =
+    readSegments(Map(WholeFileParquet.BindingOption -> key))
+
+  private def readSegments(options: Map[String, String]): DataFrame = spark.read
     .format(classOf[WholeFileParquet].getName)
     .option("basePath", IndexBuild.segmentsDir(indexDir))
+    .options(options)
     .load(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
 
   /** Filter columns covered in EVERY live unit that holds docs: the
@@ -219,15 +234,25 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * dropped (it matched nothing before keys were indexed). The engine's
     * own key reads go through `keys` (exact keys) and `keyCols` (every key
     * of each column: the column's one term_id, [[TermHash]]).
+    *
+    * This plans a read per call. The engine's unjoined scoring pass does
+    * not come here: it binds the same term_id pushdown and term check per
+    * call to a segments scan planned once ([[boundSegments]]).
     */
   private[graft] def termRows(terms: Seq[String], from: DataFrame = segments,
       keys: Seq[String] = Nil, keyCols: Seq[String] = Nil)(cols: Column*): DataFrame = {
-    val exact = terms.filterNot(IndexBuild.isFilterKey) ++ keys
+    val exact = readTerms(terms, keys)
     val prefixes = keyCols.map(IndexBuild.filterKey(_, ""))
     from.where(Index.inSet("term_id", (exact ++ prefixes).map(TermHash.hash)) &&
         prefixes.foldLeft(Index.termIn(exact))((c, p) => c || col("term").startsWith(p)))
       .select(cols: _*)
   }
+
+  /** The exact terms a read of `terms` and the filter `keys` takes: a
+    * caller's reserved filter key is dropped ([[termRows]]).
+    */
+  private[graft] def readTerms(terms: Seq[String], keys: Seq[String]): Seq[String] =
+    terms.filterNot(IndexBuild.isFilterKey) ++ keys
 
   /** Global df per query term (term string checked: hash-collision guard). */
   def dfOf(terms: Seq[String]): Map[String, Long] = dictMap match {
@@ -399,6 +424,8 @@ final class Engine(val index: Index) {
   }
 
   private val segHitCols = Seq("seg_id", "term", "df", "max_tf", "min_dl", "postings")
+  // the planned scan's columns: the SegHit ones and the term_id it binds
+  private val passCols = Seq("seg_id", "term_id") ++ segHitCols.tail
 
   /** Segment hit rows of `terms` and of the filter `keys` and `keyCols`
     * ([[Index.termRows]]) in the [[SegHit]] projection.
@@ -446,7 +473,10 @@ final class Engine(val index: Index) {
     * hits all come from the one scan task that read its file). The join
     * pairs each hit with each of its segment's side rows; the grouping
     * keeps one copy of each. A pass with neither a predicate nor kills
-    * reads no side store and joins nothing.
+    * reads no side store and joins nothing. The scoring pass comes here
+    * only with a side input: without one it runs on the engine's segments
+    * scan planned once ([[segmentPass]]); the value and conjunction passes
+    * come here always.
     */
   private def perSegment[H, R: Encoder](hits: Dataset[H], docPred: Option[Column] = None)(
       segOf: H => Long)(kernel: (Long, Iterator[H], RoaringBitmap) => Iterator[R]): Dataset[R] = {
@@ -554,7 +584,7 @@ final class Engine(val index: Index) {
       docPred: Option[Column] = None,
       docFilter: Option[(String, String)] = None,
       after: Option[(Long, Long)] = None): DataFrame =
-    Wand.topK(termsPass(terms, rows, accuracy, candidates, docPred, docFilter, after), rows)(_._2)
+    Wand.topK(termsPass(terms, rows, accuracy, candidates, docPred, docFilter, after), rows)
 
   /** [[searchByTerms]]'s scoring pass before the merge: the plan its
     * (local) result no longer shows, pinned in PlanSpec.
@@ -566,7 +596,7 @@ final class Engine(val index: Index) {
       candidates: Int = 10000,
       docPred: Option[Column] = None,
       docFilter: Option[(String, String)] = None,
-      after: Option[(Long, Long)] = None): Dataset[(Long, Scored)] = {
+      after: Option[(Long, Long)] = None): Engine.Pass = {
     val (fqKey, pred) = fqSplit(docPred, docFilter)
     val spec = termSpec(terms, rows, accuracy, candidates)
       .map(s => after.fold(s)(a => s.copy(after = a)).copy(must = s.must ++ fqKey))
@@ -628,11 +658,11 @@ final class Engine(val index: Index) {
     val p = Engine.Phrase(toks.toSeq.map("w:" + _), slop)
     if (toks.length == 1) // Lucene parses a one-word phrase as a TermQuery
       searchByTerms(Seq(p.words.head -> 1.0), rows)
-    else Wand.topK(phrasePass(p, rows), rows)(_._2)
+    else Wand.topK(phrasePass(p, rows), rows)
   }
 
   /** [[searchPhrase]]'s scoring pass before the merge (see [[termsPass]]). */
-  private[graft] def phrasePass(p: Engine.Phrase, rows: Int = 60): Dataset[(Long, Scored)] =
+  private[graft] def phrasePass(p: Engine.Phrase, rows: Int = 60): Engine.Pass =
     boolPass(Nil, rows = rows, phrases = Seq((p, 1.0, Engine.Occur.Should)))
 
   /** Stored-field phrase verify: shingle-assisted candidate conjunction +
@@ -953,11 +983,11 @@ final class Engine(val index: Index) {
     */
   def searchParsed(q: String, rows: Int = 60,
                    maxExpansions: Int = 50): DataFrame =
-    Wand.topK(parsedPass(q, rows, maxExpansions), rows)(_._2)
+    Wand.topK(parsedPass(q, rows, maxExpansions), rows)
 
   /** [[searchParsed]]'s scoring pass before the merge (see [[termsPass]]). */
   private[graft] def parsedPass(q: String, rows: Int = 60,
-                                maxExpansions: Int = 50): Dataset[(Long, Scored)] = {
+                                maxExpansions: Int = 50): Engine.Pass = {
     import Engine.{FuzzyClause, Occur, PhraseClause, PrefixClause, TermClause, WildcardClause}
     val should = Seq.newBuilder[(String, Double)]
     val must = Seq.newBuilder[(String, Double)]
@@ -1060,7 +1090,7 @@ final class Engine(val index: Index) {
                  docFilter: Option[(String, String)] = None,
                  mustGroups: Seq[Seq[(String, Double)]] = Nil): DataFrame =
     Wand.topK(boolPass(should, must, mustNot, rows, accuracy, candidates, docPred, docFilter,
-      mustGroups), rows)(_._2)
+      mustGroups), rows)
 
   /** [[searchBool]]'s scoring pass before the merge (see [[termsPass]]),
     * and the one spec builder of [[parsedPass]] and [[phrasePass]]:
@@ -1076,7 +1106,7 @@ final class Engine(val index: Index) {
                               docFilter: Option[(String, String)] = None,
                               mustGroups: Seq[Seq[(String, Double)]] = Nil,
                               phrases: Seq[(Engine.Phrase, Double, Engine.Occur)] = Nil)
-      : Dataset[(Long, Scored)] = {
+      : Engine.Pass = {
     import Engine.Occur
     lazy val noMatch = scorePass(Nil, rows, candidates, None)
     def phraseKeys(occ: Occur): Seq[String] = phrases.collect { case (p, _, `occ`) => p.key }
@@ -1143,41 +1173,106 @@ final class Engine(val index: Index) {
     * merges the tasks' heaps on the driver.
     */
   private[graft] def scorePass(specs: Seq[Engine.QuerySpec], rows: Int, candidates: Int,
-      docPred: Option[Column]): Dataset[(Long, Scored)] = {
+      docPred: Option[Column]): Engine.Pass = {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
-    if (specs.isEmpty) return spark.emptyDataset[(Long, Scored)]
+    if (specs.isEmpty) {
+      val none = spark.emptyDataset[(Long, Scored)]
+      return Engine.Pass(none.rdd, none, None)
+    }
     segmentPass(specs, math.min(candidates, rows), index.stats._2, docPred)
   }
 
   /** The body of [[scorePass]]: ONE scan of the specs' terms, their MUST
     * and MUST_NOT terms, their fq keys and their phrase words (with
     * positions, read only when some spec has a phrase), scored in the scan
-    * task by [[perSegment]] — predicate and tombstones resolve to the
-    * allow bitmap, and each spec's MUST clauses (an fq key among them)
-    * narrow it, BEFORE any heap. Each segment's rows materialize once and
-    * every spec scores them ([[Engine.QuerySpec.scoreSegment]]) into a
-    * `heapSize` heap: the exact top-`rows` needs per-segment top-`rows`; a
-    * smaller `candidates` is the reference's approximate phase-1 budget.
-    * Without a predicate or kills the pass has no join and no exchange:
-    * the scan, the kernels and the task's heaps are one stage, at any
-    * segment width.
+    * task. Each segment's rows materialize once and every spec scores
+    * them ([[Engine.QuerySpec.scoreSegment]]) into a `heapSize` heap: the
+    * exact top-`rows` needs per-segment top-`rows`; a smaller
+    * `candidates` is the reference's approximate phase-1 budget. The
+    * specs travel in the pass's closure.
+    *
+    * With no side input (no predicate, no tombstones) the pass plans
+    * nothing per call: it runs on the engine's [[PlannedScan]] of its
+    * shape, planned once, and binds the call's terms ([[Engine.Pass]]):
+    * the term ids reach the scan as parquet's `In(term_id)` row-group
+    * pushdown ([[WholeFileParquet]]), and the pass keeps the rows whose
+    * term_id and then term string are bound, copying each value it
+    * keeps out of the reader's row. The scan, the kernels and the task's
+    * heaps are one stage with no exchange, at any segment width.
+    * Predicate and tombstones resolve to the allow bitmap through
+    * [[perSegment]], planned per call: its side join may shuffle the
+    * hits, and a plan kept across calls would replay its first call's
+    * shuffle output.
     */
   private def segmentPass(specs: Seq[Engine.QuerySpec], heapSize: Int, avgdl: Double,
-      docPred: Option[Column]): Dataset[(Long, Scored)] = {
+      docPred: Option[Column]): Engine.Pass = {
     val phraseWords = specs.flatMap(_.phrases.flatMap(_.words)).distinct
     val names = (specs.flatMap(_.scanTerms) ++ phraseWords).distinct
     val keys = specs.flatMap(_.must.filter(IndexBuild.isFilterKey)).distinct
     val cfg = index.cfg
-    val specsB = spark.sparkContext.broadcast(specs.toArray)
-    perSegment(segRows(names, keys, phraseWords), docPred)(_.seg_id) { (seg, it, allow) =>
-      val rows = it.toArray
-      val hits = rows.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
-      val positions = rows.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
-      specsB.value.iterator.flatMap { s =>
-        s.scoreSegment(seg, hits, positions, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
+    val specArr = specs.toArray
+    val score: (Long, Iterator[SegRow], RoaringBitmap) => Iterator[(Long, Scored)] =
+      (seg, it, allow) => {
+        val rows = it.toArray
+        val hits = rows.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
+        val positions = rows.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
+        specArr.iterator.flatMap { s =>
+          s.scoreSegment(seg, hits, positions, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
+        }
       }
+    if (docPred.isDefined || index.hasTombstones) {
+      val pass = perSegment(segRows(names, keys, phraseWords), docPred)(_.seg_id)(score)
+      return Engine.Pass(pass.rdd, pass, None)
     }
+    val scan = if (phraseWords.isEmpty) termScan else phraseScan
+    val terms = index.readTerms(names, keys)
+    val ids = terms.map(TermHash.hash).distinct.sorted.toArray
+    val phraseSet = phraseWords.toSet
+    val Seq(segI, idI, termI, dfI, maxTfI, minDlI, postingsI) = passCols.map(scan.ordinal)
+    val positionsI = scan.ordinal.getOrElse("positions", -1)
+    val rows = scan.rows.mapPartitions { it =>
+      val bound = terms.iterator.map(UTF8String.fromString).toSet
+      val hits = it
+        .filter(r => java.util.Arrays.binarySearch(ids, r.getLong(idI)) >= 0 &&
+          bound(r.getUTF8String(termI)))
+        .map { r => // a row views the reader's buffers: toString and getBinary copy
+          val term = r.getUTF8String(termI).toString
+          SegRow(r.getLong(segI), term, r.getInt(dfI), r.getInt(maxTfI), r.getInt(minDlI),
+            r.getBinary(postingsI), if (phraseSet(term)) r.getBinary(positionsI) else null)
+        }
+      Engine.groupBySegment(hits.map(h => (h, null: SegSide)), (h: SegRow) => h.seg_id)
+        .flatMap { case (seg, segHits, _) => score(seg, segHits.iterator, null) }
+    }
+    Engine.Pass(rows, scan.plan,
+      Some(WholeFileParquet.bindingProperty(bindingKey) -> WholeFileParquet.encodeIds(ids)))
   }
+
+  /** The key of this engine's term bindings ([[WholeFileParquet]]). */
+  private lazy val bindingKey: String = java.util.UUID.randomUUID().toString
+
+  /** The segments scan of [[segmentPass]]'s unjoined route, planned once:
+    * the [[SegHit]] columns with term_id (and the positions column for a
+    * pass with phrases) over every segment, with no term filter; the
+    * pass's term binding narrows it per job. `rows` are the scan's own
+    * rows: with parquet's vectorized reader, views over its column
+    * batches, so the pass reads a row's columns only once its term_id is
+    * bound, and copies what it keeps.
+    */
+  private final class PlannedScan(positions: Boolean) {
+    val plan: DataFrame = index.boundSegments(bindingKey)
+      .select((passCols ++ (if (positions) Seq("positions") else Nil)).map(col): _*)
+    private val scan = plan.queryExecution.executedPlan
+      .collectFirst { case s: FileSourceScanExec => s }
+      .getOrElse(throw new IllegalStateException(s"no file scan in the segments plan:\n$plan"))
+    /** Each column's index in [[rows]]. */
+    val ordinal: Map[String, Int] = scan.output.map(_.name).zipWithIndex.toMap
+    val rows: RDD[InternalRow] = new SQLExecutionRDD(
+      if (!scan.supportsColumnar) scan.execute()
+      else scan.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala)),
+      plan.queryExecution.sparkSession.sessionState.conf)
+  }
+  private lazy val termScan = new PlannedScan(positions = false)
+  private lazy val phraseScan = new PlannedScan(positions = true)
 
   /** All matching docs with exact raw scores — no top-k, no quantization:
     * (doc_id, score). The exploded-postings hash-agg plan (term_id+term
@@ -1334,7 +1429,7 @@ final class Engine(val index: Index) {
   private[graft] def manyPass(
       queries: Seq[(Long, Seq[(String, Double)])],
       rows: Int = 60,
-      candidates: Int = 10000): Dataset[(Long, Scored)] = {
+      candidates: Int = 10000): Engine.Pass = {
     val ids = queries.map(_._1)
     val repeated = ids.diff(ids.distinct)
     require(repeated.isEmpty, s"query ids must be distinct: query_id ${repeated.head} repeats")
@@ -1363,9 +1458,8 @@ final class Engine(val index: Index) {
     require(start >= 0, s"start must be >= 0, got $start")
     require(start.toLong + rows <= Int.MaxValue,
       s"start + rows must be <= ${Int.MaxValue}, got start $start + rows $rows")
-    searchByTerms(terms, rows = start + rows, accuracy = accuracy,
-      candidates = math.max(candidates, start + rows))
-      .where(col("rank") > start)
+    Wand.topK(termsPass(terms, rows = start + rows, accuracy = accuracy,
+      candidates = math.max(candidates, start + rows)), start + rows, drop = start)
   }
 
   /** Solr `/export` handler analog: the FULL sorted match set — every
@@ -1974,6 +2068,30 @@ object Engine {
   private[graft] object Route {
     case object Daat extends Route
     case object DenseArray extends Route
+  }
+
+  /** A scoring pass before its merge: its (query id, candidate) `rows`,
+    * the `plan` that reads the segments for them, and the job-local
+    * property that binds the call's terms to that plan, if any. An
+    * unjoined pass's `plan` is the engine's segments scan planned once
+    * and `binding` carries the call's term ids; a pass with a side input
+    * is planned per call, and `plan` is its own.
+    */
+  private[graft] final case class Pass(rows: RDD[(Long, Scored)], plan: Dataset[_],
+      binding: Option[(String, String)]) {
+
+    /** `job` over [[rows]], with the binding set on the calling thread for
+      * its Spark jobs and the thread's previous value restored after.
+      * Local properties are per thread, so concurrent callers stay apart.
+      */
+    def run[T](job: RDD[(Long, Scored)] => T): T = binding match {
+      case None => job(rows)
+      case Some((key, ids)) =>
+        val sc = rows.sparkContext
+        val prev = sc.getLocalProperty(key)
+        sc.setLocalProperty(key, ids)
+        try job(rows) finally sc.setLocalProperty(key, prev)
+    }
   }
 
   /** One query of the engine's scoring pass: `weights` (boost·idf) and

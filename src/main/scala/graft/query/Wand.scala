@@ -1,8 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.roaringbitmap.RoaringBitmap
 import graft.index.{Codec, IndexConfig, TermHash}
 
@@ -487,28 +488,25 @@ object Wand {
   }
 
   /** The merge of a single query's candidates: (rank, doc_id, score_q)
-    * over [[topKPerQuery]]'s heaps, with `scoredOf` projecting a row to
-    * its [[Scored]] (a scoring pass's `(query_id, Scored)` rows take
-    * `_._2`). `k` is checked on the driver here and in [[topKPerQuery]],
-    * where every search verb ends: a zero-capacity heap would fail inside
-    * a task.
+    * over [[topKPerQuery]]'s heaps, ranks `drop + 1` to `k` (a page past
+    * `drop` ranks). `k` is checked on the driver here and in
+    * [[topKPerQuery]], where every search verb ends: a zero-capacity heap
+    * would fail inside a task.
     */
-  def topK[T](scored: Dataset[T], k: Int)(scoredOf: T => Scored): DataFrame = {
-    val top = heaps(scored, k)(_ => 0L, scoredOf).get(0L).fold(Array.empty[Scored])(_.sortedBestFirst)
-    scored.sparkSession.createDataset(top.toSeq.zipWithIndex.map { case (s, i) =>
-      ((i + 1).toLong, s.docId, s.scoreQ)
-    })(rankedEnc).toDF("rank", "doc_id", "score_q")
+  def topK(pass: Engine.Pass, k: Int, drop: Int = 0): DataFrame = {
+    val top = heaps(pass, k).get(0L).fold(Array.empty[Scored])(_.sortedBestFirst)
+    local(pass, rankedSchema, top.iterator.zipWithIndex.drop(drop).map { case (s, i) =>
+      Row((i + 1).toLong, s.docId, s.scoreQ)
+    })
   }
 
   /** Per-query merge for batched search:
-    * Dataset[(query_id, Scored)] -> (query_id, rank, doc_id, score_q).
+    * a pass's (query_id, Scored) rows -> (query_id, rank, doc_id, score_q).
     */
-  def topKPerQuery(scored: Dataset[(Long, Scored)], k: Int): DataFrame = {
-    val byQuery = heaps(scored, k)(_._1, _._2)
-    scored.sparkSession.createDataset(byQuery.toSeq.sortBy(_._1).flatMap { case (qid, h) =>
-      h.sortedBestFirst.toSeq.zipWithIndex.map { case (s, i) => (qid, (i + 1).toLong, s.docId, s.scoreQ) }
-    })(keyedRankedEnc).toDF("query_id", "rank", "doc_id", "score_q")
-  }
+  def topKPerQuery(pass: Engine.Pass, k: Int): DataFrame =
+    local(pass, keyedRankedSchema, heaps(pass, k).toSeq.sortBy(_._1).iterator.flatMap { case (qid, h) =>
+      h.sortedBestFirst.iterator.zipWithIndex.map { case (s, i) => Row(qid, (i + 1).toLong, s.docId, s.scoreQ) }
+    })
 
   /** THE merge of every scoring pass: each task folds its rows into one
     * `k`-bounded heap per query id (fed by the per-segment heaps), and
@@ -519,17 +517,19 @@ object Wand {
     * response is. Rank-identical to a bounded-heap aggregate: the heap's
     * (score_q DESC, docId ASC) order is total, so merge order is free.
     */
-  private def heaps[T](scored: Dataset[T], k: Int)(qidOf: T => Long,
-      scoredOf: T => Scored): scala.collection.mutable.LongMap[BoundedTopK] = {
+  private def heaps(pass: Engine.Pass, k: Int): scala.collection.mutable.LongMap[BoundedTopK] = {
     requireRows(k)
-    scored.rdd.aggregate(new QueryHeaps(k))((h, x) => h.offer(qidOf(x), scoredOf(x)), _ merge _).byQuery
+    pass.run(_.aggregate(new QueryHeaps(k))((h, x) => h.offer(x._1, x._2), _ merge _)).byQuery
   }
 
-  // the merged rows' encoders, derived once: deriving one reflects over
-  // its type, a share of every query's plan time
-  private val rankedEnc: Encoder[(Long, Long, Long)] = Encoders.product[(Long, Long, Long)]
-  private val keyedRankedEnc: Encoder[(Long, Long, Long, Long)] =
-    Encoders.product[(Long, Long, Long, Long)]
+  /** The merged rows as a local DataFrame of the fixed `schema`. */
+  private def local(pass: Engine.Pass, schema: StructType, rows: Iterator[Row]): DataFrame =
+    pass.plan.sparkSession.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
+
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+  private val rankedSchema = longs("rank", "doc_id", "score_q")
+  private val keyedRankedSchema = longs("query_id", "rank", "doc_id", "score_q")
 
   private def requireRows(k: Int): Unit =
     require(k >= 1, s"rows (the top-k size) must be >= 1, got $k")

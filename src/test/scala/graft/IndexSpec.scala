@@ -382,7 +382,7 @@ class IndexSpec extends SparkSpec {
       2L -> SparkEntry.FlagshipTerms, // sparse: batched WAND
       3L -> (hotTerms.take(2) ++ Seq("w:dup" -> 1.0))) // hot+rare: stays WAND
     assert(engine.routesDense(hotTerms, rows = 20), "precondition: query 1 routes dense")
-    val pass = engine.manyPass(mixed, rows = 20).toDF()
+    val pass = engine.manyPass(mixed, rows = 20).plan
     val exec = pass.queryExecution.executedPlan.toString
     assert(!exec.contains("graft_postings"),
       s"a dense query in the batch must not engage the columnar pass:\n$exec")
@@ -411,7 +411,7 @@ class IndexSpec extends SparkSpec {
       4L -> hotTerms.take(2), // a second dense query in the same pass
       2L -> SparkEntry.FlagshipTerms, // sparse: batched WAND
       3L -> (hotTerms.take(2) ++ Seq("w:dup" -> 1.0))) // hot+rare: stays WAND
-    val pass = wide.manyPass(mixed, rows = 20).toDF()
+    val pass = wide.manyPass(mixed, rows = 20).plan
     val p = pass.queryExecution.executedPlan.toString
     assert(!p.contains("graft_postings"), s"dense batch decodes postings in the plan:\n$p")
     assert(segmentScans(pass, d) == 1, s"the batch must scan the segments once:\n$p")
@@ -481,7 +481,7 @@ class IndexSpec extends SparkSpec {
       "dense query must route to the dense-array plan")
     val api = engine.searchByTerms(hotTerms, rows = 30)
     // the dense-array route never decodes/explodes postings columnar-side
-    val pass = engine.termsPass(hotTerms, rows = 30).queryExecution.executedPlan.toString
+    val pass = engine.termsPass(hotTerms, rows = 30).plan.queryExecution.executedPlan.toString
     assert(pass.contains("segments") && !pass.contains("graft_postings"), pass)
     val got = api.as[(Long, Long, Long)].collect().toSeq
     val exp = BruteScorer.topK(docs, hotTerms, 30)
@@ -595,7 +595,7 @@ class IndexSpec extends SparkSpec {
       docPred = Some(col("lang") === "en"))
     assert(viaBitmap.collect().map(_.toSeq).toSeq == viaPred.collect().map(_.toSeq).toSeq)
     val plan = engine.termsPass(SparkEntry.FlagshipTerms, rows = 30,
-      docFilter = Some(("lang", "en"))).queryExecution.executedPlan.toString
+      docFilter = Some(("lang", "en"))).plan.queryExecution.executedPlan.toString
     assert(!plan.contains("docmeta"), "filter key path must not scan docmeta")
     // a column without a persisted bitmap falls back to the predicate path
     val path = corpus.select($"path").as[String].head()
@@ -733,7 +733,7 @@ class IndexSpec extends SparkSpec {
       assert(e.index.filterColsComplete.isEmpty, s"$step: coverage gap undetected")
       // every verb takes its docmeta path and equals the fully covered index
       assert(e.termsPass(SparkEntry.FlagshipTerms, rows = 60, docFilter = Some(("lang", "en")))
-        .queryExecution.executedPlan.toString.contains("docmeta"), s"$step: fq took the key path")
+        .plan.queryExecution.executedPlan.toString.contains("docmeta"), s"$step: fq took the key path")
       val facet = m(e.facet(SparkEntry.FlagshipTerms, "lang"))
       assert(facet == m(engine.facet(SparkEntry.FlagshipTerms, "lang")) && facet.nonEmpty,
         s"$step: facet diverged on partial coverage")

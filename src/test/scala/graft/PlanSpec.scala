@@ -17,6 +17,11 @@ class PlanSpec extends SparkSpec {
   private def plan(df: Dataset[_]): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** A scoring pass's segments plan: an unjoined pass's is the engine's
+    * scan planned once, which each call binds to its terms.
+    */
+  private def plan(pass: Engine.Pass): String = plan(pass.plan)
+
   lazy val engine = Engine.forDir(spark, sfTiny)
 
   test("segments scan pushes the term_id filter into parquet") {
@@ -109,7 +114,7 @@ class PlanSpec extends SparkSpec {
     val pass = engine.termsPass(SparkEntry.FlagshipTerms, rows = 30,
       docFilter = Some(("lang", "en")))
     val p = plan(pass)
-    assert(segmentScans(pass, engine.index.indexDir) == 1, s"not one segments scan:\n$p")
+    assert(segmentScans(pass.plan, engine.index.indexDir) == 1, s"not one segments scan:\n$p")
     assert(!p.contains("Join"), s"the fq joins:\n$p")
     assert(!p.contains("Exchange"), s"the fq exchanges:\n$p")
     assert(!p.contains("docmeta"), s"docmeta scanned:\n$p")
@@ -200,7 +205,7 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("graft_postings"), s"dense batch decodes postings columnar-side:\n$p")
     assert(!p.contains("BroadcastHashJoin"), s"dense batch joins a weight table:\n$p")
     assert(!p.contains("SortMergeJoin"), s"dense batch shuffles for a join:\n$p")
-    assert(segmentScans(df, engine.index.indexDir) == 1, s"segments not scanned exactly once:\n$p")
+    assert(segmentScans(df.plan, engine.index.indexDir) == 1, s"segments not scanned exactly once:\n$p")
     assert(!p.contains("Exchange"), s"exchange in the batched segment-local pass:\n$p")
   }
 
@@ -216,11 +221,11 @@ class PlanSpec extends SparkSpec {
         "wand" -> engine.termsPass(SparkEntry.FlagshipTerms, rows = 30, accuracy = 0.5),
         "daat" -> engine.termsPass(SparkEntry.FlagshipTerms, rows = 30),
         "dense" -> engine.termsPass(hotTerms, rows = 30))) {
-      pass.collect() // the executed (final) plan
-      val exec = pass.queryExecution.executedPlan
+      graft.query.Wand.topK(pass, 30) // run the pass on its plan
+      val exec = pass.plan.queryExecution.executedPlan
       val exchanges = helper.collect(exec) { case e: Exchange => e }
       assert(exchanges.isEmpty, s"$tag pass has exchanges:\n$exec")
-      assert(segmentScans(pass, engine.index.indexDir) == 1, s"$tag: not one scan:\n$exec")
+      assert(segmentScans(pass.plan, engine.index.indexDir) == 1, s"$tag: not one scan:\n$exec")
     }
   }
 
@@ -369,10 +374,10 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("docmeta"), s"phrase plan scans docmeta:\n$p")
     assert(!p.contains("Join"), s"phrase plan joins (expected postings-only cogroup):\n$p")
     assert(p.contains("segments"), s"phrase plan missing the segments scan:\n$p")
-    assert(segmentScans(engine.phrasePass(Engine.Phrase(words, 0)), engine.index.indexDir) == 1,
-      s"phrase plan scans the segments more than once:\n$p")
-    // and the term_id filter reaches parquet so hot segments row-group-prune
-    assert(p.contains("PushedFilters: [In(term_id"), s"no term_id pushdown:\n$p")
+    assert(segmentScans(engine.phrasePass(Engine.Phrase(words, 0)).plan,
+      engine.index.indexDir) == 1, s"phrase plan scans the segments more than once:\n$p")
+    // the term_id pushdown is bound per call, in the scan task: pinned by
+    // input bytes in SegmentPassSpec
   }
 
   test("only a pass with a phrase reads the positions column") {
@@ -397,7 +402,8 @@ class PlanSpec extends SparkSpec {
     val p = plan(engine.parsedPass("+w:the \"hash join\" -w:stream", rows = 60))
     assert(!p.contains("LeftSemi"), s"membership semi-join:\n$p")
     assert(!p.contains("LeftAnti"), s"prohibited-term anti-join:\n$p")
-    val nSegScans = "In\\(term_id".r.findAllIn(p).size
+    val nSegScans = segmentScans(
+      engine.parsedPass("+w:the \"hash join\" -w:stream", rows = 60).plan, engine.index.indexDir)
     assert(nSegScans == 1, s"expected 1 segments scan, got $nSegScans:\n$p")
     assert(!p.contains("content"), s"parsed plan reads stored content:\n$p")
   }

@@ -4,13 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.index.{IndexBuild, IndexConfig}
-import graft.query.{BruteScorer, Engine, Index}
+import graft.query.{BruteScorer, Engine, Index, Wand}
 
 /** The segment-local query pass: every scan task scores the whole
   * segments it holds and the driver merges the tasks' heaps, in one job.
   * Pinned here: segments stay whole when Spark splits files, every write
-  * keeps a segment in one file, the job counts, and the side join giving
-  * the same results broadcast or shuffled.
+  * keeps a segment in one file, the job counts, the side join giving
+  * the same results broadcast or shuffled, and the term binding of the
+  * scan planned once: reused across calls, apart across threads, pushed
+  * into parquet, never applied to an unrelated read.
   */
 class SegmentPassSpec extends SparkSpec {
   import spark.implicits._
@@ -44,12 +46,31 @@ class SegmentPassSpec extends SparkSpec {
   private def triples(df: DataFrame): Seq[(Long, Long, Long)] =
     df.as[(Long, Long, Long)].collect().toSeq
 
+  /** Brute-force (doc_id, score_q) of `q` over every doc, top `k` of the
+    * docs `keep` admits: the index's stats count every doc, also a
+    * tombstoned one.
+    */
+  private def brute(q: Seq[(String, Double)], k: Int, keep: Long => Boolean = _ => true) =
+    BruteScorer.topK(docs, q, docs.size).filter(s => keep(s.docId)).take(k)
+      .map(s => (s.docId, s.scoreQ))
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] = triples(df).map(t => (t._2, t._3))
+
+  // the corpus in 64 KB row groups, its files split at 128 KB
+  lazy val split: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("parquet.block.size", (64 * 1024).toString)
+    s.conf.set("spark.sql.files.maxPartitionBytes", (128 * 1024).toString)
+    s
+  }
+  lazy val splitDir: String = {
+    val d = tempDir("graft-segsplit")
+    IndexBuild.build(split, synth(split), d, cfg)
+    d
+  }
+
   test("segments stay whole under file splitting: top-k == brute scorer == default run") {
-    val split = spark.newSession()
-    split.conf.set("parquet.block.size", (64 * 1024).toString)
-    split.conf.set("spark.sql.files.maxPartitionBytes", (128 * 1024).toString)
-    val dir = tempDir("graft-segsplit")
-    IndexBuild.build(split, synth(split), dir, cfg)
+    val dir = splitDir
     def segsOverPartitions(df: DataFrame): Long =
       df.select(col("seg_id"), spark_partition_id().as("p")).distinct()
         .groupBy(col("seg_id")).count().where(col("count") > 1).count()
@@ -131,9 +152,9 @@ class SegmentPassSpec extends SparkSpec {
     val shuf = new Engine(new Index(shuffled, dir))
     assert(bcast.index.hasTombstones, "precondition: the index holds kills")
     val terms = SparkEntry.FlagshipTerms
-    def joinsOf(pass: org.apache.spark.sql.Dataset[_]): String = {
-      pass.collect()
-      pass.queryExecution.executedPlan.toString
+    def joinsOf(pass: Engine.Pass): String = {
+      pass.plan.collect()
+      pass.plan.queryExecution.executedPlan.toString
     }
     val pb = joinsOf(bcast.termsPass(terms, rows = 30, docFilter = Some("lang" -> "en")))
     val ps = joinsOf(shuf.termsPass(terms, rows = 30, docFilter = Some("lang" -> "en")))
@@ -159,5 +180,123 @@ class SegmentPassSpec extends SparkSpec {
     same("grouped fq")(_.searchGrouped(terms, "repo", groupLimit = 2, groups = 5,
       docFilter = Some("lang" -> "en")))
     same("block join")(_.blockJoinParents(terms))
+  }
+
+  /** Input records the tasks of `body`'s jobs read (the rows parquet
+    * delivered), counted by a listener once the bus has delivered every
+    * event of the call.
+    */
+  private def inputRowsOf(body: => Any): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) n.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(sc)
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("calls with different terms reuse one planned scan and equal the brute scorer") {
+    val first = engine.termsPass(queries(1), rows = 30)
+    val scan = first.plan.queryExecution
+    val scanRdd = first.rows.dependencies.map(_.rdd.id)
+    assert(scanRdd.size == 1, "precondition: the pass maps one scan RDD")
+    for (q <- queries) {
+      val pass = engine.termsPass(q, rows = 30)
+      assert(pass.plan eq first.plan, s"$q: a new scan plan")
+      assert(pass.plan.queryExecution eq scan, s"$q: a new QueryExecution")
+      assert(pass.rows.dependencies.map(_.rdd.id) == scanRdd, s"$q: not the planned scan's RDD")
+      assert(pass.binding.isDefined, s"$q: unbound")
+      assert(pairs(Wand.topK(pass, 30)) == brute(q, 30), s"$q differs from brute")
+    }
+    // a batch and a Boolean query bind the same scan
+    assert(engine.manyPass(queries.zipWithIndex.map { case (q, i) => i.toLong -> q }, rows = 30)
+      .plan eq first.plan)
+    assert(engine.boolPass(queries(0), mustNot = queries(1).map(_._1), rows = 30).plan eq first.plan)
+  }
+
+  test("concurrent calls with different terms each equal the brute scorer") {
+    val qs = Seq(queries(1), queries(2), queries(0), queries(1).take(2))
+    val expected = qs.map(brute(_, 30))
+    engine.searchByTerms(qs.head, rows = 30) // plan the scan once, before the threads
+    val got = new java.util.concurrent.ConcurrentHashMap[Int, Seq[(Long, Long)]]()
+    val threads = Seq(0, 1).map { t =>
+      new Thread(() => (0 until 6).foreach { i =>
+        val j = (i + t) % qs.size
+        val r = pairs(engine.searchByTerms(qs(j), rows = 30))
+        if (r != expected(j)) got.put(t * 100 + i, r)
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(got.isEmpty, s"calls differing from brute: ${got.keySet}")
+  }
+
+  test("a thread started while a binding is set reads unbound segments") {
+    val pass = engine.termsPass(queries(1), rows = 30)
+    val (key, _) = pass.binding.getOrElse(fail("precondition: the pass is bound"))
+    val rows = engine.index.segments.count()
+    val exported = engine.exportMatches(queries(0)).collect().toSeq
+    assert(exported.nonEmpty)
+    val seen = pass.run { _ =>
+      var r: (String, Long, Seq[org.apache.spark.sql.Row]) = null
+      val t = new Thread(() => r = (spark.sparkContext.getLocalProperty(key),
+        engine.index.segments.count(), engine.exportMatches(queries(0)).collect().toSeq))
+      t.start()
+      t.join()
+      r
+    }
+    assert(seen._1 != null, "precondition: the thread inherits the binding")
+    assert(seen._2 == rows, "an inherited binding filtered a segments read")
+    assert(seen._3 == exported, "an inherited binding filtered exportMatches")
+  }
+
+  test("a bound call reads fewer input rows than the unbound scan: parquet prunes by term_id") {
+    // the 64 KB row groups hold term_id ranges, so a rare query's ids
+    // select a few of them; the input bytes do not show it, as the
+    // unbound scan's column reads are not counted in the task's bytes
+    val eng = new Engine(new Index(split, splitDir))
+    val pass = eng.termsPass(queries(1), rows = 30)
+    assert(pass.binding.isDefined, "precondition: the pass is bound")
+    val bound = inputRowsOf(Wand.topK(pass, 30))
+    val full = inputRowsOf(pass.rows.count()) // the same planned scan, no binding
+    assert(bound > 0 && bound * 4 < full, s"bound call read $bound rows, the unbound scan $full")
+  }
+
+  test("a scan read row by row (no vectorized reader) binds the same: each call equals brute") {
+    val rowReader = spark.newSession()
+    rowReader.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    val eng = new Engine(new Index(rowReader, defaultDir))
+    for (q <- queries) {
+      val pass = eng.termsPass(q, rows = 30)
+      assert(!pass.plan.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        "precondition: the scan reads rows")
+      assert(pairs(Wand.topK(pass, 30)) == brute(q, 30), s"$q differs from brute")
+    }
+  }
+
+  test("tombstones and predicates: successive calls per call plan, each equal to brute") {
+    val dir = tempDir("graft-segpass-kills")
+    IndexBuild.build(spark, synth(spark), dir, cfg)
+    IndexBuild.deleteByKeys(spark, synth(spark).where(col("doc_id") % 7 === 3).select("path"), dir)
+    val killed = new Engine(new Index(spark, dir))
+    assert(killed.index.hasTombstones, "precondition: the index holds kills")
+    val langs = synth(spark).select($"doc_id", $"lang").as[(Long, String)].collect().toMap
+    for (q <- queries) {
+      val pass = killed.termsPass(q, rows = 30)
+      assert(pass.binding.isEmpty, s"$q: a tombstoned pass bound a planned scan")
+      assert(pairs(Wand.topK(pass, 30)) == brute(q, 30, _ % 7 != 3), s"kills $q")
+      val pred = Some(col("lang") === "java")
+      assert(engine.termsPass(q, rows = 30, docPred = pred).binding.isEmpty, s"$q: predicate bound")
+      assert(pairs(engine.searchByTerms(q, rows = 30, docPred = pred)) ==
+        brute(q, 30, d => langs(d) == "java"), s"predicate $q")
+    }
   }
 }

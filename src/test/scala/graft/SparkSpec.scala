@@ -61,7 +61,7 @@ abstract class SparkSpec extends AnyFunSuite {
                docPred: Option[org.apache.spark.sql.Column] = None): org.apache.spark.sql.DataFrame = {
     val key = fq.map { case (c, v) => graft.index.IndexBuild.filterKey(c, v) }
     graft.query.Wand.topK(engine.scorePass(spec.map(s => s.copy(must = s.must ++ key)).toSeq,
-      rows, candidates, docPred), rows)(_._2)
+      rows, candidates, docPred), rows)
   }
 
   /** `body`'s result and the number of Spark jobs it started, counted by
