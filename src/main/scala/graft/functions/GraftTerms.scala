@@ -775,10 +775,10 @@ case class GraftShingleHashPairs(child: Expression, width: Int, distinct: Boolea
 /** Fused PII scrub (emails → `<EMAIL>` then IPv4s → `<IP>`): per row ONE
   * lower + ONE email-regex pass + ONE ip-regex pass producing the struct
   * (n_emails, n_ips, redacted) — where the built-in composition it
-  * replaces ([[graft.ml.TextStats.redactPiiBuiltins]], the pinned spec
-  * twin and the oracle's shape) runs lower twice and four regex passes
-  * (count + replace per pattern; the email replace feeds the ip pass so
-  * subexpression elimination cannot merge them all). Semantics are
+  * replaces (the oracle's shape, pinned equal in MlSpec) runs lower
+  * twice and four regex passes (count + replace per pattern; the email
+  * replace feeds the ip pass so subexpression elimination cannot merge
+  * them all). Semantics are
   * byte-identical by construction: the same UTF8String.toLowerCase the
   * Lower expression calls, java.util.regex with the same pattern strings
   * (what regexp_count/regexp_replace compile), counts = the replace

@@ -387,8 +387,8 @@ object TextStats {
     * it. One [[graft.functions.GraftPiiStats]] eval per row (one lower +
     * one pass per pattern, counts riding the replace loop) — the
     * built-in composition it replaced ran lower twice and four regex
-    * passes per row (~2.4 s of the 2.8 s bench section); it is kept as
-    * [[redactPiiBuiltins]], the pinned spec twin and the oracle's shape.
+    * passes per row (~2.4 s of the 2.8 s bench section); it is the
+    * oracle's shape, and MlSpec pins the two equal.
     * The two-projection shape keeps the expression at ONE eval
     * (CollapseProject does not duplicate non-cheap expressions — the
     * [[repetition]] pattern). Per-row, no shuffle at any corpus size.
@@ -402,23 +402,6 @@ object TextStats {
         col("p.n_emails").as("n_emails"),
         col("p.n_ips").as("n_ips"),
         sha2(col("p.redacted"), 256).as("redacted_sha"))
-
-  /** Built-in-composed specification twin of [[redactPii]] (pinned equal
-    * in MlSpec over the PII-injected corpus, not on any hot path): the
-    * same counts and redaction as independent regexp_count /
-    * regexp_replace passes — the shape the DuckDB oracle mirrors.
-    */
-  private[graft] def redactPiiBuiltins(corpus: DataFrame): DataFrame = {
-    val lc = lower(col("content"))
-    val red = regexp_replace(
-      regexp_replace(lc, EmailRe, "<EMAIL>"), Ipv4Re, "<IP>")
-    corpus.select(
-      col("doc_id"),
-      regexp_count(lc, lit(EmailRe)).cast("long").as("n_emails"),
-      regexp_count(regexp_replace(lc, EmailRe, "<EMAIL>"), lit(Ipv4Re))
-        .cast("long").as("n_ips"),
-      sha2(red, 256).as("redacted_sha"))
-  }
 
   /** Gopher quality-rule constants (Rae et al. 2021 §A1.1, Table A1) —
     * single source of truth for engine + oracle. Ratio thresholds are the
@@ -545,23 +528,11 @@ object TextStats {
     * lexical min of md5 over all 8-char windows; null for content < 8
     * chars. A content-defined identity robust to doc reordering at corpus
     * level. Evaluated by the native [[graft.functions.GraftFingerprint]]
-    * expression (one eval per row); the HOF composition it replaced is
-    * kept as [[fingerprintHof]] for the equivalence test.
+    * expression (one eval per row); FunctionsSpec pins it equal to the
+    * HOF composition it replaced.
     */
   def fingerprint(corpus: DataFrame): DataFrame =
     corpus.select(
       col("doc_id"),
       graft.functions.GraftFunctions.graft_fingerprint(col("content")).as("fp"))
-
-  /** Built-in-composed twin of [[fingerprint]] — interpreted HOF lambda
-    * with a per-window digest allocation; ~10-100x slower (see
-    * GraftFingerprint scaladoc). Test reference only.
-    */
-  def fingerprintHof(corpus: DataFrame): DataFrame =
-    corpus.select(
-      col("doc_id"),
-      when(length(col("content")) >= 8,
-        array_min(transform(sequence(lit(1), length(col("content")) - 7),
-          i => md5(col("content").substr(i, lit(8))))))
-        .otherwise(lit(null).cast("string")).as("fp"))
 }

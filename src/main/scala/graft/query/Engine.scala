@@ -2,7 +2,6 @@ package graft.query
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.execution.{FileSourceScanExec, SQLExecutionRDD}
@@ -77,20 +76,9 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * partition, so each scan task holds whole segments and the query pass
     * scores them in place (no exchange keyed on seg_id).
     */
-  lazy val segments: DataFrame = readSegments(Map.empty)
-
-  /** [[segments]] through a relation that takes per-job term bindings
-    * under `key` ([[WholeFileParquet]]): the scan an [[Engine]] plans once
-    * for its segment passes. Every other read of the store goes through
-    * [[segments]], which no binding ever narrows.
-    */
-  private[graft] def boundSegments(key: String): DataFrame =
-    readSegments(Map(WholeFileParquet.BindingOption -> key))
-
-  private def readSegments(options: Map[String, String]): DataFrame = spark.read
+  lazy val segments: DataFrame = spark.read
     .format(classOf[WholeFileParquet].getName)
     .option("basePath", IndexBuild.segmentsDir(indexDir))
-    .options(options)
     .load(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
 
   /** Filter columns covered in EVERY live unit that holds docs: the
@@ -236,8 +224,8 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * of each column: the column's one term_id, [[TermHash]]).
     *
     * This plans a read per call. The engine's unjoined scoring pass does
-    * not come here: it binds the same term_id pushdown and term check per
-    * call to a segments scan planned once ([[boundSegments]]).
+    * not come here: it looks the same term_ids up, with the same term
+    * check, in the engine's resident segments table.
     */
   private[graft] def termRows(terms: Seq[String], from: DataFrame = segments,
       keys: Seq[String] = Nil, keyCols: Seq[String] = Nil)(cols: Column*): DataFrame = {
@@ -285,10 +273,10 @@ object Index {
   */
 private[query] final case class SegSide(seg_id: Long, part: Int, bitmaps: Array[Array[Byte]])
 
-/** One row of the scoring pass's segments scan: a [[SegHit]] plus the
-  * term's positions blob, read only for phrase words (null otherwise).
+/** One segments row of the scoring pass: a [[SegHit]] plus the term's
+  * positions blob, read only for phrase words (null otherwise).
   */
-private[query] final case class SegRow(seg_id: Long, term: String, df: Int, max_tf: Int,
+private[graft] final case class SegRow(seg_id: Long, term: String, df: Int, max_tf: Int,
                                        min_dl: Int, postings: Array[Byte], positions: Array[Byte]) {
   def hit: SegHit = SegHit(seg_id, term, df, max_tf, min_dl, postings)
 }
@@ -424,8 +412,8 @@ final class Engine(val index: Index) {
   }
 
   private val segHitCols = Seq("seg_id", "term", "df", "max_tf", "min_dl", "postings")
-  // the planned scan's columns: the SegHit ones and the term_id it binds
-  private val passCols = Seq("seg_id", "term_id") ++ segHitCols.tail
+  // the resident table's columns: the SegHit ones, term_id and positions
+  private val residentCols = Seq("seg_id", "term_id") ++ segHitCols.tail :+ "positions"
 
   /** Segment hit rows of `terms` and of the filter `keys` and `keyCols`
     * ([[Index.termRows]]) in the [[SegHit]] projection.
@@ -474,8 +462,8 @@ final class Engine(val index: Index) {
     * pairs each hit with each of its segment's side rows; the grouping
     * keeps one copy of each. A pass with neither a predicate nor kills
     * reads no side store and joins nothing. The scoring pass comes here
-    * only with a side input: without one it runs on the engine's segments
-    * scan planned once ([[segmentPass]]); the value and conjunction passes
+    * only with a side input: without one it runs on the engine's resident
+    * segments table ([[segmentPass]]); the value and conjunction passes
     * come here always.
     */
   private def perSegment[H, R: Encoder](hits: Dataset[H], docPred: Option[Column] = None)(
@@ -683,8 +671,7 @@ final class Engine(val index: Index) {
     val cand = conjunctiveDocs(words ++ shingles).toDF("doc_id")
     // native verify: tokenize + sliding phrase count + dl in ONE eval per
     // candidate row ([[graft.functions.GraftPhrasePfDl]]); the built-in
-    // composition it replaced is kept as [[Engine.phrasePfDlHof]] for the
-    // equivalence pin
+    // composition it replaced is pinned equal to it in FunctionsSpec
     val pfDl = graft.functions.GraftFunctions.graft_phrase_pfdl(
       col("content"), toks.toSeq, IndexBuild.MaxDl, slop)
     // explicit broadcast, SIZE-GATED on a bound already in hand: cand
@@ -1177,7 +1164,7 @@ final class Engine(val index: Index) {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
     if (specs.isEmpty) {
       val none = spark.emptyDataset[(Long, Scored)]
-      return Engine.Pass(none.rdd, none, None)
+      return Engine.Pass(none.rdd, none)
     }
     segmentPass(specs, math.min(candidates, rows), index.stats._2, docPred)
   }
@@ -1192,13 +1179,12 @@ final class Engine(val index: Index) {
     * specs travel in the pass's closure.
     *
     * With no side input (no predicate, no tombstones) the pass plans
-    * nothing per call: it runs on the engine's [[PlannedScan]] of its
-    * shape, planned once, and binds the call's terms ([[Engine.Pass]]):
-    * the term ids reach the scan as parquet's `In(term_id)` row-group
-    * pushdown ([[WholeFileParquet]]), and the pass keeps the rows whose
-    * term_id and then term string are bound, copying each value it
-    * keeps out of the reader's row. The scan, the kernels and the task's
-    * heaps are one stage with no exchange, at any segment width.
+    * nothing and reads no parquet per call: it runs on the engine's
+    * resident segments table ([[Resident]]), where each task
+    * binary-searches the call's term ids in its chunks and keeps the rows
+    * whose term string is bound too, in scan order. The lookup, the
+    * kernels and the task's heaps are one stage with no exchange, at any
+    * segment width.
     * Predicate and tombstones resolve to the allow bitmap through
     * [[perSegment]], planned per call: its side join may shuffle the
     * hits, and a plan kept across calls would replay its first call's
@@ -1222,57 +1208,48 @@ final class Engine(val index: Index) {
       }
     if (docPred.isDefined || index.hasTombstones) {
       val pass = perSegment(segRows(names, keys, phraseWords), docPred)(_.seg_id)(score)
-      return Engine.Pass(pass.rdd, pass, None)
+      return Engine.Pass(pass.rdd, pass)
     }
-    val scan = if (phraseWords.isEmpty) termScan else phraseScan
     val terms = index.readTerms(names, keys)
     val ids = terms.map(TermHash.hash).distinct.sorted.toArray
+    val bound = terms.toSet
     val phraseSet = phraseWords.toSet
-    val Seq(segI, idI, termI, dfI, maxTfI, minDlI, postingsI) = passCols.map(scan.ordinal)
-    val positionsI = scan.ordinal.getOrElse("positions", -1)
-    val rows = scan.rows.mapPartitions { it =>
-      val bound = terms.iterator.map(UTF8String.fromString).toSet
-      val hits = it
-        .filter(r => java.util.Arrays.binarySearch(ids, r.getLong(idI)) >= 0 &&
-          bound(r.getUTF8String(termI)))
-        .map { r => // a row views the reader's buffers: toString and getBinary copy
-          val term = r.getUTF8String(termI).toString
-          SegRow(r.getLong(segI), term, r.getInt(dfI), r.getInt(maxTfI), r.getInt(minDlI),
-            r.getBinary(postingsI), if (phraseSet(term)) r.getBinary(positionsI) else null)
-        }
+    val rows = resident.table.mapPartitions { chunks =>
+      val hits = chunks.flatMap(_.rows(ids, bound, phraseSet))
       Engine.groupBySegment(hits.map(h => (h, null: SegSide)), (h: SegRow) => h.seg_id)
         .flatMap { case (seg, segHits, _) => score(seg, segHits.iterator, null) }
     }
-    Engine.Pass(rows, scan.plan,
-      Some(WholeFileParquet.bindingProperty(bindingKey) -> WholeFileParquet.encodeIds(ids)))
+    Engine.Pass(rows, resident.plan)
   }
 
-  /** The key of this engine's term bindings ([[WholeFileParquet]]). */
-  private lazy val bindingKey: String = java.util.UUID.randomUUID().toString
-
-  /** The segments scan of [[segmentPass]]'s unjoined route, planned once:
-    * the [[SegHit]] columns with term_id (and the positions column for a
-    * pass with phrases) over every segment, with no term filter; the
-    * pass's term binding narrows it per job. `rows` are the scan's own
-    * rows: with parquet's vectorized reader, views over its column
-    * batches, so the pass reads a row's columns only once its term_id is
-    * bound, and copies what it keeps.
+  /** The segments store, resident: [[segmentPass]]'s unjoined route looks
+    * each call's terms up in `table` instead of reading parquet. `plan`
+    * selects the [[SegHit]] columns, term_id and positions of every
+    * segment, planned once with no filter; `table` holds its scan's
+    * rows as [[SegChunk]]s, built by the first job that reads it and
+    * kept `MEMORY_ONLY`. A partition Spark evicts, or refuses to cache
+    * for want of memory, is read again from parquet by the job that
+    * needs it, with the same rows.
     */
-  private final class PlannedScan(positions: Boolean) {
-    val plan: DataFrame = index.boundSegments(bindingKey)
-      .select((passCols ++ (if (positions) Seq("positions") else Nil)).map(col): _*)
-    private val scan = plan.queryExecution.executedPlan
-      .collectFirst { case s: FileSourceScanExec => s }
-      .getOrElse(throw new IllegalStateException(s"no file scan in the segments plan:\n$plan"))
-    /** Each column's index in [[rows]]. */
-    val ordinal: Map[String, Int] = scan.output.map(_.name).zipWithIndex.toMap
-    val rows: RDD[InternalRow] = new SQLExecutionRDD(
-      if (!scan.supportsColumnar) scan.execute()
-      else scan.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala)),
-      plan.queryExecution.sparkSession.sessionState.conf)
+  private[graft] final class Resident {
+    val plan: DataFrame = index.segments.select(residentCols.map(col): _*)
+    val table: RDD[SegChunk] = {
+      val scan = plan.queryExecution.executedPlan
+        .collectFirst { case s: FileSourceScanExec => s }
+        .getOrElse(throw new IllegalStateException(s"no file scan in the segments plan:\n$plan"))
+      val ordinal = scan.output.map(_.name).zipWithIndex.toMap
+      val ord = residentCols.map(ordinal)
+      // with the vectorized reader, rows are views over its column batches
+      new SQLExecutionRDD(
+          if (!scan.supportsColumnar) scan.execute()
+          else scan.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala)),
+          plan.queryExecution.sparkSession.sessionState.conf)
+        .mapPartitions(SegChunk.chunks(_, ord))
+        .setName(s"resident segments of ${index.indexDir}")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    }
   }
-  private lazy val termScan = new PlannedScan(positions = false)
-  private lazy val phraseScan = new PlannedScan(positions = true)
+  private[graft] lazy val resident = new Resident
 
   /** All matching docs with exact raw scores — no top-k, no quantization:
     * (doc_id, score). The exploded-postings hash-agg plan (term_id+term
@@ -2070,29 +2047,12 @@ object Engine {
     case object DenseArray extends Route
   }
 
-  /** A scoring pass before its merge: its (query id, candidate) `rows`,
-    * the `plan` that reads the segments for them, and the job-local
-    * property that binds the call's terms to that plan, if any. An
-    * unjoined pass's `plan` is the engine's segments scan planned once
-    * and `binding` carries the call's term ids; a pass with a side input
-    * is planned per call, and `plan` is its own.
+  /** A scoring pass before its merge: its (query id, candidate) `rows`
+    * and the `plan` that reads the segments for them. An unjoined pass's
+    * `plan` is the engine's resident segments plan, read once; a pass
+    * with a side input is planned per call, and `plan` is its own.
     */
-  private[graft] final case class Pass(rows: RDD[(Long, Scored)], plan: Dataset[_],
-      binding: Option[(String, String)]) {
-
-    /** `job` over [[rows]], with the binding set on the calling thread for
-      * its Spark jobs and the thread's previous value restored after.
-      * Local properties are per thread, so concurrent callers stay apart.
-      */
-    def run[T](job: RDD[(Long, Scored)] => T): T = binding match {
-      case None => job(rows)
-      case Some((key, ids)) =>
-        val sc = rows.sparkContext
-        val prev = sc.getLocalProperty(key)
-        sc.setLocalProperty(key, ids)
-        try job(rows) finally sc.setLocalProperty(key, prev)
-    }
-  }
+  private[graft] final case class Pass(rows: RDD[(Long, Scored)], plan: Dataset[_])
 
   /** One query of the engine's scoring pass: `weights` (boost·idf) and
     * `route` as the engine's `specOf` gives them, `useWand` (block-max
@@ -2225,45 +2185,6 @@ object Engine {
       case c => sb.append(java.util.regex.Pattern.quote(c.toString))
     }
     java.util.regex.Pattern.compile(sb.toString)
-  }
-
-  /** Built-in-composed specification twin of the native
-    * [[graft.functions.GraftPhrasePfDl]] phrase verify (pinned equal in
-    * FunctionsSpec, not on any hot path): struct(pf, dl) with pf = exact
-    * sliding-window phrase count over the analyzer tokens, dl = clamped
-    * 2n−1. bindOnce keeps the tokenization at one eval even here — the
-    * occurrence-count lambda reads the token array k times per position,
-    * and a pushed-down pf > 0 predicate re-inlines the projection into
-    * the filter (measured ~30x without it).
-    */
-  private[graft] def phrasePfDlHof(content: Column, toks: Array[String],
-      maxDl: Int, slop: Int = 0): Column = {
-    val k = toks.length
-    graft.analyze.Tokenizer.bindOnce(
-        graft.analyze.Tokenizer.tokens(content)) { ts =>
-      // slop 0: per-anchor k-way consecutive conjunction; slop > 0: per
-      // word an EXISTS over its [i+j-slop, i+j+slop] window (the
-      // independent-window sloppy rule of [[phraseMatches]]) — the anchor
-      // sequence then spans every position of the first word, not just
-      // those with k-1 following slots
-      val anchors =
-        if (slop == 0) sequence(lit(1), greatest(size(ts) - lit(k - 1), lit(0)))
-        else sequence(lit(1), size(ts))
-      def wordOk(i: Column, w: String, j: Int): Column =
-        if (slop == 0 || j == 0) element_at(ts, i + lit(j)) === lit(w)
-        else exists(
-          sequence(greatest(i + lit(j - slop), lit(1)),
-            least(i + lit(j + slop), size(ts))),
-          q => element_at(ts, q) === lit(w))
-      struct(
-        when(size(ts) >= lit(if (slop == 0) k else 1),
-          size(filter(anchors,
-            i => toks.toSeq.zipWithIndex.map { case (w, j) =>
-              wordOk(i, w, j)
-            }.reduce(_ && _))))
-          .otherwise(lit(0)).as("pf"),
-        least(lit(2) * size(ts) - lit(1), lit(maxDl)).as("dl"))
-    }
   }
 
   /** Distinct padded character trigrams of a term — the Scala twin of the

@@ -519,7 +519,7 @@ object Wand {
     */
   private def heaps(pass: Engine.Pass, k: Int): scala.collection.mutable.LongMap[BoundedTopK] = {
     requireRows(k)
-    pass.run(_.aggregate(new QueryHeaps(k))((h, x) => h.offer(x._1, x._2), _ merge _)).byQuery
+    pass.rows.aggregate(new QueryHeaps(k))((h, x) => h.offer(x._1, x._2), _ merge _).byQuery
   }
 
   /** The merged rows as a local DataFrame of the fixed `schema`. */

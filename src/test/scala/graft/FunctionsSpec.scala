@@ -98,7 +98,7 @@ class FunctionsSpec extends SparkSpec {
     val all = docs.unionAll(extra)
     val a = graft.ml.TextStats.fingerprint(all)
       .as[(Long, Option[String])].collect().toMap
-    val b = graft.ml.TextStats.fingerprintHof(all)
+    val b = SpecTwins.fingerprintHof(all)
       .as[(Long, Option[String])].collect().toMap
     assert(a == b)
     assert(a(9001L).isEmpty && a(9002L).isEmpty && a(9003L).isDefined)
@@ -252,7 +252,7 @@ class FunctionsSpec extends SparkSpec {
         .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
         .as[(Long, (Int, Int))].collect().toMap
       val b = all.select($"doc_id",
-        graft.query.Engine.phrasePfDlHof($"content", toks, IndexBuild.MaxDl).as("pd"))
+        SpecTwins.phrasePfDlHof($"content", toks, IndexBuild.MaxDl).as("pd"))
         .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
         .as[(Long, (Int, Int))].collect().toMap
       assert(a == b, s"phrase ${toks.mkString(" ")}")
@@ -270,7 +270,7 @@ class FunctionsSpec extends SparkSpec {
         .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
         .as[(Long, (Int, Int))].collect().toMap
       val b = all.select($"doc_id",
-        graft.query.Engine.phrasePfDlHof($"content", toks, IndexBuild.MaxDl, slop).as("pd"))
+        SpecTwins.phrasePfDlHof($"content", toks, IndexBuild.MaxDl, slop).as("pd"))
         .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
         .as[(Long, (Int, Int))].collect().toMap
       assert(a == b, s"slop $slop phrase ${toks.mkString(" ")}")

@@ -752,7 +752,7 @@ class MlSpec extends SparkSpec {
     val all = TextStats.withPii(corpus).select($"doc_id", $"content").unionAll(edge)
     val a = TextStats.redactPii(all).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3))).toMap
-    val b = TextStats.redactPiiBuiltins(all).collect()
+    val b = SpecTwins.redactPiiBuiltins(all).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3))).toMap
     assert(a == b)
     assert(a.values.exists(_._1 > 0) && a.values.exists(_._2 > 0), "vacuous corpus")

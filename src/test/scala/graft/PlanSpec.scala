@@ -17,8 +17,9 @@ class PlanSpec extends SparkSpec {
   private def plan(df: Dataset[_]): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  /** A scoring pass's segments plan: an unjoined pass's is the engine's
-    * scan planned once, which each call binds to its terms.
+  /** A scoring pass's segments plan: an unjoined pass's is the plan of
+    * the engine's resident segments table, where each call looks its
+    * terms up.
     */
   private def plan(pass: Engine.Pass): String = plan(pass.plan)
 
@@ -376,24 +377,8 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("segments"), s"phrase plan missing the segments scan:\n$p")
     assert(segmentScans(engine.phrasePass(Engine.Phrase(words, 0)).plan,
       engine.index.indexDir) == 1, s"phrase plan scans the segments more than once:\n$p")
-    // the term_id pushdown is bound per call, in the scan task: pinned by
-    // input bytes in SegmentPassSpec
-  }
-
-  test("only a pass with a phrase reads the positions column") {
-    def readSchema(p: String): String =
-      "ReadSchema: struct<[^>]*>".r.findFirstIn(p).getOrElse(fail(s"no ReadSchema:\n$p"))
-    // term-only passes (single, bool, batch) read the SegHit columns only
-    for (pass <- Seq(engine.termsPass(SparkEntry.FlagshipTerms, rows = 30),
-        engine.boolPass(SparkEntry.FlagshipTerms, Seq("w:window" -> 1.0), Seq("w:stream")),
-        engine.parsedPass("w:hash^2 +w:window -w:stream"),
-        engine.manyPass(Seq(1L -> SparkEntry.FlagshipTerms, 2L -> Seq("w:window" -> 1.0))))) {
-      val p = plan(pass)
-      assert(readSchema(p) == "ReadSchema: struct<seg_id:bigint,term_id:bigint,term:string," +
-        "df:int,max_tf:int,min_dl:int,postings:binary>", s"term-only pass columns:\n$p")
-    }
-    val p = plan(engine.parsedPass(SparkEntry.ParsedMixedQuery))
-    assert(readSchema(p).contains("positions:binary"), s"phrase pass reads no positions:\n$p")
+    // the call's term_ids are looked up in the engine's resident segments
+    // table, not pushed into this plan: pinned in SegmentPassSpec
   }
 
   test("parsed plan with a phrase: one segments scan, no semi/anti joins") {

@@ -10,9 +10,10 @@ import graft.query.{BruteScorer, Engine, Index, Wand}
   * segments it holds and the driver merges the tasks' heaps, in one job.
   * Pinned here: segments stay whole when Spark splits files, every write
   * keeps a segment in one file, the job counts, the side join giving
-  * the same results broadcast or shuffled, and the term binding of the
-  * scan planned once: reused across calls, apart across threads, pushed
-  * into parquet, never applied to an unrelated read.
+  * the same results broadcast or shuffled, and the engine's resident
+  * segments table: built whole by its first call, read without parquet
+  * by later ones, read again from parquet once dropped, and left out of
+  * the passes with a side input.
   */
 class SegmentPassSpec extends SparkSpec {
   import spark.implicits._
@@ -182,11 +183,11 @@ class SegmentPassSpec extends SparkSpec {
     same("block join")(_.blockJoinParents(terms))
   }
 
-  /** Input records the tasks of `body`'s jobs read (the rows parquet
-    * delivered), counted by a listener once the bus has delivered every
-    * event of the call.
+  /** `body`'s value and the input records its jobs' tasks read (the rows
+    * parquet delivered, or the cached elements), counted by a listener
+    * once the bus has delivered every event of the call.
     */
-  private def inputRowsOf(body: => Any): Long = {
+  private def inputRowsOf[T](body: => T): (T, Long) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val n = new java.util.concurrent.atomic.AtomicLong()
@@ -197,9 +198,9 @@ class SegmentPassSpec extends SparkSpec {
     org.apache.spark.TestBus.drain(sc)
     sc.addSparkListener(listener)
     try {
-      body
+      val v = body
       org.apache.spark.TestBus.drain(sc)
-      n.get
+      (v, n.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -207,16 +208,15 @@ class SegmentPassSpec extends SparkSpec {
     val first = engine.termsPass(queries(1), rows = 30)
     val scan = first.plan.queryExecution
     val scanRdd = first.rows.dependencies.map(_.rdd.id)
-    assert(scanRdd.size == 1, "precondition: the pass maps one scan RDD")
+    assert(scanRdd == Seq(engine.resident.table.id), "precondition: the pass maps the resident table")
     for (q <- queries) {
       val pass = engine.termsPass(q, rows = 30)
       assert(pass.plan eq first.plan, s"$q: a new scan plan")
       assert(pass.plan.queryExecution eq scan, s"$q: a new QueryExecution")
-      assert(pass.rows.dependencies.map(_.rdd.id) == scanRdd, s"$q: not the planned scan's RDD")
-      assert(pass.binding.isDefined, s"$q: unbound")
+      assert(pass.rows.dependencies.map(_.rdd.id) == scanRdd, s"$q: not the resident table")
       assert(pairs(Wand.topK(pass, 30)) == brute(q, 30), s"$q differs from brute")
     }
-    // a batch and a Boolean query bind the same scan
+    // a batch and a Boolean query read the same table
     assert(engine.manyPass(queries.zipWithIndex.map { case (q, i) => i.toLong -> q }, rows = 30)
       .plan eq first.plan)
     assert(engine.boolPass(queries(0), mustNot = queries(1).map(_._1), rows = 30).plan eq first.plan)
@@ -225,7 +225,7 @@ class SegmentPassSpec extends SparkSpec {
   test("concurrent calls with different terms each equal the brute scorer") {
     val qs = Seq(queries(1), queries(2), queries(0), queries(1).take(2))
     val expected = qs.map(brute(_, 30))
-    engine.searchByTerms(qs.head, rows = 30) // plan the scan once, before the threads
+    engine.searchByTerms(qs.head, rows = 30) // fill the table once, before the threads
     val got = new java.util.concurrent.ConcurrentHashMap[Int, Seq[(Long, Long)]]()
     val threads = Seq(0, 1).map { t =>
       new Thread(() => (0 until 6).foreach { i =>
@@ -239,35 +239,58 @@ class SegmentPassSpec extends SparkSpec {
     assert(got.isEmpty, s"calls differing from brute: ${got.keySet}")
   }
 
-  test("a thread started while a binding is set reads unbound segments") {
-    val pass = engine.termsPass(queries(1), rows = 30)
-    val (key, _) = pass.binding.getOrElse(fail("precondition: the pass is bound"))
-    val rows = engine.index.segments.count()
-    val exported = engine.exportMatches(queries(0)).collect().toSeq
-    assert(exported.nonEmpty)
-    val seen = pass.run { _ =>
-      var r: (String, Long, Seq[org.apache.spark.sql.Row]) = null
-      val t = new Thread(() => r = (spark.sparkContext.getLocalProperty(key),
-        engine.index.segments.count(), engine.exportMatches(queries(0)).collect().toSeq))
-      t.start()
-      t.join()
-      r
+  /** Whether the resident table of `eng` is cached whole. */
+  private def cachedWhole(eng: Engine): Boolean =
+    spark.sparkContext.getRDDStorageInfo.exists { i =>
+      i.id == eng.resident.table.id && i.numCachedPartitions == i.numPartitions
     }
-    assert(seen._1 != null, "precondition: the thread inherits the binding")
-    assert(seen._2 == rows, "an inherited binding filtered a segments read")
-    assert(seen._3 == exported, "an inherited binding filtered exportMatches")
+
+  test("a rare first call caches the whole table; later calls read no parquet row") {
+    // on the 64 KB row groups a rare term's rows sit in a few of them
+    val eng = new Engine(new Index(split, splitDir))
+    val stored = eng.index.segments.count()
+    eng.index.dfOf(queries.flatten.map(_._1)) // the index's lazy state reads other stores
+    eng.index.stats
+    eng.index.cfg
+    val (got1, first) = inputRowsOf(pairs(eng.searchByTerms(queries(1), rows = 30)))
+    assert(got1 == brute(queries(1), 30))
+    assert(first == stored, s"the first call read $first of $stored rows")
+    assert(cachedWhole(eng), "the first call left the table partly cached")
+    // a cached read counts one input record per chunk it hands over
+    val chunks = eng.resident.table.count()
+    assert(chunks > 0 && chunks * 10 < stored, s"precondition: $chunks chunks of $stored rows")
+    for (q <- queries) {
+      val (got, read) = inputRowsOf(pairs(eng.searchByTerms(q, rows = 30)))
+      assert(got == brute(q, 30), s"$q differs from brute")
+      assert(read == chunks, s"$q read $read input records, the table holds $chunks chunks")
+    }
   }
 
-  test("a bound call reads fewer input rows than the unbound scan: parquet prunes by term_id") {
-    // the 64 KB row groups hold term_id ranges, so a rare query's ids
-    // select a few of them; the input bytes do not show it, as the
-    // unbound scan's column reads are not counted in the task's bytes
-    val eng = new Engine(new Index(split, splitDir))
-    val pass = eng.termsPass(queries(1), rows = 30)
-    assert(pass.binding.isDefined, "precondition: the pass is bound")
-    val bound = inputRowsOf(Wand.topK(pass, 30))
-    val full = inputRowsOf(pass.rows.count()) // the same planned scan, no binding
-    assert(bound > 0 && bound * 4 < full, s"bound call read $bound rows, the unbound scan $full")
+  test("a call after the table is unpersisted reads parquet again and equals brute") {
+    val eng = new Engine(new Index(spark, defaultDir))
+    assert(pairs(eng.searchByTerms(queries(2), rows = 30)) == brute(queries(2), 30))
+    assert(cachedWhole(eng), "precondition: the table is cached")
+    eng.resident.table.unpersist(blocking = true)
+    val stored = eng.index.segments.count()
+    for (q <- queries) {
+      val (got, read) = inputRowsOf(pairs(eng.searchByTerms(q, rows = 30)))
+      assert(read == stored, s"$q read $read input records of $stored stored rows")
+      assert(got == brute(q, 30), s"$q differs from brute")
+    }
+  }
+
+  test("a term-only row carries no positions; a phrase word's row carries them") {
+    val terms = queries(2).map(_._1)
+    val ids = terms.map(graft.index.TermHash.hash).distinct.sorted.toArray
+    def positions(phraseWords: Set[String]) = engine.resident.table
+      .flatMap(_.rows(ids, terms.toSet, phraseWords).map(r => (r.term, r.positions != null)))
+      .collect().toSeq
+    val termOnly = positions(Set.empty)
+    assert(termOnly.map(_._1).toSet == terms.toSet, "precondition: every term has rows")
+    assert(termOnly.forall(!_._2), "a term-only row carries positions")
+    val phrase = positions(Set(terms.head))
+    assert(phrase.forall { case (t, has) => has == (t == terms.head) },
+      "positions are read for the phrase word's rows only")
   }
 
   test("a scan read row by row (no vectorized reader) binds the same: each call equals brute") {
@@ -282,6 +305,39 @@ class SegmentPassSpec extends SparkSpec {
     }
   }
 
+  test("files packed into one scan partition: a chunk spans two files, calls equal brute") {
+    // with no open cost, both files of the unit fit one partition's bytes
+    val packed = spark.newSession()
+    packed.conf.set("spark.sql.files.openCostInBytes", "0")
+    packed.conf.set("spark.sql.files.minPartitionNum", "1")
+    val eng = new Engine(new Index(packed, defaultDir))
+    val perFile = eng.index.segments.groupBy(input_file_name()).count().as[(String, Long)].collect()
+    assert(eng.resident.table.getNumPartitions == 1 && perFile.length == 2 &&
+      perFile.forall(_._2 % graft.query.SegChunk.MaxRows != 0),
+      s"precondition: one partition whose chunks cross a file boundary, files ${perFile.toSeq}")
+    for (q <- queries) assert(pairs(eng.searchByTerms(q, rows = 30)) == brute(q, 30), s"$q differs from brute")
+    // a lookup of every term gives back every stored row, in scan order
+    val stored = eng.index.segments.select($"seg_id", $"term", $"postings")
+      .as[(Long, String, Array[Byte])].collect().toSeq
+    val terms = stored.map(_._2).distinct
+    val ids = terms.map(graft.index.TermHash.hash).distinct.sorted.toArray
+    val looked = eng.resident.table
+      .flatMap(_.rows(ids, terms.toSet, Set.empty).map(r => (r.seg_id, r.term, r.postings)))
+      .collect().toSeq
+    assert(looked.size == stored.size && looked.iterator.zip(stored.iterator).forall { case (a, b) =>
+      a._1 == b._1 && a._2 == b._2 && java.util.Arrays.equals(a._3, b._3)
+    }, s"a lookup of every term gave ${looked.size} rows, not the ${stored.size} stored in scan order")
+  }
+
+  /** Whether `pass` reads the resident table of `eng`: the table is in
+    * the lineage of its rows.
+    */
+  private def readsTable(pass: Engine.Pass, eng: Engine): Boolean = {
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Iterator[Int] =
+      Iterator(r.id) ++ r.dependencies.iterator.flatMap(d => lineage(d.rdd))
+    lineage(pass.rows).contains(eng.resident.table.id)
+  }
+
   test("tombstones and predicates: successive calls per call plan, each equal to brute") {
     val dir = tempDir("graft-segpass-kills")
     IndexBuild.build(spark, synth(spark), dir, cfg)
@@ -291,10 +347,11 @@ class SegmentPassSpec extends SparkSpec {
     val langs = synth(spark).select($"doc_id", $"lang").as[(Long, String)].collect().toMap
     for (q <- queries) {
       val pass = killed.termsPass(q, rows = 30)
-      assert(pass.binding.isEmpty, s"$q: a tombstoned pass bound a planned scan")
+      assert(!readsTable(pass, killed), s"$q: a tombstoned pass reads the resident table")
       assert(pairs(Wand.topK(pass, 30)) == brute(q, 30, _ % 7 != 3), s"kills $q")
       val pred = Some(col("lang") === "java")
-      assert(engine.termsPass(q, rows = 30, docPred = pred).binding.isEmpty, s"$q: predicate bound")
+      assert(!readsTable(engine.termsPass(q, rows = 30, docPred = pred), engine),
+        s"$q: a predicate pass reads the resident table")
       assert(pairs(engine.searchByTerms(q, rows = 30, docPred = pred)) ==
         brute(q, 30, d => langs(d) == "java"), s"predicate $q")
     }
