@@ -370,7 +370,8 @@ object SparkEntry {
     "q_wand_filtered" -> ((s, dir) =>
       Engine.forDir(s, dir).searchByTerms(FlagshipTerms, rows = 60,
         docFilter = Some(("lang", "en")))),
-    // fq via an arbitrary predicate (docmeta-scan bitmap side join fallback)
+    // fq via an arbitrary predicate (its docmeta matches join the segment
+    // pass as a reserved posting list)
     "q_wand_filtered_pred" -> ((s, dir) =>
       Engine.forDir(s, dir).searchByTerms(FlagshipTerms, rows = 60,
         docPred = Some(col("lang") === lit("en")))),

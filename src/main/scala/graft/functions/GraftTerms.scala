@@ -832,73 +832,6 @@ case class GraftPiiStats(child: Expression, emailRe: String, ipRe: String)
     copy(child = newChild)
 }
 
-/** Exact phrase verification for the PhraseQuery route — per row, the
-  * struct (pf, dl): pf = occurrences of the token sequence `toks` among
-  * the content's analyzer tokens (overlaps counted, Lucene exact-phrase
-  * semantics), dl = min(2·n_tokens − 1, maxDl), the indexed docmeta
-  * length. ONE eval per row: the built-in composition (position sequence
-  * → per-position k-way element_at conjunction) runs every step as an
-  * interpreted higher-order lambda — the phrase verify was ~1.7 s of a
-  * 2.9 s phrase search at the 600k-doc bench corpus; this pass is a plain
-  * token-array scan. The composition is kept as the spec twin in
-  * FunctionsSpec (pinned equal), and the DuckDB oracle mirrors the same
-  * position-window count in SQL.
-  */
-case class GraftPhrasePfDl(child: Expression, toks: Seq[String], maxDl: Int,
-                           slop: Int = 0)
-    extends UnaryExpression with CodegenFallback {
-  require(toks.nonEmpty, "empty phrase")
-  require(slop >= 0, s"negative slop: $slop")
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.types.StructField("pf",
-      org.apache.spark.sql.types.IntegerType, nullable = false) ::
-    org.apache.spark.sql.types.StructField("dl",
-      org.apache.spark.sql.types.IntegerType, nullable = false) :: Nil)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_phrase_pfdl"
-
-  override def nullSafeEval(input: Any): Any = {
-    val ts = Tokenizer.tokenizeScala(input.toString)
-    val k = toks.length
-    var pf = 0
-    if (slop == 0) {
-      var i = 0
-      while (i <= ts.length - k) {
-        var j = 0
-        while (j < k && ts(i + j) == toks(j)) j += 1
-        if (j == k) pf += 1
-        i += 1
-      }
-    } else {
-      // sloppy rule (Engine.phraseMatches scaladoc): anchor i matches when
-      // every word j has an occurrence in [i+j-slop, i+j+slop]; windows
-      // are checked independently (the positional route's exact mirror)
-      var i = 0
-      while (i < ts.length) {
-        if (ts(i) == toks(0)) {
-          var ok = true
-          var j = 1
-          while (ok && j < k) {
-            val lo = math.max(0, i + j - slop)
-            val hi = math.min(ts.length - 1, i + j + slop)
-            var q = lo
-            while (q <= hi && ts(q) != toks(j)) q += 1
-            ok = q <= hi
-            j += 1
-          }
-          if (ok) pf += 1
-        }
-        i += 1
-      }
-    }
-    val dl = math.min(2 * ts.length - 1, maxDl)
-    org.apache.spark.sql.catalyst.InternalRow(pf, dl)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): GraftPhrasePfDl =
-    copy(child = newChild)
-}
-
 /** All Gopher quality-rule integer tallies in ONE content pass — the
   * struct (n_words, non_space, n_lines, n_symbols, n_bullet, n_ell_end,
   * n_alpha, n_required). The built-in composition
@@ -1028,9 +961,6 @@ object GraftFunctions {
     GraftBridge.column(GraftTokens(GraftBridge.expression(c)))
   def graft_grams(c: Column): Column =
     GraftBridge.column(GraftGrams(GraftBridge.expression(c)))
-  def graft_phrase_pfdl(c: Column, toks: Seq[String], maxDl: Int,
-                        slop: Int = 0): Column =
-    GraftBridge.column(GraftPhrasePfDl(GraftBridge.expression(c), toks, maxDl, slop))
   def graft_gopher_stats(c: Column, required: Seq[String]): Column =
     GraftBridge.column(GraftGopherStats(GraftBridge.expression(c), required))
   def graft_dot(a: Column, b: Column): Column =

@@ -1,14 +1,17 @@
 package graft.query
 
+import scala.reflect.ClassTag
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.execution.{FileSourceScanExec, SQLExecutionRDD}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.RoaringBitmap
-import graft.index.{Bitmaps, Codec, IndexBuild, IndexConfig, TermHash, WholeFileParquet}
+import graft.index.{Bitmaps, Codec, IndexBuild, IndexConfig, TermHash}
 import graft.corpus.Corpus
 import scala.jdk.CollectionConverters._
 
@@ -71,15 +74,13 @@ final class Index(val spark: SparkSession, val indexDir: String,
     (n, if (n == 0) 1.0 else sdl.toDouble / n.toDouble)
   }
 
-  /** Postings rows of every live unit, read through [[WholeFileParquet]]:
-    * a segment lives in exactly one file and a file in exactly one scan
-    * partition, so each scan task holds whole segments and the query pass
-    * scores them in place (no exchange keyed on seg_id).
+  /** Postings rows of every live unit. A scan of them may split a file,
+    * and so a segment, across tasks: the engine's resident table
+    * ([[Engine.Resident]]) partitions them by segment once.
     */
   lazy val segments: DataFrame = spark.read
-    .format(classOf[WholeFileParquet].getName)
     .option("basePath", IndexBuild.segmentsDir(indexDir))
-    .load(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
+    .parquet(ranges.map(r => s"${IndexBuild.segmentsDir(indexDir)}/range=$r"): _*)
 
   /** Filter columns covered in EVERY live unit that holds docs: the
     * intersection of the doc-holding units' manifest `filter_cols`. Only
@@ -114,12 +115,6 @@ final class Index(val spark: SparkSession, val indexDir: String,
       s"${IndexBuild.tombstonesDir(indexDir)}/range=$r"): _*)
     .select(col("seg_id"), col("bitmap"))
 
-  /** Kill bitmaps as a typed dataset, None when the index is tombstone-free
-    * (the common case — callers keep their exact pre-upsert plans).
-    */
-  def killBitmapsOpt: Option[org.apache.spark.sql.Dataset[(Long, Array[Byte])]] =
-    if (hasTombstones) Some(killBitmaps.as[(Long, Array[Byte])]) else None
-
   /** Distinct killed global doc_ids (scan-path / docmeta exclusion side). */
   lazy val killedDocIds: DataFrame = {
     val c = cfg
@@ -131,17 +126,18 @@ final class Index(val spark: SparkSession, val indexDir: String,
       .distinct().toDF("doc_id")
   }
 
+  /** Doc metadata of every doc a live unit wrote, tombstoned ones too. */
+  private[graft] lazy val docmetaAll: DataFrame = spark.read
+    .option("basePath", IndexBuild.docmetaDir(indexDir))
+    .parquet(ranges.map(r => s"${IndexBuild.docmetaDir(indexDir)}/range=$r"): _*)
+
   /** Doc metadata of LIVE docs only: Solr-update tombstones are excluded
     * here, so every docmeta consumer (point lookup, random sample, fq
     * predicates, field projection) sees post-update reality. Tombstone-free
     * indexes (the common case) skip the anti-join entirely.
     */
-  lazy val docmeta: DataFrame = {
-    val raw = spark.read
-      .option("basePath", IndexBuild.docmetaDir(indexDir))
-      .parquet(ranges.map(r => s"${IndexBuild.docmetaDir(indexDir)}/range=$r"): _*)
-    if (hasTombstones) raw.join(killedDocIds, Seq("doc_id"), "left_anti") else raw
-  }
+  lazy val docmeta: DataFrame =
+    if (hasTombstones) docmetaAll.join(killedDocIds, Seq("doc_id"), "left_anti") else docmetaAll
 
   /** Cached term dictionary (term, term_id, df) — the query-time analog of
     * the reference's HashTermStatistics singleton
@@ -219,20 +215,16 @@ final class Index(val spark: SparkSession, val indexDir: String,
     * the same term count share one compiled stage.
     *
     * A caller's term never reads a reserved filter key: one in `terms` is
-    * dropped (it matched nothing before keys were indexed). The engine's
-    * own key reads go through `keys` (exact keys) and `keyCols` (every key
-    * of each column: the column's one term_id, [[TermHash]]).
+    * dropped (it matched nothing before keys were indexed).
     *
-    * This plans a read per call. The engine's unjoined scoring pass does
-    * not come here: it looks the same term_ids up, with the same term
-    * check, in the engine's resident segments table.
+    * This plans a read per call, for the exploded-postings plans (export
+    * and the docmeta-scan routes) and the over-cap df lookup. The
+    * per-segment passes never come here: they look their terms up in the
+    * engine's resident segments table ([[Engine.Resident]]).
     */
-  private[graft] def termRows(terms: Seq[String], from: DataFrame = segments,
-      keys: Seq[String] = Nil, keyCols: Seq[String] = Nil)(cols: Column*): DataFrame = {
-    val exact = readTerms(terms, keys)
-    val prefixes = keyCols.map(IndexBuild.filterKey(_, ""))
-    from.where(Index.inSet("term_id", (exact ++ prefixes).map(TermHash.hash)) &&
-        prefixes.foldLeft(Index.termIn(exact))((c, p) => c || col("term").startsWith(p)))
+  private[graft] def termRows(terms: Seq[String], from: DataFrame = segments)(cols: Column*): DataFrame = {
+    val exact = readTerms(terms, Nil)
+    from.where(Index.inSet("term_id", exact.map(TermHash.hash)) && Index.termIn(exact))
       .select(cols: _*)
   }
 
@@ -265,14 +257,6 @@ object Index {
     inSet("term", terms.map(UTF8String.fromString))
 }
 
-/** One side partition's serialized bitmaps of one segment ([[Engine]]'s
-  * per-segment filter path): a pass's side is either kill bitmaps or a
-  * docmeta predicate's matches. `part` is the side partition, so a task
-  * that meets the same segment's side rows once per hit keeps each
-  * partition's rows once.
-  */
-private[query] final case class SegSide(seg_id: Long, part: Int, bitmaps: Array[Array[Byte]])
-
 /** One segments row of the scoring pass: a [[SegHit]] plus the term's
   * positions blob, read only for phrase words (null otherwise).
   */
@@ -293,11 +277,6 @@ final class Engine(val index: Index) {
   // product encoder reflects over its type, a share of every plan's time
   private implicit val scoredEnc: Encoder[Scored] = Encoders.product[Scored]
   private implicit val keyedEnc: Encoder[(Long, Scored)] = Encoders.product[(Long, Scored)]
-  private implicit val segHitEnc: Encoder[SegHit] = Encoders.product[SegHit]
-  private implicit val segRowEnc: Encoder[SegRow] = Encoders.product[SegRow]
-  private implicit val sideRowEnc: Encoder[(Long, Array[Byte])] =
-    Encoders.product[(Long, Array[Byte])]
-  private implicit val segSideEnc: Encoder[SegSide] = Encoders.product[SegSide]
 
   /** T1/T2 pruning, mirrored 1:1 in the SQL oracle (Oracle.pruneSql):
     *   sorted   = query terms by (df asc, term asc)   — rarest-first
@@ -307,15 +286,8 @@ final class Engine(val index: Index) {
     * (reference: LireRequestHandler.java:697-740 — df-asc ordering, drop
     * df==0 keeping >=3, budget = numHashes·accuracy clamped >=3)
     */
-  def prune(terms: Seq[(String, Double)], accuracy: Double): Seq[(String, Double, Long)] = {
-    val dfs = index.dfOf(terms.map(_._1).distinct)
-    val withDf = terms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }
-    val sorted = withDf.sortBy { case (t, _, df) => (df, t) }
-    val nonzero = sorted.filter(_._3 > 0)
-    val base = if (nonzero.size >= 3) nonzero else sorted.take(3)
-    val budget = math.max(3, math.floor(terms.size * accuracy).toInt)
-    base.take(budget)
-  }
+  def prune(terms: Seq[(String, Double)], accuracy: Double): Seq[(String, Double, Long)] =
+    Engine.prune(terms, accuracy, index.dfOf(terms.map(_._1).distinct))
 
   /** Dense-query threshold: when the DOMINANT-WEIGHT terms' Σdf/N exceeds
     * this, the query blankets the corpus (every code file contains
@@ -415,93 +387,61 @@ final class Engine(val index: Index) {
   // the resident table's columns: the SegHit ones, term_id and positions
   private val residentCols = Seq("seg_id", "term_id") ++ segHitCols.tail :+ "positions"
 
-  /** Segment hit rows of `terms` and of the filter `keys` and `keyCols`
-    * ([[Index.termRows]]) in the [[SegHit]] projection.
-    */
-  private def segHits(terms: Seq[String], keys: Seq[String] = Nil,
-      keyCols: Seq[String] = Nil): Dataset[SegHit] =
-    index.termRows(terms, keys = keys, keyCols = keyCols)(segHitCols.map(col): _*).as[SegHit]
-
-  /** The scoring pass's rows of `terms` and filter `keys`: [[segHits]]
-    * plus the positions blob of the `phraseWords` rows. Without phrase
-    * words the column is a null literal, so the scan reads no positions.
-    */
-  private def segRows(terms: Seq[String], keys: Seq[String],
-      phraseWords: Seq[String]): Dataset[SegRow] = {
-    val positions =
-      if (phraseWords.isEmpty) lit(null).cast("binary")
-      else when(Index.termIn(phraseWords), col("positions"))
-    index.termRows(terms, keys = keys)(segHitCols.map(col) :+ positions.as("positions"): _*)
-      .as[SegRow]
-  }
-
-  /** THE per-segment filter path — liresolr's collector-side filtering
-    * (deleted docs are liveDocs tombstones applied to every scorer; SURVEY
-    * P2). Every segment that has hits reaches `kernel` as `(seg, hits,
-    * allow)`, `allow` being the ONE resolved local-id bitmap, null = every
-    * doc: ¬OR(kill) over the segment's local-id capacity, null without
-    * kills; a docmeta predicate (`docPred`) resolves to the segment's
-    * matching docs instead — kill-free by construction, as
-    * [[Index.docmeta]] excludes tombstoned docs. A segment drops when its
-    * allow set is empty and when it has no hits. A covered fq is not a
-    * side input: it is one more posting list of the hits, a reserved
-    * filter key the kernel reads ([[fqSplit]]).
+  /** THE per-segment pass — liresolr's collector-side filtering over
+    * the engine's resident segments table ([[Resident]]; deleted docs are
+    * liveDocs tombstones applied to every scorer, SURVEY P2). Each task
+    * looks up `terms`, the filter `keys` and every key of the `keyCols`
+    * columns (their one term_id each, [[TermHash]]) in the segments of
+    * its table partition, with the positions of the `phraseWords` rows,
+    * and every segment with hits reaches `kernel` as `(seg, hits, allow)`.
     *
-    * The kernel runs in the task that holds the hits: `hits` (a scan of
-    * [[Index.segments]] with its `seg_id` column; `segOf` reads it back)
-    * keeps every segment whole in one scan partition, and each task
-    * groups its rows by segment — no exchange keyed on seg_id. Side rows
-    * (kill bitmaps; the predicate's matching docs, packed per side
-    * partition into per-segment bitmaps) are packed into one [[SegSide]]
-    * per segment and side partition and join the hits on seg_id with no
-    * strategy hint: a small side broadcasts and the hits stay in their
-    * scan partitions; a large one makes Spark shuffle both sides by
-    * seg_id, which keeps whole segments per partition too (AQE's
-    * skew-join split divides a partition by map task, and a segment's
-    * hits all come from the one scan task that read its file). The join
-    * pairs each hit with each of its segment's side rows; the grouping
-    * keeps one copy of each. A pass with neither a predicate nor kills
-    * reads no side store and joins nothing. The scoring pass comes here
-    * only with a side input: without one it runs on the engine's resident
-    * segments table ([[segmentPass]]); the value and conjunction passes
-    * come here always.
+    * `allow` is the segment's local-id bitmap, null = every doc, from
+    * [[Engine.boolAllow]] over two reserved posting lists: the kills
+    * ([[Engine.KillKey]], a MUST_NOT key the table holds on a tombstoned
+    * index) and the docs of `docs`, a docmeta predicate's matches, as
+    * rows of the MUST key [[Engine.PredKey]]. Those
+    * rows go to the table's partitions through its partitioner and are
+    * zipped with them, so no hit row ever moves. A segment drops when it
+    * has no hit and when its allow set is empty; the kernel never sees a
+    * reserved row. A covered fq is one more posting list of the hits, a
+    * filter key the kernel reads ([[fqSplit]]).
     */
-  private def perSegment[H, R: Encoder](hits: Dataset[H], docPred: Option[Column] = None)(
-      segOf: H => Long)(kernel: (Long, Iterator[H], RoaringBitmap) => Iterator[R]): Dataset[R] = {
-    val cfg = index.cfg
-    // side rows (seg_id, bitmap): the predicate's matching docs, or kills
-    val sideRows: Option[Dataset[(Long, Array[Byte])]] = docPred match {
-      case Some(pred) =>
-        Some(index.docmeta.where(pred).select(col("doc_id")).as[Long].mapPartitions { ids =>
-          val bySeg = scala.collection.mutable.LongMap.empty[RoaringBitmap]
-          ids.foreach(d => bySeg.getOrElseUpdate(cfg.segOf(d), new RoaringBitmap()).add(cfg.localOf(d)))
-          bySeg.iterator.map { case (seg, bm) => (seg, Bitmaps.serialize(bm)) }
-        })
-      case None => index.killBitmapsOpt
-    }
-    val hasAllow = docPred.isDefined
-    val segShift = cfg.segShift
-    def scoreSegments(rows: Iterator[(H, SegSide)]): Iterator[R] =
-      Engine.groupBySegment(rows, segOf).flatMap { case (seg, segHits, sides) =>
-        val bitmaps = sides.toSeq.flatMap(_.bitmaps)
-        val allow =
-          if (!hasAllow) Engine.flipAllow(bitmaps, segShift)
-          else if (bitmaps.isEmpty) new RoaringBitmap()
-          else Engine.orAll(bitmaps)
-        if (allow != null && allow.isEmpty) Iterator.empty
-        else kernel(seg, segHits.iterator, allow)
-      }
-    sideRows match {
-      case None => hits.mapPartitions(it => scoreSegments(it.map(h => (h, null))))
-      case Some(rows) =>
-        val side = rows.mapPartitions { rs =>
-          val part = org.apache.spark.TaskContext.getPartitionId()
-          rs.toArray.groupBy(_._1).iterator.map { case (seg, g) =>
-            SegSide(seg, part, g.map(_._2))
-          }
+  private def perSegment[R: ClassTag](terms: Seq[String], keys: Seq[String] = Nil,
+      keyCols: Seq[String] = Nil, phraseWords: Seq[String] = Nil, docs: Option[Dataset[Long]] = None)(
+      kernel: (Long, Array[SegRow], RoaringBitmap) => Iterator[R]): RDD[R] = {
+    val res = resident
+    val kill = if (index.hasTombstones) Set(Engine.KillKey) else Set.empty[String]
+    val pred = if (docs.isDefined) Set(Engine.PredKey) else Set.empty[String]
+    val exact = (index.readTerms(terms, keys) ++ kill).toSet
+    val prefixes = keyCols.map(IndexBuild.filterKey(_, ""))
+    val ids = (exact.toSeq ++ prefixes).map(TermHash.hash).distinct.sorted.toArray
+    val bound: String => Boolean = t => exact(t) || prefixes.exists(t.startsWith)
+    val positional = phraseWords.toSet
+    val segShift = index.cfg.segShift
+    def scoreSegments(rows: Iterator[SegRow]): Iterator[R] = {
+      val bySeg = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuffer[SegRow]]
+      rows.foreach(r => bySeg.getOrElseUpdate(r.seg_id, scala.collection.mutable.ArrayBuffer.empty) += r)
+      bySeg.iterator.flatMap { case (seg, segRows) =>
+        val (reserved, hits) = segRows.toArray.partition(r => kill(r.term) || pred(r.term))
+        if (hits.isEmpty) Iterator.empty
+        else {
+          val allow = Engine.boolAllow(reserved.map(_.hit), pred, kill, null, segShift)
+          if (allow != null && allow.isEmpty) Iterator.empty else kernel(seg, hits, allow)
         }
-        hits.joinWith(side, hits("seg_id") === side("seg_id"), "left_outer")
-          .mapPartitions(scoreSegments)
+      }
+    }
+    docs match {
+      case None => res.table.mapPartitions(cs => scoreSegments(cs.flatMap(_.rows(ids, bound, positional))))
+      case Some(d) =>
+        val cfg = index.cfg
+        val predRows = d.rdd.mapPartitions { ids =>
+          val bySeg = scala.collection.mutable.LongMap.empty[RoaringBitmap]
+          ids.foreach(id => bySeg.getOrElseUpdate(cfg.segOf(id), new RoaringBitmap()).add(cfg.localOf(id)))
+          bySeg.iterator.map { case (seg, bm) => seg -> Engine.reservedRow(seg, Engine.PredKey, bm) }
+        }.partitionBy(res.partitioner).values
+        res.table.zipPartitions(predRows) { (cs, ps) =>
+          scoreSegments(cs.flatMap(_.rows(ids, bound, positional)) ++ ps)
+        }
     }
   }
 
@@ -534,13 +474,13 @@ final class Engine(val index: Index) {
     * docs) of the field's keys. A segment with no term hit or an empty
     * allow set (no fq key row among them) drops.
     */
-  private def valuePass[R: Encoder](terms: Seq[String], fqKey: Option[String], fields: Seq[String])(
+  private def valuePass[R: ClassTag](terms: Seq[String], fqKey: Option[String], fields: Seq[String])(
       kernel: (Long, Array[SegHit], RoaringBitmap, Array[Array[(String, RoaringBitmap)]]) => Iterator[R]
-  ): Dataset[R] = {
+  ): RDD[R] = {
     val segShift = index.cfg.segShift
     val prefixes = fields.map(IndexBuild.filterKey(_, ""))
-    perSegment(segHits(terms, fqKey.toSeq, fields))(_.seg_id) { (seg, it, allow0) =>
-      val (keys, hits) = it.toArray.partition(r => IndexBuild.isFilterKey(r.term))
+    perSegment(terms, fqKey.toSeq, fields) { (seg, rows, allow0) =>
+      val (keys, hits) = rows.map(_.hit).partition(r => IndexBuild.isFilterKey(r.term))
       val allow =
         if (fqKey.isEmpty) allow0 else Engine.boolAllow(keys, fqKey.toSet, Set.empty, allow0, segShift)
       if (hits.isEmpty || (allow != null && allow.isEmpty)) Iterator.empty
@@ -609,23 +549,6 @@ final class Engine(val index: Index) {
     searchByTerms(terms, rows, accuracy, candidates, docPred, docFilter,
       after = Some((afterScoreQ, afterDocId)))
 
-  /** Doc ids containing ALL `terms` (Lucene's ConjunctionDISI) — the
-    * candidate generator of the stored-field phrase verify
-    * ([[phraseScoresStored]]). Per segment, a leapfrog
-    * intersection over the block-skipping posting iterators: the rarest
-    * list leads, hot lists `advanceTo`-skip whole blocks (one header read
-    * per skipped block), tombstones excluded at emission. Only candidate
-    * doc ids ever leave the segment task.
-    */
-  private[graft] def conjunctiveDocs(terms: Seq[String]): Dataset[Long] = {
-    val names = terms.distinct
-    val cfg = index.cfg
-    val nTerms = names.size
-    perSegment(segHits(names))(_.seg_id) { (seg, it, allow) =>
-      Engine.conjunction(seg, it.toArray, nTerms, cfg, allow)
-    }
-  }
-
   /** Lucene PhraseQuery over the word-term field (the Solr host's
     * `"exact phrase"` query form), answered from positional postings alone.
     * A batch of one through [[scorePass]]: the phrase is one SHOULD phrase
@@ -652,53 +575,6 @@ final class Engine(val index: Index) {
   /** [[searchPhrase]]'s scoring pass before the merge (see [[termsPass]]). */
   private[graft] def phrasePass(p: Engine.Phrase, rows: Int = 60): Engine.Pass =
     boolPass(Nil, rows = rows, phrases = Seq((p, 1.0, Engine.Occur.Should)))
-
-  /** Stored-field phrase verify: shingle-assisted candidate conjunction +
-    * content re-tokenization. Never selected at run time — it is the
-    * positional route's correctness reference (BoolPhraseSpec, PlanSpec).
-    */
-  private[graft] def phraseScoresStored(corpus: DataFrame, toks: Array[String],
-      boost: Double, idfSum: Double,
-      avgdl: Double, slop: Int = 0): org.apache.spark.sql.Dataset[Scored] = {
-    val words = toks.toSeq.map("w:" + _)
-    // adjacency shingles narrow candidates only for the EXACT phrase; a
-    // sloppy match need not contain any adjacent pair, so slop > 0 falls
-    // back to the plain word conjunction
-    val shingles = if (slop > 0) Nil
-      else (0 until toks.length - 1)
-        .map(i => graft.analyze.Tokenizer.shingleTerm(toks(i), toks(i + 1)))
-    val dfs = index.dfOf(words.distinct)
-    val cand = conjunctiveDocs(words ++ shingles).toDF("doc_id")
-    // native verify: tokenize + sliding phrase count + dl in ONE eval per
-    // candidate row ([[graft.functions.GraftPhrasePfDl]]); the built-in
-    // composition it replaced is pinned equal to it in FunctionsSpec
-    val pfDl = graft.functions.GraftFunctions.graft_phrase_pfdl(
-      col("content"), toks.toSeq, IndexBuild.MaxDl, slop)
-    // explicit broadcast, SIZE-GATED on a bound already in hand: cand
-    // comes out of a groupByKey/flatMapGroups, so the planner has no
-    // size estimate and falls back to a sort-merge join that shuffles
-    // the WHOLE stored-field corpus (content included — the broadcast +
-    // the native verify took this phrase 3.7 s -> 2.0 s at the 600k-doc
-    // bench corpus; the remaining floor is the one corpus scan a
-    // stored-field verify cannot avoid without positional postings, the
-    // disclosed design trade). |cand| <= min df over the phrase's words
-    // (known from the dictionary, zero extra jobs), so the hint applies
-    // exactly when the candidate id list provably fits a broadcast — a
-    // corpus-hot phrase at 100x degrades to the shuffle join instead of
-    // an 8 GB-limit broadcast failure.
-    val candSide =
-      if (dfs.values.min <= Engine.PhraseBroadcastMaxCand) broadcast(cand) else cand
-    corpus
-      .join(candSide, Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("docId"), pfDl.as("pd"))
-      .select(col("docId"), col("pd.pf").as("pf"),
-        col("pd.dl").cast("double").as("dl"))
-      .where(col("pf") > 0)
-      .select(col("docId"),
-        (lit(boost * idfSum) * Bm25.tfNormCol(col("pf").cast("double"), col("dl"),
-          lit(avgdl))).as("score"))
-      .as[Scored]
-  }
 
   /** Lucene PrefixQuery (`pref*`) under the top-terms scoring-Boolean
     * rewrite (TopTermsScoringBooleanQueryRewrite): expand to the top
@@ -1056,7 +932,7 @@ final class Engine(val index: Index) {
     * filters and scores, as in Lucene; MUST_NOT never scores;
     * BooleanWeight's required/prohibited scorer split). The boolean algebra
     * runs inside the segment task as postings-derived bitmaps folded into
-    * the SAME allow bitmap the fq/kill paths feed the scorer
+    * the SAME allow bitmap the kills and predicates already fold into
     * ([[Engine.boolAllow]]) — doc ids never shuffle for it, and it composes
     * with fq keys, arbitrary predicates and upsert tombstones.
     *
@@ -1169,26 +1045,16 @@ final class Engine(val index: Index) {
     segmentPass(specs, math.min(candidates, rows), index.stats._2, docPred)
   }
 
-  /** The body of [[scorePass]]: ONE scan of the specs' terms, their MUST
-    * and MUST_NOT terms, their fq keys and their phrase words (with
-    * positions, read only when some spec has a phrase), scored in the scan
-    * task. Each segment's rows materialize once and every spec scores
-    * them ([[Engine.QuerySpec.scoreSegment]]) into a `heapSize` heap: the
+  /** The body of [[scorePass]]: ONE [[perSegment]] lookup of the specs'
+    * terms, their MUST and MUST_NOT terms, their fq keys and their phrase
+    * words (with positions), scored in the task that holds the segment.
+    * Each segment's rows materialize once and every spec scores them
+    * ([[Engine.QuerySpec.scoreSegment]]) into a `heapSize` heap: the
     * exact top-`rows` needs per-segment top-`rows`; a smaller
     * `candidates` is the reference's approximate phase-1 budget. The
-    * specs travel in the pass's closure.
-    *
-    * With no side input (no predicate, no tombstones) the pass plans
-    * nothing and reads no parquet per call: it runs on the engine's
-    * resident segments table ([[Resident]]), where each task
-    * binary-searches the call's term ids in its chunks and keeps the rows
-    * whose term string is bound too, in scan order. The lookup, the
-    * kernels and the task's heaps are one stage with no exchange, at any
-    * segment width.
-    * Predicate and tombstones resolve to the allow bitmap through
-    * [[perSegment]], planned per call: its side join may shuffle the
-    * hits, and a plan kept across calls would replay its first call's
-    * shuffle output.
+    * specs travel in the pass's closure. The pass plans no segments read:
+    * its `plan` is the resident table's, or with a `docPred` the
+    * predicate's docmeta read, the one input planned per call.
     */
   private def segmentPass(specs: Seq[Engine.QuerySpec], heapSize: Int, avgdl: Double,
       docPred: Option[Column]): Engine.Pass = {
@@ -1197,54 +1063,60 @@ final class Engine(val index: Index) {
     val keys = specs.flatMap(_.must.filter(IndexBuild.isFilterKey)).distinct
     val cfg = index.cfg
     val specArr = specs.toArray
-    val score: (Long, Iterator[SegRow], RoaringBitmap) => Iterator[(Long, Scored)] =
-      (seg, it, allow) => {
-        val rows = it.toArray
-        val hits = rows.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
-        val positions = rows.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
-        specArr.iterator.flatMap { s =>
-          s.scoreSegment(seg, hits, positions, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
-        }
+    // every stored version the predicate admits: the kills exclude the
+    // tombstoned ones
+    val docs = docPred.map(p => index.docmetaAll.where(p).select(col("doc_id")).as[Long])
+    val rows = perSegment(names, keys, phraseWords = phraseWords, docs = docs) { (seg, segRows, allow) =>
+      val hits = segRows.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
+      val positions = segRows.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
+      specArr.iterator.flatMap { s =>
+        s.scoreSegment(seg, hits, positions, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
       }
-    if (docPred.isDefined || index.hasTombstones) {
-      val pass = perSegment(segRows(names, keys, phraseWords), docPred)(_.seg_id)(score)
-      return Engine.Pass(pass.rdd, pass)
     }
-    val terms = index.readTerms(names, keys)
-    val ids = terms.map(TermHash.hash).distinct.sorted.toArray
-    val bound = terms.toSet
-    val phraseSet = phraseWords.toSet
-    val rows = resident.table.mapPartitions { chunks =>
-      val hits = chunks.flatMap(_.rows(ids, bound, phraseSet))
-      Engine.groupBySegment(hits.map(h => (h, null: SegSide)), (h: SegRow) => h.seg_id)
-        .flatMap { case (seg, segHits, _) => score(seg, segHits.iterator, null) }
-    }
-    Engine.Pass(rows, resident.plan)
+    Engine.Pass(rows, docs.getOrElse(resident.plan))
   }
 
-  /** The segments store, resident: [[segmentPass]]'s unjoined route looks
-    * each call's terms up in `table` instead of reading parquet. `plan`
-    * selects the [[SegHit]] columns, term_id and positions of every
-    * segment, planned once with no filter; `table` holds its scan's
-    * rows as [[SegChunk]]s, built by the first job that reads it and
-    * kept `MEMORY_ONLY`. A partition Spark evicts, or refuses to cache
-    * for want of memory, is read again from parquet by the job that
-    * needs it, with the same rows.
+  /** The segments store, resident: every per-segment pass looks its
+    * terms up in `table` instead of reading parquet. `plan` selects the
+    * [[SegHit]] columns, term_id and positions of every segment, planned
+    * once with no filter. `table` holds its scan's rows, and on a
+    * tombstoned index each unit's kill bitmaps as rows of the reserved
+    * MUST_NOT key [[Engine.KillKey]], moved once to the partition
+    * `partitioner` gives their segment and sorted there by term_id, as
+    * [[SegChunk]]s: built by the first job that reads the table and kept
+    * `MEMORY_ONLY`. A side input a pass zips with the table goes through
+    * the same `partitioner`. A partition Spark evicts, or refuses to
+    * cache for want of memory, is built again from the fill's shuffle
+    * output (or parquet, if that is gone) by the job that needs it.
     */
   private[graft] final class Resident {
     val plan: DataFrame = index.segments.select(residentCols.map(col): _*)
+    private val scan = plan.queryExecution.executedPlan
+      .collectFirst { case s: FileSourceScanExec => s }
+      .getOrElse(throw new IllegalStateException(s"no file scan in the segments plan:\n$plan"))
+    // with the vectorized reader, rows are views over its column batches
+    private val scanRows: RDD[InternalRow] = new SQLExecutionRDD(
+      if (!scan.supportsColumnar) scan.execute()
+      else scan.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala)),
+      plan.queryExecution.sparkSession.sessionState.conf)
+    val partitioner: Engine.SegPartitioner = new Engine.SegPartitioner(
+      if (scanRows.getNumPartitions > 0) scanRows.getNumPartitions else spark.sparkContext.defaultParallelism)
     val table: RDD[SegChunk] = {
-      val scan = plan.queryExecution.executedPlan
-        .collectFirst { case s: FileSourceScanExec => s }
-        .getOrElse(throw new IllegalStateException(s"no file scan in the segments plan:\n$plan"))
-      val ordinal = scan.output.map(_.name).zipWithIndex.toMap
-      val ord = residentCols.map(ordinal)
-      // with the vectorized reader, rows are views over its column batches
-      new SQLExecutionRDD(
-          if (!scan.supportsColumnar) scan.execute()
-          else scan.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala)),
-          plan.queryExecution.sparkSession.sessionState.conf)
-        .mapPartitions(SegChunk.chunks(_, ord))
+      val Seq(segI, idI, termI, dfI, maxTfI, minDlI, postingsI, positionsI) =
+        residentCols.map(scan.output.map(_.name).zipWithIndex.toMap)
+      val stored = scanRows.map { r =>
+        val seg = r.getLong(segI)
+        ((r.getLong(idI), seg), SegRow(seg, r.getUTF8String(termI).toString, r.getInt(dfI),
+          r.getInt(maxTfI), r.getInt(minDlI), r.getBinary(postingsI), r.getBinary(positionsI)))
+      }
+      val killId = TermHash.hash(Engine.KillKey)
+      val rows =
+        if (!index.hasTombstones) stored
+        else stored.union(index.killBitmaps.as[(Long, Array[Byte])].rdd.map { case (seg, bytes) =>
+          ((killId, seg), Engine.reservedRow(seg, Engine.KillKey, Bitmaps.deserialize(bytes)))
+        })
+      rows.repartitionAndSortWithinPartitions(partitioner)
+        .mapPartitions(SegChunk.chunks)
         .setName(s"resident segments of ${index.indexDir}")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     }
@@ -1484,12 +1356,12 @@ final class Engine(val index: Index) {
     *
     * Fast path (field, and fq column if any, covered in every unit —
     * [[Index.filterColsComplete]]): the match set never leaves its
-    * segment — the one segments scan reads the query terms with the
+    * segment — the one segments pass reads the query terms with the
     * field's filter keys and the fq key; per segment the terms' postings
-    * OR into one local bitmap, narrowed by the fq key's docs and the kill
-    * bitmaps (P2's side join), and each facet count is a popcount of
-    * `match AND value-key docs`; only (value, count) rows — a handful per
-    * segment — reach the final tiny aggregation. The slow path's
+    * OR into one local bitmap, narrowed by the fq key's docs and the
+    * kills (P2), and each facet count is a popcount of `match AND
+    * value-key docs`; only (value, count) rows — a handful per segment —
+    * reach the final tiny reduce, in the same Spark job. The slow path's
     * per-query shuffle of EVERY matching doc_id (distinct + semi-join
     * into docmeta) disappears; that path remains for uncovered fields and
     * is pinned count-identical in IndexSpec/UpsertSpec.
@@ -1524,10 +1396,7 @@ final class Engine(val index: Index) {
       // null group, as facetScan's docmeta grouping counts them
       Wand.valueSlices(Engine.matchBitmap(hits.iterator.map(_.postings), allow), values(0))
         .iterator.map { case (value, slice) => (value, slice.getLongCardinality) }
-    }
-      .toDF("value", "n0")
-      .groupBy(col("value"))
-      .agg(sum(col("n0")).as("n"))
+    }.reduceByKey(_ + _).toDF("value", "n")
   }
 
   /** Distinct doc ids of the Boolean-OR match set (docs containing any of
@@ -1737,12 +1606,9 @@ final class Engine(val index: Index) {
       Wand.valueSlices(Engine.matchBitmap(hits.iterator.map(_.postings), allow), values(0))
         .iterator.flatMap { case (v1, slice) =>
           Wand.valueSlices(slice, values(1)).iterator
-            .map { case (v2, cell) => (v1, v2, cell.getLongCardinality) }
+            .map { case (v2, cell) => ((v1, v2), cell.getLongCardinality) }
         }
-    }
-      .toDF("value", "pivot", "n0")
-      .groupBy(col("value"), col("pivot"))
-      .agg(sum(col("n0")).as("n"))
+    }.reduceByKey(_ + _).map { case ((v1, v2), n) => (v1, v2, n) }.toDF("value", "pivot", "n")
   }
 
   /** Solr StatsComponent (`stats=true&stats.field=<f>`) over the query's
@@ -1821,12 +1687,10 @@ final class Engine(val index: Index) {
         val cfg = index.cfg
         valuePass(weights.keys.toSeq, None, Seq("repo")) { (seg, hits, allow, values) =>
           Wand.scoreSegmentValueAgg(seg, hits.iterator, values(0), allow, wB.value, avgdl, cfg)
-        }
-          .toDF("parent", "sum_q", "max_q", "nc")
-          .groupBy(col("parent"))
-          .agg(sum(col("sum_q")).cast("long").as("total_q"),
-            max(col("max_q")).cast("long").as("max_q"),
-            sum(col("nc")).cast("long").as("n_children"))
+            .map { case (parent, sumQ, maxQ, nc) => (parent, (sumQ, maxQ, nc)) }
+        }.reduceByKey((a, b) => (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3))
+          .map { case (parent, (total, maxQ, nc)) => (parent, total, maxQ, nc) }
+          .toDF("parent", "total_q", "max_q", "n_children")
       } else {
         val children = scanScoreAll(weights, avgdl, None)
           .withColumn("score_q", round(col("score") * lit(Bm25.Quant)).cast("long"))
@@ -1865,27 +1729,23 @@ final class Engine(val index: Index) {
     *
     * Plan: covered field -> segment-local grouped scorer
     * ([[Wand.scoreSegmentGrouped]]) over the field's filter keys, read
-    * by the one segments scan: postings fold into the dense score
+    * by the one segments pass: postings fold into the dense score
     * array ONCE per window, each group value's docs sweep their
     * intersection into a bounded heap of `groupLimit`, and only (value,
     * top-doc) rows — bounded by values-in-segment × groupLimit per window
-    * — leave the segment task. The global merge is a keyed bounded heap
-    * (map-side partials), and groups then rank through the SAME TopKAgg
-    * over each group's best doc — no unpartitioned window, no driver-side
-    * loop anywhere. Uncovered fields score-all + join docmeta for the
-    * value (one shuffle of the match set — the facetScan analog,
+    * — leave the segment task. Uncovered fields score-all + join docmeta
+    * for the value (one shuffle of the match set — the facetScan analog,
     * documented cost); an arbitrary `docPred` (Solr q+fq+group) takes the
     * same fallback, with the predicate applied as [[scanScoreAll]]'s
     * docmeta semi-join.
     *
-    * EAGER: unlike every other Engine API, this runs the full scoring
-    * jobs at call time — the tiny merged group table is localCheckpoint'd
-    * so the group-rank self-join can't recompute the heavy lineage twice.
-    * The checkpointed blocks are not fault tolerant: an executor loss
-    * after return fails downstream actions of the RETURNED DataFrame
-    * instead of recomputing (re-call to recover); acceptable because the
-    * checkpointed table is ≤ field-cardinality rows and the window
-    * between call and consumption is one query.
+    * Either way the (value, candidate) rows merge into one
+    * `groupLimit`-bounded heap per value, keyed by value; each of those
+    * partitions keeps its top-`groups` values by their best doc, and the
+    * driver ranks the at most `groups` × partitions survivors — the global
+    * top-`groups` are among them, and the driver holds no more. The
+    * covered route is one Spark job; like the search verbs, the call runs
+    * it and returns local rows.
     */
   def searchGrouped(terms: Seq[(String, Double)], field: String,
                     groupLimit: Int = 10, groups: Int = 10,
@@ -1908,9 +1768,9 @@ final class Engine(val index: Index) {
     // all over again)
     val (fqKey, pred) = fqSplit(docPred, docFilter)
     val viaBitmap = pred.isEmpty && index.filterColsComplete.contains(field)
-    val perVal: org.apache.spark.sql.Dataset[(String, Scored)] =
+    val perVal: RDD[(String, Scored)] =
       if (viaBitmap) {
-        // the fq key and the field's keys ride the same scan as the terms;
+        // the fq key and the field's keys ride the same pass as the terms;
         // the fq narrows the touched set inside the segment
         val wB = spark.sparkContext.broadcast(weights)
         val gl = groupLimit
@@ -1926,32 +1786,19 @@ final class Engine(val index: Index) {
             col(field).cast("string").as("gval")), Seq("doc_id"))
           .select(col("gval"), col("doc_id"), col("score"))
           .as[(String, Long, Double)]
-          .map { case (v, d, s) => (v, Scored(d, s)) }
-    // per-group global top-groupLimit, best-first within each group.
-    // localCheckpoint: the tiny merged table (≤ field cardinality rows)
-    // feeds BOTH the group-ranking aggregate and the final explode — the
-    // checkpoint stops Spark re-running the whole scoring pass twice
-    // (fault-tolerance trade as in Curation: a lost block fails the query
-    // instead of recomputing — acceptable for an interactive result set)
-    val merged = perVal.groupByKey(_._1)
-      .agg(new TopKAgg[(String, Scored)](groupLimit, _._2).toColumn.name("docs"))
-      .localCheckpoint()
-    // group order = TopKAgg over each group's best doc (its head): the
-    // heap's (score_q DESC, docId ASC) IS Solr's group sort by top doc
-    val topBests = merged.map(_._2.head)
-      .select(new TopKAgg[Scored](groups, identity).toColumn)
-      .flatMap(_.zipWithIndex.map { case (s, i) => ((i + 1).toLong, s.docId) })
-      .toDF("group_rank", "bdoc")
-    val exploded = merged.flatMap { case (v, docs) =>
-      val bd = docs.head.docId
-      docs.zipWithIndex.map { case (s, i) =>
-        (bd, v, (i + 1).toLong, s.docId, s.scoreQ)
-      }
-    }.toDF("bdoc", "value", "rank", "doc_id", "score_q")
-    exploded.join(broadcast(topBests), Seq("bdoc"))
-      .select(col("group_rank"), col("value"), col("rank"), col("doc_id"),
-        col("score_q"))
-      .orderBy(col("group_rank"), col("rank"))
+          .rdd.map { case (v, d, s) => (v, Scored(d, s)) }
+    // a group ranks by its best doc: the heap's (score_q DESC, docId ASC)
+    // IS Solr's group sort by top doc
+    val byBest: Ordering[(String, Array[Scored])] =
+      Ordering.by[(String, Array[Scored]), (Long, Long)](g => (-g._2.head.scoreQ, g._2.head.docId))
+    val top = groups
+    val best = perVal
+      .aggregateByKey(new BoundedTopK(groupLimit))((h, s) => { h.offer(s.docId, s.score); h }, _ merge _)
+      .mapPartitions(_.map { case (v, h) => (v, h.sortedBestFirst) }.toArray.sorted(byBest).take(top).iterator)
+      .collect().sorted(byBest).take(groups)
+    best.iterator.zipWithIndex.flatMap { case ((v, docs), g) =>
+      docs.iterator.zipWithIndex.map { case (s, i) => ((g + 1).toLong, v, (i + 1).toLong, s.docId, s.scoreQ) }
+    }.toSeq.toDF("group_rank", "value", "rank", "doc_id", "score_q")
   }
 
   /** Solr CollapsingQParserPlugin (`fq={!collapse field=f}`): the normal
@@ -1959,9 +1806,9 @@ final class Engine(val index: Index) {
     * (score_q DESC, doc_id ASC) — per field value; docs with no value
     * collapse into the null group, as the plugin's nullPolicy=collapse.
     * Exactly [[searchGrouped]] at `groupLimit = 1` reshaped flat, so it
-    * inherits the segment-local grouped scorer, its plan pins AND its
-    * eager-evaluation/checkpoint caveat (see [[searchGrouped]]); output
-    * (rank, value, doc_id, score_q).
+    * inherits the segment-local grouped scorer and its merge, run at
+    * call time (see [[searchGrouped]]); output (rank, value, doc_id,
+    * score_q).
     */
   def searchCollapsed(terms: Seq[(String, Double)], field: String,
                       rows: Int = 60, accuracy: Double = 1.0,
@@ -2013,15 +1860,10 @@ final class Engine(val index: Index) {
     import index.spark
     val terms = graft.analyze.Tokenizer.termsScala(content).distinct.toSeq
     val dfs = index.dfOf(terms)
-    val sorted = terms.map(t => (t, dfs.getOrElse(t, 0L)))
-      .sortBy { case (t, df) => (df, t) }
-      .zipWithIndex.map { case ((t, df), i) => (t, df, (i + 1).toLong) }
-    val nonzero = sorted.filter(_._2 > 0)
-    val base = if (nonzero.size >= 3) nonzero else sorted.take(3)
-    val budget = math.max(3, math.floor(terms.size * accuracy).toInt)
-    val kept = base.take(budget).map(_._1).toSet
-    spark.createDataFrame(sorted.map { case (t, df, r) =>
-      (t, df, r, if (kept(t)) 1L else 0L)
+    val kept = Engine.prune(terms.map(_ -> 1.0), accuracy, dfs).map(_._1).toSet
+    val sorted = terms.map(t => (t, dfs.getOrElse(t, 0L))).sortBy { case (t, df) => (df, t) }
+    spark.createDataFrame(sorted.zipWithIndex.map { case ((t, df), i) =>
+      (t, df, (i + 1).toLong, if (kept(t)) 1L else 0L)
     }).toDF("term", "df", "list_rank", "kept")
   }
 
@@ -2038,6 +1880,19 @@ final class Engine(val index: Index) {
 object Engine {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Engine]()
 
+  /** [[Engine.prune]]'s rule over the terms' global `dfs`: the one T1/T2
+    * rule of the search paths and [[Engine.extract]].
+    */
+  private def prune(terms: Seq[(String, Double)], accuracy: Double,
+      dfs: Map[String, Long]): Seq[(String, Double, Long)] = {
+    val sorted = terms.map { case (t, b) => (t, b, dfs.getOrElse(t, 0L)) }
+      .sortBy { case (t, _, df) => (df, t) }
+    val nonzero = sorted.filter(_._3 > 0)
+    val base = if (nonzero.size >= 3) nonzero else sorted.take(3)
+    val budget = math.max(3, math.floor(terms.size * accuracy).toInt)
+    base.take(budget)
+  }
+
   /** Where a query's scoring runs, as the engine's `specOf` picks it:
     * per-segment DAAT or the segment-local dense-array kernel.
     */
@@ -2048,9 +1903,9 @@ object Engine {
   }
 
   /** A scoring pass before its merge: its (query id, candidate) `rows`
-    * and the `plan` that reads the segments for them. An unjoined pass's
-    * `plan` is the engine's resident segments plan, read once; a pass
-    * with a side input is planned per call, and `plan` is its own.
+    * over the engine's resident segments table, and its `plan`: the
+    * table's segments plan, read once, or with a docmeta predicate the
+    * predicate's read, planned per call.
     */
   private[graft] final case class Pass(rows: RDD[(Long, Scored)], plan: Dataset[_])
 
@@ -2078,7 +1933,8 @@ object Engine {
     }
 
     /** This query's top-`heapSize` of one segment, after the cursor and
-      * under `allow0` (fq/kill, null = every doc) narrowed by its clauses;
+      * under `allow0` (kills and predicate, null = every doc) narrowed by
+      * its clauses;
       * each phrase first joins `rows` as its virtual posting list, built
       * from its words' `positions` ([[Phrase.hit]]). The kernels skip
       * rows of terms it does not weight; a segment with no weighted row
@@ -2141,16 +1997,6 @@ object Engine {
     */
   val MissingFeatureDistQ: Long = 10000000001L
 
-  /** Phrase-candidate broadcast gate of the stored-field phrase verify
-    * (`phraseScoresStored`, the positional route's test reference): ids
-    * are 8 B + row overhead, so 2M
-    * candidates ≈ 16-30 MB broadcast — comfortably inside executor
-    * memory while covering every realistic phrase (a rarer-than-1-in-300
-    * word at the 600M-doc scale). Above it the semi-join falls back to
-    * the planner's shuffle strategy.
-    */
-  val PhraseBroadcastMaxCand: Long = 2000000L
-
   /** Driver-side cap on the gram-filtered fuzzy candidate collect
     * ([[Engine.fuzzyCandidates]]): 64k (term, shared) survivors is orders
     * of magnitude above what the q-gram pigeonhole admits for any real
@@ -2207,43 +2053,35 @@ object Engine {
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .levenshteinDistance(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 
-  /** OR-merge serialized bitmaps; callers guarantee nonEmpty. */
-  /** One task's (hit, side) join rows grouped by segment: each segment
-    * once, with its hits once and its side rows once per side partition.
-    * The join pairs every hit with every side row of its segment, so the
-    * hits paired with the first side partition seen are all of them; a
-    * null side (no side input, or none for the segment) is one partition.
+  /** The reserved MUST_NOT key of a segment's killed docs, which the
+    * resident table holds on a tombstoned index, and the reserved MUST key
+    * of a docmeta predicate's matches, which a pass zips with the table
+    * (the engine's `perSegment`). Both contain `=` and name no column, so a
+    * caller's term, clause or fq never reads them ([[Index.readTerms]])
+    * and no store writes them.
     */
-  private[query] def groupBySegment[H](rows: Iterator[(H, SegSide)],
-      segOf: H => Long): Iterator[(Long, Seq[H], Array[SegSide])] = {
-    final class Acc(val part: Int) {
-      val hits = scala.collection.mutable.ArrayBuffer.empty[H]
-      val sides = scala.collection.mutable.ArrayBuffer.empty[SegSide]
-    }
-    val bySeg = scala.collection.mutable.LongMap.empty[Acc]
-    rows.foreach { case (h, side) =>
-      val part = if (side == null) -1 else side.part
-      val acc = bySeg.getOrElseUpdate(segOf(h), new Acc(part))
-      if (part == acc.part) acc.hits += h
-      if (side != null && !acc.sides.exists(_.part == part)) acc.sides += side
-    }
-    bySeg.iterator.map { case (seg, acc) => (seg, acc.hits.toSeq, acc.sides.toArray) }
-  }
+  private[graft] val KillKey: String = IndexBuild.filterKey("", "killed")
+  private[graft] val PredKey: String = IndexBuild.filterKey("", "docPred")
 
-  private[query] def orAll(bs: Iterable[Array[Byte]]): RoaringBitmap = {
-    val it = bs.iterator
-    val bm = graft.index.Bitmaps.deserialize(it.next())
-    while (it.hasNext) bm.or(graft.index.Bitmaps.deserialize(it.next()))
-    bm
-  }
-
-  /** allow = ¬(OR of kill bitmaps) over the segment's local-id capacity —
-    * flip compresses the dense complement to runs; docs that never existed
-    * simply never appear in postings. Null (= no filter) when no kills.
+  /** A reserved key's row of segment `seg`: the local ids of `docs` as
+    * its posting list.
     */
-  private[query] def flipAllow(bs: Seq[Array[Byte]], segShift: Int): RoaringBitmap =
-    if (bs.isEmpty) null
-    else RoaringBitmap.flip(orAll(bs), 0L, 1L << segShift)
+  private[query] def reservedRow(seg: Long, key: String, docs: RoaringBitmap): SegRow =
+    SegRow(seg, key, docs.getCardinality, 1, 1, Codec.encode(docs.toArray.map(Codec.Posting(_, 1, 1))), null)
+
+  /** The resident table's partitioner: a segment's rows all go to
+    * partition seg_id mod `numPartitions`, keyed (term_id, seg_id) in the
+    * table and seg_id in a side input zipped with it.
+    */
+  private[graft] final class SegPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = {
+      val seg = key match {
+        case (_, s: Long) => s
+        case s: Long => s
+      }
+      java.lang.Math.floorMod(seg, numPartitions.toLong).toInt
+    }
+  }
 
   /** Set every local id of a posting list into `bm` (full decode — the
     * boolean-clause lists are walked end to end, as Lucene walks the
@@ -2263,49 +2101,6 @@ object Engine {
     postings.foreach(addPostings(m, _))
     if (allow != null) m.and(allow)
     m
-  }
-
-  /** Segment-local leapfrog intersection (Lucene ConjunctionDISI): all
-    * `nTerms` lists positioned at a common doc or advanced past it; the
-    * rarest list leads so hot lists skip whole blocks via `advanceTo`.
-    * Emits global doc ids, tombstone/allow-filtered. Empty when any term
-    * is absent from the segment.
-    */
-  private[query] def conjunction(seg: Long, rows: Array[SegHit], nTerms: Int,
-      cfg: IndexConfig, allow: RoaringBitmap): Iterator[Long] = {
-    val byTerm = rows.groupBy(_.term)
-    if (byTerm.size < nTerms) return Iterator.empty
-    val its: Array[Codec.Iter] = byTerm.valuesIterator.map { rs =>
-      if (rs.length == 1) new Codec.Iter(rs(0).postings)
-      else {
-        // defensive: no build path writes two rows for one (segment, term),
-        // but an OR-merge keeps the leapfrog uniform if one ever appears
-        val bm = new RoaringBitmap()
-        rs.foreach(r => addPostings(bm, r.postings))
-        new Codec.Iter(Codec.encode(bm.toArray.map(l => Codec.Posting(l, 1, 1))))
-      }
-    }.toArray.sortBy(_.numEntries)
-    if (its.exists(_.numEntries == 0)) return Iterator.empty
-    val out = Array.newBuilder[Long]
-    var live = true
-    while (live) {
-      var target = its(0).curLocal
-      var settled = false
-      while (!settled && live) {
-        settled = true
-        var i = 0
-        while (i < its.length && live) {
-          if (!its(i).advanceTo(target)) live = false
-          else if (its(i).curLocal > target) { target = its(i).curLocal; settled = false }
-          i += 1
-        }
-      }
-      if (live) {
-        if (allow == null || allow.contains(target)) out += cfg.globalOf(seg, target)
-        if (!its(0).next()) live = false
-      }
-    }
-    out.result().iterator
   }
 
   /** Segment-local positional PhraseQuery kernel: leapfrog conjunction
@@ -2407,9 +2202,11 @@ object Engine {
     * required = AND over the MUST terms' postings (a MUST term absent from
     * the segment empties it — every doc there lacks the term; an fq's
     * filter key is one such term), exclusion = OR over the MUST_NOT
-    * postings. Composes with the incoming predicate/kill
-    * `allow0` (null = unconstrained), which is NOT modified: every query
-    * of a pass reads the same segment bitmap. Returns null only when
+    * postings. The one allow rule: a pass folds a segment's reserved
+    * predicate (MUST) and kill (MUST_NOT) lists through it into `allow0`
+    * (the engine's `perSegment`), and each query folds its own clauses into
+    * that `allow0` (null = unconstrained), which is NOT modified: every
+    * query of a pass reads the same segment bitmap. Returns null only when
     * unconstrained.
     */
   private[graft] def boolAllow(rows: Array[SegHit], must: Set[String],

@@ -148,7 +148,7 @@ final class TopKAgg[IN](k: Int, scoredOf: IN => Scored)(implicit outEnc: Encoder
   * driver-side merge takes `rows`.
   *
   * The Engine's one scoring pass calls the top-k kernels per query per
-  * segment inside the scan task — a single query is a batch of one,
+  * segment in the task that holds it — a single query is a batch of one,
   * merged by [[topK]]; a batch's queries by [[topKPerQuery]], the same
   * per-task heaps keyed by query id.
   */

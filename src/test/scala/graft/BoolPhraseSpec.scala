@@ -164,7 +164,7 @@ class BoolPhraseSpec extends SparkSpec {
       val (n, avgdl) = engine.index.stats
       val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
       val pos = phraseAll(phrase)
-      val stored = engine.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl)
+      val stored = SpecTwins.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
       assert(pos == stored, s"'$phrase': positional vs stored verify diverge")
       assert(pos.nonEmpty, s"'$phrase': twin pin must be non-vacuous")
@@ -234,7 +234,7 @@ class BoolPhraseSpec extends SparkSpec {
     val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
     for (slop <- Seq(1, 2)) {
       val pos = phraseAll(SparkEntry.PhraseBigram, slop)
-      val stored = engine.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl, slop)
+      val stored = SpecTwins.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl, slop)
         .collect().map(s => (s.docId, s.scoreQ)).sortBy(_._1).toSeq
       assert(pos == stored, s"slop $slop: positional vs stored verify diverge")
       assert(pos.nonEmpty, s"slop $slop: twin pin must be non-vacuous")
@@ -295,15 +295,6 @@ class BoolPhraseSpec extends SparkSpec {
       val (_, n) = jobsOf(call())
       assert(n == 1, s"$name ran $n jobs")
     }
-  }
-
-  test("conjunctive candidate generator equals the brute AND of term doc sets") {
-    val terms = Seq("w:hash", "w:join", "w:window")
-    val got = engine.conjunctiveDocs(terms).collect().toSet
-    val exp = docs.filter(d => terms.forall(termSets(d._1))).map(_._1).toSet
-    assert(got == exp)
-    // a term with no postings empties the conjunction
-    assert(engine.conjunctiveDocs(Seq("w:hash", "w:zzznosuch")).collect().isEmpty)
   }
 
   test("one-word phrase degrades to the TermQuery it is in Lucene") {

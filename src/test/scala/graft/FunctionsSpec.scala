@@ -239,57 +239,6 @@ class FunctionsSpec extends SparkSpec {
     assert(a("w:a") == Seq("^w:", "w:a", ":a$")) // padded trigram shape
   }
 
-  test("GraftPhrasePfDl expression == HOF composition (overlaps, short docs, absent)") {
-    import graft.index.IndexBuild
-    val extra = Seq(
-      (9201L, ""), (9202L, "get"), (9203L, "get geter"),
-      (9204L, "get get get"), // overlapping occurrences of "get get" -> pf 2
-      (9205L, "geter get geter get geter")).toDF("doc_id", "content")
-    val all = docs.unionAll(extra)
-    for (toks <- Seq(Array("get", "geter"), Array("get", "get"), Array("nosuchword"))) {
-      val a = all.select($"doc_id",
-        GraftFunctions.graft_phrase_pfdl($"content", toks.toSeq, IndexBuild.MaxDl).as("pd"))
-        .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
-        .as[(Long, (Int, Int))].collect().toMap
-      val b = all.select($"doc_id",
-        SpecTwins.phrasePfDlHof($"content", toks, IndexBuild.MaxDl).as("pd"))
-        .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
-        .as[(Long, (Int, Int))].collect().toMap
-      assert(a == b, s"phrase ${toks.mkString(" ")}")
-    }
-    val pf204 = all.select($"doc_id",
-      GraftFunctions.graft_phrase_pfdl($"content", Seq("get", "get"), IndexBuild.MaxDl).as("pd"))
-      .select($"doc_id", $"pd.pf").as[(Long, Int)].collect().toMap
-    assert(pf204(9204L) == 2 && pf204(9203L) == 0)
-    // sloppy form: expression == HOF composition at slops 1-3, incl. the
-    // repeated-word and doc-boundary-window edges
-    for (slop <- Seq(1, 2, 3);
-         toks <- Seq(Array("get", "geter"), Array("geter", "get"), Array("get", "get"))) {
-      val a = all.select($"doc_id",
-        GraftFunctions.graft_phrase_pfdl($"content", toks.toSeq, IndexBuild.MaxDl, slop).as("pd"))
-        .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
-        .as[(Long, (Int, Int))].collect().toMap
-      val b = all.select($"doc_id",
-        SpecTwins.phrasePfDlHof($"content", toks, IndexBuild.MaxDl, slop).as("pd"))
-        .select($"doc_id", struct($"pd.pf", $"pd.dl").as("v"))
-        .as[(Long, (Int, Int))].collect().toMap
-      assert(a == b, s"slop $slop phrase ${toks.mkString(" ")}")
-    }
-    // pinned sloppy fact: "geter get geter get geter", phrase "geter get"
-    // slop 1 — geter anchors 1,3 find a get in their [i, i+2] window, the
-    // trailing anchor 5's clamped window [5,5] does not -> pf 2
-    val slopPf = all.select($"doc_id",
-      GraftFunctions.graft_phrase_pfdl($"content", Seq("geter", "get"), IndexBuild.MaxDl, 1).as("pd"))
-      .select($"doc_id", $"pd.pf").as[(Long, Int)].collect().toMap
-    assert(slopPf(9205L) == 2, "two of three geter anchors reach a get within the slop-1 window")
-    // "get geter" is the REVERSED order: distance 2, invisible at slop 1
-    assert(slopPf(9203L) == 0 && slopPf(9202L) == 0)
-    val slopPf2 = all.select($"doc_id",
-      GraftFunctions.graft_phrase_pfdl($"content", Seq("geter", "get"), IndexBuild.MaxDl, 2).as("pd"))
-      .select($"doc_id", $"pd.pf").as[(Long, Int)].collect().toMap
-    assert(slopPf2(9203L) == 1, "reversal matches at slop 2 (transposition distance)")
-  }
-
   test("graft_postings decodes exactly what Codec encoded") {
     import graft.index.Codec
     val rnd = new scala.util.Random(7)

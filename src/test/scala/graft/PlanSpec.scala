@@ -230,17 +230,15 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("grouped search: keyed heap agg, broadcast group-rank join, no window/cartesian") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val df = engine.searchGrouped(SparkEntry.FlagshipTerms, "repo",
-      groupLimit = 3, groups = 8)
-    val exec = df.queryExecution.executedPlan
-    val unpartitioned = exec.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-    assert(unpartitioned.isEmpty, "grouped search funnels through a single-partition window")
-    val s = exec.toString
-    assert(s.contains("ObjectHashAggregate"), s"no keyed bounded-heap merge:\n$s")
-    assert(s.contains("BroadcastHashJoin"), s"group-rank table not broadcast:\n$s")
-    assert(!s.contains("CartesianProduct"), s"cartesian in grouped plan:\n$s")
+  test("grouped search: one job of keyed value heaps, local rows, no window/cartesian") {
+    def grouped() = engine.searchGrouped(SparkEntry.FlagshipTerms, "repo", groupLimit = 3, groups = 8)
+    grouped() // the first call fills the resident table
+    val (df, jobs) = jobsOf(grouped())
+    assert(jobs == 1, s"grouped search ran $jobs jobs")
+    val p = plan(df)
+    assert(p.contains("LocalTableScan"), s"grouped result is not local rows:\n$p")
+    assert(!p.contains("Window"), s"grouped search funnels through a window:\n$p")
+    assert(!p.contains("CartesianProduct"), s"cartesian in grouped plan:\n$p")
   }
 
   test("terms/spellcheck/sort/stats/range plans: pushdown, bounded top-k, map-side partials") {
@@ -391,17 +389,5 @@ class PlanSpec extends SparkSpec {
       engine.parsedPass("+w:the \"hash join\" -w:stream", rows = 60).plan, engine.index.indexDir)
     assert(nSegScans == 1, s"expected 1 segments scan, got $nSegScans:\n$p")
     assert(!p.contains("content"), s"parsed plan reads stored content:\n$p")
-  }
-
-  test("stored-verify fallback twin still broadcasts candidates; corpus never shuffles") {
-    val corpus = Corpus.fromDocuments(spark, sfTiny)
-    val toks = SparkEntry.PhraseBigram.split(" ")
-    val words = toks.toSeq.map("w:" + _)
-    val dfs = engine.index.dfOf(words.distinct)
-    val (n, avgdl) = engine.index.stats
-    val idfSum = words.map(w => Bm25.idf(dfs(w).toDouble, n.toDouble)).sum
-    val p = plan(engine.phraseScoresStored(corpus, toks, 1.0, idfSum, avgdl).toDF())
-    assert(p.contains("BroadcastHashJoin"), s"candidates not broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"stored-field corpus shuffled:\n$p")
   }
 }

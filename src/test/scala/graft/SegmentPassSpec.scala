@@ -6,14 +6,15 @@ import graft.corpus.Corpus
 import graft.index.{IndexBuild, IndexConfig}
 import graft.query.{BruteScorer, Engine, Index, Wand}
 
-/** The segment-local query pass: every scan task scores the whole
-  * segments it holds and the driver merges the tasks' heaps, in one job.
-  * Pinned here: segments stay whole when Spark splits files, every write
-  * keeps a segment in one file, the job counts, the side join giving
-  * the same results broadcast or shuffled, and the engine's resident
-  * segments table: built whole by its first call, read without parquet
-  * by later ones, read again from parquet once dropped, and left out of
-  * the passes with a side input.
+/** The segment-local query pass: every task scores the whole segments
+  * its partition of the engine's resident segments table holds, and the
+  * driver merges the tasks' heaps, in one job. Pinned here: each segment
+  * sits in one table partition when Spark splits files, every write keeps
+  * a segment in one file, the job counts, and the table itself: built
+  * whole by its first call, read without parquet by later ones, rebuilt
+  * once dropped, and the one source of rows for tombstoned, predicate
+  * and value passes too, whose kills and predicate matches are reserved
+  * posting lists no caller can name.
   */
 class SegmentPassSpec extends SparkSpec {
   import spark.implicits._
@@ -51,9 +52,21 @@ class SegmentPassSpec extends SparkSpec {
     * docs `keep` admits: the index's stats count every doc, also a
     * tombstoned one.
     */
-  private def brute(q: Seq[(String, Double)], k: Int, keep: Long => Boolean = _ => true) =
-    BruteScorer.topK(docs, q, docs.size).filter(s => keep(s.docId)).take(k)
+  private def brute(q: Seq[(String, Double)], k: Int, keep: Long => Boolean = _ => true,
+      corpus: Seq[(Long, String)] = docs) =
+    BruteScorer.topK(corpus, q, corpus.size).filter(s => keep(s.docId)).take(k)
       .map(s => (s.docId, s.scoreQ))
+
+  /** Every row of `eng`'s resident table, looked up by every stored
+    * term, with the partition that holds it, in table order.
+    */
+  private def tableRows(eng: Engine): Seq[(Int, graft.query.SegRow)] = {
+    val terms = eng.index.segments.select($"term").distinct().as[String].collect().toSet ++
+      Set(Engine.KillKey)
+    val ids = terms.toSeq.map(graft.index.TermHash.hash).distinct.sorted.toArray
+    eng.resident.table.mapPartitionsWithIndex((p, cs) => cs.flatMap(_.rows(ids, terms, Set.empty)).map(p -> _))
+      .collect().toSeq
+  }
 
   private def pairs(df: DataFrame): Seq[(Long, Long)] = triples(df).map(t => (t._2, t._3))
 
@@ -72,14 +85,14 @@ class SegmentPassSpec extends SparkSpec {
 
   test("segments stay whole under file splitting: top-k == brute scorer == default run") {
     val dir = splitDir
-    def segsOverPartitions(df: DataFrame): Long =
-      df.select(col("seg_id"), spark_partition_id().as("p")).distinct()
-        .groupBy(col("seg_id")).count().where(col("count") > 1).count()
-    // precondition: plain parquet splits the files and spreads segments
-    assert(segsOverPartitions(split.read.parquet(IndexBuild.segmentsDir(dir))) > 0,
-      "precondition: plain parquet keeps every segment in one partition")
     val eng = new Engine(new Index(split, dir))
-    assert(segsOverPartitions(eng.index.segments) == 0, "a segment spans two scan partitions")
+    // precondition: the segments scan splits the files and spreads segments
+    val spread = eng.index.segments.select(col("seg_id"), spark_partition_id().as("p")).distinct()
+      .groupBy(col("seg_id")).count().where(col("count") > 1).count()
+    assert(spread > 0, "precondition: the scan keeps every segment in one partition")
+    val parts = tableRows(eng).groupBy(_._2.seg_id).view.mapValues(_.map(_._1).distinct).toMap
+    assert(parts.size == eng.index.segments.select($"seg_id").distinct().count(), "segments missing")
+    assert(parts.forall(_._2.size == 1), "a segment spans two table partitions")
     queries.foreach { q =>
       val got = triples(eng.searchByTerms(q, rows = 30))
       val brute = BruteScorer.topK(docs, q, 30)
@@ -144,30 +157,29 @@ class SegmentPassSpec extends SparkSpec {
   test("forced shuffle join: fq, kills, predicate, facets, grouping == the broadcast run") {
     val base = Corpus.fromDocuments(spark, sfTiny)
     val c = IndexConfig(segShift = 5, rangeSegsShift = 1)
-    val dir = tempDir("graft-segshuffle")
-    IndexBuild.build(spark, base, dir, c)
-    IndexBuild.deleteByKeys(spark, base.where(col("doc_id") % 13 === 1).select("path"), dir)
+    def tombstoned(tag: String, conf: IndexConfig): String = {
+      val dir = tempDir(tag)
+      IndexBuild.build(spark, base, dir, conf)
+      IndexBuild.deleteByKeys(spark, base.where(col("doc_id") % 13 === 1).select("path"), dir)
+      dir
+    }
+    val dir = tombstoned("graft-segshuffle", c)
     val shuffled = spark.newSession()
     shuffled.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val bcast = new Engine(new Index(spark, dir))
     val shuf = new Engine(new Index(shuffled, dir))
-    assert(bcast.index.hasTombstones, "precondition: the index holds kills")
+    // the same tombstoned index without filter keys: every verb takes its
+    // docmeta route
+    val scan = new Engine(new Index(spark, tombstoned("graft-segshuffle-scan", c.copy(filterColumns = Nil))))
+    assert(bcast.index.hasTombstones && scan.index.hasTombstones, "precondition: the indexes hold kills")
+    assert(scan.index.filterColsComplete.isEmpty, "precondition: the twin reads no filter key")
     val terms = SparkEntry.FlagshipTerms
-    def joinsOf(pass: Engine.Pass): String = {
-      pass.plan.collect()
-      pass.plan.queryExecution.executedPlan.toString
-    }
-    val pb = joinsOf(bcast.termsPass(terms, rows = 30, docFilter = Some("lang" -> "en")))
-    val ps = joinsOf(shuf.termsPass(terms, rows = 30, docFilter = Some("lang" -> "en")))
-    assert(pb.contains("BroadcastHashJoin"), s"precondition: side not broadcast\n$pb")
-    assert(!ps.contains("BroadcastHashJoin") &&
-      (ps.contains("SortMergeJoin") || ps.contains("ShuffledHashJoin")),
-      s"precondition: side join not shuffled\n$ps")
+    def rowsOf(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
     def same(name: String)(f: Engine => DataFrame): Unit = {
-      val a = f(bcast).collect().map(_.toSeq).toSeq
-      val b = f(shuf).collect().map(_.toSeq).toSeq
+      val a = rowsOf(f(bcast))
       assert(a.nonEmpty, s"$name: empty")
-      assert(a.sortBy(_.toString) == b.sortBy(_.toString), s"$name differs")
+      assert(a == rowsOf(f(shuf)), s"$name differs under forced shuffle joins")
+      assert(a == rowsOf(f(scan)), s"$name differs from its docmeta route")
     }
     same("fq")(_.searchByTerms(terms, rows = 30, docFilter = Some("lang" -> "en")))
     same("kills")(_.searchByTerms(terms, rows = 30))
@@ -181,6 +193,14 @@ class SegmentPassSpec extends SparkSpec {
     same("grouped fq")(_.searchGrouped(terms, "repo", groupLimit = 2, groups = 5,
       docFilter = Some("lang" -> "en")))
     same("block join")(_.blockJoinParents(terms))
+    // and the scoring verbs equal brute over the live docs
+    val tiny = base.select($"doc_id", $"content").as[(Long, String)].collect().toSeq
+    val langs = base.select($"doc_id", $"lang").as[(Long, String)].collect().toMap
+    val live = bcast.index.docmeta.select($"doc_id").as[Long].collect().toSet
+    assert(live.size < tiny.size, "precondition: some docs are deleted")
+    assert(pairs(bcast.searchByTerms(terms, rows = 30)) == brute(terms, 30, live, tiny), "kills != brute")
+    assert(pairs(bcast.searchByTerms(terms, rows = 30, docPred = Some(col("lang") === "en"))) ==
+      brute(terms, 30, d => live(d) && langs(d) == "en", tiny), "predicate != brute")
   }
 
   /** `body`'s value and the input records its jobs' tasks read (the rows
@@ -266,15 +286,16 @@ class SegmentPassSpec extends SparkSpec {
     }
   }
 
-  test("a call after the table is unpersisted reads parquet again and equals brute") {
+  test("an unpersisted table is rebuilt from the fill's shuffle: no parquet row read") {
     val eng = new Engine(new Index(spark, defaultDir))
     assert(pairs(eng.searchByTerms(queries(2), rows = 30)) == brute(queries(2), 30))
     assert(cachedWhole(eng), "precondition: the table is cached")
     eng.resident.table.unpersist(blocking = true)
-    val stored = eng.index.segments.count()
+    // the fill's shuffle output outlives the cached blocks: each call
+    // builds the table's partitions from it and reads no parquet row
     for (q <- queries) {
       val (got, read) = inputRowsOf(pairs(eng.searchByTerms(q, rows = 30)))
-      assert(read == stored, s"$q read $read input records of $stored stored rows")
+      assert(read == 0, s"$q read $read input records")
       assert(got == brute(q, 30), s"$q differs from brute")
     }
   }
@@ -316,44 +337,104 @@ class SegmentPassSpec extends SparkSpec {
       perFile.forall(_._2 % graft.query.SegChunk.MaxRows != 0),
       s"precondition: one partition whose chunks cross a file boundary, files ${perFile.toSeq}")
     for (q <- queries) assert(pairs(eng.searchByTerms(q, rows = 30)) == brute(q, 30), s"$q differs from brute")
-    // a lookup of every term gives back every stored row, in scan order
+    // a lookup of every term gives back every stored row, in term_id order
+    def key(seg: Long, term: String, postings: Array[Byte]) =
+      (graft.index.TermHash.hash(term), seg, term, postings.toSeq)
     val stored = eng.index.segments.select($"seg_id", $"term", $"postings")
-      .as[(Long, String, Array[Byte])].collect().toSeq
-    val terms = stored.map(_._2).distinct
-    val ids = terms.map(graft.index.TermHash.hash).distinct.sorted.toArray
-    val looked = eng.resident.table
-      .flatMap(_.rows(ids, terms.toSet, Set.empty).map(r => (r.seg_id, r.term, r.postings)))
-      .collect().toSeq
-    assert(looked.size == stored.size && looked.iterator.zip(stored.iterator).forall { case (a, b) =>
-      a._1 == b._1 && a._2 == b._2 && java.util.Arrays.equals(a._3, b._3)
-    }, s"a lookup of every term gave ${looked.size} rows, not the ${stored.size} stored in scan order")
+      .as[(Long, String, Array[Byte])].collect().toSeq.map((key _).tupled)
+    val looked = tableRows(eng).map { case (_, r) => key(r.seg_id, r.term, r.postings) }
+    assert(looked.map(_._1) == looked.map(_._1).sorted, "the table is not in term_id order")
+    assert(looked.sortBy(k => (k._1, k._2, k._3)) == stored.sortBy(k => (k._1, k._2, k._3)),
+      s"a lookup of every term gave ${looked.size} rows, not the ${stored.size} stored")
   }
 
-  /** Whether `pass` reads the resident table of `eng`: the table is in
-    * the lineage of its rows.
-    */
-  private def readsTable(pass: Engine.Pass, eng: Engine): Boolean = {
-    def lineage(r: org.apache.spark.rdd.RDD[_]): Iterator[Int] =
-      Iterator(r.id) ++ r.dependencies.iterator.flatMap(d => lineage(d.rdd))
-    lineage(pass.rows).contains(eng.resident.table.id)
-  }
-
-  test("tombstones and predicates: successive calls per call plan, each equal to brute") {
+  /** The default index with the docs of doc_id % 7 == 3 deleted. */
+  lazy val killed: Engine = {
     val dir = tempDir("graft-segpass-kills")
     IndexBuild.build(spark, synth(spark), dir, cfg)
     IndexBuild.deleteByKeys(spark, synth(spark).where(col("doc_id") % 7 === 3).select("path"), dir)
-    val killed = new Engine(new Index(spark, dir))
+    new Engine(new Index(spark, dir))
+  }
+  private val live: Long => Boolean = _ % 7 != 3
+
+  test("tombstoned and predicate calls: one job on the filled table, no segments read") {
     assert(killed.index.hasTombstones, "precondition: the index holds kills")
     val langs = synth(spark).select($"doc_id", $"lang").as[(Long, String)].collect().toMap
-    for (q <- queries) {
-      val pass = killed.termsPass(q, rows = 30)
-      assert(!readsTable(pass, killed), s"$q: a tombstoned pass reads the resident table")
-      assert(pairs(Wand.topK(pass, 30)) == brute(q, 30, _ % 7 != 3), s"kills $q")
-      val pred = Some(col("lang") === "java")
-      assert(!readsTable(engine.termsPass(q, rows = 30, docPred = pred), engine),
-        s"$q: a predicate pass reads the resident table")
-      assert(pairs(engine.searchByTerms(q, rows = 30, docPred = pred)) ==
-        brute(q, 30, d => langs(d) == "java"), s"predicate $q")
+    val java = Some(col("lang") === "java")
+    val isJava: Long => Boolean = d => langs(d) == "java"
+    // a phrase of the first doc's first two words, and a parsed query with it
+    val Array(w1, w2) = graft.analyze.Tokenizer.tokenizeScala(docs.head._2).take(2)
+    val parsed = s"\"$w1 $w2\" ${queries(1).map(_._1).mkString(" ")}"
+    val batch = queries.zipWithIndex.map { case (q, i) => i.toLong -> q }
+    val terms = queries(2)
+    val (all, k) = (docs.size, 30)
+    /** `df`'s (doc_id, score_q) pairs, without their ranks. */
+    def live30(df: DataFrame, keep: Long => Boolean): Seq[(Long, Long)] =
+      pairs(df).filter(p => keep(p._1)).take(k)
+    // each call, its expected result, and whether it reads docmeta
+    val calls: Seq[(String, Engine, () => Any, () => Any, Boolean)] = Seq(
+      ("term", killed, () => pairs(killed.searchByTerms(terms, rows = k)), () => brute(terms, k, live), false),
+      ("bool", killed, () => pairs(killed.searchBool(queries(0), mustNot = queries(1).take(1).map(_._1), rows = k)),
+        () => live30(engine.searchBool(queries(0), mustNot = queries(1).take(1).map(_._1), rows = all), live), false),
+      ("parsed phrase", killed, () => pairs(killed.searchParsed(parsed, rows = k)),
+        () => live30(engine.searchParsed(parsed, rows = all), live), false),
+      ("batch", killed, () => killed.searchManyByTerms(batch, rows = k).collect().toSeq.map(_.toSeq),
+        () => batch.flatMap { case (qid, q) =>
+          brute(q, k, live).zipWithIndex.map { case ((d, s), i) => Seq(qid, (i + 1).toLong, d, s) }
+        }, false),
+      ("facet", killed, () => killed.facet(terms, "lang").collect().toSet,
+        () => killed.facetScan(terms, "lang").collect().toSet, false),
+      ("facet fq", killed, () => killed.facet(terms, "repo", Some("lang" -> "java")).collect().toSet,
+        () => killed.facetScan(terms, "repo", Some("lang" -> "java")).collect().toSet, false),
+      ("pivot", killed, () => killed.facetPivot(terms, "lang", "repo").collect().toSet,
+        () => killed.facetPivotScan(terms, "lang", "repo").collect().toSet, false),
+      ("grouped", killed, () => killed.searchGrouped(terms, "repo", 2, 5).collect().toSeq,
+        () => killed.searchGrouped(terms, "repo", 2, 5, docPred = Some(lit(true))).collect().toSeq, false),
+      ("block join", killed, () => killed.blockJoinParents(terms).collect().toSeq, () => {
+        val children = brute(terms, all, live).toMap
+        synth(spark).select($"doc_id", $"repo").as[(Long, String)].collect().toSeq
+          .flatMap { case (d, r) => children.get(d).map(r -> _) }.groupBy(_._1).toSeq
+          .map { case (r, g) => (r, g.map(_._2).max, g.size.toLong) }
+          .sortBy(t => (-t._2, t._1)).take(10).zipWithIndex
+          .map { case ((r, m, n), i) => org.apache.spark.sql.Row((i + 1).toLong, r, m, n) }
+      }, false),
+      ("predicate", engine, () => pairs(engine.searchByTerms(terms, rows = k, docPred = java)),
+        () => brute(terms, k, isJava), true),
+      ("bool predicate", engine, () => pairs(engine.searchBool(queries(0), rows = k, docPred = java)),
+        () => pairs(engine.searchBool(queries(0), rows = k, docFilter = Some("lang" -> "java"))), true),
+      ("killed predicate", killed, () => pairs(killed.searchByTerms(terms, rows = k, docPred = java)),
+        () => brute(terms, k, d => live(d) && isJava(d)), true))
+    // first calls fill the tables and load the indexes' lazy state
+    calls.foreach(_._3())
+    val docmetaRows = Seq(engine, killed).map { e =>
+      e -> inputRowsOf(e.index.docmetaAll.where(java.get).select($"doc_id").as[Long].rdd.count())._2
+    }.toMap
+    calls.foreach { case (name, e, call, expected, readsDocmeta) =>
+      val ((got, n), read) = inputRowsOf(jobsOf(call()))
+      assert(got == expected(), s"$name: wrong result")
+      assert(n == 1, s"$name ran $n jobs")
+      val chunks = e.resident.table.count()
+      assert(read == chunks + (if (readsDocmeta) docmetaRows(e) else 0L),
+        s"$name read $read input records; the table holds $chunks chunks")
+    }
+  }
+
+  test("reserved kill and predicate keys: no caller term or clause reads them") {
+    val terms = queries(2)
+    val want = pairs(killed.searchByTerms(terms, rows = 30))
+    assert(want.nonEmpty && want == brute(terms, 30, live), "precondition: kills hold")
+    for (key <- Seq(Engine.KillKey, Engine.PredKey)) {
+      assert(killed.searchByTerms(Seq(key -> 1.0), rows = 30).count() == 0, s"$key scores as a term")
+      assert(pairs(killed.searchByTerms(terms :+ (key -> 5.0), rows = 30)) == want, s"$key as a term")
+      assert(pairs(killed.searchBool(terms, mustNot = Seq(key), rows = 30)) == want, s"$key as a MUST_NOT")
+      assert(killed.searchBool(terms, must = Seq(key -> 1.0), rows = 30).count() == 0, s"$key as a MUST")
+      assert(killed.searchParsed(s"$key ${terms.map(_._1).mkString(" ")}", rows = 30)
+        .as[(Long, Long, Long)].collect().map(t => (t._2, t._3)).toSeq == want, s"$key parsed")
+      // an fq's column is a docmeta column, and none is named "": the fq
+      // fails analysis instead of reading the reserved rows
+      val Array(c, v) = key.split("=", 2)
+      intercept[org.apache.spark.sql.AnalysisException](
+        killed.searchByTerms(terms, rows = 30, docFilter = Some(c -> v)))
     }
   }
 }

@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import graft.analyze.Tokenizer
+import graft.index.IndexBuild
 import graft.ml.TextStats
+import graft.query.{Bm25, Scored}
 
-/** Built-in-composed specification twins of the native expressions: the
-  * compositions each native expression replaced, kept only to pin the
-  * expression equal to them (MlSpec, FunctionsSpec). None is on a query
-  * or build path.
+/** Built-in-composed specification twins: the compositions each native
+  * expression replaced, kept only to pin the expression equal to them
+  * (MlSpec, FunctionsSpec), and the stored-field phrase scorer the
+  * positional phrase route is pinned equal to (BoolPhraseSpec). None is
+  * on a query or build path.
   */
 object SpecTwins {
 
@@ -40,13 +43,13 @@ object SpecTwins {
           i => md5(col("content").substr(i, lit(8))))))
         .otherwise(lit(null).cast("string")).as("fp"))
 
-  /** Twin of the native [[graft.functions.GraftPhrasePfDl]] phrase
-    * verify: struct(pf, dl) with pf = exact sliding-window phrase count
-    * over the analyzer tokens, dl = clamped 2n−1. bindOnce keeps the
-    * tokenization at one eval even here — the occurrence-count lambda
-    * reads the token array k times per position, and a pushed-down
-    * pf > 0 predicate re-inlines the projection into the filter
-    * (measured ~30x without it).
+  /** Stored-field phrase verify: struct(pf, dl) with pf = the phrase
+    * count over the analyzer tokens (exact sliding window at slop 0, the
+    * independent-window sloppy rule of Engine.phraseMatches above it), dl
+    * = clamped 2n−1. bindOnce keeps the tokenization at one eval — the
+    * occurrence-count lambda reads the token array k times per position,
+    * and a pushed-down pf > 0 predicate re-inlines the projection into the
+    * filter (measured ~30x without it).
     */
   def phrasePfDlHof(content: Column, toks: Array[String], maxDl: Int, slop: Int = 0): Column = {
     val k = toks.length
@@ -75,4 +78,18 @@ object SpecTwins {
         least(lit(2) * size(ts) - lit(1), lit(maxDl)).as("dl"))
     }
   }
+
+  /** Every doc of `corpus` holding the phrase `toks` (analyzer tokens),
+    * scored as the positional route scores it: `boost` · `idfSum` · tfNorm
+    * of the phrase frequency, dl from the content ([[phrasePfDlHof]]).
+    */
+  def phraseScoresStored(corpus: DataFrame, toks: Array[String], boost: Double, idfSum: Double,
+      avgdl: Double, slop: Int = 0): Dataset[Scored] =
+    corpus
+      .select(col("doc_id").as("docId"), phrasePfDlHof(col("content"), toks, IndexBuild.MaxDl, slop).as("pd"))
+      .select(col("docId"), col("pd.pf").as("pf"), col("pd.dl").cast("double").as("dl"))
+      .where(col("pf") > 0)
+      .select(col("docId"),
+        (lit(boost * idfSum) * Bm25.tfNormCol(col("pf").cast("double"), col("dl"), lit(avgdl))).as("score"))
+      .as(Encoders.product[Scored])
 }
