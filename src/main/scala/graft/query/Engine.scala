@@ -2,7 +2,8 @@ package graft.query
 
 import scala.reflect.ClassTag
 import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.InSet
@@ -421,8 +422,8 @@ final class Engine(val index: Index) {
     def scoreSegments(rows: Iterator[SegRow]): Iterator[R] = {
       val bySeg = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuffer[SegRow]]
       rows.foreach(r => bySeg.getOrElseUpdate(r.seg_id, scala.collection.mutable.ArrayBuffer.empty) += r)
-      bySeg.iterator.flatMap { case (seg, segRows) =>
-        val (reserved, hits) = segRows.toArray.partition(r => kill(r.term) || pred(r.term))
+      bySeg.iterator.flatMap { case (seg, all) =>
+        val (reserved, hits) = all.toArray.partition(r => kill(r.term) || pred(r.term))
         if (hits.isEmpty) Iterator.empty
         else {
           val allow = Engine.boolAllow(reserved.map(_.hit), pred, kill, null, segShift)
@@ -1066,9 +1067,9 @@ final class Engine(val index: Index) {
     // every stored version the predicate admits: the kills exclude the
     // tombstoned ones
     val docs = docPred.map(p => index.docmetaAll.where(p).select(col("doc_id")).as[Long])
-    val rows = perSegment(names, keys, phraseWords = phraseWords, docs = docs) { (seg, segRows, allow) =>
-      val hits = segRows.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
-      val positions = segRows.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
+    val rows = perSegment(names, keys, phraseWords = phraseWords, docs = docs) { (seg, found, allow) =>
+      val hits = found.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
+      val positions = found.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
       specArr.iterator.flatMap { s =>
         s.scoreSegment(seg, hits, positions, allow, heapSize, avgdl, cfg).map(x => (s.qid, x))
       }
@@ -1115,7 +1116,11 @@ final class Engine(val index: Index) {
         else stored.union(index.killBitmaps.as[(Long, Array[Byte])].rdd.map { case (seg, bytes) =>
           ((killId, seg), Engine.reservedRow(seg, Engine.KillKey, Bitmaps.deserialize(bytes)))
         })
-      rows.repartitionAndSortWithinPartitions(partitioner)
+      // Kryo, not the default Java serialization: the fill moves every
+      // stored row once, and a registered SegRow serializes as its fields
+      new ShuffledRDD[(Long, Long), SegRow, SegRow](rows, partitioner)
+        .setKeyOrdering(Ordering[(Long, Long)])
+        .setSerializer(new KryoSerializer(spark.sparkContext.getConf.registerKryoClasses(Array(classOf[SegRow]))))
         .mapPartitions(SegChunk.chunks)
         .setName(s"resident segments of ${index.indexDir}")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
