@@ -400,12 +400,12 @@ final class Engine(val index: Index) {
     * [[Engine.boolAllow]] over two reserved posting lists: the kills
     * ([[Engine.KillKey]], a MUST_NOT key the table holds on a tombstoned
     * index) and the docs of `docs`, a docmeta predicate's matches, as
-    * rows of the MUST key [[Engine.PredKey]]. Those
-    * rows go to the table's partitions through its partitioner and are
-    * zipped with them, so no hit row ever moves. A segment drops when it
-    * has no hit and when its allow set is empty; the kernel never sees a
-    * reserved row. A covered fq is one more posting list of the hits, a
-    * filter key the kernel reads ([[fqSplit]]).
+    * rows of the MUST key [[Engine.PredKey]]. Those rows go to the
+    * table's partitions through its partitioner and are zipped with them,
+    * so no hit row ever moves. A segment drops when it has no hit and
+    * when its allow set is empty; the kernel never sees a reserved row. A
+    * covered fq is one more posting list of the hits, a filter key the
+    * kernel reads ([[fqSplit]]).
     */
   private def perSegment[R: ClassTag](terms: Seq[String], keys: Seq[String] = Nil,
       keyCols: Seq[String] = Nil, phraseWords: Seq[String] = Nil, docs: Option[Dataset[Long]] = None)(

@@ -109,8 +109,8 @@ final class QueryHeaps(val k: Int) extends Serializable {
 /** Typed bounded-heap top-k Aggregator — Spark runs it as partial
   * aggregation per partition + merge (the treeAggregate shape of the
   * north_rule) via ObjectHashAggregate. For the merges that stay inside
-  * a lazy plan (grouped search's per-value and group-rank heaps, the ANN
-  * top-k); a scoring pass merges through [[Wand.topK]] instead. `scoredOf`
+  * a lazy plan (the ANN top-k); a scoring pass merges through
+  * [[Wand.topK]] instead, and grouped search through keyed heaps. `scoredOf`
   * projects an input row to its [[Scored]], so keyed callers (per group
   * value, per query) aggregate `groupByKey(_._1)` rows with `_._2`
   * directly, without a `mapValues` object round trip per row.
