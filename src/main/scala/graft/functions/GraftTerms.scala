@@ -542,9 +542,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 
 /** Distinct word-`width`-gram shingle strings (first-appearance order) —
   * the shingling primitive of the dedup/contamination screens, in ONE
-  * eval per row. Byte-identical to the built-in composition kept as
-  * [[graft.ml.Dedup.shingleSetWHof]] (tokens → per-position concat_ws →
-  * array_distinct): that form routes every element_at/concat through
+  * eval per row. Byte-identical to the built-in composition pinned in
+  * FunctionsSpec's "GraftShingles expression == HOF composition" (tokens →
+  * per-position concat_ws → array_distinct, a test twin): that form routes every element_at/concat through
   * interpreted higher-order lambdas — profiled 4x slower end-to-end on
   * the 13-gram contamination screen at the 600k-doc bench corpus, where
   * it built ~120M shingle strings interpreter-step by interpreter-step.
@@ -834,9 +834,9 @@ case class GraftPiiStats(child: Expression, emailRe: String, ipRe: String)
 
 /** All Gopher quality-rule integer tallies in ONE content pass — the
   * struct (n_words, non_space, n_lines, n_symbols, n_bullet, n_ell_end,
-  * n_alpha, n_required). The built-in composition
-  * ([[graft.ml.TextStats.gopherRulesBuiltins]], the pinned spec twin and
-  * the DuckDB oracle's shape) runs ~10 independent regex passes over
+  * n_alpha, n_required). The built-in composition (the DuckDB oracle's
+  * shape, a test twin pinned in MlSpec's "GraftGopherStats fused pass ==
+  * regex composition") runs ~10 independent regex passes over
   * every document — ~9.4 s at the 600k-doc bench corpus vs one linear
   * scan here. Each tally replicates its regex's exact semantics
   * (left-to-right non-overlapping matches, whitespace = the explicit

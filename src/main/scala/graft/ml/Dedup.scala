@@ -84,28 +84,12 @@ object Dedup {
     * the generalized shingle used by the contamination screen (w=13, the
     * standard benchmark-decontamination n-gram width). Evaluated by the
     * native [[graft.functions.GraftShingles]] expression — one eval per
-    * row; the built-in composition it replaced is kept as
-    * [[shingleSetWHof]] for the equivalence pin.
+    * row; the built-in composition it replaced is kept as a test twin,
+    * pinned equal in FunctionsSpec ("GraftShingles expression == HOF
+    * composition").
     */
   def shingleSetW(content: Column, w: Int): Column =
     graft.functions.GraftFunctions.graft_shingles(content, w)
-
-  /** Built-in-composed specification twin of [[shingleSetW]] (pinned equal
-    * in MlSpec, not on any hot path): every per-position element_at/concat
-    * runs as an interpreted higher-order lambda — 4x slower end-to-end on
-    * the 13-gram screen at the bench corpus. bindOnce keeps the
-    * tokenization at one eval per row even here (the lambda body reads the
-    * token array w times per shingle position).
-    */
-  private[graft] def shingleSetWHof(content: Column, w: Int): Column = {
-    require(w >= 2, "shingle width must be >= 2")
-    array_distinct(Tokenizer.bindOnce(Tokenizer.tokens(content)) { toks =>
-      when(size(toks) >= w,
-        transform(sequence(lit(1), size(toks) - (w - 1)),
-          i => concat_ws(" ", (0 until w).map(k => element_at(toks, i + lit(k))): _*)))
-        .otherwise(lit(Array.empty[String]))
-    })
-  }
 
   /** Benchmark-contamination screen — the standard curation step that
     * flags corpus docs sharing any `width`-token shingle with a benchmark

@@ -465,9 +465,10 @@ object TextStats {
     * the quantized integers so no float boundary can flip across engines.
     * One [[graft.functions.GraftGopherStats]] eval per row computes every
     * integer tally in a single content pass (the ~10-regex-pass built-in
-    * composition is kept as [[gopherRulesBuiltins]], the pinned spec
-    * twin and the oracle's shape — it was ~9.4 s at the 600k-doc bench
-    * corpus vs ~1 s fused); per-row, no shuffle at any corpus size.
+    * composition, the oracle's shape, is kept as a test twin pinned equal
+    * in MlSpec's "GraftGopherStats fused pass == regex composition" — it
+    * was ~9.4 s at the 600k-doc bench corpus vs ~1 s fused); per-row, no
+    * shuffle at any corpus size.
     * Pattern semantics are the cross-engine-safe set: whitespace via the
     * explicit [[WsClass]] (never `\s`) and end-of-text via `\z` (never
     * `$`) — see [[WsChars]] for why either shorthand is a latent
@@ -478,33 +479,11 @@ object TextStats {
       graft.functions.GraftFunctions.graft_gopher_stats(
         col("content"), RequiredWords).as("g")))
 
-  /** Built-in-composed specification twin of [[gopherRules]] (pinned
-    * equal in MlSpec over the structure-injected corpus, not on any hot
-    * path): the same tallies as ~10 independent regexp_count / replace /
-    * rlike passes — the shape the DuckDB oracle mirrors.
+  /** Shared tail of both gopher forms (the fused one and its test twin):
+    * quantized fractions + the keep decision over the integer-tally
+    * struct `g`.
     */
-  private[graft] def gopherRulesBuiltins(corpus: DataFrame): DataFrame = {
-    val c = col("content")
-    val nRequired = RequiredWords
-      .map(w => when(c.rlike(s"(^|$WsClass)" + w + s"($WsClass|\\z)"),
-        lit(1L)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    gopherSignals(corpus.select(col("doc_id"), struct(
-      regexp_count(c, lit(NonWsClass + "+")).cast("long").as("n_words"),
-      length(regexp_replace(c, WsClass, "")).cast("long").as("non_space"),
-      (length(c) - length(replace(c, lit("\n"), lit(""))) + 1).cast("long").as("n_lines"),
-      (length(c) - length(replace(c, lit("#"), lit(""))) +
-        regexp_count(c, lit("\\.\\.\\."))).cast("long").as("n_symbols"),
-      regexp_count(c, lit("(^|\\n)- ")).cast("long").as("n_bullet"),
-      regexp_count(c, lit("\\.\\.\\.(\\n|\\z)")).cast("long").as("n_ell_end"),
-      regexp_count(c, lit(s"$NonWsClass*[a-z]$NonWsClass*")).cast("long").as("n_alpha"),
-      nRequired.as("n_required")).as("g")))
-  }
-
-  /** Shared tail of both gopher forms: quantized fractions + the keep
-    * decision over the integer-tally struct `g`.
-    */
-  private def gopherSignals(withG: DataFrame): DataFrame = {
+  private[graft] def gopherSignals(withG: DataFrame): DataFrame = {
     val sig = withG.select(
       col("doc_id"),
       col("g.n_words").as("n_words"),

@@ -408,7 +408,7 @@ final class Engine(val index: Index) {
     * kernel reads ([[fqSplit]]).
     */
   private def perSegment[R: ClassTag](terms: Seq[String], keys: Seq[String] = Nil,
-      keyCols: Seq[String] = Nil, phraseWords: Seq[String] = Nil, docs: Option[Dataset[Long]] = None)(
+      keyCols: Seq[String] = Nil, phraseWords: Seq[String] = Nil, docs: Option[DataFrame] = None)(
       kernel: (Long, Array[SegRow], RoaringBitmap) => Iterator[R]): RDD[R] = {
     val res = resident
     val kill = if (index.hasTombstones) Set(Engine.KillKey) else Set.empty[String]
@@ -417,32 +417,13 @@ final class Engine(val index: Index) {
     val prefixes = keyCols.map(IndexBuild.filterKey(_, ""))
     val ids = (exact.toSeq ++ prefixes).map(TermHash.hash).distinct.sorted.toArray
     val bound: String => Boolean = t => exact(t) || prefixes.exists(t.startsWith)
-    val positional = phraseWords.toSet
-    val segShift = index.cfg.segShift
-    def scoreSegments(rows: Iterator[SegRow]): Iterator[R] = {
-      val bySeg = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuffer[SegRow]]
-      rows.foreach(r => bySeg.getOrElseUpdate(r.seg_id, scala.collection.mutable.ArrayBuffer.empty) += r)
-      bySeg.iterator.flatMap { case (seg, all) =>
-        val (reserved, hits) = all.toArray.partition(r => kill(r.term) || pred(r.term))
-        if (hits.isEmpty) Iterator.empty
-        else {
-          val allow = Engine.boolAllow(reserved.map(_.hit), pred, kill, null, segShift)
-          if (allow != null && allow.isEmpty) Iterator.empty else kernel(seg, hits, allow)
-        }
-      }
-    }
+    val pass = new Engine.SegPass(ids, bound, phraseWords.toSet, kill, pred, index.cfg.segShift, kernel)
     docs match {
-      case None => res.table.mapPartitions(cs => scoreSegments(cs.flatMap(_.rows(ids, bound, positional))))
+      case None => res.table.mapPartitions(pass)
       case Some(d) =>
-        val cfg = index.cfg
-        val predRows = d.rdd.mapPartitions { ids =>
-          val bySeg = scala.collection.mutable.LongMap.empty[RoaringBitmap]
-          ids.foreach(id => bySeg.getOrElseUpdate(cfg.segOf(id), new RoaringBitmap()).add(cfg.localOf(id)))
-          bySeg.iterator.map { case (seg, bm) => seg -> Engine.reservedRow(seg, Engine.PredKey, bm) }
-        }.partitionBy(res.partitioner).values
-        res.table.zipPartitions(predRows) { (cs, ps) =>
-          scoreSegments(cs.flatMap(_.rows(ids, bound, positional)) ++ ps)
-        }
+        val predRows = d.queryExecution.toRdd.mapPartitions(new Engine.PredRows(index.cfg))
+          .partitionBy(res.partitioner)
+        res.table.zipPartitions(predRows)(new Engine.PredPass(pass))
     }
   }
 
@@ -1041,7 +1022,7 @@ final class Engine(val index: Index) {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
     if (specs.isEmpty) {
       val none = spark.emptyDataset[(Long, Scored)]
-      return Engine.Pass(none.rdd, none)
+      return Engine.Pass(spark.sparkContext.emptyRDD[(Long, Scored)], none)
     }
     segmentPass(specs, math.min(candidates, rows), index.stats._2, docPred)
   }
@@ -1066,7 +1047,7 @@ final class Engine(val index: Index) {
     val specArr = specs.toArray
     // every stored version the predicate admits: the kills exclude the
     // tombstoned ones
-    val docs = docPred.map(p => index.docmetaAll.where(p).select(col("doc_id")).as[Long])
+    val docs = docPred.map(p => index.docmetaAll.where(p).select(col("doc_id")))
     val rows = perSegment(names, keys, phraseWords = phraseWords, docs = docs) { (seg, found, allow) =>
       val hits = found.map(_.hit) // shared once, re-traversed per spec (≤|q| rows)
       val positions = found.iterator.filter(_.positions != null).map(r => r.term -> r.positions).toMap
@@ -2085,6 +2066,62 @@ object Engine {
         case s: Long => s
       }
       java.lang.Math.floorMod(seg, numPartitions.toLong).toInt
+    }
+  }
+
+  /** The task function of a per-segment pass over the table alone (the
+    * engine's `perSegment`): look up the sorted term ids `ids` (rows whose
+    * term `bound` admits, with positions for the `positional` words) in the
+    * partition's chunks, and hand each segment with hits to `kernel`,
+    * under the allow bitmap of its reserved `kill` and `pred` rows
+    * ([[boolAllow]]). The pass functions are named classes, not lambdas:
+    * `SparkContext.clean` returns at once for them, where a lambda costs
+    * it a read and parse of the class file that declares it.
+    */
+  private[graft] final class SegPass[R](ids: Array[Long], bound: String => Boolean,
+      positional: Set[String], kill: Set[String], pred: Set[String], segShift: Int,
+      kernel: (Long, Array[SegRow], RoaringBitmap) => Iterator[R])
+      extends (Iterator[SegChunk] => Iterator[R]) with Serializable {
+    def apply(chunks: Iterator[SegChunk]): Iterator[R] = score(chunks, Iterator.empty)
+
+    /** The hits of `chunks` and the reserved rows of `side`, scored. */
+    def score(chunks: Iterator[SegChunk], side: Iterator[SegRow]): Iterator[R] = {
+      val bySeg = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuffer[SegRow]]
+      (chunks.flatMap(_.rows(ids, bound, positional)) ++ side)
+        .foreach(r => bySeg.getOrElseUpdate(r.seg_id, scala.collection.mutable.ArrayBuffer.empty) += r)
+      bySeg.iterator.flatMap { case (seg, all) =>
+        val (reserved, hits) = all.toArray.partition(r => kill(r.term) || pred(r.term))
+        if (hits.isEmpty) Iterator.empty
+        else {
+          val allow = boolAllow(reserved.map(_.hit), pred, kill, null, segShift)
+          if (allow != null && allow.isEmpty) Iterator.empty else kernel(seg, hits, allow)
+        }
+      }
+    }
+  }
+
+  /** A docmeta predicate's pass: each table partition zipped with the
+    * predicate's rows of its segments ([[PredRows]]), scored by `pass`.
+    */
+  private[graft] final class PredPass[R](pass: SegPass[R])
+      extends ((Iterator[SegChunk], Iterator[(Long, SegRow)]) => Iterator[R]) with Serializable {
+    def apply(chunks: Iterator[SegChunk], preds: Iterator[(Long, SegRow)]): Iterator[R] =
+      pass.score(chunks, preds.map(_._2))
+  }
+
+  /** A docmeta predicate's matching doc ids (the one column of its rows),
+    * as one reserved [[PredKey]] row per segment, keyed by seg_id for the
+    * table's [[SegPartitioner]].
+    */
+  private[graft] final class PredRows(cfg: IndexConfig)
+      extends (Iterator[InternalRow] => Iterator[(Long, SegRow)]) with Serializable {
+    def apply(rows: Iterator[InternalRow]): Iterator[(Long, SegRow)] = {
+      val bySeg = scala.collection.mutable.LongMap.empty[RoaringBitmap]
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        bySeg.getOrElseUpdate(cfg.segOf(id), new RoaringBitmap()).add(cfg.localOf(id))
+      }
+      bySeg.iterator.map { case (seg, bm) => seg -> reservedRow(seg, PredKey, bm) }
     }
   }
 

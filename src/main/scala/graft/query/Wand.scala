@@ -1,6 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -103,6 +106,20 @@ final class QueryHeaps(val k: Int) extends Serializable {
       }
     }
     this
+  }
+}
+
+/** A task's fold of a scoring pass's (query id, candidate) rows into one
+  * [[QueryHeaps]] ([[Wand.topKPerQuery]]): a named function, not a lambda,
+  * so `SparkContext.clean` returns at once instead of reading the class
+  * file that declares a lambda.
+  */
+private[graft] final class HeapFold(k: Int)
+    extends ((TaskContext, Iterator[(Long, Scored)]) => QueryHeaps) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[(Long, Scored)]): QueryHeaps = {
+    val heaps = new QueryHeaps(k)
+    rows.foreach(x => heaps.offer(x._1, x._2))
+    heaps
   }
 }
 
@@ -496,7 +513,7 @@ object Wand {
   def topK(pass: Engine.Pass, k: Int, drop: Int = 0): DataFrame = {
     val top = heaps(pass, k).get(0L).fold(Array.empty[Scored])(_.sortedBestFirst)
     local(pass, rankedSchema, top.iterator.zipWithIndex.drop(drop).map { case (s, i) =>
-      Row((i + 1).toLong, s.docId, s.scoreQ)
+      InternalRow((i + 1).toLong, s.docId, s.scoreQ)
     })
   }
 
@@ -505,26 +522,31 @@ object Wand {
     */
   def topKPerQuery(pass: Engine.Pass, k: Int): DataFrame =
     local(pass, keyedRankedSchema, heaps(pass, k).toSeq.sortBy(_._1).iterator.flatMap { case (qid, h) =>
-      h.sortedBestFirst.iterator.zipWithIndex.map { case (s, i) => Row(qid, (i + 1).toLong, s.docId, s.scoreQ) }
+      h.sortedBestFirst.iterator.zipWithIndex.map { case (s, i) => InternalRow(qid, (i + 1).toLong, s.docId, s.scoreQ) }
     })
 
   /** THE merge of every scoring pass: each task folds its rows into one
-    * `k`-bounded heap per query id (fed by the per-segment heaps), and
-    * `RDD.aggregate` merges the tasks' heaps on the driver as they finish
-    * — one job and no exchange after the pass's own, and the driver holds
-    * at most two heaps per query, bounded by `k`, not by corpus size. The
-    * verbs' results are local rows, materialized at call time as a Solr
-    * response is. Rank-identical to a bounded-heap aggregate: the heap's
-    * (score_q DESC, docId ASC) order is total, so merge order is free.
+    * `k`-bounded heap per query id ([[HeapFold]], fed by the per-segment
+    * heaps), and `SparkContext.runJob`'s result handler merges each task's
+    * heaps into one driver heap per query as the task finishes — one job
+    * and no exchange after the pass's own, and the driver holds at most
+    * two heaps per query, bounded by `k`, not by corpus size. The verbs'
+    * results are local rows, materialized at call time as a Solr response
+    * is. Rank-identical to a bounded-heap aggregate: the heap's (score_q
+    * DESC, docId ASC) order is total, so merge order is free.
     */
   private def heaps(pass: Engine.Pass, k: Int): scala.collection.mutable.LongMap[BoundedTopK] = {
     requireRows(k)
-    pass.rows.aggregate(new QueryHeaps(k))((h, x) => h.offer(x._1, x._2), _ merge _).byQuery
+    val merged = new QueryHeaps(k)
+    val rows = pass.rows
+    rows.sparkContext.runJob(rows, new HeapFold(k), rows.partitions.indices,
+      (_: Int, h: QueryHeaps) => merged.merge(h))
+    merged.byQuery
   }
 
   /** The merged rows as a local DataFrame of the fixed `schema`. */
-  private def local(pass: Engine.Pass, schema: StructType, rows: Iterator[Row]): DataFrame =
-    pass.plan.sparkSession.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
+  private def local(pass: Engine.Pass, schema: StructType, rows: Iterator[InternalRow]): DataFrame =
+    GraftBridge.localDf(pass.plan.sparkSession, schema, rows.toSeq)
 
   private def longs(names: String*): StructType =
     StructType(names.map(StructField(_, LongType, nullable = false)))

@@ -23,4 +23,16 @@ object GraftBridge {
                  rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
                  schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** A local DataFrame of `rows` under `schema`: `Dataset.ofRows` (private
+    * to `sql`) over a `LocalRelation` of the rows as they are. A search
+    * verb's merged top-k is a few dozen rows built on the driver;
+    * `createDataFrame` would convert each from an external `Row` first.
+    */
+  def localDf(spark: org.apache.spark.sql.SparkSession,
+              schema: org.apache.spark.sql.types.StructType,
+              rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 }

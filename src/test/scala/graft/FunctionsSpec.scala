@@ -115,7 +115,7 @@ class FunctionsSpec extends SparkSpec {
     for (w <- Seq(2, 13)) {
       val a = all.select($"doc_id", graft.ml.Dedup.shingleSetW($"content", w).as("sh"))
         .as[(Long, Seq[String])].collect().toMap
-      val b = all.select($"doc_id", graft.ml.Dedup.shingleSetWHof($"content", w).as("sh"))
+      val b = all.select($"doc_id", SpecTwins.shingleSetWHof($"content", w).as("sh"))
         .as[(Long, Seq[String])].collect().toMap
       assert(a == b, s"width $w")
       assert(a(9102L).isEmpty && a(9103L).nonEmpty == (w == 2))

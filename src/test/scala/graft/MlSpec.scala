@@ -867,7 +867,7 @@ class MlSpec extends SparkSpec {
     for (src <- Seq(TextStats.withStructure(corpus), edge)) {
       val a = TextStats.gopherRules(src).collect()
         .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-      val b = TextStats.gopherRulesBuiltins(src).collect()
+      val b = SpecTwins.gopherRulesBuiltins(src).collect()
         .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
       assert(a == b)
     }

@@ -154,6 +154,65 @@ class SegmentPassSpec extends SparkSpec {
     assert(nFq == 1, s"covered fq ran $nFq jobs")
   }
 
+  /** `body`'s value and the Scala lambdas `SparkContext.clean` reported
+    * cleaning on this thread while it ran (their impl method names), from
+    * the closure cleaner's DEBUG log.
+    */
+  private def cleanedClosures[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val prefix = "Cleaning indylambda closure: "
+    val thread = Thread.currentThread.getName
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("closures", null, null, true, Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (e.getThreadName == thread && m.startsWith(prefix)) seen.add(m.stripPrefix(prefix))
+      }
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.util.ClosureCleaner").asInstanceOf[Logger]
+    val (level, additive) = (logger.getLevel, logger.isAdditive)
+    logger.addAppender(appender)
+    logger.setLevel(Level.DEBUG)
+    logger.setAdditive(false)
+    try (body, seen.toArray(Array.empty[String]).toSeq)
+    finally {
+      logger.setLevel(level)
+      logger.setAdditive(additive)
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
+  test("warm query, batch and predicate calls: one job each, no lambda of their own to clean") {
+    val terms = queries(2)
+    val batch = queries.zipWithIndex.map { case (q, i) => i.toLong -> q }
+    val java = col("lang") === "java"
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "term" -> (() => engine.searchByTerms(terms, rows = 30)),
+      "batch" -> (() => engine.searchManyByTerms(batch, rows = 30)),
+      "predicate" -> (() => engine.searchByTerms(terms, rows = 30, docPred = Some(java))))
+    calls.foreach(_._2()) // fill the table and load the index's lazy state
+    // the predicate's own docmeta plan: the closures Spark SQL's operators
+    // clean when it runs, which no pass can avoid
+    val (_, sqlOwn) = cleanedClosures(engine.index.docmetaAll.where(java).select($"doc_id").queryExecution.toRdd)
+    assert(sqlOwn.nonEmpty, "precondition: the cleaner's DEBUG lines are captured")
+    calls.foreach { case (name, call) =>
+      val ((df, n), cleaned) = cleanedClosures(jobsOf(call()))
+      assert(df.count() > 0, s"$name: empty")
+      assert(n == 1, s"$name ran $n jobs")
+      assert(cleaned == (if (name == "predicate") sqlOwn else Nil), s"$name cleaned lambdas $cleaned")
+    }
+    // a query of no corpus-present term scores nothing: the empty pass
+    val (none, cleaned) = cleanedClosures(engine.searchByTerms(Seq("zz-no-such-term" -> 1.0), rows = 30))
+    assert(none.collect().isEmpty && cleaned.isEmpty, s"empty pass: ${none.collect().toSeq}, $cleaned")
+    assert(none.schema == org.apache.spark.sql.types.StructType(Seq("rank", "doc_id", "score_q")
+      .map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType, nullable = false))))
+  }
+
   test("forced shuffle join: fq, kills, predicate, facets, grouping == the broadcast run") {
     val base = Corpus.fromDocuments(spark, sfTiny)
     val c = IndexConfig(segShift = 5, rangeSegsShift = 1)

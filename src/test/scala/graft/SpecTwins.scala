@@ -43,6 +43,47 @@ object SpecTwins {
           i => md5(col("content").substr(i, lit(8))))))
         .otherwise(lit(null).cast("string")).as("fp"))
 
+  /** Twin of [[graft.ml.Dedup.shingleSetW]] (pinned equal in
+    * FunctionsSpec): every per-position element_at/concat runs as an
+    * interpreted higher-order lambda — 4x slower end-to-end on the 13-gram
+    * screen at the bench corpus. bindOnce keeps the tokenization at one
+    * eval per row even here (the lambda body reads the token array w times
+    * per shingle position).
+    */
+  def shingleSetWHof(content: Column, w: Int): Column = {
+    require(w >= 2, "shingle width must be >= 2")
+    array_distinct(Tokenizer.bindOnce(Tokenizer.tokens(content)) { toks =>
+      when(size(toks) >= w,
+        transform(sequence(lit(1), size(toks) - (w - 1)),
+          i => concat_ws(" ", (0 until w).map(k => element_at(toks, i + lit(k))): _*)))
+        .otherwise(lit(Array.empty[String]))
+    })
+  }
+
+  /** Twin of [[TextStats.gopherRules]] (pinned equal in MlSpec over the
+    * structure-injected corpus): the same tallies as ~10 independent
+    * regexp_count / replace / rlike passes — the shape the DuckDB oracle
+    * mirrors.
+    */
+  def gopherRulesBuiltins(corpus: DataFrame): DataFrame = {
+    import TextStats.{NonWsClass, WsClass}
+    val c = col("content")
+    val nRequired = TextStats.RequiredWords
+      .map(w => when(c.rlike(s"(^|$WsClass)" + w + s"($WsClass|\\z)"),
+        lit(1L)).otherwise(lit(0L)))
+      .reduce(_ + _)
+    TextStats.gopherSignals(corpus.select(col("doc_id"), struct(
+      regexp_count(c, lit(NonWsClass + "+")).cast("long").as("n_words"),
+      length(regexp_replace(c, WsClass, "")).cast("long").as("non_space"),
+      (length(c) - length(replace(c, lit("\n"), lit(""))) + 1).cast("long").as("n_lines"),
+      (length(c) - length(replace(c, lit("#"), lit(""))) +
+        regexp_count(c, lit("\\.\\.\\."))).cast("long").as("n_symbols"),
+      regexp_count(c, lit("(^|\\n)- ")).cast("long").as("n_bullet"),
+      regexp_count(c, lit("\\.\\.\\.(\\n|\\z)")).cast("long").as("n_ell_end"),
+      regexp_count(c, lit(s"$NonWsClass*[a-z]$NonWsClass*")).cast("long").as("n_alpha"),
+      nRequired.as("n_required")).as("g")))
+  }
+
   /** Stored-field phrase verify: struct(pf, dl) with pf = the phrase
     * count over the analyzer tokens (exact sliding window at slop 0, the
     * independent-window sloppy rule of Engine.phraseMatches above it), dl
