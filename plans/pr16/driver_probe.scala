@@ -9,8 +9,8 @@
 //     the closure cleaner reads class files for) and the same job through
 //     `sc.runJob` with a named function class (the cleaner's early return).
 // It also counts the closures the cleaner reports (`Cleaning indylambda
-// closure` at DEBUG) during one warm term call, one warm batch and one warm
-// docPred call.
+// closure` at DEBUG) during one warm term call, batch, docPred call, facet
+// and grouped search.
 // The private spans are reached by reflection, so the probe runs against
 // any checkout whose classes are compiled (`sbt compile`):
 //   GRAFT_IDX=/tmp/pf-idx spark-shell --master local[4] --driver-memory 2g \
@@ -129,6 +129,10 @@ engine.searchByTerms(mixed(), rows = 60, docPred = java).collect()
 val termClosures = cleaned(engine.searchByTerms(mixed(), rows = 60))
 val batchClosures = cleaned(engine.searchManyByTerms(batch, rows = 60))
 val predClosures = cleaned(engine.searchByTerms(mixed(), rows = 60, docPred = java))
+engine.facet(mixed(), "lang").collect()
+engine.searchGrouped(mixed(), "repo", 2, 5).collect()
+val facetClosures = cleaned(engine.facet(mixed(), "lang").collect())
+val groupedClosures = cleaned(engine.searchGrouped(mixed(), "repo", 2, 5).collect())
 
 println(f"first call (fills the table) $firstMs%.1f ms; warm mixed calls, p50 over 300:")
 println(f"  pass build $passP%.2f ms | scoring job $jobP%.2f ms | result build $localP%.2f ms | collect $collectP%.2f ms")
@@ -137,4 +141,6 @@ println(f"trivial 3-task job, p50 over 300: rdd.count() $countP%.2f ms | sc.runJ
 println(s"closures cleaned per warm call: term ${termClosures.size} ${termClosures.mkString("[", ", ", "]")}")
 println(s"  batch ${batchClosures.size} ${batchClosures.mkString("[", ", ", "]")}")
 println(s"  docPred ${predClosures.size} ${predClosures.mkString("[", ", ", "]")}")
+println(s"  facet ${facetClosures.size} ${facetClosures.mkString("[", ", ", "]")}")
+println(s"  grouped ${groupedClosures.size} ${groupedClosures.mkString("[", ", ", "]")}")
 System.exit(0)

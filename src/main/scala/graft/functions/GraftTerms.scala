@@ -543,9 +543,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 /** Distinct word-`width`-gram shingle strings (first-appearance order) —
   * the shingling primitive of the dedup/contamination screens, in ONE
   * eval per row. Byte-identical to the built-in composition pinned in
-  * FunctionsSpec's "GraftShingles expression == HOF composition" (tokens →
-  * per-position concat_ws → array_distinct, a test twin): that form routes every element_at/concat through
-  * interpreted higher-order lambdas — profiled 4x slower end-to-end on
+  * FunctionsSpec's "GraftShingles expression == HOF composition" (tokens
+  * → per-position concat_ws → array_distinct, a test twin): that form
+  * routes every element_at/concat through interpreted higher-order
+  * lambdas — profiled 4x slower end-to-end on
   * the 13-gram contamination screen at the 600k-doc bench corpus, where
   * it built ~120M shingle strings interpreter-step by interpreter-step.
   *

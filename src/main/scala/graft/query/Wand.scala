@@ -110,9 +110,10 @@ final class QueryHeaps(val k: Int) extends Serializable {
 }
 
 /** A task's fold of a scoring pass's (query id, candidate) rows into one
-  * [[QueryHeaps]] ([[Wand.topKPerQuery]]): a named function, not a lambda,
-  * so `SparkContext.clean` returns at once instead of reading the class
-  * file that declares a lambda.
+  * [[QueryHeaps]], the task side of every scoring pass's merge (the heaps
+  * behind [[Wand.topK]] and [[Wand.topKPerQuery]]): a named function, not
+  * a lambda, so `SparkContext.clean` returns at once instead of reading
+  * the class file that declares a lambda.
   */
 private[graft] final class HeapFold(k: Int)
     extends ((TaskContext, Iterator[(Long, Scored)]) => QueryHeaps) with Serializable {
@@ -522,7 +523,9 @@ object Wand {
     */
   def topKPerQuery(pass: Engine.Pass, k: Int): DataFrame =
     local(pass, keyedRankedSchema, heaps(pass, k).toSeq.sortBy(_._1).iterator.flatMap { case (qid, h) =>
-      h.sortedBestFirst.iterator.zipWithIndex.map { case (s, i) => InternalRow(qid, (i + 1).toLong, s.docId, s.scoreQ) }
+      h.sortedBestFirst.iterator.zipWithIndex.map { case (s, i) =>
+        InternalRow(qid, (i + 1).toLong, s.docId, s.scoreQ)
+      }
     })
 
   /** THE merge of every scoring pass: each task folds its rows into one

@@ -198,7 +198,8 @@ class SegmentPassSpec extends SparkSpec {
     calls.foreach(_._2()) // fill the table and load the index's lazy state
     // the predicate's own docmeta plan: the closures Spark SQL's operators
     // clean when it runs, which no pass can avoid
-    val (_, sqlOwn) = cleanedClosures(engine.index.docmetaAll.where(java).select($"doc_id").queryExecution.toRdd)
+    val (_, sqlOwn) =
+      cleanedClosures(engine.index.docmetaAll.where(java).select($"doc_id").queryExecution.toRdd)
     assert(sqlOwn.nonEmpty, "precondition: the cleaner's DEBUG lines are captured")
     calls.foreach { case (name, call) =>
       val ((df, n), cleaned) = cleanedClosures(jobsOf(call()))
