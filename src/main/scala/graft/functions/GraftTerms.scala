@@ -57,13 +57,12 @@ case class GraftDocLen(child: Expression)
 }
 
 /** Posting-list decoder: segment `postings` bytes -> array of
-  * struct(local, tf, dl). The bridge between the compact segment format
-  * and a fully-columnar Catalyst plan: explode(graft_postings(...)) turns
-  * a posting list into scorable rows, which is what the hot-term
-  * degenerate plan ([[graft.query.Engine.searchByTerms]] dense-query
-  * route, SURVEY.md O2) aggregates instead of running the scalar DAAT
-  * loop. One eval per (term, segment) row — the array-building cost is
-  * amortized over up to 2^segShift postings.
+  * struct(local, tf, dl). The SQL surface for decoding a posting list:
+  * `explode(graft_postings(postings))` over a segments read gives one
+  * row per posting, for ad-hoc inspection and tests. No engine plan calls
+  * it: the query kernels decode postings in the segment task
+  * ([[graft.index.Codec.Iter]]). One eval per (term, segment) row — the
+  * array-building cost is amortized over up to 2^segShift postings.
   */
 case class GraftPostings(child: Expression)
     extends UnaryExpression with CodegenFallback {

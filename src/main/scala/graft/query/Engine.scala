@@ -75,9 +75,10 @@ final class Index(val spark: SparkSession, val indexDir: String,
     (n, if (n == 0) 1.0 else sdl.toDouble / n.toDouble)
   }
 
-  /** Postings rows of every live unit. A scan of them may split a file,
-    * and so a segment, across tasks: the engine's resident table
-    * ([[Engine.Resident]]) partitions them by segment once.
+  /** Postings rows of every live unit. No query plans a read of them:
+    * the engine's resident table ([[Engine.Resident]]) reads them once,
+    * and partitions them by segment, as a scan of them may split a file,
+    * and so a segment, across tasks.
     */
   lazy val segments: DataFrame = spark.read
     .option("basePath", IndexBuild.segmentsDir(indexDir))
@@ -206,40 +207,24 @@ final class Index(val spark: SparkSession, val indexDir: String,
     .option("basePath", IndexBuild.ngramsDir(indexDir))
     .parquet(ranges.map(r => s"${IndexBuild.ngramsDir(indexDir)}/range=$r"): _*)
 
-  /** Rows of `terms` in `from` (the segments, or the dictionary): the
-    * term_id pushdown plus the term-string hash-collision guard, projected
-    * to the caller's own `cols` (only those columns are read). Both are
-    * `InSet`s, which parquet receives as the same `In` pushdown: an `In`
-    * inlines its long literals into the generated scan code, so every
-    * new query compiled its own stage (~40 ms a query at perfbench
-    * scale); an `InSet` reads its values as a reference, so queries with
-    * the same term count share one compiled stage.
-    *
-    * A caller's term never reads a reserved filter key: one in `terms` is
-    * dropped (it matched nothing before keys were indexed).
-    *
-    * This plans a read per call, for the exploded-postings plans (export
-    * and the docmeta-scan routes) and the over-cap df lookup. The
-    * per-segment passes never come here: they look their terms up in the
-    * engine's resident segments table ([[Engine.Resident]]).
-    */
-  private[graft] def termRows(terms: Seq[String], from: DataFrame = segments)(cols: Column*): DataFrame = {
-    val exact = readTerms(terms, Nil)
-    from.where(Index.inSet("term_id", exact.map(TermHash.hash)) && Index.termIn(exact))
-      .select(cols: _*)
-  }
-
-  /** The exact terms a read of `terms` and the filter `keys` takes: a
-    * caller's reserved filter key is dropped ([[termRows]]).
+  /** The exact terms a per-segment pass reads for `terms` and the filter
+    * `keys`: a caller's reserved filter key is dropped (it matched nothing
+    * before keys were indexed).
     */
   private[graft] def readTerms(terms: Seq[String], keys: Seq[String]): Seq[String] =
     terms.filterNot(IndexBuild.isFilterKey) ++ keys
 
-  /** Global df per query term (term string checked: hash-collision guard). */
+  /** Global df per query term, off the driver map, or over its cap from
+    * the cached dictionary: the term_id filter plus the term-string
+    * hash-collision guard. Both are `InSet`s: an `In` inlines its
+    * literals into the generated code, so every new term set compiled its
+    * own stage, where queries with the same term count share one.
+    */
   def dfOf(terms: Seq[String]): Map[String, Long] = dictMap match {
     case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
     case None =>
-      termRows(terms, dictionary)(col("term"), col("df")).as[(String, Long)].collect().toMap
+      dictionary.where(Index.inSet("term_id", terms.map(TermHash.hash)) && Index.termIn(terms))
+        .select(col("term"), col("df")).as[(String, Long)].collect().toMap
   }
 }
 
@@ -249,7 +234,7 @@ object Index {
     */
   val DictDriverMaxDefault = 2000000L
 
-  /** `c IN values` as an [[InSet]] (see [[Index.termRows]]). */
+  /** `c IN values` as an [[InSet]] (see [[Index.dfOf]]). */
   private[graft] def inSet(c: String, values: Seq[Any]): Column =
     GraftBridge.column(InSet(GraftBridge.expression(col(c)), values.toSet))
 
@@ -313,13 +298,6 @@ final class Engine(val index: Index) {
     */
   val HotScanFraction = 0.5
   val DominantWeightFraction = 0.5
-
-  /** Global doc id from exploded-posting (seg_id, local) columns — the ONE
-    * definition of the packing (IndexConfig.globalOf as a Column); every
-    * exploded-postings plan ([[scanScoreAll]], [[matchSet]]) must use it.
-    */
-  private def packedDocId(seg: Column, local: Column): Column =
-    shiftleft(seg, index.cfg.segShift).bitwiseOR(local.cast("long"))
 
   /** Query terms surviving the accuracy rule, with dfs (ONE definition —
     * searchByTerms and the [[routesDense]] probe must never diverge).
@@ -451,17 +429,20 @@ final class Engine(val index: Index) {
 
   /** [[perSegment]] over the hits of `terms` and the filter keys of
     * `fields` and of the fq `fqKey`, for the value kernels (facet, pivot,
-    * grouping, block join): `kernel` gets each segment's term hits, its
-    * allow bitmap narrowed to the fq key's docs, and per field the (value,
-    * docs) of the field's keys. A segment with no term hit or an empty
-    * allow set (no fq key row among them) drops.
+    * grouping, block join) and the match passes ([[matchedDocmeta]],
+    * [[scoredRows]]): `kernel` gets each segment's term hits, its allow
+    * bitmap (kills, the docmeta matches `docs`) narrowed to the fq key's
+    * docs, and per field the (value, docs) of the field's keys. A segment
+    * with no term hit or an empty allow set (no fq key row among them)
+    * drops.
     */
-  private def valuePass[R: ClassTag](terms: Seq[String], fqKey: Option[String], fields: Seq[String])(
+  private def valuePass[R: ClassTag](terms: Seq[String], fqKey: Option[String], fields: Seq[String],
+      docs: Option[DataFrame] = None)(
       kernel: (Long, Array[SegHit], RoaringBitmap, Array[Array[(String, RoaringBitmap)]]) => Iterator[R]
   ): RDD[R] = {
     val segShift = index.cfg.segShift
     val prefixes = fields.map(IndexBuild.filterKey(_, ""))
-    perSegment(terms, fqKey.toSeq, fields) { (seg, rows, allow0) =>
+    perSegment(terms, fqKey.toSeq, fields, docs = docs) { (seg, rows, allow0) =>
       val (keys, hits) = rows.map(_.hit).partition(r => IndexBuild.isFilterKey(r.term))
       val allow =
         if (fqKey.isEmpty) allow0 else Engine.boolAllow(keys, fqKey.toSet, Set.empty, allow0, segShift)
@@ -471,6 +452,37 @@ final class Engine(val index: Index) {
           (r.term.substring(p.length), Engine.matchBitmap(Iterator(r.postings), null))
         }
       }.toArray)
+    }
+  }
+
+  /** The docmeta rows of the Boolean-OR match set of `terms` (docs
+    * holding any of them): per segment the terms' postings OR into one
+    * bitmap under the pass's allow set ([[Engine.matchBitmap]]), so the
+    * kills come out as in a search, and the matches' `doc_id`s semi-join
+    * docmeta, the one input planned per call. Doc ids are unique across
+    * live units, so no match repeats. The base of the docmeta routes.
+    */
+  private def matchedDocmeta(terms: Seq[(String, Double)]): DataFrame = {
+    val cfg = index.cfg
+    val matches = valuePass(terms.map(_._1).distinct, None, Nil) { (seg, hits, allow, _) =>
+      Engine.matchBitmap(hits.iterator.map(_.postings), allow).toArray.iterator.map(cfg.globalOf(seg, _))
+    }.toDF("doc_id")
+    index.docmetaAll.join(matches, Seq("doc_id"), "left_semi")
+  }
+
+  /** Every live doc matching the terms of `weights`, with its exact BM25
+    * score: the dense kernel's fill, swept unbounded
+    * ([[Wand.scoreSegmentAll]]), so a doc's score is the one the search
+    * verbs rank it by. Kills, the fq key `fqKey` and the docmeta predicate
+    * `pred` narrow the allow set as in a search. The scored rows of export
+    * and of the docmeta routes of grouping and block join.
+    */
+  private def scoredRows(weights: Map[String, Double], fqKey: Option[String] = None,
+      pred: Option[Column] = None): RDD[Scored] = {
+    val (cfg, avgdl) = (index.cfg, index.stats._2)
+    val docs = pred.map(p => index.docmetaAll.where(p).select(col("doc_id")))
+    valuePass(weights.keys.toSeq, fqKey, Nil, docs) { (seg, hits, allow, _) =>
+      Wand.scoreSegmentAll(seg, hits.iterator, allow, weights, avgdl, cfg)
     }
   }
 
@@ -1109,37 +1121,6 @@ final class Engine(val index: Index) {
   }
   private[graft] lazy val resident = new Resident
 
-  /** All matching docs with exact raw scores — no top-k, no quantization:
-    * (doc_id, score). The exploded-postings hash-agg plan (term_id+term
-    * collision guard, broadcast weight join, map-side partial sums per
-    * segment file) behind [[exportMatches]] and the docmeta fallbacks of
-    * grouping and block join. Tombstones are excluded before anything
-    * downstream: a docmeta predicate semi-joins the posting rows
-    * ([[Index.docmeta]] excludes tombstoned docs, so it is also the kill
-    * filter); otherwise tombstones anti-join the aggregate (no join when
-    * none exist; no strategy hint — AQE sizes the kill set at runtime).
-    */
-  private[graft] def scanScoreAll(
-      weights: Map[String, Double], avgdl: Double,
-      docPred: Option[Column] = None): DataFrame = {
-    val exploded = index.termRows(weights.keys.toSeq)(col("seg_id"), col("term"), col("postings"))
-      .join(broadcast(weights.toSeq.toDF("term", "w")), Seq("term"))
-      .select(col("seg_id"), col("w"),
-        explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"))
-      .select(packedDocId(col("seg_id"), col("p.local")).as("doc_id"),
-        (col("w") * Bm25.tfNormCol(col("p.tf").cast("double"),
-          col("p.dl").cast("double"), lit(avgdl))).as("part"))
-    def agg(rows: DataFrame): DataFrame =
-      rows.groupBy(col("doc_id")).agg(sum(col("part")).as("score"))
-    docPred match {
-      case Some(pred) =>
-        agg(exploded.join(index.docmeta.where(pred).select("doc_id"), Seq("doc_id"), "left_semi"))
-      case None if index.hasTombstones =>
-        agg(exploded).join(index.killedDocIds, Seq("doc_id"), "left_anti")
-      case None => agg(exploded)
-    }
-  }
-
   /** Two-phase retrieve-then-re-rank by a SECOND exact metric — the
     * reference's defining end-to-end semantic (getReRankedResults,
     * LireRequestHandler.java:631-668: hash-term candidates re-scored by
@@ -1300,9 +1281,10 @@ final class Engine(val index: Index) {
   /** Solr `/export` handler analog: the FULL sorted match set — every
     * matching doc with its exact BM25 score and global rank, no top-k
     * window (the export-for-analytics shape; Solr streams it sorted by
-    * docValues for the same reason). Plan shape at scale: the exact
-    * exploded-postings score plan ([[scanScoreAll]], kill-excluded),
-    * then a RANGE-PARTITIONED orderBy + zipWithIndex rank offsets — no
+    * docValues for the same reason). Plan shape at scale: every live
+    * match scored in its segment task on the resident table
+    * ([[scoredRows]]: the score_q the search verbs rank by), then a
+    * RANGE-PARTITIONED orderBy + zipWithIndex rank offsets — no
     * single-partition rank window (the fullSort rule, Ann.scala), so the
     * sort parallelizes across executors at any match-set size. Use
     * [[searchAfter]] when the consumer pages instead of dumping.
@@ -1329,10 +1311,8 @@ final class Engine(val index: Index) {
   private[graft] def exportScored(terms: Seq[(String, Double)]): Option[DataFrame] = {
     val kept = keptTerms(terms, accuracy = 1.0) // ONE kept-term rule with the search paths
     if (kept.isEmpty) return None
-    val (n, avgdl) = index.stats
-    Some(scanScoreAll(weightsOf(kept, n), avgdl)
-      .select(col("doc_id"),
-        round(col("score") * lit(Bm25.Quant)).cast("long").as("score_q"))
+    Some(scoredRows(weightsOf(kept, index.stats._1)).map(s => (s.docId, s.scoreQ))
+      .toDF("doc_id", "score_q")
       .orderBy(col("score_q").desc, col("doc_id").asc))
   }
 
@@ -1347,10 +1327,10 @@ final class Engine(val index: Index) {
     * OR into one local bitmap, narrowed by the fq key's docs and the
     * kills (P2), and each facet count is a popcount of `match AND
     * value-key docs`; only (value, count) rows — a handful per segment —
-    * reach the final tiny reduce, in the same Spark job. The slow path's
-    * per-query shuffle of EVERY matching doc_id (distinct + semi-join
-    * into docmeta) disappears; that path remains for uncovered fields and
-    * is pinned count-identical in IndexSpec/UpsertSpec.
+    * reach the final tiny reduce, in the same Spark job. The docmeta
+    * path's shuffle of EVERY matching doc_id (a semi-join into docmeta)
+    * disappears; that path remains for uncovered fields and is pinned
+    * count-identical in IndexSpec/UpsertSpec.
     */
   def facet(terms: Seq[(String, Double)], field: String,
             docFilter: Option[(String, String)] = None): DataFrame =
@@ -1385,31 +1365,15 @@ final class Engine(val index: Index) {
     }.reduceByKey(_ + _).toDF("value", "n")
   }
 
-  /** Distinct doc ids of the Boolean-OR match set (docs containing any of
-    * the terms) — one postings scan, no scoring. Tombstoned docs are NOT
-    * excluded here; consumers joining [[Index.docmeta]] inherit its
-    * exclusion.
-    */
-  private def matchSet(terms: Seq[(String, Double)]): DataFrame = {
-    index.termRows(terms.map(_._1).distinct)(col("seg_id"),
-        explode(graft.functions.GraftFunctions.graft_postings(col("postings"))).as("p"))
-      .select(packedDocId(col("seg_id"), col("p.local")).as("doc_id"))
-      .distinct()
-  }
-
-  /** Uncovered-field facet: one match-set semi-join into docmeta, one
-    * count per value. `value` is string-cast so both dispatch paths emit
-    * ONE schema (filter keys hold the string form); the fq compares the
-    * string form for the same reason.
+  /** Uncovered-field facet: the match set's docmeta rows
+    * ([[matchedDocmeta]]), one count per value. `value` is string-cast so
+    * both dispatch paths emit ONE schema (filter keys hold the string
+    * form); the fq compares the string form for the same reason.
     */
   private[graft] def facetScan(terms: Seq[(String, Double)], field: String,
                                docFilter: Option[(String, String)] = None): DataFrame = {
-    val base = index.docmeta.join(matchSet(terms), Seq("doc_id"), "left_semi")
-    val filtered = docFilter match {
-      case Some((c, v)) => base.where(col(c).cast("string") === lit(v))
-      case None => base
-    }
-    filtered
+    val base = matchedDocmeta(terms)
+    docFilter.fold(base) { case (c, v) => base.where(col(c).cast("string") === lit(v)) }
       .groupBy(col(field).cast("string").as("value"))
       .agg(count(lit(1)).as("n"))
   }
@@ -1504,15 +1468,15 @@ final class Engine(val index: Index) {
     * stored docmeta field instead of relevance, doc_id-asc tie (a total
     * order — deterministic cutoff). Output (rank, doc_id, sort_value);
     * sort_value is string-cast for one schema across field types, the
-    * ORDER itself runs on the raw column. Plan: match-set semi-join +
-    * TakeOrderedAndProject — per-partition bounded heaps, never a global
-    * sort ([[Wand.topK]]'s shape for score-free orderings).
+    * ORDER itself runs on the raw column. Plan: the match set's docmeta
+    * rows ([[matchedDocmeta]]) + TakeOrderedAndProject — per-partition
+    * bounded heaps, never a global sort.
     */
   def searchSortedBy(terms: Seq[(String, Double)], field: String,
                      ascending: Boolean = true, rows: Int = 60): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val key = if (ascending) col(field).asc else col(field).desc
-    index.docmeta.join(matchSet(terms), Seq("doc_id"), "left_semi")
+    matchedDocmeta(terms)
       .orderBy(key, col("doc_id").asc)
       .limit(rows)
       .withColumn("rank", row_number().over(
@@ -1542,13 +1506,13 @@ final class Engine(val index: Index) {
     * outside [start, end) excluded (Solr's before/after counts compose
     * from the same scan). Bucket assignment is INTEGER arithmetic
     * (v − ((v − start) % gap)) — a float floor-divide could flip a
-    * boundary bucket between engines. Same plan as [[facetScan]]: one
-    * match-set semi-join, one codegen'd aggregation.
+    * boundary bucket between engines. Same plan as [[facetScan]]: the
+    * match set's docmeta rows, one codegen'd aggregation.
     */
   def facetRange(terms: Seq[(String, Double)], field: String,
                  start: Long, end: Long, gap: Long): DataFrame = {
     require(gap > 0 && end > start, "facetRange needs gap > 0 and end > start")
-    index.docmeta.join(matchSet(terms), Seq("doc_id"), "left_semi")
+    matchedDocmeta(terms)
       .where(col(field) >= lit(start) && col(field) < lit(end))
       .groupBy((col(field) - ((col(field) - lit(start)) % lit(gap)))
         .cast("long").as("bucket_start"))
@@ -1577,7 +1541,7 @@ final class Engine(val index: Index) {
   private[graft] def facetPivotScan(terms: Seq[(String, Double)],
                                     field: String,
                                     pivotField: String): DataFrame =
-    index.docmeta.join(matchSet(terms), Seq("doc_id"), "left_semi")
+    matchedDocmeta(terms)
       .groupBy(col(field).cast("string").as("value"),
         col(pivotField).cast("string").as("pivot"))
       .agg(count(lit(1)).as("n"))
@@ -1600,13 +1564,12 @@ final class Engine(val index: Index) {
   /** Solr StatsComponent (`stats=true&stats.field=<f>`) over the query's
     * full Boolean-OR match set: one row (n, min_v, max_v, sum_v, mean_q)
     * of a numeric docmeta field — the Solr core statistics; mean is
-    * quantized (×10⁶) like every cross-engine double. Plan: the match-set
-    * postings scan semi-joins docmeta once, then a single codegen'd
-    * partial-agg — no doc rows reach the driver, tombstones excluded via
-    * [[Index.docmeta]].
+    * quantized (×10⁶) like every cross-engine double. Plan: the match
+    * set's docmeta rows ([[matchedDocmeta]]), then a single codegen'd
+    * partial-agg — no doc rows reach the driver.
     */
   def statsField(terms: Seq[(String, Double)], field: String): DataFrame =
-    index.docmeta.join(matchSet(terms), Seq("doc_id"), "left_semi")
+    matchedDocmeta(terms)
       .agg(count(lit(1)).as("n"),
         min(col(field)).cast("long").as("min_v"),
         max(col(field)).cast("long").as("max_v"),
@@ -1637,11 +1600,12 @@ final class Engine(val index: Index) {
     * (rank, parent, score_q, n_children), rank by (score_q DESC, parent
     * ASC).
     *
-    * Scale shape: exact all-match scoring ([[scanScoreAll]] — exploded
-    * postings of the query terms only), one doc-keyed join to docmeta
-    * for the parent key (the facetScan analog, match-set-sized), then a
-    * map-side-partial aggregation on the parent key and a bounded top-k.
-    * No cartesian, no window over the corpus, no driver loop.
+    * Scale shape: a covered parent key folds per segment (below);
+    * otherwise every live child is scored in its segment task
+    * ([[scoredRows]]), joined to docmeta for the parent key (the facetScan
+    * analog, match-set-sized), then a map-side-partial aggregation on the
+    * parent key and a bounded top-k. No cartesian, no window over the
+    * corpus, no driver loop.
     */
   def blockJoinParents(childTerms: Seq[(String, Double)],
                        scoreMode: String = "max",
@@ -1658,13 +1622,10 @@ final class Engine(val index: Index) {
     // ([[Wand.scoreSegmentValueAgg]]) — postings fold into the dense
     // score array once, children quantize per doc, and each repo bitmap
     // sweeps its intersection into (parent, Σq, max q, n); ONE row per
-    // (segment, parent) leaves the task. The previous shape shuffled the
-    // full match set (exploded postings → doc-keyed hash agg → SMJ with
-    // docmeta → parent agg): 3 exchanges carrying the whole child set,
-    // vs 1 tiny value-row exchange here (measured 2.2 s → 0.7 s at the
-    // 600k-doc bench corpus). Integer Σ/max per parent are partition-
-    // order invariant, so output is identical to the join route (the
-    // fallback below, kept for uncovered keys and pinned equal in PlanSpec).
+    // (segment, parent) leaves the task, where the join route below
+    // shuffles every scored child into a docmeta join. Integer Σ/max per
+    // parent are partition-order invariant, so output is identical to the
+    // join route (kept for uncovered keys and pinned equal in PlanSpec).
     // The repo values are the `repo` filter keys, read by the same scan.
     val viaBitmap = index.filterColsComplete.contains("repo")
     val agg: DataFrame =
@@ -1678,10 +1639,8 @@ final class Engine(val index: Index) {
           .map { case (parent, (total, maxQ, nc)) => (parent, total, maxQ, nc) }
           .toDF("parent", "total_q", "max_q", "n_children")
       } else {
-        val children = scanScoreAll(weights, avgdl, None)
-          .withColumn("score_q", round(col("score") * lit(Bm25.Quant)).cast("long"))
-          .select(col("doc_id"), col("score_q"))
-        index.docmeta
+        val children = scoredRows(weights).map(s => (s.docId, s.scoreQ)).toDF("doc_id", "score_q")
+        index.docmetaAll
           .select(col("doc_id"), col("repo").cast("string").as("parent"))
           .join(children, Seq("doc_id"))
           .groupBy(col("parent"))
@@ -1719,11 +1678,12 @@ final class Engine(val index: Index) {
     * array ONCE per window, each group value's docs sweep their
     * intersection into a bounded heap of `groupLimit`, and only (value,
     * top-doc) rows — bounded by values-in-segment × groupLimit per window
-    * — leave the segment task. Uncovered fields score-all + join docmeta
-    * for the value (one shuffle of the match set — the facetScan analog,
-    * documented cost); an arbitrary `docPred` (Solr q+fq+group) takes the
-    * same fallback, with the predicate applied as [[scanScoreAll]]'s
-    * docmeta semi-join.
+    * — leave the segment task. Uncovered fields score every live match in
+    * its segment task ([[scoredRows]], under the kills and a covered fq's
+    * key) and join docmeta for the value (one shuffle of the match set —
+    * the facetScan analog, documented cost); an arbitrary `docPred` (Solr
+    * q+fq+group) takes the same route, its docmeta matches the pass's
+    * MUST rows as in a search.
     *
     * Either way the (value, candidate) rows merge into one
     * `groupLimit`-bounded heap per value, keyed by value; each of those
@@ -1750,7 +1710,7 @@ final class Engine(val index: Index) {
     // ([[fqSplit]]): a sole equality fq on a fully covered column is its
     // filter key; anything else — an arbitrary docPred (Solr q+fq+group),
     // a combined pred+fq, or an uncovered column — becomes a predicate on
-    // the scan fallback (silently ignoring it would be the P2 bug class
+    // the docmeta route (silently ignoring it would be the P2 bug class
     // all over again)
     val (fqKey, pred) = fqSplit(docPred, docFilter)
     val viaBitmap = pred.isEmpty && index.filterColsComplete.contains(field)
@@ -1764,11 +1724,8 @@ final class Engine(val index: Index) {
           Wand.scoreSegmentGrouped(seg, hits.iterator, values(0), allow, wB.value, avgdl, gl, cfg)
         }
       } else
-        // uncovered field: a covered fq takes its result-identical
-        // predicate form
-        scanScoreAll(weights, avgdl,
-          if (fqKey.isDefined) docFilter.map { case (c, v) => col(c) === lit(v) } else pred)
-          .join(index.docmeta.select(col("doc_id"),
+        scoredRows(weights, fqKey, pred).map(s => (s.docId, s.score)).toDF("doc_id", "score")
+          .join(index.docmetaAll.select(col("doc_id"),
             col(field).cast("string").as("gval")), Seq("doc_id"))
           .select(col("gval"), col("doc_id"), col("score"))
           .as[(String, Long, Double)]

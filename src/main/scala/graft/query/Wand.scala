@@ -443,6 +443,26 @@ object Wand {
     heap.sortedBestFirst.iterator
   }
 
+  /** Every doc of the segment's match set under `allow` (null = every
+    * doc) with its exact score: the [[denseFill]], swept whole, with no
+    * heap. The scored rows of export and of the docmeta routes of grouping
+    * and block join, scored as the dense kernel scores a search.
+    */
+  def scoreSegmentAll(
+      segId: Long,
+      hits: Iterator[SegHit],
+      allow: RoaringBitmap,
+      weights: Map[String, Double],
+      avgdl: Double,
+      cfg: IndexConfig): Iterator[Scored] = {
+    val out = Array.newBuilder[Scored]
+    denseFill(hits, weights, avgdl, cfg, allow) { (base, scores, docs) =>
+      val bi = docs.getIntIterator
+      while (bi.hasNext) { val l = bi.next(); out += Scored(cfg.globalOf(segId, l), scores(l - base)) }
+    }
+    out.result().iterator
+  }
+
   /** Segment-local grouped top-k (Solr result grouping): the
     * [[denseFill]] under `allow` (fq/kill, null = every doc), then each
     * window's [[valueSlices]] slices sweep into bounded heaps of

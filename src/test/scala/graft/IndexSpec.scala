@@ -32,6 +32,18 @@ class IndexSpec extends SparkSpec {
     new Engine(new Index(spark, d))
   }
 
+  lazy val langRepo: Map[Long, (String, String)] =
+    corpus.select($"doc_id", $"lang", $"repo").as[(Long, String, String)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+
+  /** Facet counts by `key` over the brute scorer's match set of `terms`:
+    * a count that shares no code with the engine's match passes.
+    */
+  private def bruteCounts[K](terms: Seq[(String, Double)], key: Long => K,
+      keep: Long => Boolean = _ => true): Map[K, Long] =
+    BruteScorer.topK(docs, terms, docs.size).map(_.docId).filter(keep)
+      .groupBy(key).view.mapValues(_.size.toLong).toMap
+
   private def checkQuery(terms: Seq[(String, Double)], k: Int): Unit = {
     val got = engine.searchByTerms(terms, rows = k)
       .as[(Long, Long, Long)].collect().toSeq
@@ -712,6 +724,7 @@ class IndexSpec extends SparkSpec {
     val fast2 = m(engine.facetBitmap(Seq("w:dup" -> 1.0), "lang"))
     val slow2 = m(engine.facetScan(Seq("w:dup" -> 1.0), "lang"))
     assert(fast2 == slow2 && fast2.values.sum < fast.values.sum)
+    assert(fast == bruteCounts(SparkEntry.FlagshipTerms, langRepo(_)._1), "facet != brute")
   }
 
   test("facet falls back to the scan path when a doc-holding unit lacks the field's bitmaps") {
@@ -764,6 +777,8 @@ class IndexSpec extends SparkSpec {
     val fast = m(engine.facetBitmap(SparkEntry.FlagshipTerms, "repo", fq))
     val slow = m(engine.facetScan(SparkEntry.FlagshipTerms, "repo", fq))
     assert(fast == slow && fast.nonEmpty, s"fq facet paths diverge: $fast vs $slow")
+    assert(fast == bruteCounts(SparkEntry.FlagshipTerms, langRepo(_)._2, langRepo(_)._1 == "en"),
+      "fq facet != brute")
     // the fq really intersects: totals shrink vs the unfiltered facet
     val all = m(engine.facet(SparkEntry.FlagshipTerms, "repo"))
     assert(fast.values.sum < all.values.sum, "fq did not constrain the match set")
@@ -833,6 +848,7 @@ class IndexSpec extends SparkSpec {
     val fast = m(engine.facetPivotBitmap(SparkEntry.FlagshipTerms, "lang", "repo"))
     val slow = m(engine.facetPivotScan(SparkEntry.FlagshipTerms, "lang", "repo"))
     assert(fast == slow && fast.nonEmpty, s"pivot paths diverge: $fast vs $slow")
+    assert(fast == bruteCounts(SparkEntry.FlagshipTerms, langRepo), "pivot != brute")
     // marginalizing the pivot level reproduces the single-field facet
     val marginal = fast.groupBy(_._1._1).view.mapValues(_.values.sum).toMap
     val lang = engine.facet(SparkEntry.FlagshipTerms, "lang")

@@ -497,4 +497,96 @@ class SegmentPassSpec extends SparkSpec {
         killed.searchByTerms(terms, rows = 30, docFilter = Some(c -> v)))
     }
   }
+
+  /** [[killed]]'s corpus and deletions at the same geometry with no filter
+    * keys: grouping and block join take their docmeta routes.
+    */
+  lazy val killedNoKeys: Engine = {
+    val dir = tempDir("graft-segpass-kills-nokeys")
+    IndexBuild.build(spark, synth(spark), dir, cfg.copy(filterColumns = Nil))
+    IndexBuild.deleteByKeys(spark, synth(spark).where(col("doc_id") % 7 === 3).select("path"), dir)
+    new Engine(new Index(spark, dir))
+  }
+
+  test("match-set verbs on kills and a docPred: the table and docmeta only, == brute over live docs") {
+    import graft.analyze.Tokenizer
+    assert(killed.index.hasTombstones && killedNoKeys.index.hasTombstones, "precondition: kills")
+    assert(killedNoKeys.index.filterColsComplete.isEmpty, "precondition: no filter key")
+    val meta = synth(spark).select($"doc_id", $"lang", $"repo").as[(Long, String, String)].collect()
+    val langOf = meta.map(m => m._1 -> m._2).toMap
+    val repoOf = meta.map(m => m._1 -> m._3).toMap
+    val dlOf = docs.map { case (d, c) =>
+      d -> math.min(Tokenizer.dlOf(Tokenizer.tokenCountScala(c)), IndexBuild.MaxDl).toLong
+    }.toMap
+    val java = col("lang") === "java"
+    val isJava: Long => Boolean = d => langOf(d) == "java"
+    // the rare terms: kills and the match set both matter
+    val terms = queries(1)
+    val scored = BruteScorer.topK(docs, terms, docs.size).filter(s => live(s.docId))
+    val matched = scored.map(_.docId)
+    assert(BruteScorer.topK(docs, terms, docs.size).exists(s => !live(s.docId)) &&
+      matched.size < docs.size * 6 / 7, "precondition: a killed match, and docs outside the match set")
+    val (start, end, gap) = (0L, 1L << 20, 64L)
+    def counts[K](key: Long => K, keep: Long => Boolean = _ => true): Map[K, Long] =
+      matched.filter(keep).groupBy(key).view.mapValues(_.size.toLong).toMap
+    /** Brute grouping of `scored` by `key`: (group_rank, value, rank, doc_id, score_q). */
+    def grouped(key: Long => String, keep: Long => Boolean, limit: Int, groups: Int) =
+      scored.filter(s => keep(s.docId)).groupBy(s => key(s.docId)).toSeq
+        .map { case (v, ds) => (v, ds.take(limit)) }
+        .sortBy { case (_, ds) => (-ds.head.scoreQ, ds.head.docId) }.take(groups)
+        .zipWithIndex.flatMap { case ((v, ds), g) =>
+          ds.zipWithIndex.map { case (s, i) => Seq((g + 1).toLong, v, (i + 1).toLong, s.docId, s.scoreQ) }
+        }
+    val dls = matched.map(dlOf)
+    def rowsOf(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
+    // each call, its brute result, and whether it reads docmeta as its
+    // join side, its predicate, or both
+    val calls: Seq[(String, Engine, () => Any, Any, Boolean, Option[org.apache.spark.sql.Column])] = Seq(
+      ("export", killed, () => rowsOf(killed.exportMatches(terms)),
+        scored.zipWithIndex.map { case (s, i) => Seq((i + 1).toLong, s.docId, s.scoreQ) }, false, None),
+      ("stats", killed, () => rowsOf(killed.statsField(terms, "dl")),
+        Seq(Seq(dls.size.toLong, dls.min, dls.max, dls.sum, math.round(dls.sum.toDouble * 1e6 / dls.size))),
+        true, None),
+      ("sort", killed, () => rowsOf(killed.searchSortedBy(terms, "dl", rows = 30)),
+        matched.sortBy(d => (dlOf(d), d)).take(30).zipWithIndex
+          .map { case (d, i) => Seq((i + 1).toLong, d, dlOf(d).toString) }, true, None),
+      ("range facet", killed, () => killed.facetRange(terms, "dl", start, end, gap).as[(Long, Long)].collect().toMap,
+        counts(d => dlOf(d) - ((dlOf(d) - start) % gap)), true, None),
+      ("scan facet", killed, () => killed.facetScan(terms, "lang").as[(String, Long)].collect().toMap,
+        counts(langOf), true, None),
+      ("scan facet fq", killed, () => killed.facetScan(terms, "repo", Some("lang" -> "java"))
+        .as[(String, Long)].collect().toMap, counts(repoOf, isJava), true, None),
+      ("scan pivot", killed, () => killed.facetPivotScan(terms, "lang", "repo")
+        .as[(String, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap,
+        counts(d => (langOf(d), repoOf(d))), true, None),
+      ("docmeta grouping", killedNoKeys, () => rowsOf(killedNoKeys.searchGrouped(terms, "repo", 2, 5)),
+        grouped(repoOf, _ => true, 2, 5), true, None),
+      ("docmeta grouping fq", killedNoKeys, () => rowsOf(killedNoKeys.searchGrouped(terms, "repo", 2, 5,
+        docFilter = Some("lang" -> "java"))), grouped(repoOf, isJava, 2, 5), true, Some(java)),
+      // an uncovered field with a covered fq: the fq is the pass's key
+      ("uncovered grouping, fq key", killed, () => rowsOf(killed.searchGrouped(terms, "dl", 2, 5,
+        docFilter = Some("lang" -> "java"))), grouped(d => dlOf(d).toString, isJava, 2, 5), true, None),
+      ("grouping docPred", killed, () => rowsOf(killed.searchGrouped(terms, "repo", 2, 5, docPred = Some(java))),
+        grouped(repoOf, isJava, 2, 5), true, Some(java)),
+      ("docmeta block join", killedNoKeys, () => rowsOf(killedNoKeys.blockJoinParents(terms, "total")),
+        scored.groupBy(s => repoOf(s.docId)).toSeq
+          .map { case (r, g) => (r, g.map(_.scoreQ).sum, g.size.toLong) }
+          .sortBy(t => (-t._2, t._1)).take(10).zipWithIndex
+          .map { case ((r, t, n), i) => Seq((i + 1).toLong, r, t, n) }, true, None))
+    // first calls fill the tables and load the indexes' lazy state
+    calls.foreach(_._3())
+    /** The input records of `eng`'s docmeta reads: the join side, and the predicate's. */
+    def docmetaRows(eng: Engine, pred: Option[org.apache.spark.sql.Column]): Long =
+      inputRowsOf(eng.index.docmetaAll.select($"doc_id").as[Long].rdd.count())._2 +
+        pred.fold(0L)(p => inputRowsOf(eng.index.docmetaAll.where(p).select($"doc_id").as[Long].rdd.count())._2)
+    calls.foreach { case (name, e, call, expected, readsDocmeta, pred) =>
+      val (got, read) = inputRowsOf(call())
+      assert(got == expected, s"$name: wrong result\n$got\nvs\n$expected")
+      val chunks = e.resident.table.count()
+      // export's range sort samples its input: one more read of the table
+      val tables = if (name == "export") 2 else 1
+      val want = tables * chunks + (if (readsDocmeta) docmetaRows(e, pred) else 0L)
+      assert(read == want, s"$name read $read input records, not $want: the table holds $chunks chunks")
+    }
+  }
 }
