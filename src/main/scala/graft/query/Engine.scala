@@ -117,7 +117,7 @@ final class Index(val spark: SparkSession, val indexDir: String,
       s"${IndexBuild.tombstonesDir(indexDir)}/range=$r"): _*)
     .select(col("seg_id"), col("bitmap"))
 
-  /** Distinct killed global doc_ids (scan-path / docmeta exclusion side). */
+  /** Distinct killed global doc_ids: the exclusion side of [[docmeta]]. */
   lazy val killedDocIds: DataFrame = {
     val c = cfg
     killBitmaps.as[(Long, Array[Byte])]
@@ -134,9 +134,10 @@ final class Index(val spark: SparkSession, val indexDir: String,
     .parquet(ranges.map(r => s"${IndexBuild.docmetaDir(indexDir)}/range=$r"): _*)
 
   /** Doc metadata of LIVE docs only: Solr-update tombstones are excluded
-    * here, so every docmeta consumer (point lookup, random sample, fq
-    * predicates, field projection) sees post-update reality. Tombstone-free
-    * indexes (the common case) skip the anti-join entirely.
+    * here, so its consumers (point lookup, random sample, field
+    * projection) see post-update reality. Tombstone-free indexes (the
+    * common case) skip the anti-join entirely. The per-segment passes read
+    * [[docmetaAll]] instead: their kills are the table's kill rows.
     */
   lazy val docmeta: DataFrame =
     if (hasTombstones) docmetaAll.join(killedDocIds, Seq("doc_id"), "left_anti") else docmetaAll
