@@ -462,13 +462,24 @@ final class Engine(val index: Index) {
     * kills come out as in a search, and the matches' `doc_id`s semi-join
     * docmeta, the one input planned per call. Doc ids are unique across
     * live units, so no match repeats. The base of the docmeta routes.
+    *
+    * The match rows come from an RDD, which the planner cannot size, so
+    * they are broadcast when a bound on them fits the session's
+    * `spark.sql.autoBroadcastJoinThreshold`: the terms' summed df (kills
+    * included) rows of one long. Otherwise the join is planned as
+    * it is, a shuffle of both sides.
     */
   private def matchedDocmeta(terms: Seq[(String, Double)]): DataFrame = {
     val cfg = index.cfg
-    val matches = valuePass(terms.map(_._1).distinct, None, Nil) { (seg, hits, allow, _) =>
+    val words = terms.map(_._1).distinct
+    val matches = valuePass(words, None, Nil) { (seg, hits, allow, _) =>
       Engine.matchBitmap(hits.iterator.map(_.postings), allow).toArray.iterator.map(cfg.globalOf(seg, _))
     }.toDF("doc_id")
-    index.docmetaAll.join(matches, Seq("doc_id"), "left_semi")
+    // Spark's size estimate of a one-long row: its 8-byte header and the long
+    val bound = index.dfOf(words).values.sum * (8L + org.apache.spark.sql.types.LongType.defaultSize)
+    val threshold = GraftBridge.broadcastThreshold(index.spark)
+    index.docmetaAll.join(if (threshold > 0 && bound <= threshold) broadcast(matches) else matches,
+      Seq("doc_id"), "left_semi")
   }
 
   /** Every live doc matching the terms of `weights`, with its exact BM25

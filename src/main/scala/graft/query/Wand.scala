@@ -567,7 +567,10 @@ object Wand {
     merged.byQuery
   }
 
-  /** The merged rows as a local DataFrame of the fixed `schema`. */
+  /** The merged rows as a local DataFrame of the fixed `schema`, whose
+    * `collect`, `collectAsList`, `head`, `take` and `first` return them as
+    * they are, with no SQL execution ([[GraftBridge.localDf]]).
+    */
   private def local(pass: Engine.Pass, schema: StructType, rows: Iterator[InternalRow]): DataFrame =
     GraftBridge.localDf(pass.plan.sparkSession, schema, rows.toSeq)
 

@@ -214,6 +214,95 @@ class SegmentPassSpec extends SparkSpec {
       .map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
+  /** `body`'s value and the SQL executions Spark started while it ran,
+    * counted by a listener once the bus has delivered every event of the
+    * call.
+    */
+  private def sqlExecutionsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
+        case _ =>
+      }
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val v = body
+      org.apache.spark.TestBus.drain(sc)
+      (v, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a search result's collect, collectAsList, take and head return its merged rows: no SQL execution") {
+    import scala.jdk.CollectionConverters._
+    val batch = queries.zipWithIndex.map { case (q, i) => i.toLong -> q }
+    // each call and the columns its rows are ordered by
+    val calls: Seq[(String, () => DataFrame, Seq[String])] = Seq(
+      ("term", () => engine.searchByTerms(queries(2), rows = 30), Seq("rank")),
+      ("page", () => engine.searchPage(queries(0), start = 5, rows = 10), Seq("rank")),
+      ("batch", () => engine.searchManyByTerms(batch, rows = 30), Seq("query_id", "rank")))
+    calls.foreach(_._2().collect()) // fill the table and load the index's lazy state
+    for ((name, call, order) <- calls) {
+      val df = call()
+      val (planned, posted) = sqlExecutionsOf(df.toDF().collect())
+      assert(posted == 1, s"precondition: $name's Catalyst collect posted $posted SQL executions")
+      assert(planned.length > 5, s"$name: ${planned.length} rows")
+      assert(df.orderBy(order.map(col): _*).collect().toSeq == planned.toSeq, s"$name: orderBy differs")
+      val ((all, list, five, head, first), fast) =
+        sqlExecutionsOf((df.collect(), df.collectAsList(), df.take(5), df.head(), df.first()))
+      assert(fast == 0, s"$name: the fast actions posted $fast SQL executions")
+      assert(all.toSeq == planned.toSeq, s"$name: collect differs")
+      assert(list.asScala.toSeq == planned.toSeq, s"$name: collectAsList differs")
+      assert(five.toSeq == planned.take(5).toSeq, s"$name: take(5) differs")
+      assert(head == planned.head && first == planned.head, s"$name: head differs")
+      assert(all.map(_.getAs[Long]("doc_id")).toSeq == planned.map(_.getAs[Long]("doc_id")).toSeq,
+        s"$name: doc_id by name")
+      all(0) = null
+      list.set(1, null)
+      assert(df.collect().toSeq == planned.toSeq, s"$name: a returned array aliases the result")
+    }
+    val (none, posted) = sqlExecutionsOf {
+      val df = engine.searchByTerms(Seq("zz-no-such-term" -> 1.0), rows = 30)
+      (df.collect(), df.take(5), df.schema)
+    }
+    assert(none._1.isEmpty && none._2.isEmpty && posted == 0, s"empty result: ${none._1.toSeq}, $posted")
+    assert(none._3 == org.apache.spark.sql.types.StructType(Seq("rank", "doc_id", "score_q")
+      .map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType, nullable = false))))
+  }
+
+  test("docmeta routes broadcast the match set when its df bound fits the session's threshold") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the join as first planned: AQE may turn a sort-merge join into a
+    // broadcast only after both sides were shuffled
+    def joins(df: DataFrame): Seq[String] = helper.collect(df.queryExecution.executedPlan) {
+      case _: BroadcastHashJoinExec => "broadcast"
+      case _: SortMergeJoinExec => "sort-merge"
+    }
+    val tight = spark.newSession()
+    tight.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    val small = new Engine(new Index(tight, defaultDir))
+    val terms = queries(2)
+    val verbs: Seq[(String, Engine => DataFrame)] = Seq(
+      "statsField" -> (_.statsField(terms, "dl")),
+      "facetRange" -> (_.facetRange(terms, "dl", 0L, 1L << 20, 64L)),
+      "searchSortedBy" -> (_.searchSortedBy(terms, "dl", true, 30)),
+      "facetScan" -> (_.facetScan(terms, "lang", None)))
+    for ((name, verb) <- verbs) {
+      val (a, b) = (verb(engine), verb(small))
+      assert(joins(a) == Seq("broadcast"), s"$name: ${joins(a)}")
+      assert(joins(b) == Seq("sort-merge"), s"$name under a 1-byte threshold: ${joins(b)}")
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+      assert(rows(a).nonEmpty && rows(a) == rows(b), s"$name differs between the two plans")
+    }
+  }
+
   test("forced shuffle join: fq, kills, predicate, facets, grouping == the broadcast run") {
     val base = Corpus.fromDocuments(spark, sfTiny)
     val c = IndexConfig(segShift = 5, rangeSegsShift = 1)
